@@ -1,5 +1,10 @@
 package graft
 
+import graft.cli._
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import java.nio.file.Files
 
 /** End-to-end runs of the four reference-equivalent CLI programs on a
@@ -26,20 +31,33 @@ class CliSpec extends SparkSpec {
       .map(_.split("\t")).toSeq
   }
 
+  /** Run a CLI program's `main` and return what it printed to stdout —
+    * its counter line.
+    */
+  def printed(run: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream
+    Console.withOut(new java.io.PrintStream(buf, true))(run)
+    buf.toString.trim
+  }
+
   test("ExactCardinalityApp writes per-vertex counts and prints total") {
     spark // ensure shared session exists before app calls getOrCreate
     val out = tempDir("graft-exact")
-    graft.cli.ExactCardinalityApp.main(Array(edgesCsv, out))
+    val line = printed(ExactCardinalityApp.main(Array(edgesCsv, out)))
     val rows = readTsv(out).map(r => r(0).toLong -> r(1).toLong).toMap
     // degrees: v1 in=1(3→1) out=2(dups), v2 in=2 out=1, v3 in=1 out=1
     assert(rows === Map(1L -> 2L, 2L -> 2L, 3L -> 1L))
+    // the counter is the sum over the relation the program wrote
+    assert(line === "CARDINALITY.COUNT:5")
+    assert(rows.values.sum === 5L)
   }
 
   test("SocialTriangleRSApp with intermediate dir writes triples and count") {
     val mid = tempDir("graft-mid")
     val out = tempDir("graft-rs")
-    graft.cli.SocialTriangleRSApp.main(Array(edgesCsv, mid, out))
+    val line = printed(SocialTriangleRSApp.main(Array(edgesCsv, mid, out)))
     assert(readTsv(out).map(_(0).toLong) === Seq(2L)) // 6/3 with dup edge
+    assert(line === "TRIANGLECOUNT.COUNT:2")
     import scala.jdk.CollectionConverters._
     val triples = Files.list(java.nio.file.Paths.get(mid)).iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-"))
@@ -49,15 +67,17 @@ class CliSpec extends SparkSpec {
 
   test("ReplicatedJoinApp counts with EXISTS closing-edge semantics") {
     val out = tempDir("graft-rep")
-    graft.cli.ReplicatedJoinApp.main(Array(edgesCsv, out))
+    val line = printed(ReplicatedJoinApp.main(Array(edgesCsv, out)))
     assert(readTsv(out).map(_(0).toLong) === Seq(1L)) // 5/3 = 1
+    assert(line === "CARDINALITY.finalCount:1")
   }
 
   test("PipelineApp writes all seven relations with a consistent survivor set") {
     spark
     val out = tempDir("graft-pipeline")
-    graft.cli.PipelineApp.main(
+    def run(): Unit = graft.cli.PipelineApp.main(
       Array("/root/testdata/sf0.001/documents.parquet", out))
+    val line = printed(run())
     val names = Seq("tokens", "quality", "langid", "dedup_exact",
       "neardup_pairs", "dup_clusters", "survivors")
     names.foreach { n =>
@@ -68,6 +88,8 @@ class CliSpec extends SparkSpec {
     val clusters = spark.read.parquet(s"$out/dup_clusters")
     val losers = clusters.filter("doc_id != cluster_id").count()
     assert(survivors === docs - losers)
+    // the printed survivor count is observed during the survivors write
+    assert(line === s"PIPELINE.DOCS:$docs PIPELINE.SURVIVORS:$survivors")
     // cache discipline: the end-to-end pipeline must not leak persisted
     // blocks into the (shared, long-lived) session — beyond the
     // PlanMemo checkpoints, which are session-lived BY DESIGN and
@@ -132,8 +154,57 @@ class CliSpec extends SparkSpec {
     Files.writeString(java.nio.file.Paths.get(s"$dir/edges.csv"),
       "1,2\n2,1\n9999999,1\n") // third edge dropped by MAX=7,812,500
     val out = tempDir("graft-approx")
-    graft.cli.ApproxCardinalityApp.main(Array(s"$dir/edges.csv", out))
+    val line = printed(ApproxCardinalityApp.main(Array(s"$dir/edges.csv", out)))
     val rows = readTsv(out).map(r => r(0).toLong -> r(1).toLong).toMap
     assert(rows === Map(1L -> 1L, 2L -> 1L))
+    assert(line === "CARDINALITY.COUNT:2")
+    assert(rows.values.sum === 2L)
+  }
+
+  test("every CLI program prints a 0 counter and writes its output on empty input") {
+    spark
+    val dir = tempDir("graft-edges-empty")
+    val empty = s"$dir/edges.csv"
+    Files.writeString(java.nio.file.Paths.get(empty), "")
+    def ran(main: Array[String] => Unit, counter: String): Seq[Array[String]] = {
+      val out = tempDir("graft-empty-out")
+      // the observed total must arrive (not hang) when the relation is empty
+      assert(printed(main(Array(empty, out))) === s"$counter:0")
+      assert(Files.exists(java.nio.file.Paths.get(s"$out/_SUCCESS")), counter)
+      readTsv(out)
+    }
+    assert(ran(ExactCardinalityApp.main, "CARDINALITY.COUNT").isEmpty)
+    assert(ran(ApproxCardinalityApp.main, "CARDINALITY.COUNT").isEmpty)
+    assert(ran(SocialTriangleRSApp.main, "TRIANGLECOUNT.COUNT")
+      .map(_(0).toLong) === Seq(0L))
+    assert(ran(ReplicatedJoinApp.main, "CARDINALITY.finalCount")
+      .map(_(0).toLong) === Seq(0L))
+  }
+
+  test("each CLI program runs its plan once: root SQL executions per run") {
+    spark
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        runs.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        runs.incrementAndGet()
+    }
+    def executions(main: Array[String] => Unit): Int = {
+      ColumnBridge.waitListeners(spark)
+      runs.set(0)
+      printed(main(Array(edgesCsv, tempDir("graft-exec-out"))))
+      ColumnBridge.waitListeners(spark)
+      runs.get
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // the output write, which also yields the printed counter
+      assert(executions(ExactCardinalityApp.main) === 1)
+      assert(executions(ApproxCardinalityApp.main) === 1)
+      assert(executions(SocialTriangleRSApp.main) === 1)
+      // plus trianglesRep's eager broadcast-sizing count
+      assert(executions(ReplicatedJoinApp.main) === 2)
+    } finally spark.listenerManager.unregister(listener)
   }
 }
