@@ -25,24 +25,56 @@ import org.apache.spark.sql.functions._
   *   - ReplicatedJoinDriver.java → ReplicatedJoinApp (MAX=40,000, <=)
   */
 object CliSupport {
+  /** Split-size floor of a CLI input scan (`spark.sql.files.openCostInBytes`).
+    * Spark cuts a file into splits of `min(maxPartitionBytes, max(openCost,
+    * bytes/cores))`, so at this floor the bytes-per-core term decides for
+    * any input above 64 KiB x cores. 64 KiB of CSV parses in about the
+    * fixed cost of one local task; inputs past 128 MiB per core split as
+    * before.
+    */
+  private val ScanSplitFloorBytes: Long = 64L * 1024
+
   /** Create (or reuse) a session, run the body, and stop the session
     * only if this call created it — `getOrCreate` inside an existing
     * JVM (tests, notebooks) must not tear down the host's session.
+    *
+    * The session splits a text input into one scan task per core
+    * ([[ScanSplitFloorBytes]]), where Spark's 4 MiB default split floor
+    * ran a file smaller than cores x 4 MiB in fewer tasks than cores.
+    *
+    * `getOrCreate` writes the settings below into a reused host session,
+    * so the host's values of the runtime-modifiable ones are snapshotted
+    * first and restored (or unset, if the host had none) on return: a
+    * CLI run leaves the host's shuffle width and split policy as it
+    * found them.
     */
   def withSession(app: String)(body: SparkSession => Unit): Unit = {
-    val preExisting = SparkSession.getDefaultSession.isDefined
+    val host = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
+    val settings = Seq(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.files.openCostInBytes" -> ScanSplitFloorBytes.toString,
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.ui.enabled" -> "false")
+    val saved = host.toSeq.flatMap { h =>
+      val explicit = h.conf.getAll
+      settings.collect { case (k, _) if h.conf.isModifiable(k) => k -> explicit.get(k) }
+    }
+    val builder = SparkSession.builder()
       .appName(app)
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    settings.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     try body(spark)
-    finally if (!preExisting) spark.stop()
+    finally {
+      if (host.isEmpty) spark.stop()
+      else saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 
   /** Text sink with a configurable separator — the reference's
@@ -171,7 +203,9 @@ object PipelineApp {
       def w(df: org.apache.spark.sql.DataFrame, name: String): Unit =
         df.write.mode("overwrite").parquet(s"$out/$name")
       w(graft.operators.TextOps.tokenCounts(docs), "tokens")
-      w(graft.operators.TextOps.quality(docs), "quality")
+      // quality is one row per document: its write also counts the input
+      val nDocs = CliSupport.writeObserved(
+        graft.operators.TextOps.quality(docs), count(lit(1)))(w(_, "quality"))
       w(graft.operators.TextOps.langId(docs), "langid")
       val exact = graft.operators.Dedup.exact(docs)
       w(exact, "dedup_exact")
@@ -190,7 +224,7 @@ object PipelineApp {
       val survivors = exactSurvivors.join(losers, Seq("doc_id"), "left_anti")
       val kept = CliSupport.writeObserved(survivors, count(lit(1)))(
         w(_, "survivors"))
-      println(s"PIPELINE.DOCS:${docs.count()} PIPELINE.SURVIVORS:$kept")
+      println(s"PIPELINE.DOCS:$nDocs PIPELINE.SURVIVORS:$kept")
       // the dedup operators persisted their internal relations (shingle
       // hashes, band tables, cluster labels) for reuse across the steps
       // above — release them all now that every output is materialized

@@ -1,6 +1,8 @@
 package graft
 
 import graft.cli._
+import graft.operators.GraphOps
+import graft.sources.Tables
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -75,8 +77,8 @@ class CliSpec extends SparkSpec {
   test("PipelineApp writes all seven relations with a consistent survivor set") {
     spark
     val out = tempDir("graft-pipeline")
-    def run(): Unit = graft.cli.PipelineApp.main(
-      Array("/root/testdata/sf0.001/documents.parquet", out))
+    val input = "/root/testdata/sf0.001/documents.parquet"
+    def run(): Unit = graft.cli.PipelineApp.main(Array(input, out))
     val line = printed(run())
     val names = Seq("tokens", "quality", "langid", "dedup_exact",
       "neardup_pairs", "dup_clusters", "survivors")
@@ -88,8 +90,9 @@ class CliSpec extends SparkSpec {
     val clusters = spark.read.parquet(s"$out/dup_clusters")
     val losers = clusters.filter("doc_id != cluster_id").count()
     assert(survivors === docs - losers)
-    // the printed survivor count is observed during the survivors write
+    // both printed counts are observed during writes (quality, survivors)
     assert(line === s"PIPELINE.DOCS:$docs PIPELINE.SURVIVORS:$survivors")
+    assert(line.startsWith(s"PIPELINE.DOCS:${spark.read.parquet(input).count()} "))
     // cache discipline: the end-to-end pipeline must not leak persisted
     // blocks into the (shared, long-lived) session — beyond the
     // PlanMemo checkpoints, which are session-lived BY DESIGN and
@@ -179,6 +182,50 @@ class CliSpec extends SparkSpec {
       .map(_(0).toLong) === Seq(0L))
     assert(ran(ReplicatedJoinApp.main, "CARDINALITY.finalCount")
       .map(_(0).toLong) === Seq(0L))
+  }
+
+  test("the CLI splits its edge scan across every core, counts unchanged, host conf restored") {
+    spark
+    val dir = tempDir("graft-edges-split")
+    val path = s"$dir/edges.csv"
+    // ~100k deterministic edges, ~1.1 MB: under the 4 MiB default split
+    // floor, so a host session reads it as one partition
+    val rnd = new scala.util.Random(7)
+    Files.writeString(java.nio.file.Paths.get(path),
+      Seq.fill(100000)(s"${rnd.nextInt(20000)},${rnd.nextInt(20000)}\n").mkString)
+    val bytes = Files.size(java.nio.file.Paths.get(path))
+    assert(bytes > 1000000L && bytes < 4L * 1024 * 1024, bytes)
+    // getOrCreate also writes the non-modifiable app name; only the
+    // runtime-modifiable settings are the host's to keep
+    def hostConf = spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) }
+    val width = "spark.sql.shuffle.partitions"
+    val hostWidth = spark.conf.get(width)
+    var inside = (0, 0)
+    // a host width the CLI overrides: it must come back, not the CLI's
+    spark.conf.set(width, "1")
+    try {
+      val before = hostConf
+      CliSupport.withSession("split-check") { s =>
+        inside = (Tables.edgesCsv(s, path).rdd.getNumPartitions,
+          s.sparkContext.defaultParallelism)
+      }
+      // the host's settings are as before the call (the split floor unset)
+      assert(hostConf === before)
+    } finally spark.conf.set(width, hostWidth)
+    assert(inside === (4, 4))
+    // so the host reads the file as one split
+    val e = Tables.edgesCsv(spark, path)
+    assert(e.rdd.getNumPartitions === 1)
+    def counter(main: Array[String] => Unit): Long =
+      printed(main(Array(path, tempDir("graft-split-out")))).split(":")(1).toLong
+    val paths = singleLong(GraphOps.path2Total(e))
+    val rs = singleLong(GraphOps.trianglesRS(e, SocialTriangleRSApp.Max))
+    val rep = singleLong(GraphOps.trianglesRep(e, ReplicatedJoinApp.Max))
+    assert(rs > 0 && rep > 0, s"fixture has no triangles: rs=$rs rep=$rep")
+    assert(counter(ExactCardinalityApp.main) === paths)
+    assert(counter(SocialTriangleRSApp.main) === rs)
+    assert(counter(ReplicatedJoinApp.main) === rep)
+    graft.Caches.clear(spark)
   }
 
   test("each CLI program runs its plan once: root SQL executions per run") {
