@@ -1577,11 +1577,10 @@ object ScaleRehearsal {
       }.mkString("\"batches\":[", ",", "]")
     t("streaming state 1e6 keys, 5 batches", streamExtra _)({
       val base = java.nio.file.Files.createTempDirectory("graft-stream-scale")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = spark.conf.getOption(provKey)
-      spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try {
+      try Confs.scoped(spark,
+          "spark.sql.streaming.stateStore.providerClass" ->
+            ("org.apache.spark.sql.execution.streaming." +
+              "state.RocksDBStateStoreProvider")) {
         val t0us = 1704067200000000L // 2024-01-01T00:00Z in micros
         // drive one operator over 5 file-source batches; returns
         // (total emitted rows, final state rows). Per-batch: two
@@ -1662,13 +1661,7 @@ object ScaleRehearsal {
           df => graft.streaming.EventWindows.cusumStateful(spark, df,
             Map.empty))
         s"sessions=$sessOut/$sessState cusum=$cusumOut/$cusumState"
-      } finally {
-        prevProv match {
-          case Some(p) => spark.conf.set(provKey, p)
-          case None => spark.conf.unset(provKey)
-        }
-        org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-      }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     })
 
     // ---- INTEGER-HEADROOM canary at sf1.0 CARDINALITY: the suite's
@@ -1822,16 +1815,15 @@ object ScaleRehearsal {
         col("id").as("doc_a"),
         when(pmod(hash(col("id")), lit(10)) < 3, lit(0L))
           .otherwise(pmod(hash(col("id") * 17 + 3), col("id"))).as("doc_b"))
-      val prevShufXL = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "128")
       // heavyDegree is left at the DEFAULT 2E/(64·parts): the explicit
       // 500k of earlier rounds predates the lowered default (≈7.3k
       // here) — the giant hub AND the mid-size hubs contraction forms
       // now all take the broadcast path
-      try t("xl dup_clusters giant 3e7", starRoundsJson _)(
-        operators.Dedup.dupClusters(giantXL)
-          .filter(col("cluster_id") =!= 0L).count())
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShufXL)
+      Confs.scoped(spark, "spark.sql.shuffle.partitions" -> "128") {
+        t("xl dup_clusters giant 3e7", starRoundsJson _)(
+          operators.Dedup.dupClusters(giantXL)
+            .filter(col("cluster_id") =!= 0L).count())
+      }
     }
 
     spark.stop()

@@ -664,13 +664,12 @@ object SparkEntry {
     }),
     // DEEP-diameter BFS: the same operator with a 64-hop budget over a
     // long-chain graph (documents self-joined at stride HopDeepStep ⇒
-    // 7 disjoint ~N/7-deep paths), so the frontier-delta sweep loop,
-    // the 16-frame layer compaction and the budget-cap exit all run on
-    // the hash-checked path — the shallow gate exits at 3 sweeps and
-    // never compacts. hopStride = 4 is the deep-diameter posture (4
-    // BFS layers per materialized super-sweep; 16 frames at the 64-hop
-    // budget → exactly one compaction), measured 20.5 → ~6 s at local
-    // scale where per-layer job overhead dominates
+    // 7 disjoint ~N/7-deep paths), so the distributed super-sweep loop,
+    // the doubling-built E≤s relation, the final layer compaction and
+    // the budget-cap exit all run on the hash-checked path — the
+    // shallow gate exits at 3 sweeps. At hopStride = 16 the budget is
+    // 4 super-sweeps, so the in-loop 16-frame compaction does not fire
+    // here (GraphOpsSpec's 80-vertex chain covers it)
     "graph_hops_deep" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val docs = Tables.table(s, d, "documents").select(col("doc_id"))
@@ -681,12 +680,12 @@ object SparkEntry {
       val seeds = docs.filter(col("doc_id") < HopDeepStep)
         .select(col("doc_id").as("v"))
       // localThreshold = 0: this gate EXISTS to drive the distributed
-      // sweep loop / stride compaction / budget exit (the shallow
-      // gate takes the gated local path). Stride stays 4: the r17
-      // A/B measured stride 8 SLOWER (5.00 vs 4.55 s isolated warm —
-      // the 7 E_k precompute join jobs cost more than the 8 saved
-      // sweeps); the win came from narrowing the per-sweep plumbing
-      // instead (see hopDistancesDeduped's tiny-regime conf scope).
+      // sweep loop / stride build / budget exit (the shallow gate
+      // takes the gated local path). Stride 16: the r21 A/B of this
+      // gate alone, warm, with E≤s built by doubling, measured stride
+      // 4 = 3.78 s, 8 = 2.3-3.1 s, 16 = 1.85 s, 32 = 2.55 s. The
+      // per-sweep plumbing is narrowed by hopDistancesDeduped's
+      // tiny-regime conf scope.
       GraphOps.hopDistances(e, seeds, HopDeepMax, hopStride = 16,
           localThreshold = 0L)
         .orderBy("vertex")

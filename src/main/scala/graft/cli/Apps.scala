@@ -42,39 +42,26 @@ object CliSupport {
     * ([[ScanSplitFloorBytes]]), where Spark's 4 MiB default split floor
     * ran a file smaller than cores x 4 MiB in fewer tasks than cores.
     *
-    * `getOrCreate` writes the settings below into a reused host session,
-    * so the host's values of the runtime-modifiable ones are snapshotted
-    * first and restored (or unset, if the host had none) on return: a
-    * CLI run leaves the host's shuffle width and split policy as it
-    * found them.
+    * The runtime settings (shuffle width, split floor, AQE) apply for
+    * the body only ([[graft.Confs.scoped]]), so a CLI run leaves a
+    * reused host session's shuffle width and split policy as it found
+    * them.
     */
   def withSession(app: String)(body: SparkSession => Unit): Unit = {
     val host = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val settings = Seq(
-      "spark.sql.shuffle.partitions" -> cpus,
-      "spark.sql.files.openCostInBytes" -> ScanSplitFloorBytes.toString,
-      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.ui.enabled" -> "false")
-    val saved = host.toSeq.flatMap { h =>
-      val explicit = h.conf.getAll
-      settings.collect { case (k, _) if h.conf.isModifiable(k) => k -> explicit.get(k) }
-    }
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .appName(app)
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-    settings.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    try body(spark)
-    finally {
-      if (host.isEmpty) spark.stop()
-      else saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    try graft.Confs.scoped(spark,
+        "spark.sql.shuffle.partitions" -> cpus,
+        "spark.sql.files.openCostInBytes" -> ScanSplitFloorBytes.toString,
+        "spark.sql.adaptive.enabled" -> "true")(body(spark))
+    finally if (host.isEmpty) spark.stop()
   }
 
   /** Text sink with a configurable separator — the reference's

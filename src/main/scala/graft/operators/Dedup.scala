@@ -777,8 +777,8 @@ object Dedup {
         // coalesces its shuffles anyway); `parts` mirrors the
         // partitioner sizing the RDD form used, now only as the
         // threshold's scale denominator
-        val maxParts = math.max(1,
-          spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+        val maxParts = math.max(1, org.apache.spark.sql.graft.ColumnBridge
+          .sqlConf(spark).numShufflePartitions)
         val parts = math.max(1,
           math.min(maxParts.toLong, nEdges / 250000L + 1L).toInt)
         // Heavy-hub broadcast threshold: 2E/(64·parts). The broadcast

@@ -1018,21 +1018,11 @@ object Similarity {
       nQueries: Long = DefaultQueries): DataFrame = {
     beamMemo.getOrBuild(graph,
         s"beam|$k|$beam|$rounds|$nQueries", Seq(emb, queryEmb)) {
-      val sess = emb.sparkSession
       val tinyScope = emb.count() <= BeamTinyCorpus
-      val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-      val prevShuf = sess.conf.get("spark.sql.shuffle.partitions", "32")
-      if (tinyScope) {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        sess.conf.set("spark.sql.shuffle.partitions", "1")
-      }
-      try org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
-        knnBeam(graph, emb, queryEmb, k, beam, rounds, nQueries))
-      finally {
-        if (tinyScope) {
-          sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-          sess.conf.set("spark.sql.shuffle.partitions", prevShuf)
-        }
+      graft.Confs.scoped(emb.sparkSession,
+          (if (tinyScope) graft.Confs.TinyRegime else Nil): _*) {
+        org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
+          knnBeam(graph, emb, queryEmb, k, beam, rounds, nQueries))
       }
     }
   }

@@ -591,25 +591,16 @@ object TextOps {
     // stats-free local checkpoint (1 shuffle partition, AQE off,
     // confs restored on exit; blocks released when the query's cache
     // lease drains — never reused across invocations).
-    val sess = storedIndex.sparkSession
     val est = storedIndex.queryExecution.optimizedPlan.stats.sizeInBytes +
       batch.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est > DeltaTinyScopeBytes) merged
-    else {
-      val prevShuf = sess.conf.get("spark.sql.shuffle.partitions", "200")
-      val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-      sess.conf.set("spark.sql.shuffle.partitions", "1")
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val ckd = org.apache.spark.sql.graft.ColumnBridge
-          .statsFreeLocalCheckpoint(merged)
-        graft.Caches.onRelease(() =>
-          org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(ckd))
-        ckd
-      } finally {
-        sess.conf.set("spark.sql.shuffle.partitions", prevShuf)
-        sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      }
+    else graft.Confs.scoped(storedIndex.sparkSession,
+        graft.Confs.TinyRegime: _*) {
+      val ckd = org.apache.spark.sql.graft.ColumnBridge
+        .statsFreeLocalCheckpoint(merged)
+      graft.Caches.onRelease(() =>
+        org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(ckd))
+      ckd
     }
   }
 
