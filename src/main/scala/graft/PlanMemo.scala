@@ -1,8 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Bounded memo of expensive relations keyed by (session, params,
   * canonicalized input-plan OBJECT) — the session-level reuse layer
@@ -15,6 +16,13 @@ import org.apache.spark.sql.DataFrame
   * CHECKPOINT-BACKED (statsFreeLocalCheckpoint) so the per-query
   * `Caches.clear` lease drain cannot evict them — the memo is
   * session-lived by construction and dies with the JVM.
+  *
+  * Every operator memo lives in ONE store, `PlanMemo.shared`, reached
+  * through `PlanMemo.getOrBuild`; each operator family is told apart
+  * by the tag its `params` string starts with (the text before the
+  * first `|`), which is unique per call site and also names the
+  * family's hit counter (`hitsOf`). Private instances exist only in
+  * the unit specs.
   *
   * Keying discipline: the params string pins session identity
   * (applicationId + session identity hash) and the operator's
@@ -37,7 +45,7 @@ import org.apache.spark.sql.DataFrame
   * serves the incumbent under a fresh reference.
   */
 final class PlanMemo[T](slots: Int,
-    release: T => Unit = (_: T) => ()) {
+    release: T => Unit = PlanMemo.releaseValue(_)) {
   require(slots >= 1, s"slots must be >= 1, got $slots")
 
   PlanMemo.register(this)
@@ -78,10 +86,19 @@ final class PlanMemo[T](slots: Int,
     map.clear()
   }
 
-  /** Hit counter — exists so the reuse specs can pin that the twin
-    * gate actually reused instead of silently rebuilding.
+  /** Hit counter over every family — the total the benchmark harness
+    * reads (see the `PlanMemo` object's reflection contract).
     */
-  val hits = new java.util.concurrent.atomic.AtomicLong
+  val hits = new AtomicLong
+
+  private val familyHits = new ConcurrentHashMap[String, AtomicLong]()
+
+  /** Hits of one family, named by its params tag — exists so the reuse
+    * specs can pin that the twin gate actually reused instead of
+    * silently rebuilding.
+    */
+  def hitsOf(tag: String): Long =
+    Option(familyHits.get(tag)).fold(0L)(_.get)
 
   /** Hand `e`'s value to the calling query: one reference taken now,
     * given back when the caller's Caches lease drains.
@@ -115,6 +132,8 @@ final class PlanMemo[T](slots: Int,
       val e = map.get(key)
       if (e != null) {
         hits.incrementAndGet()
+        familyHits.computeIfAbsent(PlanMemo.tagOf(params),
+          _ => new AtomicLong).incrementAndGet()
         return lend(e)
       }
     }
@@ -146,6 +165,16 @@ final class PlanMemo[T](slots: Int,
   }
 }
 
+/** Process-wide side of the memo layer.
+  *
+  * REFLECTION CONTRACT: the benchmark harness (`perfbench/harness`,
+  * object `Memo`) reads two private-by-convention fields of this
+  * object by name — `buildNanos` (an `AtomicLong`) and `instances` (a
+  * `java.util.Collection` whose elements answer `hits(): AtomicLong`)
+  * — and reports `memo.*` as 0 if either is missing or retyped.
+  * `MemoSpec` reads them the same way; rename neither without
+  * changing both.
+  */
 object PlanMemo {
   /** Total nanoseconds spent inside memo `build` blocks, summed across
     * every PlanMemo instance in the process. Monotone; readers take
@@ -154,12 +183,37 @@ object PlanMemo {
     * query to touch a shared relation carries its cost — exactly the
     * attribution question the bench field exists to answer.
     */
-  val buildNanos = new java.util.concurrent.atomic.AtomicLong
+  val buildNanos = new AtomicLong
 
   private val instances =
     new java.util.concurrent.ConcurrentLinkedQueue[PlanMemo[_]]()
 
   private def register(m: PlanMemo[_]): Unit = instances.add(m)
+
+  /** Retention bound of the shared store: the sum of the per-operator
+    * slot counts it replaced, so any session in which no family keeps
+    * more live entries than its old slot count retains exactly what
+    * the per-operator memos did. Extra entries of one family cost
+    * disk, not heap: local checkpoints are stored MEMORY_AND_DISK.
+    */
+  val SharedSlots = 135
+
+  /** The one store every operator memo goes through. */
+  val shared = new PlanMemo[Any](SharedSlots)
+
+  /** The shared store's `getOrBuild`, typed at the call site. The
+    * family tag that starts `params` must be unique to the call site:
+    * it keeps values of different types apart in the one map.
+    */
+  def getOrBuild[T](input: DataFrame, params: String,
+      extraInputs: Seq[DataFrame] = Nil)(build: => T): T =
+    shared.getOrBuild(input, params, extraInputs)(build).asInstanceOf[T]
+
+  /** Hits of one family of the shared store (see `tagOf`). */
+  def hitsOf(tag: String): Long = shared.hitsOf(tag)
+
+  /** A family's tag: `params` up to its first `|`. */
+  def tagOf(params: String): String = params.takeWhile(_ != '|')
 
   /** Release every memo's entries across the process — the hook a
     * leak audit (or an embedding host tearing a session down) calls;
@@ -174,11 +228,23 @@ object PlanMemo {
     * job reading the dead checkpoint names this release site instead
     * of failing with a bare missing-block error.
     */
-  val releaseDf: org.apache.spark.sql.DataFrame => Unit =
+  val releaseDf: DataFrame => Unit =
     df => try {
       if (MemoDebug.enabled) MemoDebug.recordRelease(df)
       org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(df)
     } catch { case scala.util.control.NonFatal(_) => () }
+
+  /** The default release: walk the value and release every DataFrame
+    * in it — a tuple's or collection's elements, recursively. Anything
+    * else (a path, an `Array[Long]`) owns no blocks and is left alone.
+    * Iterable is matched before Product, since a `List` is both.
+    */
+  def releaseValue(v: Any): Unit = v match {
+    case ds: Dataset[_] => releaseDf(ds.toDF())
+    case it: Iterable[_] => it.foreach(releaseValue)
+    case p: Product => p.productIterator.foreach(releaseValue)
+    case _ => ()
+  }
 }
 
 /** DEBUG-MODE use-after-release guard (`-Dgraft.memo.debug=1`, or

@@ -152,11 +152,10 @@ object SparkEntry {
     * pair of dir paths (nothing to unpersist — the parquet files are
     * the artifact, cleaned by the shutdown hook); keying by the
     * canonicalized CORPUS plan means a different sf dir or corpus
-    * filter rebuilds rather than aliasing. 2 slots: the harness
-    * interleaves at most two sf dirs in one session (verify + spec).
+    * filter rebuilds rather than aliasing. The harness interleaves at
+    * most two sf dirs in one session (verify + spec), so the
+    * `bm25idxDirs` family holds at most two live entries.
     */
-  private val bm25IdxMemo = new PlanMemo[(String, String)](2)
-  private[graft] def bm25IdxMemoHits = bm25IdxMemo.hits
   private[graft] def bm25IndexDirs(s: SparkSession, d: String)
       : (String, String) = {
     import org.apache.spark.sql.functions.col
@@ -170,7 +169,8 @@ object SparkEntry {
     val keyDigest = f"${scala.util.hashing.MurmurHash3.stringHash(
       corpus.queryExecution.analyzed.canonicalized.toString +
         "|" + TextOps.Bm25IndexDepth)}%08x"
-    bm25IdxMemo.getOrBuild(corpus, s"bm25idx|${TextOps.Bm25IndexDepth}") {
+    PlanMemo.getOrBuild(corpus,
+        s"bm25idxDirs|${TextOps.Bm25IndexDepth}") {
       // same per-build nonce rule as storedDirWith: an evicted entry's
       // rebuild must land in a fresh dir, never overwrite one a lazy
       // reader from the old entry may still be scanning
@@ -201,14 +201,12 @@ object SparkEntry {
     * overwriting one an older memo entry still serves (the
     * bm25IndexDirs ADVICE lesson). Values are path strings — nothing
     * to release; the parquet trees die with the JVM via the shutdown
-    * hook. 64 slots ≫ the ~19 artifacts × 2 interleaved sf dirs a
-    * session can touch, so eviction is not expected — and if it ever
-    * fires anyway, the per-build nonce below means the rebuild writes
-    * a FRESH dir rather than overwriting one a returned lazy reader
-    * may still be scanning.
+    * hook. The ~19 artifacts × 2 interleaved sf dirs a session can
+    * touch sit well inside the shared store's one bound, so eviction
+    * is not expected — and if it ever fires anyway, the per-build
+    * nonce below means the rebuild writes a FRESH dir rather than
+    * overwriting one a returned lazy reader may still be scanning.
     */
-  private val storedDirMemo = new PlanMemo[String](64)
-  private[graft] def storedDirMemoHits = storedDirMemo.hits
   // per-BUILD nonce folded into every stored dir's leaf: unlike the
   // DataFrame memos, path values get no ref-count protection, so if
   // LRU eviction ever fired, a re-request would re-WRITE the evicted
@@ -216,8 +214,8 @@ object SparkEntry {
   // returned from the old entry might still be scanning it. With the
   // nonce, an eviction-then-rebuild writes a FRESH dir and the old
   // tree stays readable until the session's shutdown hook sweeps it —
-  // correctness no longer leans on "64 slots ≫ live keys" holding
-  // forever.
+  // correctness does not lean on "the shared bound ≫ live keys"
+  // holding forever.
   private val storedDirNonce = new java.util.concurrent.atomic.AtomicLong
   private[graft] def storedDirWith(d: String, leaf: String,
       fit: org.apache.spark.sql.DataFrame)(
@@ -233,7 +231,7 @@ object SparkEntry {
     val plan = fit.queryExecution.analyzed.canonicalized
     val keyDigest = f"${scala.util.hashing.MurmurHash3.stringHash(
       plan.toString + "|" + leaf)}%08x${plan.hashCode}%08x"
-    storedDirMemo.getOrBuild(fit, s"storedDir|$leaf") {
+    PlanMemo.getOrBuild(fit, s"storedDir|$leaf") {
       val dir = ivfTmpDir(s, d,
         s"${leaf}_${keyDigest}_b${storedDirNonce.incrementAndGet()}")
       write(fit, dir)
@@ -287,7 +285,7 @@ object SparkEntry {
     val plan = keyInput.queryExecution.analyzed.canonicalized
     val keyDigest = f"${scala.util.hashing.MurmurHash3.stringHash(
       plan.toString + "|" + leaf + "|" + params)}%08x${plan.hashCode}%08x"
-    storedDirMemo.getOrBuild(keyInput, s"storedDirLazy|$leaf|$params") {
+    PlanMemo.getOrBuild(keyInput, s"storedDirLazy|$leaf|$params") {
       val dir = ivfTmpDir(s, d,
         s"${leaf}_${keyDigest}_b${storedDirNonce.incrementAndGet()}")
       write(fit, dir)

@@ -83,7 +83,7 @@ object Dedup {
     * boilerplate-heavy corpora.
     */
   def ngramJaccard(docs: DataFrame): DataFrame = {
-    // SESSION-MEMOIZED verified pairs (the clusterMemo discipline one
+    // SESSION-MEMOIZED verified pairs (the `clusters` discipline one
     // stage earlier): dedup_ngram, the two cross-source matrices and
     // defaultClusters' build all run the identical
     // tokenize→shingle→prefix-join→verify chain over the same corpus
@@ -91,27 +91,23 @@ object Dedup {
     // (doc_id, text) input, NOT the caller's frame: the cross-source
     // gates decorate docs with url/host columns the shingle pipeline
     // never reads, and the projection makes those decorated frames hit
-    // the same slot. The projection is passed through the OPTIMIZER
+    // the same entry. The projection is passed through the OPTIMIZER
     // before keying (ofRows of the optimized plan): PlanMemo keys on
     // the ANALYZED canonical plan, where Project(doc_id, text) over
     // Project(*, host) over the scan is a DIFFERENT tree than the
     // undecorated projection — CollapseProject/ColumnPruning fold both
     // to the same pruned scan, which is exactly the "reads the same
     // bytes" equivalence the memo wants. Value is
-    // statsFreeLocalCheckpoint-backed; `pairsMemoHits` exists for the
-    // spec.
+    // statsFreeLocalCheckpoint-backed; `PlanMemo.hitsOf("ngramJaccard")`
+    // exists for the spec.
     val proj = docs.select(col("doc_id"), col("text"))
     val key = org.apache.spark.sql.graft.ColumnBridge.ofRows(
       docs.sparkSession, proj.queryExecution.optimizedPlan)
-    pairsMemo.getOrBuild(key, "ngramJaccard") {
+    graft.PlanMemo.getOrBuild(key, "ngramJaccard") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(ngramJaccardUncached(key))
     }
   }
-
-  private val pairsMemo =
-    new graft.PlanMemo[DataFrame](1, graft.PlanMemo.releaseDf)
-  private[graft] def pairsMemoHits = pairsMemo.hits
 
   /** The uncached verified-pair build `ngramJaccard` memoizes. */
   private def ngramJaccardUncached(docs: DataFrame): DataFrame = {
@@ -226,20 +222,16 @@ object Dedup {
     // `dedup_fuzzy` and `dedup_fuzzy_clusters` run the identical
     // segment-join + levenshtein verify back to back — the dominant
     // cost of both. Keyed on the optimizer-collapsed (doc_id, text)
-    // projection plus the pigeonhole params. `fuzzyMemoHits` exists
-    // for the spec.
+    // projection plus the pigeonhole params. `PlanMemo.hitsOf("fuzzy")`
+    // exists for the spec.
     val proj = docs.select(col("doc_id"), col("text"))
     val key = org.apache.spark.sql.graft.ColumnBridge.ofRows(
       docs.sparkSession, proj.queryExecution.optimizedPlan)
-    fuzzyMemo.getOrBuild(key, s"fuzzy|$keyChars|$segments|$maxDist") {
+    graft.PlanMemo.getOrBuild(key, s"fuzzy|$keyChars|$segments|$maxDist") {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         fuzzyPairsUncached(key, keyChars, segments, maxDist))
     }
   }
-
-  private val fuzzyMemo =
-    new graft.PlanMemo[DataFrame](1, graft.PlanMemo.releaseDf)
-  private[graft] def fuzzyMemoHits = fuzzyMemo.hits
 
   /** The uncached verified-pair build `fuzzyPairs` memoizes. */
   private def fuzzyPairsUncached(docs: DataFrame, keyChars: Int,
@@ -318,16 +310,13 @@ object Dedup {
     * run back to back over their corpora in the suite, and repeated
     * invocations over the SAME corpus (bench reps) re-pay candidate
     * generation without it — the checkpoint-backed relation is the
-    * expensive 90% of both operators. 4 slots: 2 corpora (plain docs
-    * for docKnn, the excerpt-augmented corpus for containment) × the
-    * 2 sf dirs a session interleaves.
+    * expensive 90% of both operators. The suite keys 2 corpora (plain
+    * docs for docKnn, the excerpt-augmented corpus for containment) ×
+    * the 2 sf dirs a session interleaves under the `rarePairs` tag.
     */
-  private val rarePairsMemo =
-    new graft.PlanMemo[DataFrame](4, graft.PlanMemo.releaseDf)
-  private[graft] def rarePairsMemoHits = rarePairsMemo.hits
   private[graft] def rareShingleVerifiedPairs(docs: DataFrame,
       maxDf: Long): DataFrame =
-    rarePairsMemo.getOrBuild(docs, s"rarePairs|$maxDf") {
+    graft.PlanMemo.getOrBuild(docs, s"rarePairs|$maxDf") {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         rareShingleVerifiedPairsUncached(docs, maxDf))
     }
@@ -841,7 +830,7 @@ object Dedup {
     labels
   }
 
-  /** Single-slot memo of the DEFAULT cluster relation —
+  /** Memo (`clusters`) of the DEFAULT cluster relation —
     * `dupClusters(ngramJaccard(docs))`, the labelling five gates and
     * the curation/manifest/split pipelines all consume over the same
     * corpus back to back. The memoized relation is
@@ -851,14 +840,11 @@ object Dedup {
     * consumers skip the whole shingle-join + star-contraction chain.
     * Same keying discipline as GraphOps' sweeps: params string + the
     * canonicalized plan OBJECT, so a stale reuse across corpora is
-    * structurally impossible. `clusterMemoHits` exists for the spec.
+    * structurally impossible. `PlanMemo.hitsOf("clusters")` exists for
+    * the spec.
     */
-  private val clusterMemo =
-    new graft.PlanMemo[DataFrame](1, graft.PlanMemo.releaseDf)
-  private[graft] def clusterMemoHits = clusterMemo.hits
-
   def defaultClusters(docs: DataFrame): DataFrame =
-    clusterMemo.getOrBuild(docs, "clusters") {
+    graft.PlanMemo.getOrBuild(docs, "clusters") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(dupClusters(ngramJaccard(docs)))
     }
@@ -870,7 +856,7 @@ object Dedup {
     * surviving rows of `docs` unchanged.
     */
   def survivors(docs: DataFrame): DataFrame = {
-    // SESSION-MEMOIZED survivor IDS (the clusterMemo discipline): the
+    // SESSION-MEMOIZED survivor IDS (the `clusters` discipline): the
     // exact pass + MinHash-LSH + star contraction is the whole cost of
     // the gate and is identical across back-to-back calls. The memo
     // holds the (doc_id) relation, NOT the surviving rows — ids are
@@ -878,17 +864,14 @@ object Dedup {
     // columns would pin a corpus-sized copy in executor memory. Each
     // call re-derives the rows with one semi-join against `docs`
     // (same rows as the anti-join form: survivors ⊆ exact survivors ⊆
-    // docs, keyed by doc_id). `survivorsMemoHits` exists for the spec.
-    val ids = survivorsMemo.getOrBuild(docs, "survivorIds") {
+    // docs, keyed by doc_id). `PlanMemo.hitsOf("survivorIds")` exists
+    // for the spec.
+    val ids = graft.PlanMemo.getOrBuild(docs, "survivorIds") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(survivorIdsUncached(docs))
     }
     docs.join(ids, Seq("doc_id"), "left_semi")
   }
-
-  private val survivorsMemo =
-    new graft.PlanMemo[DataFrame](1, graft.PlanMemo.releaseDf)
-  private[graft] def survivorsMemoHits = survivorsMemo.hits
 
   /** The uncached survivor-id build `survivors` memoizes. */
   private def survivorIdsUncached(docs: DataFrame): DataFrame = {

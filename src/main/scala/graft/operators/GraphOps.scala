@@ -57,7 +57,7 @@ object GraphOps {
   def weightedEdges(e: DataFrame): DataFrame =
     e.groupBy("src", "dst").agg(count(lit(1)).as("w"))
 
-  /** Dual-slot memo of the weighted edge compression — FOUR gates
+  /** Memo (`wedges`) of the weighted edge compression — FOUR gates
     * (`pagerank_weighted`, `graph_sssp`, `graph_closeness_weighted`,
     * `graph_walks_weighted`) each paid the full-bag groupBy (the
     * "one full-graph pass" their Scaladocs call most of the remaining
@@ -68,19 +68,15 @@ object GraphOps {
     * `edges(s, d)` relation) land on one entry. Measured at sf0.1:
     * the family's bench sum 11.7 → 6.1 s.
     */
-  private val weMemo =
-    new graft.PlanMemo[DataFrame](2, graft.PlanMemo.releaseDf)
-  private[graft] def weMemoHits = weMemo.hits
-
   def weightedEdgesShared(e: DataFrame): DataFrame = {
     val base = e.select(col("src"), col("dst"))
-    weMemo.getOrBuild(base, "wedges") {
+    graft.PlanMemo.getOrBuild(base, "wedges") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(weightedEdges(base))
     }
   }
 
-  /** Dual-slot memo of the DISTINCT DIRECTED edge relation — the
+  /** Memo (`dedges`) of the DISTINCT DIRECTED edge relation — the
     * `weightedEdgesShared` treatment for the simple-digraph family:
     * `pageRank`, `pageRankPersonalized`, `stronglyConnectedComponents`
     * (and through it the condensation gates), `hopDistances`,
@@ -94,31 +90,26 @@ object GraphOps {
     * free). The returned frame is MEMO-OWNED: consumers must never
     * `drop`/`unpersist` it — lifetime is the memo's ref-count,
     * drained by the per-query `Caches` lease like every PlanMemo.
-    * SIX slots = the live suite keys plus headroom (the knnGraphMemo
-    * sizing lesson, round 17): one bench pass keys at least the raw
-    * `edges(s, d)` projection, the SCC gates' sparsified slice, and
-    * `graph_hops_deep`'s synthetic chain — a 2-slot LRU evicted the
-    * edges entry mid-pass, and every rebuild mints a NEW checkpoint
-    * LogicalRDD, churning the distMemo keys downstream (measured:
-    * `graph_diameter` 2.79 s in the eviction regime vs 0.6-0.8 s with
-    * stable keys).
+    * One bench pass keys at least the raw `edges(s, d)` projection,
+    * the SCC gates' sparsified slice, and `graph_hops_deep`'s
+    * synthetic chain, all within the shared store's one bound. When a
+    * dedicated 2-slot LRU held this family it evicted the edges entry
+    * mid-pass, and every rebuild mints a NEW checkpoint LogicalRDD,
+    * churning the `dist` keys downstream (measured: `graph_diameter`
+    * 2.79 s in the eviction regime vs 0.6-0.8 s with stable keys).
     */
-  private val deMemo = new graft.PlanMemo[(DataFrame, Long)](6,
-    { case (df, _) => graft.PlanMemo.releaseDf(df) })
-  private[graft] def deMemoHits = deMemo.hits
-
   private[graft] def distinctEdgesShared(e: DataFrame): (DataFrame, Long) = {
     // key on the OPTIMIZER-COLLAPSED projection (the fuzzyPairs /
     // qualityShared discipline): a decorated or differently-derived-
     // but-equal edge frame collapses to the same optimized plan, so it
-    // lands in the same slot instead of re-entering the LRU as a new
+    // lands in the same entry instead of re-entering the LRU as a new
     // key — the eviction-churn regime this memo's docstring records
     // (graph_diameter 2.79 s vs 0.6-0.8 s) cannot be reintroduced by a
     // caller-side projection
     val proj = e.select(col("src"), col("dst"))
     val key = org.apache.spark.sql.graft.ColumnBridge.ofRows(
       e.sparkSession, proj.queryExecution.optimizedPlan)
-    deMemo.getOrBuild(key, "dedges")(ckCounted(key.distinct()))
+    graft.PlanMemo.getOrBuild(key, "dedges")(ckCounted(key.distinct()))
   }
 
   /** Per-vertex (in-degree m, out-degree n) in ONE shuffle AND one pass
@@ -501,7 +492,7 @@ object GraphOps {
     * partition funnel. Duplicate and self edges are collapsed/ignored
     * by the kernel (component structure is invariant under both).
     */
-  /** Dual-slot memo of the components labeling — `graph_components`
+  /** Memo (`components`) of the components labeling — `graph_components`
     * and `graph_component_sizes` resolve the IDENTICAL contraction
     * from the identical sparsified edge relation back to back (the
     * sizes gate is two tiny aggregations over the labeling), so the
@@ -513,16 +504,12 @@ object GraphOps {
     * (dedup/fuzzy/embedding cluster gates) are single consumers per
     * pairs input, where a memo would be rep-caching.
     */
-  private val compMemo =
-    new graft.PlanMemo[DataFrame](2, graft.PlanMemo.releaseDf)
-  private[graft] def compMemoHits = compMemo.hits
-
   def components(e: DataFrame, maxIter: Int = 30,
       checkpointDir: Option[String] = None): DataFrame = {
     val proj = e.select(col("src"), col("dst"))
     val key = org.apache.spark.sql.graft.ColumnBridge.ofRows(
       proj.sparkSession, proj.queryExecution.optimizedPlan)
-    compMemo.getOrBuild(key,
+    graft.PlanMemo.getOrBuild(key,
         s"components|$maxIter|${checkpointDir.getOrElse("")}") {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         Dedup.dupClusters(
@@ -582,27 +569,23 @@ object GraphOps {
         .distinct())
   }
 
-  /** Memo of `undSimple` — the `weightedEdgesShared` treatment for the
-    * UNDIRECTED-simple family: `kCore`, `coreness`, `kTruss`,
-    * `labelPropagation`, `modularity`, `louvainRound`, and `louvain`
-    * each derive the same symmetrize+simplify relation from the same
+  /** Memo (`undsimple`) of `undSimple` — the `weightedEdgesShared`
+    * treatment for the UNDIRECTED-simple family: `kCore`, `coreness`,
+    * `kTruss`, `labelPropagation`, `modularity`, `louvainRound`, and
+    * `louvain` each derive the same symmetrize+simplify relation from the same
     * edge bag (the modularity gate even derived it twice — once inside
     * its LPA input, once itself), and the derivation is a full-bag
-    * filter + union + distinct shuffle per call. Three slots = the
-    * three live suite keys (the ComponentsMod slice, the unsparsified
-    * kCore bag, the TrussMod slice); values are checkpoint-backed and
-    * session-lived like every PlanMemo. The returned frame is
+    * filter + union + distinct shuffle per call. The suite keys three
+    * inputs (the ComponentsMod slice, the unsparsified kCore bag, the
+    * TrussMod slice); values are checkpoint-backed and session-lived
+    * like every PlanMemo. The returned frame is
     * MEMO-OWNED: consumers must never `drop` it — the peel loops
     * guard their supersede-drop against the shared frame by reference
     * (`protect`), and the label loops simply leave it to the memo.
     */
-  private val undMemo = new graft.PlanMemo[(DataFrame, Long)](3,
-    { case (df, _) => graft.PlanMemo.releaseDf(df) })
-  private[graft] def undMemoHits = undMemo.hits
-
   private def undSimpleShared(e: DataFrame): (DataFrame, Long) = {
     val base = e.select(col("src"), col("dst"))
-    undMemo.getOrBuild(base, "undsimple")(undSimple(base))
+    graft.PlanMemo.getOrBuild(base, "undsimple")(undSimple(base))
   }
 
   /** Peel a checkpointed undirected simple state to its k-core
@@ -1034,7 +1017,7 @@ object GraphOps {
     * (graphs' top-k rows, cluster labels, σ layers) — not for wide
     * intermediates that pipeline well.
     */
-  /** Session memo of the capped-common-neighbor state — r17 revisit of
+  /** Memo (`ccn`) of the capped-common-neighbor state — r17 revisit of
     * the r16 memo rejection: checkpointing `counts` inside
     * linkPrediction alone measured SLOWER (4.3 → 9.6 s, one consumer
     * pays the full materialization it would otherwise stream into
@@ -1045,14 +1028,9 @@ object GraphOps {
     * A/B is recorded in the commit; if the net had stayed negative
     * this memo would not exist.
     */
-  private val ccnMemo =
-    new graft.PlanMemo[(DataFrame, DataFrame, DataFrame)](2,
-      { case (a, b, c) => Seq(a, b, c).foreach(graft.PlanMemo.releaseDf) })
-  private[graft] def ccnMemoHits = ccnMemo.hits
-
   private def cappedCommonNeighbors(e: DataFrame, midMaxDeg: Long)
       : (DataFrame, DataFrame, DataFrame) =
-    ccnMemo.getOrBuild(e, s"ccn|$midMaxDeg") {
+    graft.PlanMemo.getOrBuild(e, s"ccn|$midMaxDeg") {
       val (und, deg, counts) = cappedCommonNeighborsUncached(e, midMaxDeg)
       def ck(df: DataFrame) = org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(df)
@@ -2052,28 +2030,24 @@ object GraphOps {
     * compaction, early exit on an empty sweep. `edges` must be the
     * deduped cached relation.
     */
-  /** Bounded memo of the labeled multi-source BFS results — the
+  /** Memo (`dist`) of the labeled multi-source BFS results — the
     * sampled-centrality family (`graph_closeness`,
     * `graph_eccentricity`, `graph_diameter`) runs the IDENTICAL
     * labeled sweep over the identical sample back to back, and the σ
     * chain adds its own (k, hops) flavor; the distance frames are
     * checkpoint-backed (session-lived, not Caches-leased), so the
     * later gates reuse the first's sweep instead of re-running it.
-    * Same keying discipline as `sigmaMemo` (params string + the
-    * canonicalized plan OBJECT — structural equality sees
-    * LocalRelation data and file roots, strings don't); 4 slots,
-    * LRU — enough for the centrality + σ interleavings one harness
-    * pass produces without retaining every graph ever swept.
+    * Same keying discipline as the `sigma` family (params string +
+    * the canonicalized plan OBJECT — structural equality sees
+    * LocalRelation data and file roots, strings don't); the shared
+    * store's LRU bound keeps the centrality + σ interleavings one
+    * harness pass produces without retaining every graph ever swept.
     */
-  private val distMemo =
-    new graft.PlanMemo[DataFrame](4, graft.PlanMemo.releaseDf)
-  private[graft] def distMemoHits = distMemo.hits
-
   private def labeledHopDistances(edges: DataFrame, seeds: Seq[Long],
       maxHops: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    distMemo.getOrBuild(edges,
+    graft.PlanMemo.getOrBuild(edges,
         s"dist|$maxHops|${seeds.mkString(",")}") {
     val seed0 = ck(seeds.toDF("seed")
       .select(col("seed"), col("seed").as("vertex"), lit(0L).as("dist")))
@@ -2151,7 +2125,7 @@ object GraphOps {
       .select(col("seed"), col("vertex"), col("dist"), col("sigma"))
   }
 
-  /** Single-slot memo of the labeled forward phase: `graph_path_counts`
+  /** Memo (`sigma`) of the labeled forward phase: `graph_path_counts`
     * and `graph_stress` run the IDENTICAL σ computation over the same
     * graph back to back, and the layer frames are
     * statsFreeLocalCheckpoint-backed (session-lived executor blocks,
@@ -2160,14 +2134,10 @@ object GraphOps {
     * instead of re-running the whole forward BFS+σ chain. Keyed by
     * (session, canonicalized input plan, k, maxHops) — the FULL
     * canonical plan string, not a 32-bit semantic hash, so a stale
-    * reuse cannot hide behind a hash collision; one slot bounds
-    * retention to the latest graph's layers. `sigmaMemoHits` exists
-    * for the spec that pins the reuse.
+    * reuse cannot hide behind a hash collision; the shared store's
+    * LRU bound limits retention. `PlanMemo.hitsOf("sigma")` exists for
+    * the spec that pins the reuse.
     */
-  private val sigmaMemo = new graft.PlanMemo[Seq[DataFrame]](1,
-    _.foreach(graft.PlanMemo.releaseDf))
-  private[graft] def sigmaMemoHits = sigmaMemo.hits
-
   /** The shared labeled forward phase: per-layer frames of
     * `(seed, vertex, dist, sigma)` plus the shared edge cache.
     */
@@ -2180,7 +2150,7 @@ object GraphOps {
     val s = e.sparkSession
     import s.implicits._
     val (dedup, _) = distinctEdgesShared(e)
-    val frames = sigmaMemo.getOrBuild(e, s"sigma|$k|$maxHops") {
+    val frames = graft.PlanMemo.getOrBuild(e, s"sigma|$k|$maxHops") {
       sigmaFrames(e, dedup, k, maxHops)
     }
     (frames, dedup)
@@ -2617,7 +2587,7 @@ object GraphOps {
     frames.reduce(_.unionByName(_)).select("walk_id", "step", "vertex")
   }
 
-  /** Dual-slot memo of the walk relation — `graph_walks` and
+  /** Memo (`walks`) of the walk relation — `graph_walks` and
     * `graph_walk_pairs` (the DeepWalk corpus and its skip-gram
     * consumer) build the IDENTICAL walk table back to back, and the
     * artifact is walks × (len+1) rows of three longs — tiny relative
@@ -2629,14 +2599,10 @@ object GraphOps {
     * plus every walk constant. Checkpoint-backed: the per-query cache
     * clear can't evict it.
     */
-  private val walkMemo =
-    new graft.PlanMemo[DataFrame](2, graft.PlanMemo.releaseDf)
-  private[graft] def walkMemoHits = walkMemo.hits
-
   def randomWalksShared(e0: DataFrame, sources: DataFrame,
       len: Int = WalkLen, perSeed: Long = WalksPerSeed,
       broadcastCap: Long = WalksBroadcastCap): DataFrame =
-    walkMemo.getOrBuild(e0.crossJoin(sources),
+    graft.PlanMemo.getOrBuild(e0.crossJoin(sources),
         s"walks|$len|$perSeed|$broadcastCap") {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         randomWalks(e0, sources, len, perSeed, broadcastCap))

@@ -123,25 +123,21 @@ object Similarity {
     * SIDES: a dozen recall gates each rescored the full corpus against
     * the broadcast query set to produce the identical exact baseline
     * (`knnBruteL2(emb)` alone had ~10 call sites). The artifact is
-    * nQueries × k rows; six slots cover the distinct (metric, k,
-    * nQueries, dims) flavors one harness pass requests. Same keying
-    * discipline as every PlanMemo: canonicalized input plan + every
-    * constant.
+    * nQueries × k rows, one entry per distinct (metric, k, nQueries,
+    * dims) flavor a harness pass requests (tags `brute`, `brutel2`).
+    * Same keying discipline as every PlanMemo: canonicalized input
+    * plan + every constant.
     */
-  private val bruteMemo =
-    new graft.PlanMemo[DataFrame](6, graft.PlanMemo.releaseDf)
-  private[graft] def bruteMemoHits = bruteMemo.hits
-
   def knnBruteShared(emb: DataFrame, k: Int = DefaultK,
       nQueries: Long = DefaultQueries): DataFrame =
-    bruteMemo.getOrBuild(emb, s"brute|$k|$nQueries") {
+    graft.PlanMemo.getOrBuild(emb, s"brute|$k|$nQueries") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(knnBrute(emb, k, nQueries))
     }
 
   def knnBruteL2Shared(emb: DataFrame, k: Int = DefaultK,
       nQueries: Long = DefaultQueries, dims: Int = 0): DataFrame =
-    bruteMemo.getOrBuild(emb, s"brutel2|$k|$nQueries|$dims") {
+    graft.PlanMemo.getOrBuild(emb, s"brutel2|$k|$nQueries|$dims") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(knnBruteL2(emb, k, nQueries, dims))
     }
@@ -268,28 +264,24 @@ object Similarity {
     * build), so one checkpoint-backed build per (corpus, params)
     * serves them all — the train-once contract the stored-IVF family
     * makes explicit, applied in-session. EAGER on first build (the
-    * checkpoint materializes the graph at call time).
+    * checkpoint materializes the graph at call time). The suite holds
+    * SIX distinct live `knnGraph` keys — (corpus, k=5) for the
+    * knn_graph family, (corpus, k=BeamGraphDegree) for the beam pair,
+    * and (old-corpus, pinned bandBits) for the incremental gate, each
+    * × the 2 sf dirs a session interleaves — all within the shared
+    * store's one bound. When a dedicated 2-slot LRU held this family,
+    * the bench's round-robin reps CYCLED it: knn_beam's stored-graph
+    * fit was evicted between its own reps and rebuilt the graph every
+    * rep (2.56 s warm, measured) while its recall twin, running
+    * immediately after, hit (0.15 s).
     */
   def knnGraph(emb: DataFrame, k: Int = DefaultK, bands: Int = LshBands,
       bandBits: Int = AdaptiveBandBits, corpusSize: Long = -1L): DataFrame =
-    knnGraphMemo.getOrBuild(emb,
+    graft.PlanMemo.getOrBuild(emb,
         s"knnGraph|$k|$bands|$bandBits|$corpusSize") {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         knnGraphUncached(emb, k, bands, bandBits, corpusSize))
     }
-
-  // 8 slots: the suite holds SIX distinct live keys — (corpus, k=5)
-  // for the knn_graph family, (corpus, k=BeamGraphDegree) for the
-  // beam pair, and (old-corpus, pinned bandBits) for the incremental
-  // gate, each × the 2 sf dirs a session interleaves. At 2 slots the
-  // bench's round-robin reps CYCLED the memo: knn_beam's stored-graph
-  // fit was evicted between its own reps and rebuilt the graph every
-  // rep (2.56 s warm, measured) while its recall twin, running
-  // immediately after, hit (0.15 s) — an eviction thrash the warm
-  // numbers surfaced round-over-round.
-  private val knnGraphMemo =
-    new graft.PlanMemo[DataFrame](8, graft.PlanMemo.releaseDf)
-  private[graft] def knnGraphMemoHits = knnGraphMemo.hits
 
   /** INCREMENTAL kNN-GRAPH MAINTENANCE — the vector-tier twin of
     * `TextOps.postingsDelta`: fold a fresh vector batch into a STORED
@@ -1009,14 +1001,10 @@ object Similarity {
     * the same structural-equality guarantee the graph plan has — a
     * digest collision cannot silently serve the wrong ranking.
     */
-  private val beamMemo =
-    new graft.PlanMemo[DataFrame](4, graft.PlanMemo.releaseDf)
-  private[graft] def beamMemoHits = beamMemo.hits
-
   def knnBeamShared(graph: DataFrame, emb: DataFrame, queryEmb: DataFrame,
       k: Int = DefaultK, beam: Int = BeamWidth, rounds: Int = BeamRounds,
       nQueries: Long = DefaultQueries): DataFrame = {
-    beamMemo.getOrBuild(graph,
+    graft.PlanMemo.getOrBuild(graph,
         s"beam|$k|$beam|$rounds|$nQueries", Seq(emb, queryEmb)) {
       val tinyScope = emb.count() <= BeamTinyCorpus
       graft.Confs.scoped(emb.sparkSession,
@@ -2273,29 +2261,25 @@ object Similarity {
     // optimizer-collapsed (vec_id, embedding) projection plus the
     // band-geometry params; band-bit resolution (which counts the
     // corpus in the adaptive default) happens INSIDE the build, so a
-    // memo hit also skips that count. `nearDupMemoHits` exists for
-    // the spec.
+    // memo hit also skips that count. `PlanMemo.hitsOf("neardup")`
+    // exists for the spec.
     // SCALE NOTE (resident footprint): the memoized relation is the
     // UNFILTERED candidate set — sized by LSH band collisions, not by
     // the thresholded output — so its checkpoint retention grows with
-    // candidate volume at larger corpora (bounded by the 2-slot LRU
-    // and the band geometry's collision rate). If candidate volume
-    // outgrows the block store at a higher scale factor, memoize at a
-    // floor threshold (min of the consumers') instead of -inf and key
-    // it into the params string.
+    // candidate volume at larger corpora (bounded by the shared
+    // store's LRU bound and the band geometry's collision rate). If
+    // candidate volume outgrows the block store at a higher scale
+    // factor, memoize at a floor threshold (min of the consumers')
+    // instead of -inf and key it into the params string.
     val proj = emb.select(col("vec_id"), col("embedding"))
     val key = org.apache.spark.sql.graft.ColumnBridge.ofRows(
       emb.sparkSession, proj.queryExecution.optimizedPlan)
-    nearDupMemo.getOrBuild(key, s"neardup|$bands|$bandBits|$corpusSize") {
+    graft.PlanMemo.getOrBuild(key, s"neardup|$bands|$bandBits|$corpusSize") {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         nearDupPairsUncached(key, bands,
           resolveBandBits(key, bandBits, corpusSize)))
     }.filter(col("cosine") >= threshold)
   }
-
-  private val nearDupMemo =
-    new graft.PlanMemo[DataFrame](2, graft.PlanMemo.releaseDf)
-  private[graft] def nearDupMemoHits = nearDupMemo.hits
 
   /** The uncached, UNTHRESHOLDED verified-pair build `nearDupPairs`
     * memoizes: every band-collision candidate with its exact cosine.

@@ -54,22 +54,18 @@ object TextOps {
     * projection over the whole corpus per call just to join two
     * id-sized columns. Keyed on the optimizer-collapsed
     * (doc_id, text) projection (the ngramJaccard discipline — a
-    * decorated frame lands on the same slot as the bare corpus). The
+    * decorated frame lands on the same entry as the bare corpus). The
     * SCAN-SHAPED gates (`text_quality`, `text_sample_quality`,
     * deciles, calibration) deliberately keep the direct projection:
     * their PlanSpec contracts pin the one-pass pruned-scan shape, and
     * a per-row map consumer gains nothing from a checkpoint.
-    * `qualityMemoHits` exists for the spec.
+    * `PlanMemo.hitsOf("quality")` exists for the spec.
     */
-  private val qualityMemo =
-    new graft.PlanMemo[DataFrame](2, graft.PlanMemo.releaseDf)
-  private[graft] def qualityMemoHits = qualityMemo.hits
-
   def qualityShared(docs: DataFrame): DataFrame = {
     val proj = docs.select(col("doc_id"), col("text"))
     val key = org.apache.spark.sql.graft.ColumnBridge.ofRows(
       docs.sparkSession, proj.queryExecution.optimizedPlan)
-    qualityMemo.getOrBuild(key, "quality") {
+    graft.PlanMemo.getOrBuild(key, "quality") {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         quality(key).select(col("doc_id"), col("quality")))
     }
@@ -145,14 +141,6 @@ object TextOps {
           "AND ns <= 8 * GREATEST(nt, 1L) THEN 1 ELSE 0 END) " +
           ">= 500 * GREATEST(nt, 1L) THEN 1 ELSE -1 END AS BIGINT) AS y")
 
-  /** Session memo of the fitted weight vector — three gates (the
-    * artifact, the scorer, the agreement honesty gate) consume the
-    * same fit back to back; the value is QmDims longs (nothing to
-    * release). Keyed by the corpus plan + every training constant.
-    */
-  private val qmMemo = new graft.PlanMemo[Array[Long]](2)
-  private[graft] def qmMemoHits = qmMemo.hits
-
   /** Fit the integer LMS / ADALINE model driver-side over the
     * hash-prefix sample (the `trainCentroids` discipline: a
     * cap-bounded deterministic sample collected to driver literals,
@@ -171,10 +159,15 @@ object TextOps {
     * agreement in `QmEpochs`. Magnitudes: steady-state w ~ T/|x| ≈
     * 10⁶–10⁷, scores ≤ 10¹⁰, gradients ≤ 256·10¹⁰·2000 ≈ 5·10¹⁵ —
     * inside long range with 1000× headroom.
+    *
+    * Session-memoized (`qm`): three gates (the artifact, the scorer,
+    * the agreement honesty gate) consume the same fit back to back;
+    * the value is QmDims longs (nothing to release). Keyed by the
+    * corpus plan + every training constant.
     */
   private[graft] def qualityModelFit(docs: DataFrame,
       epochs: Int = QmEpochs, sampleCap: Int = QmSampleCap): Array[Long] =
-    qmMemo.getOrBuild(docs,
+    graft.PlanMemo.getOrBuild(docs,
         s"qm|$epochs|$sampleCap|$QmTarget|$QmStepScale") {
       val rows = qmFeatures(docs)
         .withColumn("ch", poly_hash(col("doc_id").cast("string")))
@@ -810,7 +803,7 @@ object TextOps {
       .select("doc_id", "split", "keep_ppm")
   }
 
-  /** Single-slot memo of the DEFAULT-clusters curation relation —
+  /** Memo (`curation`) of the DEFAULT-clusters curation relation —
     * `docs_curation` and `docs_manifest` both consume
     * `curation(docs)` over the same corpus back to back (the cluster
     * labelling inside it is already memoized; this covers the
@@ -819,12 +812,8 @@ object TextOps {
     * overload stays unmemoized: its identity with this form is the
     * spec-pinned law, not a reuse path.
     */
-  private val curationMemo =
-    new graft.PlanMemo[DataFrame](1, graft.PlanMemo.releaseDf)
-  private[graft] def curationMemoHits = curationMemo.hits
-
   def curationShared(docs: DataFrame): DataFrame =
-    curationMemo.getOrBuild(docs, "curation") {
+    graft.PlanMemo.getOrBuild(docs, "curation") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(curation(docs))
     }
@@ -1472,19 +1461,16 @@ object TextOps {
       .groupBy("q_decile", "s_decile").agg(count(lit(1)).as("n"))
   }
 
-  /** Single-slot memo of the surprisal relation — `text_surprisal`
-    * and `qualityCalibration` both pay the corpus bigram-LM build
-    * (two corpus-sized shuffles) over the same docs back to back; the
-    * artifact is one 3-long row per doc (the `defaultClusters`
-    * precedent: per-doc label relations memoize well). Checkpoint-
-    * backed, keyed by the docs plan — the standard discipline.
+  /** Memo (`surprisal`) of the surprisal relation —
+    * `text_surprisal` and `qualityCalibration` both pay the corpus
+    * bigram-LM build (two corpus-sized shuffles) over the same docs
+    * back to back; the artifact is one 3-long row per doc (the
+    * `defaultClusters` precedent: per-doc label relations memoize
+    * well). Checkpoint-backed, keyed by the docs plan — the standard
+    * discipline.
     */
-  private val surprisalMemo =
-    new graft.PlanMemo[DataFrame](1, graft.PlanMemo.releaseDf)
-  private[graft] def surprisalMemoHits = surprisalMemo.hits
-
   def surprisalShared(docs: DataFrame): DataFrame =
-    surprisalMemo.getOrBuild(docs, "surprisal") {
+    graft.PlanMemo.getOrBuild(docs, "surprisal") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(surprisal(docs))
     }
@@ -2375,28 +2361,24 @@ object TextOps {
     bm25Score(c, qt.unionByName(expansion).distinct(), k)
   }
 
-  /** Single-slot memo of the DEFAULT exact-PRF ranking — the suite's
-    * two most expensive gates (`text_bm25_prf` and the stored tier's
-    * honesty gate `text_bm25_prf_indexed_recall`) consume the
-    * IDENTICAL corpus-bounded `bm25Prf(docs)` relation back to back;
-    * before the memo each rebuilt it from scratch (~7 s apiece at
+  /** Memo (`bm25prf`) of the DEFAULT exact-PRF ranking —
+    * the suite's two most expensive gates (`text_bm25_prf` and the
+    * stored tier's honesty gate `text_bm25_prf_indexed_recall`) consume
+    * the IDENTICAL corpus-bounded `bm25Prf(docs)` relation back to
+    * back; before the memo each rebuilt it from scratch (~7 s apiece at
     * sf0.1). The artifact is nQueries × k rows (80 by default) —
     * tiny relative to its build, squarely inside the memo discipline
     * (contrast the reverted GraphOps memo whose artifact rivaled its
     * build). Checkpoint-backed so per-query `Caches.clear` can't
     * evict it; keyed by the canonicalized docs plan + every PRF
     * constant, so a stale reuse across corpora or parameters is
-    * structurally impossible. `prfMemoHits` exists for the reuse
-    * spec.
+    * structurally impossible. `PlanMemo.hitsOf("bm25prf")` exists for
+    * the reuse spec.
     */
-  private val prfMemo =
-    new graft.PlanMemo[DataFrame](1, graft.PlanMemo.releaseDf)
-  private[graft] def prfMemoHits = prfMemo.hits
-
   def bm25PrfShared(docs: DataFrame, k: Int = Bm25K,
       nQueries: Long = Bm25Queries, fb: Int = PrfFeedbackDocs,
       ex: Int = PrfExpansionTerms): DataFrame =
-    prfMemo.getOrBuild(docs, s"bm25prf|$k|$nQueries|$fb|$ex") {
+    graft.PlanMemo.getOrBuild(docs, s"bm25prf|$k|$nQueries|$fb|$ex") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(bm25Prf(docs, k, nQueries, fb, ex))
     }
@@ -2407,15 +2389,12 @@ object TextOps {
     * pool at pool depth, and `text_bm25_indexed_recall`'s exact truth
     * side), and each re-paid the corpus tokenize + tf shuffle. The
     * ranking is a queries×k relation — a few hundred rows — so the
-    * checkpoint is ~free. 4 slots: 2 depths (k, pool) × 2 sf dirs.
+    * checkpoint is ~free. The suite keys 2 depths (k, pool) × 2 sf
+    * dirs of the `bm25` family.
     */
-  private val bm25Memo =
-    new graft.PlanMemo[DataFrame](4, graft.PlanMemo.releaseDf)
-  private[graft] def bm25MemoHits = bm25Memo.hits
-
   def bm25Shared(docs: DataFrame, k: Int = Bm25K,
       nQueries: Long = Bm25Queries): DataFrame =
-    bm25Memo.getOrBuild(docs, s"bm25|$k|$nQueries") {
+    graft.PlanMemo.getOrBuild(docs, s"bm25|$k|$nQueries") {
       org.apache.spark.sql.graft.ColumnBridge
         .statsFreeLocalCheckpoint(bm25(docs, k, nQueries))
     }
@@ -2432,15 +2411,12 @@ object TextOps {
     * collision can serve the wrong ranking.
     * The INCREMENTAL serve deliberately stays unmemoized: the delta
     * fold is that gate's measured operation, not a reusable artifact.
+    * Tags: `bm25idx` and `prfidx`.
     */
-  private val idxServeMemo =
-    new graft.PlanMemo[DataFrame](8, graft.PlanMemo.releaseDf)
-  private[graft] def idxServeMemoHits = idxServeMemo.hits
-
   def bm25FromIndexShared(index: DataFrame, lens: DataFrame,
       queryDocs: DataFrame, k: Int = Bm25K,
       nQueries: Long = Bm25Queries): DataFrame =
-    idxServeMemo.getOrBuild(index,
+    graft.PlanMemo.getOrBuild(index,
         s"bm25idx|$k|$nQueries", Seq(lens, queryDocs)) {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         bm25FromIndex(index, lens, queryDocs, k, nQueries))
@@ -2450,7 +2426,7 @@ object TextOps {
       queryDocs: DataFrame, k: Int = Bm25K,
       nQueries: Long = Bm25Queries, fb: Int = PrfFeedbackDocs,
       ex: Int = PrfExpansionTerms): DataFrame =
-    idxServeMemo.getOrBuild(index,
+    graft.PlanMemo.getOrBuild(index,
         s"prfidx|$k|$nQueries|$fb|$ex", Seq(lens, queryDocs)) {
       org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(
         bm25PrfFromIndex(index, lens, queryDocs, k, nQueries, fb, ex))

@@ -414,6 +414,118 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("PlanMemo shared store: two tags over the same input plan are separate entries") {
+    val d = spark.range(5).toDF()
+    var builds = 0
+    graft.Caches.scoped {
+      val a = graft.PlanMemo.getOrBuild(d, "specTagA|1") {
+        builds += 1; "dir-a"
+      }
+      val b = graft.PlanMemo.getOrBuild(d, "specTagB|1") {
+        builds += 1; Array(1L, 2L)
+      }
+      assert(a === "dir-a")
+      assert(b.toSeq === Seq(1L, 2L))
+      assert(builds === 2, "the second tag must not be served the first's value")
+      val hitsA = graft.PlanMemo.hitsOf("specTagA")
+      assert(graft.PlanMemo.getOrBuild(d, "specTagA|1") {
+        builds += 1; "rebuilt"
+      } === "dir-a")
+      assert(graft.PlanMemo.getOrBuild(d, "specTagB|1") {
+        builds += 1; Array(9L)
+      }.toSeq === Seq(1L, 2L))
+      assert(builds === 2)
+      assert(graft.PlanMemo.hitsOf("specTagA") === hitsA + 1)
+    }
+  }
+
+  test("PlanMemo default release: every DataFrame in a tuple or Seq is freed once, when the last lease drains; paths and arrays are left alone") {
+    import org.apache.spark.sql.graft.ColumnBridge
+    def ck(n: Long) = ColumnBridge.statsFreeLocalCheckpoint(spark.range(n).toDF())
+    def rddOf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves().collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }.get
+    val destructed = scala.collection.mutable.ArrayBuffer[Any]()
+    val memo = new graft.PlanMemo[Any](8, v => {
+      destructed += v; graft.PlanMemo.releaseValue(v)
+    })
+    val frames = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
+    graft.Caches.scoped {
+      val pair = memo.getOrBuild(spark.range(1).toDF(), "pair") {
+        val df = ck(11); frames += df; (df, 11L)
+      }.asInstanceOf[(org.apache.spark.sql.DataFrame, Long)]
+      val seq = memo.getOrBuild(spark.range(2).toDF(), "seq") {
+        val fs = Seq(ck(12), ck(13)); frames ++= fs; fs
+      }.asInstanceOf[Seq[org.apache.spark.sql.DataFrame]]
+      memo.getOrBuild(spark.range(3).toDF(), "nested") {
+        val (a, b) = (ck(14), ck(15)); frames ++= Seq(a, b); (a, (b, "x"))
+      }
+      memo.getOrBuild(spark.range(4).toDF(), "path")("/tmp/dir")
+      memo.getOrBuild(spark.range(5).toDF(), "dirs")(("/tmp/i", "/tmp/l"))
+      memo.getOrBuild(spark.range(6).toDF(), "longs")(Array(3L, 4L))
+      // the map lets go of every entry, but this query still holds them
+      memo.clear()
+      assert(destructed.isEmpty)
+      assert(frames.forall(f => rddOf(f).getStorageLevel.useMemory))
+      assert(pair._1.count() === 11L)
+      assert(seq.map(_.count()) === Seq(12L, 13L))
+    }
+    // the lease drained: one destructor run per entry, every frame freed
+    assert(destructed.size === 6)
+    assert(frames.size === 5)
+    assert(frames.forall(f => rddOf(f).getStorageLevel ===
+      org.apache.spark.storage.StorageLevel.NONE))
+    // non-DataFrame values pass through the walk untouched
+    graft.PlanMemo.releaseValue("/tmp/dir")
+    graft.PlanMemo.releaseValue(Array(3L, 4L))
+    graft.PlanMemo.releaseValue(("/tmp/i", "/tmp/l"))
+  }
+
+  test("PlanMemo.hitsOf counts hits per family tag") {
+    val memo = new graft.PlanMemo[Int](8)
+    val d1 = spark.range(1).toDF()
+    val d2 = spark.range(2).toDF()
+    graft.Caches.scoped {
+      memo.getOrBuild(d1, "fam|1")(1)
+      memo.getOrBuild(d2, "fam|2")(2)
+      memo.getOrBuild(d1, "other")(3)
+      assert(memo.hitsOf("fam") === 0L)
+      memo.getOrBuild(d1, "fam|1")(-1)
+      memo.getOrBuild(d2, "fam|2")(-1)
+      memo.getOrBuild(d1, "other")(-1)
+      memo.getOrBuild(d1, "other")(-1)
+    }
+    assert(memo.hitsOf("fam") === 2L)
+    assert(memo.hitsOf("other") === 2L)
+    assert(memo.hitsOf("fam|1") === 0L, "a tag ends at the first '|'")
+    assert(memo.hitsOf("absent") === 0L)
+    assert(memo.hits.get() === 4L)
+    memo.clear()
+  }
+
+  test("PlanMemo: a family's entry one query holds survives eviction caused by another family") {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val memo = new graft.PlanMemo[Any](1)
+    var held: org.apache.spark.rdd.RDD[_] = null
+    graft.Caches.scoped {
+      val (a, n) = memo.getOrBuild(spark.range(40).toDF(), "famA|x") {
+        (ColumnBridge.statsFreeLocalCheckpoint(spark.range(40).toDF()), 40L)
+      }.asInstanceOf[(org.apache.spark.sql.DataFrame, Long)]
+      held = a.queryExecution.analyzed.collectLeaves().collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }.get
+      // another family's build overflows the one slot and evicts famA
+      memo.getOrBuild(spark.range(9).toDF(), "famB|x")(
+        Seq(ColumnBridge.statsFreeLocalCheckpoint(spark.range(9).toDF())))
+      assert(held.getStorageLevel.useMemory,
+        "the evicted entry's blocks must survive while this query holds it")
+      assert(a.count() === n)
+    }
+    assert(held.getStorageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    memo.clear()
+  }
+
   test("bm25PrfShared memo: the recall gate's truth side reuses the text_bm25_prf relation") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) = df
@@ -422,18 +534,18 @@ class ExtensionsSpec extends SparkSpec {
       .toSet
     val first = rows(TextOps.bm25PrfShared(docs))
     assert(first.nonEmpty)
-    val before = TextOps.prfMemoHits.get()
+    val before = PlanMemo.hitsOf("bm25prf")
     // the second consumer (the recall gate's exact side) must HIT and
     // serve the identical relation
     assert(rows(TextOps.bm25PrfShared(docs)) === first)
-    assert(TextOps.prfMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("bm25prf") > before,
       "second bm25PrfShared call rebuilt instead of reusing the memo")
     // the memoized relation equals a fresh direct computation
     assert(rows(TextOps.bm25Prf(docs)) === first)
     // different PRF constants must MISS — no stale cross-param reuse
-    val hitsBefore2 = TextOps.prfMemoHits.get()
+    val hitsBefore2 = PlanMemo.hitsOf("bm25prf")
     TextOps.bm25PrfShared(docs, ex = 0).count()
-    assert(TextOps.prfMemoHits.get() === hitsBefore2,
+    assert(PlanMemo.hitsOf("bm25prf") === hitsBefore2,
       "different expansion constants must not reuse the memo")
   }
 
@@ -445,16 +557,16 @@ class ExtensionsSpec extends SparkSpec {
       .toSet
     val first = rows(TextOps.bm25Shared(docs))
     assert(first.nonEmpty)
-    val before = TextOps.bm25MemoHits.get()
+    val before = PlanMemo.hitsOf("bm25")
     assert(rows(TextOps.bm25Shared(docs)) === first)
-    assert(TextOps.bm25MemoHits.get() > before,
+    assert(PlanMemo.hitsOf("bm25") > before,
       "second bm25Shared call rebuilt instead of reusing the memo")
     // the memoized relation equals a fresh direct computation
     assert(rows(TextOps.bm25(docs)) === first)
     // hybridRrf's pool depth is a different key — no cross-depth reuse
-    val hitsBefore2 = TextOps.bm25MemoHits.get()
+    val hitsBefore2 = PlanMemo.hitsOf("bm25")
     TextOps.bm25Shared(docs, k = Similarity.RrfPool).count()
-    assert(TextOps.bm25MemoHits.get() === hitsBefore2,
+    assert(PlanMemo.hitsOf("bm25") === hitsBefore2,
       "different ranking depth must not reuse the memo")
   }
 
@@ -469,9 +581,9 @@ class ExtensionsSpec extends SparkSpec {
       .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
     val beam1 = rows(Similarity.knnBeamShared(g, emb, emb))
     assert(beam1.nonEmpty)
-    val beamBefore = Similarity.beamMemoHits.get()
+    val beamBefore = PlanMemo.hitsOf("beam")
     assert(rows(Similarity.knnBeamShared(g, emb, emb)) === beam1)
-    assert(Similarity.beamMemoHits.get() > beamBefore,
+    assert(PlanMemo.hitsOf("beam") > beamBefore,
       "second knnBeamShared call rebuilt instead of reusing")
     assert(rows(Similarity.knnBeam(g, emb, emb)) === beam1)
     // stored-index serve: recall twin + hybrid pool must reuse
@@ -486,16 +598,16 @@ class ExtensionsSpec extends SparkSpec {
     val lens = spark.read.parquet(base + "/lens")
     val serve1 = rows(TextOps.bm25FromIndexShared(idx, lens, docs))
     assert(serve1.nonEmpty)
-    val idxBefore = TextOps.idxServeMemoHits.get()
+    val idxBefore = PlanMemo.hitsOf("bm25idx")
     assert(rows(TextOps.bm25FromIndexShared(idx, lens, docs)) === serve1)
-    assert(TextOps.idxServeMemoHits.get() > idxBefore,
+    assert(PlanMemo.hitsOf("bm25idx") > idxBefore,
       "second bm25FromIndexShared call rebuilt instead of reusing")
     assert(rows(TextOps.bm25FromIndex(idx, lens, docs)) === serve1)
     // a different depth is a different key — no cross-depth reuse
-    val idxBefore2 = TextOps.idxServeMemoHits.get()
+    val idxBefore2 = PlanMemo.hitsOf("bm25idx")
     TextOps.bm25FromIndexShared(idx, lens, docs,
       k = Similarity.RrfPool).count()
-    assert(TextOps.idxServeMemoHits.get() === idxBefore2,
+    assert(PlanMemo.hitsOf("bm25idx") === idxBefore2,
       "different serve depth must not reuse the memo")
   }
 
@@ -505,9 +617,9 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val first = rows(TextOps.curationShared(docs))
     assert(first.nonEmpty)
-    val before = TextOps.curationMemoHits.get()
+    val before = PlanMemo.hitsOf("curation")
     assert(rows(TextOps.curationShared(docs)) === first)
-    assert(TextOps.curationMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("curation") > before,
       "second curationShared call rebuilt the pipeline")
     assert(rows(TextOps.curation(docs)) === first)
   }
@@ -520,9 +632,9 @@ class ExtensionsSpec extends SparkSpec {
       .toSet
     val first = rows(TextOps.surprisalShared(docs))
     assert(first.nonEmpty)
-    val before = TextOps.surprisalMemoHits.get()
+    val before = PlanMemo.hitsOf("surprisal")
     assert(rows(TextOps.surprisalShared(docs)) === first)
-    assert(TextOps.surprisalMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("surprisal") > before,
       "second surprisalShared call rebuilt the bigram LM")
     assert(rows(TextOps.surprisal(docs)) === first)
   }
@@ -534,9 +646,9 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val first = cos(Similarity.knnBruteShared(emb))
     assert(first.nonEmpty)
-    val before = Similarity.bruteMemoHits.get()
+    val before = PlanMemo.hitsOf("brute")
     assert(cos(Similarity.knnBruteShared(emb)) === first)
-    assert(Similarity.bruteMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("brute") > before,
       "second knnBruteShared call rebuilt the exact ranking")
     assert(cos(Similarity.knnBrute(emb)) === first)
     // the L2 flavor is a DIFFERENT entry (no cross-metric aliasing),
@@ -545,10 +657,10 @@ class ExtensionsSpec extends SparkSpec {
     assert(l2 === cos(Similarity.knnBruteL2(emb)))
     // truncated-dims keys its own entry: first call misses (no hit
     // increment), second call hits exactly once
-    val hits2 = Similarity.bruteMemoHits.get()
+    val hits2 = PlanMemo.hitsOf("brutel2")
     Similarity.knnBruteL2Shared(emb, dims = Similarity.TruncDims).count()
     Similarity.knnBruteL2Shared(emb, dims = Similarity.TruncDims).count()
-    assert(Similarity.bruteMemoHits.get() === hits2 + 1,
+    assert(PlanMemo.hitsOf("brutel2") === hits2 + 1,
       "the dims flavor must memoize separately and then hit")
   }
 
@@ -561,17 +673,17 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val first = rows(GraphOps.weightedEdgesShared(e))
     assert(first === Set((0L, 1L, 2L), (1L, 2L, 1L), (2L, 0L, 3L)))
-    val before = GraphOps.weMemoHits.get()
+    val before = PlanMemo.hitsOf("wedges")
     // the gates all pass the same derived edge frame — second call HITS
     assert(rows(GraphOps.weightedEdgesShared(e)) === first)
-    assert(GraphOps.weMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("wedges") > before,
       "second weightedEdgesShared call rebuilt the compression")
     // identical to the unmemoized build
     assert(rows(GraphOps.weightedEdges(e)) === first)
     // a different edge relation must miss
-    val hits2 = GraphOps.weMemoHits.get()
+    val hits2 = PlanMemo.hitsOf("wedges")
     GraphOps.weightedEdgesShared(Seq((5L, 6L)).toDF("src", "dst")).count()
-    assert(GraphOps.weMemoHits.get() === hits2)
+    assert(PlanMemo.hitsOf("wedges") === hits2)
   }
 
   test("undSimpleShared memo: the undirected family reuses one symmetrize+simplify and peel loops never drop the shared frame") {
@@ -580,14 +692,14 @@ class ExtensionsSpec extends SparkSpec {
     // triangle + pendant, with duplicate and self edges to simplify away
     val e = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 0L), (0L, 0L),
       (1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val before = GraphOps.undMemoHits.get()
+    val before = PlanMemo.hitsOf("undsimple")
     assert(GraphOps.labelPropagation(e, rounds = 2).collect().nonEmpty)
     // a second family member over the SAME edges hits the memo (the
     // modularity gate even hits twice: once in its LPA input, once
     // itself)
     assert(GraphOps.modularity(e,
       GraphOps.labelPropagation(e, rounds = 2)).collect().nonEmpty)
-    assert(GraphOps.undMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("undsimple") > before,
       "the undirected family rebuilt undSimple instead of reusing it")
     // the peel loops guard their supersede-drop against the memo-owned
     // frame: kCore must run green TWICE over the same edges — if the
@@ -600,10 +712,10 @@ class ExtensionsSpec extends SparkSpec {
     assert(k1 === core(2) && k1.nonEmpty)
     assert(k1.map(_._1) === Set(0L, 1L, 2L)) // the triangle is the 2-core
     // a different edge relation must miss
-    val hits2 = GraphOps.undMemoHits.get()
+    val hits2 = PlanMemo.hitsOf("undsimple")
     GraphOps.kCore(Seq((7L, 8L)).toDF("src", "dst"), k = 1,
       localMax = 0L).count()
-    assert(GraphOps.undMemoHits.get() === hits2)
+    assert(PlanMemo.hitsOf("undsimple") === hits2)
   }
 
   test("distinctEdgesShared memo: the simple-digraph family reuses one distinct build and local fast paths never drop the shared frame") {
@@ -612,7 +724,7 @@ class ExtensionsSpec extends SparkSpec {
     // cycle + tail, with duplicate edges to dedup away
     val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (1L, 2L), (2L, 3L),
       (3L, 4L)).toDF("src", "dst")
-    val before = GraphOps.deMemoHits.get()
+    val before = PlanMemo.hitsOf("dedges")
     // hops takes the LOCAL path (collects the shared frame) — it must
     // not release the memo's checkpoint
     val seeds = Seq(0L).toDF("v")
@@ -623,7 +735,7 @@ class ExtensionsSpec extends SparkSpec {
     val scc = GraphOps.stronglyConnectedComponents(e).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(scc === Set((0L, 0L), (1L, 0L), (2L, 0L), (3L, 3L), (4L, 4L)))
-    assert(GraphOps.deMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("dedges") > before,
       "the simple-digraph family rebuilt the distinct relation instead of reusing it")
     // the DISTRIBUTED consumers share the frame too: rerunning hops
     // distributed (localThreshold = 0) over the memoized relation must
@@ -632,10 +744,10 @@ class ExtensionsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(h2 === h1)
     // a different edge relation must miss
-    val hits2 = GraphOps.deMemoHits.get()
+    val hits2 = PlanMemo.hitsOf("dedges")
     GraphOps.hopDistances(Seq((7L, 8L)).toDF("src", "dst"),
       Seq(7L).toDF("v"), 2).count()
-    assert(GraphOps.deMemoHits.get() === hits2)
+    assert(PlanMemo.hitsOf("dedges") === hits2)
   }
 
   test("nearDupPairs memo: one verified build serves every threshold; a different corpus misses") {
@@ -644,18 +756,18 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val all = rows(Similarity.nearDupPairs(emb, threshold = -1.0))
     assert(all.nonEmpty)
-    val before = Similarity.nearDupMemoHits.get()
+    val before = PlanMemo.hitsOf("neardup")
     // the 0.30 default re-serves the memoized unfiltered relation;
     // expected = the Spark NaN-above-threshold semantics
     val cut = rows(Similarity.nearDupPairs(emb))
-    assert(Similarity.nearDupMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("neardup") > before,
       "the 0.30 call rebuilt the verified relation instead of reusing it")
     assert(cut === all.filter(t => t._3.isNaN || t._3 >= 0.30))
     // a different corpus must MISS (and not serve the old pairs)
-    val hits2 = Similarity.nearDupMemoHits.get()
+    val hits2 = PlanMemo.hitsOf("neardup")
     val half = rows(Similarity.nearDupPairs(
       emb.filter(col("vec_id") % 2 === 0), threshold = -1.0))
-    assert(Similarity.nearDupMemoHits.get() === hits2)
+    assert(PlanMemo.hitsOf("neardup") === hits2)
     assert(half.subsetOf(all) && half != all)
   }
 
@@ -664,14 +776,14 @@ class ExtensionsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val first = rows(Dedup.fuzzyPairs(docs))
-    val before = Dedup.fuzzyMemoHits.get()
+    val before = PlanMemo.hitsOf("fuzzy")
     assert(rows(Dedup.fuzzyPairs(docs)) === first)
-    assert(Dedup.fuzzyMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("fuzzy") > before,
       "second fuzzyPairs call rebuilt the verified pairs")
     // a different corpus must miss
-    val hits2 = Dedup.fuzzyMemoHits.get()
+    val hits2 = PlanMemo.hitsOf("fuzzy")
     Dedup.fuzzyPairs(docs.filter(col("doc_id") % 2 === 0)).count()
-    assert(Dedup.fuzzyMemoHits.get() === hits2)
+    assert(PlanMemo.hitsOf("fuzzy") === hits2)
   }
 
   test("qualityShared memo: join-side consumers reuse one (doc_id, quality) build, decorated frames hit the same slot") {
@@ -681,17 +793,17 @@ class ExtensionsSpec extends SparkSpec {
     val direct = rows(TextOps.quality(docs).select("doc_id", "quality"))
     val shared = rows(TextOps.qualityShared(docs))
     assert(shared === direct && shared.nonEmpty)
-    val before = TextOps.qualityMemoHits.get()
+    val before = PlanMemo.hitsOf("quality")
     // a DECORATED frame (extra column the quality kernels never read)
     // collapses to the same pruned projection and must HIT
     assert(rows(TextOps.qualityShared(
       docs.withColumn("extra", col("doc_id") + 1))) === direct)
-    assert(TextOps.qualityMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("quality") > before,
       "the decorated frame rebuilt quality instead of hitting the memo")
     // a genuinely different corpus must miss
-    val hits2 = TextOps.qualityMemoHits.get()
+    val hits2 = PlanMemo.hitsOf("quality")
     TextOps.qualityShared(docs.filter(col("doc_id") % 2 === 0)).count()
-    assert(TextOps.qualityMemoHits.get() === hits2)
+    assert(PlanMemo.hitsOf("quality") === hits2)
   }
 
   test("randomWalksShared memo: the skip-gram consumer reuses the walk table; different seeds miss") {
@@ -704,17 +816,17 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val first = rows(GraphOps.randomWalksShared(e, seeds))
     assert(first.nonEmpty)
-    val before = GraphOps.walkMemoHits.get()
+    val before = PlanMemo.hitsOf("walks")
     assert(rows(GraphOps.randomWalksShared(e, seeds)) === first)
-    assert(GraphOps.walkMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("walks") > before,
       "second randomWalksShared call rebuilt the walk table")
     // identical to the unmemoized build
     assert(rows(GraphOps.randomWalks(e, seeds)) === first)
     // a different seed set must MISS — the cross-join key carries both
     // inputs' structure
-    val hits2 = GraphOps.walkMemoHits.get()
+    val hits2 = PlanMemo.hitsOf("walks")
     GraphOps.randomWalksShared(e, Seq(2L).toDF("v")).count()
-    assert(GraphOps.walkMemoHits.get() === hits2,
+    assert(PlanMemo.hitsOf("walks") === hits2,
       "different seeds must not reuse the memoized walks")
   }
 
@@ -782,10 +894,10 @@ class ExtensionsSpec extends SparkSpec {
     val w1 = TextOps.qualityModelFit(docs)
     assert(w1.length === TextOps.QmDims)
     // the fit is memoized: a second consumer reuses the same array
-    val before = TextOps.qmMemoHits.get()
+    val before = PlanMemo.hitsOf("qm")
     val w2 = TextOps.qualityModelFit(docs)
     assert(w2.toSeq === w1.toSeq)
-    assert(TextOps.qmMemoHits.get() > before)
+    assert(PlanMemo.hitsOf("qm") > before)
     // serving = sign of the literal dot product over the feature map
     val feats = TextOps.qmFeatures(docs).collect()
       .map(r => r.getLong(0) ->
@@ -833,10 +945,10 @@ class ExtensionsSpec extends SparkSpec {
   test("bm25IndexDirs memo: the five stored-tier gates share ONE index build per session") {
     val d = "/root/testdata/sf0.001"
     val first = SparkEntry.bm25IndexDirs(spark, d)
-    val before = SparkEntry.bm25IdxMemoHits.get()
+    val before = PlanMemo.hitsOf("bm25idxDirs")
     val second = SparkEntry.bm25IndexDirs(spark, d)
     assert(second === first)
-    assert(SparkEntry.bm25IdxMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("bm25idxDirs") > before,
       "second bm25IndexDirs call rebuilt the stored index")
     // the dirs really hold the depth-256 index + forward index the
     // serving path expects
@@ -852,7 +964,7 @@ class ExtensionsSpec extends SparkSpec {
     val emb = spark.read.parquet(d + "/embeddings.parquet")
     val first = SparkEntry.storedDir(d, "spec_cents",
       Similarity.centroidsOf(emb))
-    val before = SparkEntry.storedDirMemoHits.get()
+    val before = PlanMemo.hitsOf("storedDir")
     // a SECOND, independently constructed but plan-equal fit (the
     // cross-gate sharing case: knn_ivf_stored / knn_ivf_pruned /
     // knn_ivf_pq_stored all fit centroidsOf over the same corpus)
@@ -860,7 +972,7 @@ class ExtensionsSpec extends SparkSpec {
     val second = SparkEntry.storedDir(d, "spec_cents",
       Similarity.centroidsOf(spark.read.parquet(d + "/embeddings.parquet")))
     assert(second === first)
-    assert(SparkEntry.storedDirMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("storedDir") > before,
       "plan-equal second request rebuilt the stored artifact")
     // the dir really holds the fitted relation
     assert(spark.read.parquet(first).columns.contains("cent_id"))
@@ -967,19 +1079,19 @@ class ExtensionsSpec extends SparkSpec {
     val first = Dedup.defaultClusters(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(first.nonEmpty)
-    val before = Dedup.clusterMemoHits.get()
+    val before = PlanMemo.hitsOf("clusters")
     // the second consumer over the SAME corpus hits and is identical
     assert(Dedup.defaultClusters(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === first)
-    assert(Dedup.clusterMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("clusters") > before,
       "second defaultClusters call did not reuse the memoized labelling")
     // the memoized relation equals a fresh direct computation
     assert(Dedup.dupClusters(Dedup.ngramJaccard(docs)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === first)
     // a different corpus (same session) must miss — no stale reuse
-    val hitsBefore2 = Dedup.clusterMemoHits.get()
+    val hitsBefore2 = PlanMemo.hitsOf("clusters")
     Dedup.defaultClusters(docs.filter(col("doc_id") % 2 === 0)).count()
-    assert(Dedup.clusterMemoHits.get() === hitsBefore2,
+    assert(PlanMemo.hitsOf("clusters") === hitsBefore2,
       "a different corpus must not reuse the memoized labelling")
   }
 
@@ -989,8 +1101,12 @@ class ExtensionsSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the shared store outlives suite cases, and the defaultClusters
+    // case already built the filtered corpus's pairs below: start empty
+    // so that corpus's call can only hit by aliasing this one's entry
+    PlanMemo.shared.clear()
     val first = rows(Dedup.ngramJaccard(docs).select("doc_a", "doc_b"))
-    val before = Dedup.pairsMemoHits.get()
+    val before = PlanMemo.hitsOf("ngramJaccard")
     // a DECORATED frame over the same corpus (the cross-source gates'
     // shape) must hit — the memo keys on the projected (doc_id, text)
     val decorated = docs.withColumn("host",
@@ -998,12 +1114,12 @@ class ExtensionsSpec extends SparkSpec {
         (col("doc_id") % 3).cast("string")))
     assert(rows(Dedup.ngramJaccard(decorated).select("doc_a", "doc_b"))
       === first)
-    assert(Dedup.pairsMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("ngramJaccard") > before,
       "decorated same-corpus call did not reuse the memoized pairs")
     // a different corpus (same session) must miss — no stale reuse
-    val hitsBefore2 = Dedup.pairsMemoHits.get()
+    val hitsBefore2 = PlanMemo.hitsOf("ngramJaccard")
     Dedup.ngramJaccard(docs.filter(col("doc_id") % 2 === 0)).count()
-    assert(Dedup.pairsMemoHits.get() === hitsBefore2,
+    assert(PlanMemo.hitsOf("ngramJaccard") === hitsBefore2,
       "a different corpus must not reuse the memoized pairs")
   }
 
@@ -1014,14 +1130,14 @@ class ExtensionsSpec extends SparkSpec {
     val first = Dedup.survivors(docs).select("doc_id").collect()
       .map(_.getLong(0)).toSet
     assert(first.nonEmpty)
-    val before = Dedup.survivorsMemoHits.get()
+    val before = PlanMemo.hitsOf("survivorIds")
     assert(Dedup.survivors(docs).select("doc_id").collect()
       .map(_.getLong(0)).toSet === first)
-    assert(Dedup.survivorsMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("survivorIds") > before,
       "second survivors call did not reuse the memoized id set")
-    val hitsBefore2 = Dedup.survivorsMemoHits.get()
+    val hitsBefore2 = PlanMemo.hitsOf("survivorIds")
     Dedup.survivors(docs.filter(col("doc_id") % 2 === 0)).count()
-    assert(Dedup.survivorsMemoHits.get() === hitsBefore2,
+    assert(PlanMemo.hitsOf("survivorIds") === hitsBefore2,
       "a different corpus must not reuse the memoized id set")
   }
 

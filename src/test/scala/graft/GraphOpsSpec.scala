@@ -773,7 +773,7 @@ class GraphOpsSpec extends SparkSpec {
   test("sigma forward-phase memo: graph_stress reuses graph_path_counts' layers, results bit-identical") {
     val e = Seq((0L, 1L), (1L, 2L), (2L, 3L), (1L, 4L), (4L, 3L), (3L, 5L),
       (0L, 4L), (5L, 0L))
-    val before = GraphOps.sigmaMemoHits.get()
+    val before = PlanMemo.hitsOf("sigma")
     val sigma1 = GraphOps.shortestPathCounts(edgeDf(e: _*)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
@@ -781,7 +781,7 @@ class GraphOpsSpec extends SparkSpec {
     // (the shared forward phase is the point of the single-slot cache)
     val stress1 = GraphOps.stressSampled(edgeDf(e: _*)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(GraphOps.sigmaMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("sigma") > before,
       "stressSampled did not reuse the memoized forward phase")
     // a memo-hit σ relation is the SAME relation: repeated calls are
     // bit-identical, and a DIFFERENT graph must miss (no stale reuse)
@@ -789,9 +789,9 @@ class GraphOpsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet === sigma1)
     val e2 = e :+ (2L, 0L)
-    val hitsBefore2 = GraphOps.sigmaMemoHits.get()
+    val hitsBefore2 = PlanMemo.hitsOf("sigma")
     val sigma2 = GraphOps.shortestPathCounts(edgeDf(e2: _*)).collect()
-    assert(GraphOps.sigmaMemoHits.get() === hitsBefore2,
+    assert(PlanMemo.hitsOf("sigma") === hitsBefore2,
       "a different graph must not reuse the memoized layers")
     assert(sigma2.length !== 0)
     assert(stress1.nonEmpty)
@@ -803,11 +803,11 @@ class GraphOpsSpec extends SparkSpec {
     val close1 = GraphOps.closenessSampled(edgeDf(e: _*)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
-    val before = GraphOps.distMemoHits.get()
+    val before = PlanMemo.hitsOf("dist")
     // the per-seed view over the SAME sample must hit the memo
     val ecc1 = GraphOps.eccentricitySampled(edgeDf(e: _*)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(GraphOps.distMemoHits.get() > before,
+    assert(PlanMemo.hitsOf("dist") > before,
       "eccentricitySampled did not reuse the memoized labeled sweep")
     // repeated closeness is bit-identical through the memo
     assert(GraphOps.closenessSampled(edgeDf(e: _*)).collect()
@@ -815,9 +815,9 @@ class GraphOpsSpec extends SparkSpec {
       .toSet === close1)
     // a different graph misses — no stale reuse
     val e2 = e :+ (2L, 6L)
-    val hitsBefore2 = GraphOps.distMemoHits.get()
+    val hitsBefore2 = PlanMemo.hitsOf("dist")
     assert(GraphOps.closenessSampled(edgeDf(e2: _*)).collect().nonEmpty)
-    assert(GraphOps.distMemoHits.get() === hitsBefore2,
+    assert(PlanMemo.hitsOf("dist") === hitsBefore2,
       "a different graph must not reuse the memoized sweep")
     assert(ecc1.nonEmpty)
   }
@@ -1043,19 +1043,19 @@ class GraphOpsSpec extends SparkSpec {
     // checkpointed labeling (graph_component_sizes' consumer path); a
     // different edge relation or loop parameter must NOT reuse it
     val e = Seq((1L, 2L), (3L, 4L), (2L, 5L))
-    val hits0 = GraphOps.compMemoHits.get()
+    val hits0 = PlanMemo.hitsOf("components")
     val first = GraphOps.components(edgeDf(e: _*))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val again = GraphOps.components(edgeDf(e: _*))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(GraphOps.compMemoHits.get() === hits0 + 1,
+    assert(PlanMemo.hitsOf("components") === hits0 + 1,
       "an identical components call must hit the labeling memo")
     assert(again === first)
     GraphOps.components(edgeDf((7L, 8L))).collect()
-    assert(GraphOps.compMemoHits.get() === hits0 + 1,
+    assert(PlanMemo.hitsOf("components") === hits0 + 1,
       "a different edge relation must not reuse the memoized labeling")
     GraphOps.components(edgeDf(e: _*), maxIter = 29).collect()
-    assert(GraphOps.compMemoHits.get() === hits0 + 1,
+    assert(PlanMemo.hitsOf("components") === hits0 + 1,
       "a different loop parameter must not reuse the memoized labeling")
   }
 
