@@ -17,6 +17,7 @@ object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // shuffle files are only deleted when ContextCleaner GCs their

@@ -130,16 +130,6 @@ object SparkEntry {
     f.getAbsolutePath
   }
 
-  /** JVM-exit cleanup for the per-appId IVF scratch dirs: without it
-    * every harness run leaves a fresh `graft_ivf_<appId>_*` tree
-    * (including a full cell-partitioned copy of the embeddings
-    * corpus) under tmpdir forever — app-id keying prevents races but
-    * means nothing ever overwrites in place. Deletion can't happen
-    * inside the gate (the returned DataFrame reads the dir lazily,
-    * after the gate body returns), so a shutdown hook is the earliest
-    * safe point. Idempotent per path; recursive delete, children
-    * first.
-    */
   /** Session memo of the STORED BM25 SERVING TIER's scratch dirs —
     * five gates (`text_bm25_indexed(+_recall)`, `text_bm25_prf_indexed
     * (+_recall)`, `search_hybrid_indexed`) serve from the identical
@@ -184,6 +174,17 @@ object SparkEntry {
     }
   }
 
+  // per-BUILD nonce folded into every stored dir's leaf: unlike the
+  // DataFrame memos, path values get no ref-count protection, so if
+  // LRU eviction ever fired, a re-request would re-WRITE the evicted
+  // entry's deterministic dir in overwrite mode while a lazy reader
+  // returned from the old entry might still be scanning it. With the
+  // nonce, an eviction-then-rebuild writes a FRESH dir and the old
+  // tree stays readable until the session's shutdown hook sweeps it —
+  // correctness does not lean on "the shared bound ≫ live keys"
+  // holding forever.
+  private val storedDirNonce = new java.util.concurrent.atomic.AtomicLong
+
   /** `bm25IndexDirs`' write-once economics GENERALIZED: a session memo
     * of stored-artifact scratch dirs keyed by (leaf, FIT plan). Every
     * stored-tier gate used to refit and rewrite its parquet artifact
@@ -204,19 +205,9 @@ object SparkEntry {
     * hook. The ~19 artifacts × 2 interleaved sf dirs a session can
     * touch sit well inside the shared store's one bound, so eviction
     * is not expected — and if it ever fires anyway, the per-build
-    * nonce below means the rebuild writes a FRESH dir rather than
+    * nonce above means the rebuild writes a FRESH dir rather than
     * overwriting one a returned lazy reader may still be scanning.
     */
-  // per-BUILD nonce folded into every stored dir's leaf: unlike the
-  // DataFrame memos, path values get no ref-count protection, so if
-  // LRU eviction ever fired, a re-request would re-WRITE the evicted
-  // entry's deterministic dir in overwrite mode while a lazy reader
-  // returned from the old entry might still be scanning it. With the
-  // nonce, an eviction-then-rebuild writes a FRESH dir and the old
-  // tree stays readable until the session's shutdown hook sweeps it —
-  // correctness does not lean on "the shared bound ≫ live keys"
-  // holding forever.
-  private val storedDirNonce = new java.util.concurrent.atomic.AtomicLong
   private[graft] def storedDirWith(d: String, leaf: String,
       fit: org.apache.spark.sql.DataFrame)(
       write: (org.apache.spark.sql.DataFrame, String) => Unit): String = {
@@ -243,6 +234,21 @@ object SparkEntry {
     storedDirWith(d, leaf, fit)((df, dir) =>
       df.write.mode("overwrite").parquet(dir))
 
+  /** Params fingerprints for the lazy stored-dir keys — every training
+    * constant the corresponding fit reads at the call sites' defaults,
+    * so two gates share a dir iff they train identically (the "leaves
+    * shared across gates" contract, now carried by (input, params)
+    * instead of fit-plan equality).
+    */
+  private lazy val ivfCentParams =
+    s"cells=auto|iters=${operators.Similarity.IvfLloydIters}" +
+      s"|cap=${operators.Similarity.IvfTrainSampleCap}"
+  private lazy val pqCbParams =
+    s"blocks=${operators.Similarity.PqBlocks}" +
+      s"|cb=${operators.Similarity.PqCodebookSize}" +
+      s"|iters=${operators.Similarity.PqLloydIters}" +
+      s"|cap=${operators.Similarity.IvfTrainSampleCap}"
+
   /** `storedDir` for EAGER fits — builders that run driver-side
     * training at DataFrame CONSTRUCTION time (`centroidsOf` /
     * `codebooksOf` collect a sample and run Lloyd; `bpeTrain` runs the
@@ -261,21 +267,6 @@ object SparkEntry {
     * `write` defaults to a plain parquet write; the per-build nonce
     * and digest rules match `storedDirWith`.
     */
-  /** Params fingerprints for the lazy stored-dir keys — every training
-    * constant the corresponding fit reads at the call sites' defaults,
-    * so two gates share a dir iff they train identically (the "leaves
-    * shared across gates" contract, now carried by (input, params)
-    * instead of fit-plan equality).
-    */
-  private lazy val ivfCentParams =
-    s"cells=auto|iters=${operators.Similarity.IvfLloydIters}" +
-      s"|cap=${operators.Similarity.IvfTrainSampleCap}"
-  private lazy val pqCbParams =
-    s"blocks=${operators.Similarity.PqBlocks}" +
-      s"|cb=${operators.Similarity.PqCodebookSize}" +
-      s"|iters=${operators.Similarity.PqLloydIters}" +
-      s"|cap=${operators.Similarity.IvfTrainSampleCap}"
-
   private[graft] def storedDirLazy(d: String, leaf: String,
       keyInput: org.apache.spark.sql.DataFrame, params: String)(
       fit: => org.apache.spark.sql.DataFrame)(
@@ -310,6 +301,17 @@ object SparkEntry {
 
   private val tmpCleanupRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** JVM-exit cleanup for the per-appId IVF scratch dirs: without it
+    * every harness run leaves a fresh `graft_ivf_<appId>_*` tree
+    * (including a full cell-partitioned copy of the embeddings
+    * corpus) under tmpdir forever — app-id keying prevents races but
+    * means nothing ever overwrites in place. Deletion can't happen
+    * inside the gate (the returned DataFrame reads the dir lazily,
+    * after the gate body returns), so a shutdown hook is the earliest
+    * safe point. Idempotent per path; recursive delete, children
+    * first.
+    */
   private def registerTmpCleanup(f: java.io.File): Unit =
     if (tmpCleanupRegistered.add(f.getAbsolutePath)) {
       Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(f)))

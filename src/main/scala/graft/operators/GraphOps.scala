@@ -158,32 +158,58 @@ object GraphOps {
       .select(col("x"), col("y"), col("z"))
   }
 
+  /** The `max`-filtered weighted edge relation `(src, dst, w)` the
+    * triangle operators join, persisted: their three join legs reuse one
+    * (scan → filter → aggregate) prefix instead of running it once per
+    * leg. Measured on the 300k-edge benchmark `edges.csv` (local[4],
+    * 10 alternating warm runs): `trianglesRep` without the persist
+    * scans the file twice in its final plan (AQE reuses one leg's
+    * exchange), and its median rises from 790 to 906 ms. Bounded by
+    * distinct filtered edges.
+    */
+  private def filteredWeighted(e0: DataFrame, max: Long,
+      inclusive: Boolean = false): DataFrame =
+    graft.Caches.track(weightedEdges(filterMaxId(e0, max, inclusive))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  /** The three legs of a directed 3-cycle x→y→z→x over a weighted
+    * relation `(src, dst, w)`: x→y (w1), y→z (w2) and the closing z→x
+    * (w3).
+    */
+  private def cycleLegs(we: DataFrame): (DataFrame, DataFrame, DataFrame) =
+    (we.select(col("src").as("x"), col("dst").as("y"), col("w").as("w1")),
+      we.select(col("src").as("y"), col("dst").as("z"), col("w").as("w2")),
+      we.select(col("dst").as("x"), col("src").as("z"), col("w").as("w3")))
+
+  /** The directed 3-cycles x→y→z→x of a weighted relation under
+    * SocialTriangle_RS's rule: x ≠ z (:97), and every leg's multiplicity
+    * multiplies. One row per distinct (x, y, z) with its legs' weights
+    * w1, w2, w3, so the bag count of the cycles anchored at x is
+    * Σ w1·w2·w3 over x's rows. Each 3-cycle appears once per rotation,
+    * i.e. once anchored at each of its vertices.
+    */
+  private def cycles(we: DataFrame): DataFrame = {
+    val (ab, bc, ca) = cycleLegs(we)
+    ab.join(bc, "y").filter(col("x") =!= col("z")).join(ca, Seq("x", "z"))
+  }
+
   /** Directed triangle count, reduce-side strategy — SocialTriangle_RS
     * Jobs 1+2. Semantics: count (e1,e2,e3) with x→y, y→z, x≠z, z→x over
     * the `< max`-filtered bag, then floor-divide by 3 (:238-242; each
     * 3-cycle is found once per rotation).
     *
-    * Physical: computed on the weighted relation — sum of w1*w2*w3 over
-    * the distinct-edge joins equals the bag count exactly, while the
-    * shuffles carry only distinct edges. Both joins are shuffle
-    * (repartition) joins by default, mirroring the reference's
-    * reduce-side strategy; AQE may still broadcast a small side, which
-    * only improves it.
+    * Physical: `cycles` over the weighted relation — sum of w1*w2*w3
+    * over the distinct-edge joins equals the bag count exactly, while
+    * the shuffles carry only distinct edges. No join is hinted: Spark's
+    * size-based join selection, made at runtime under AQE, picks
+    * broadcast joins while the persisted relation fits
+    * `spark.sql.autoBroadcastJoinThreshold` and sort-merge
+    * (repartition) joins, the reference's reduce-side strategy, above
+    * it.
     */
-  def trianglesRS(e0: DataFrame, max: Long = 50L): DataFrame = {
-    // The compact weighted relation feeds all three join branches —
-    // persist it so the (scan → join → aggregate) prefix runs once, not
-    // three times. Bounded by distinct filtered edges.
-    val e = graft.Caches.track(weightedEdges(filterMaxId(e0, max))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val ab = e.select(col("src").as("x"), col("dst").as("y"), col("w").as("w1"))
-    val bc = e.select(col("src").as("y"), col("dst").as("z"), col("w").as("w2"))
-    val ca = e.select(col("dst").as("x"), col("src").as("z"), col("w").as("w3"))
-    val paths = ab.join(bc, "y").filter(col("x") =!= col("z"))
-    countDiv3(
-      paths.join(ca, Seq("x", "z"))
-        .agg(coalesce(sum(col("w1") * col("w2") * col("w3")), lit(0L)).as("cnt")))
-  }
+  def trianglesRS(e0: DataFrame, max: Long = 50L): DataFrame =
+    countDiv3(cycles(filteredWeighted(e0, max))
+      .agg(coalesce(sum(col("w1") * col("w2") * col("w3")), lit(0L)).as("cnt")))
 
   /** Directed triangle count, replicated/broadcast strategy —
     * ReplicatedJoinDriver. Faithful semantic differences vs trianglesRS
@@ -194,42 +220,24 @@ object GraphOps {
     *     `adj[t].contains(x)` (R:103) counts once however many z→x
     *     duplicates exist. Hence the left-semi join below.
     *
-    * Physical: both the y-hop and the closing check join against
-    * broadcast copies of the (filtered, weighted) edge set — the exact
-    * analogue of R's distributed-cache adjacency map. Zero shuffle of
-    * the probe side, matching the reference's map-only design
-    * (setNumReduceTasks(0), R:136).
-    *
-    * The reference ASSUMES the max-id-filtered subgraph fits in one
-    * node's memory (its distributed cache would OOM otherwise). Here
-    * that assumption is MEASURED, not inherited: the filtered edge set
-    * is persisted (all three join branches reuse it), counted, and the
-    * broadcast hints apply only while its estimated bytes fit the
-    * session's `spark.sql.autoBroadcastJoinThreshold`. Above it — or
-    * with broadcasting disabled (-1) — the hints are dropped and the
-    * planner falls back to shuffle joins (AQE may still re-plan from
-    * runtime sizes): identical semantics, graceful degradation instead
-    * of a driver OOM on a hint the data outgrew.
+    * Physical: the same persisted weighted relation and join legs as
+    * `trianglesRS`. The reference ASSUMES the max-id-filtered subgraph
+    * fits in one node's memory (its distributed cache would OOM
+    * otherwise). Here Spark's size-based join selection decides it, at
+    * runtime under AQE from the materialized relation's size: while the
+    * relation fits `spark.sql.autoBroadcastJoinThreshold`, the y-hop
+    * and the closing check are broadcast hash joins (Inner + LeftSemi)
+    * — the analogue of R's distributed-cache adjacency map, with zero
+    * shuffle of the probe side (setNumReduceTasks(0), R:136). Above it,
+    * or with broadcasting disabled (-1), they are sort-merge joins:
+    * identical semantics, no forced broadcast the data outgrew. Building
+    * the frame runs no job.
     */
   def trianglesRep(e0: DataFrame, max: Long = 40L): DataFrame = {
-    val e = graft.Caches.track(weightedEdges(filterMaxId(e0, max, inclusive = true))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // read through the OWNING session's conf, not the thread-active
-    // SQLConf.get — in multi-session apps the wrong session's threshold
-    // could otherwise decide the broadcast hint
-    val threshold = org.apache.spark.sql.graft.ColumnBridge
-      .sqlConf(e0.sparkSession).autoBroadcastJoinThreshold
-    // ~48 B/row: 3 longs in an UnsafeRow plus broadcast-collection
-    // overhead, rounded up — the count materializes the persisted
-    // relation the branches below reuse anyway
-    val fits = threshold > 0L && e.count() * 48L <= threshold
-    def rep(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-    val ab = e.select(col("src").as("x"), col("dst").as("y"), col("w").as("w1"))
-    val bc = e.select(col("src").as("y"), col("dst").as("z"), col("w").as("w2"))
-    val closing = e.select(col("dst").as("x"), col("src").as("z"))
+    val (ab, bc, ca) = cycleLegs(filteredWeighted(e0, max, inclusive = true))
     countDiv3(
-      ab.join(rep(bc), "y")
-        .join(rep(closing), Seq("x", "z"), "left_semi")
+      ab.join(bc, "y")
+        .join(ca, Seq("x", "z"), "left_semi")
         .agg(coalesce(sum(col("w1") * col("w2")), lit(0L)).as("cnt")))
   }
 
@@ -242,23 +250,15 @@ object GraphOps {
     * global count (one per rotation), which is exactly the invariant
     * the spec pins against `trianglesRS`.
     *
-    * Physical: the same weighted three-branch join pipeline as
-    * `trianglesRS` (one persisted distinct-edge relation feeding all
-    * branches), with the final aggregation keyed by the anchor
-    * vertex instead of global — same shuffles plus one vertex-keyed
-    * aggregation whose output is vertex-sized.
+    * Physical: `trianglesRS`'s `cycles` pipeline, with the final
+    * aggregation keyed by the anchor vertex instead of global — same
+    * joins plus one vertex-keyed aggregation whose output is
+    * vertex-sized.
     */
-  def trianglesPerVertex(e0: DataFrame, max: Long = 50L): DataFrame = {
-    val e = graft.Caches.track(weightedEdges(filterMaxId(e0, max))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val ab = e.select(col("src").as("x"), col("dst").as("y"), col("w").as("w1"))
-    val bc = e.select(col("src").as("y"), col("dst").as("z"), col("w").as("w2"))
-    val ca = e.select(col("dst").as("x"), col("src").as("z"), col("w").as("w3"))
-    ab.join(bc, "y").filter(col("x") =!= col("z"))
-      .join(ca, Seq("x", "z"))
+  def trianglesPerVertex(e0: DataFrame, max: Long = 50L): DataFrame =
+    cycles(filteredWeighted(e0, max))
       .groupBy(col("x").as("vertex"))
       .agg(sum(col("w1") * col("w2") * col("w3")).as("triangles"))
-  }
 
   /** Fixed-point scale for `clusteringCoefficient` (same convention as
     * `rank_fp`/`tfidf_fp`).
@@ -281,13 +281,13 @@ object GraphOps {
     * more topology (same divergence note as `pageRank`; triangles
     * needs < 9.2·10^12 before the scale multiply overflows).
     *
-    * Physical: `trianglesPerVertex` on the deduplicated relation (its
-    * weighted pipeline with every w = 1) for the numerator; the
-    * neighbor count is one generator-shaped union + distinct +
-    * vertex-keyed count (shuffles bounded by distinct edges); the
-    * final join is vertex-sized on both sides. Vertices with edges
-    * but no triangles report 0 (left join, like `path2PerVertex`'s
-    * one-sided convention).
+    * Physical: one persisted distinct relation feeds both sides. The
+    * numerator is `cycles` over it with every w = 1, counted per
+    * anchor; the neighbor count is one generator-shaped union +
+    * distinct + vertex-keyed count (shuffles bounded by distinct
+    * edges); the final join is vertex-sized on both sides. Vertices
+    * with edges but no triangles report 0 (left join, like
+    * `path2PerVertex`'s one-sided convention).
     */
   def clusteringCoefficient(e0: DataFrame, max: Long = 50L,
       scale: Long = CcScale): DataFrame = {
@@ -295,8 +295,8 @@ object GraphOps {
     val de = graft.Caches.track(
       filterMaxId(e0.select("src", "dst"), max).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val tri = trianglesPerVertex(de, max)
-      .select(col("vertex").as("v"), col("triangles"))
+    val tri = cycles(de.withColumn("w", lit(1L)))
+      .groupBy(col("x").as("v")).agg(count(lit(1)).as("triangles"))
     val nbrs = de.filter(col("src") =!= col("dst"))
       .select(col("src").as("v"), col("dst").as("u"))
       .union(de.filter(col("src") =!= col("dst"))

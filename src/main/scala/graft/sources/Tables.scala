@@ -64,10 +64,10 @@ object Tables {
     *
     * The NTZ→LTZ cast reinterprets the stored wall-clock as a SESSION-
     * TIMEZONE instant, so it is only identity when the session runs
-    * UTC — which every entry point pins (Verify/SparkSpec set
-    * `spark.sql.session.timeZone=UTC` explicitly; the harness boxes
-    * run `Etc/UTC` for Bench). The require makes a non-UTC caller fail
-    * loudly instead of silently shifting every event time.
+    * UTC — which every entry point pins (Verify, Bench, ScaleRehearsal
+    * and SparkSpec set `spark.sql.session.timeZone=UTC` explicitly).
+    * The require makes a non-UTC caller fail loudly instead of silently
+    * shifting every event time.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -250,8 +250,7 @@ class CliSpec extends SparkSpec {
       assert(executions(ExactCardinalityApp.main) === 1)
       assert(executions(ApproxCardinalityApp.main) === 1)
       assert(executions(SocialTriangleRSApp.main) === 1)
-      // plus trianglesRep's eager broadcast-sizing count
-      assert(executions(ReplicatedJoinApp.main) === 2)
+      assert(executions(ReplicatedJoinApp.main) === 1)
     } finally spark.listenerManager.unregister(listener)
   }
 }

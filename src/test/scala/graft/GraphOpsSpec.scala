@@ -106,32 +106,67 @@ class GraphOpsSpec extends SparkSpec {
     assert(singleLong(GraphOps.trianglesRep(e)) === 0L)
   }
 
-  test("trianglesRep degrades to shuffle joins past the broadcast threshold") {
+  test("trianglesRS/trianglesRep: AQE broadcasts below the threshold, shuffles above it") {
     // the reference assumes the filtered subgraph fits one node's
-    // memory; trianglesRep measures that against the session's
-    // autoBroadcastJoinThreshold and drops the broadcast hints above
-    // it — same answer, no forced broadcast the data outgrew
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
+    // memory; neither operator hints a join, so AQE's runtime,
+    // size-based join selection decides: broadcast joins while the
+    // persisted relation fits autoBroadcastJoinThreshold, sort-merge
+    // joins past it or with broadcasting disabled — same answer
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    object Aqe extends AdaptiveSparkPlanHelper
     val rng = new scala.util.Random(7)
     val e = List.fill(60)((rng.nextInt(12).toLong, rng.nextInt(12).toLong))
     val df = edgeDf(e: _*)
+    // (count, BroadcastHashJoin types, SortMergeJoin count) of the
+    // final adaptive plan after the action
+    def run(q: org.apache.spark.sql.DataFrame): (Long, Seq[String], Int) = {
+      val n = singleLong(q)
+      val plan = q.queryExecution.executedPlan
+      (n, Aqe.collect(plan) { case j: BroadcastHashJoinExec => j.joinType.toString }.sorted,
+        Aqe.collect(plan) { case j: SortMergeJoinExec => j }.size)
+    }
+    def at(threshold: String) =
+      Confs.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        (run(GraphOps.trianglesRS(df, max = 8)),
+          run(GraphOps.trianglesRep(df, max = 8)))
+      }
+    val (rs, rep) = at((64 * 1024 * 1024).toString)
+    assert(rs === ((bruteRS(e, 8), Seq("Inner", "Inner"), 0)))
+    assert(rep === ((bruteRep(e, 8), Seq("Inner", "LeftSemi"), 0)))
+    Seq("64", "-1").foreach { threshold => // bytes — anything real exceeds 64
+      val ((rsN, rsBhj, _), (repN, repBhj, _)) = at(threshold)
+      withClue(s"threshold=$threshold") {
+        assert((rsN, rsBhj) === ((bruteRS(e, 8), Nil)))
+        assert((repN, repBhj) === ((bruteRep(e, 8), Nil)))
+      }
+    }
+  }
+
+  test("building the triangle operators starts no Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val df = edgeDf(tri3 :+ (1L, 2L) :+ (3L, 4L): _*)
+    val builders = Seq[(String, () => Any)](
+      "trianglesRS" -> (() => GraphOps.trianglesRS(df)),
+      "trianglesRep" -> (() => GraphOps.trianglesRep(df)),
+      "trianglesPerVertex" -> (() => GraphOps.trianglesPerVertex(df)),
+      "clusteringCoefficient" -> (() => GraphOps.clusteringCoefficient(df)))
+    spark.sparkContext.addSparkListener(listener)
     try {
-      spark.conf.set(key, (64 * 1024 * 1024).toString)
-      // in the optimized plan a broadcast() hint survives as the
-      // join's JoinHint: `rightHint=(strategy=broadcast)`
-      val hinted = GraphOps.trianglesRep(df, max = 8)
-      assert(hinted.queryExecution.optimizedPlan.toString
-        .contains("strategy=broadcast"), "small subgraph must keep the hints")
-      spark.conf.set(key, "64") // bytes — anything real exceeds it
-      val fallback = GraphOps.trianglesRep(df, max = 8)
-      assert(!fallback.queryExecution.optimizedPlan.toString
-        .contains("strategy=broadcast"), "oversized subgraph must drop the hints")
-      assert(singleLong(fallback) === bruteRep(e, 8))
-      assert(singleLong(hinted) === bruteRep(e, 8))
-      spark.conf.set(key, "-1") // broadcasting disabled → also fallback
-      assert(singleLong(GraphOps.trianglesRep(df, max = 8)) === bruteRep(e, 8))
-    } finally spark.conf.set(key, prev)
+      val started = builders.map { case (name, build) =>
+        org.apache.spark.sql.graft.ColumnBridge.waitListeners(spark)
+        jobs.set(0)
+        build()
+        org.apache.spark.sql.graft.ColumnBridge.waitListeners(spark)
+        name -> jobs.get
+      }
+      assert(started.forall(_._2 == 0), started)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   // ---- randomized cross-strategy properties (seeded, deterministic) ----
