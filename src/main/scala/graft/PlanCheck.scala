@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump formatted physical plans for the queries whose shape
   * matters at scale (pushdown, join strategy, codegen spans).
   */
@@ -8,11 +7,7 @@ object PlanCheck {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("path2_approx_total", "triangles_rs", "triangles_rep", "dedup_minhash")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.sessionBuilder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n================ $n ================")

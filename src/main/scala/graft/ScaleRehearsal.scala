@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev drive: exercise the core operators well beyond sf0.1 with
@@ -15,11 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val spark = SparkEntry.sessionBuilder(32)
       // shuffle files are only deleted when ContextCleaner GCs their
       // ShuffleDependency; with a large heap the driver may not GC for
       // the whole run, and the XL tier's iterative 1e8-row loops then
@@ -27,8 +22,7 @@ object ScaleRehearsal {
       // the 1e8 giant-cluster phase filled the 80 GB scratch disk and
       // killed the JVM at the default 30min periodic-GC interval).
       // 2min bounds dead-file residency at ~2 rounds' worth.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.cleaner.periodicGC.interval", "2min").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_PHASE_ONLY=substr[,substr…] runs just the matching
     // phases — the local dev loop for a new phase without the full

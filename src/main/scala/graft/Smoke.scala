@@ -1,17 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner: exercises SparkEntry.entry exactly like the driver's
   * t1 gate (rows > 0 on sf0.001). `sbt "runMain graft.Smoke"`.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.sessionBuilder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     val rows = df.collect()

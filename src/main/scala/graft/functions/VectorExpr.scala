@@ -44,7 +44,7 @@ object VectorExprUtil {
     * this mixer matches true-random planes on both metrics.
     * Single source of truth shared by the codegen kernel, the
     * composed-Column twin (VectorFunctions.planeComponent), and the
-    * oracle SQL generator (SparkEntry.lshSigSql) — change all three
+    * oracle SQL generator (AnnGates.lshSigSql) — change all three
     * together.
     */
   val PlaneM31 = 2147483647L

@@ -28,14 +28,15 @@ object GraphOps {
     * (reference data model, SURVEY.md §1). The harness testdata has no
     * edge list, so we derive a who-buys-from-whom graph:
     * orders ⋈ lineitem on orderkey → (o_custkey, l_suppkey).
-    * NO dedup — bag semantics preserved. Only the two output columns are
-    * read from parquet (Catalyst prunes the rest).
+    * NO dedup — bag semantics preserved. Each read names its two
+    * columns with a pinned int64 schema: parquet scans only those, and
+    * building the relation runs no schema-inference job.
     */
   def edges(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_orderkey"), col("l_suppkey"))
+    val orders = spark.read.schema("o_orderkey BIGINT, o_custkey BIGINT")
+      .parquet(s"$sfDir/orders.parquet")
+    val lineitem = spark.read.schema("l_orderkey BIGINT, l_suppkey BIGINT")
+      .parquet(s"$sfDir/lineitem.parquet")
     orders.join(lineitem, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
   }
@@ -3225,16 +3226,7 @@ object GraphOps {
       s"localThreshold must be in [0, ${1L << 25}], got $localThreshold " +
         "(the single-task matching loop holds the contraction in one " +
         "JVM; use the distributed loop for more)")
-    val profT0 = System.nanoTime()
-    var profLast = profT0
-    def prof(name: String): Unit =
-      if (sys.env.contains("GRAFT_LOUVAIN_PROF")) {
-        val now = System.nanoTime()
-        System.err.println(f"LOUVPROF $name%-14s ${(now - profLast) / 1e9}%6.3f s (total ${(now - profT0) / 1e9}%6.3f)")
-        profLast = now
-      }
     val (und, nSym) = undSimpleShared(e)
-    prof("und")
     if (nSym <= localThreshold) {
       val spark = und.sparkSession
       import spark.implicits._
@@ -3307,7 +3299,6 @@ object GraphOps {
       if (prevOwned) drop(prevW)
       if (nNext == nW) { live = false; mutual.unpersist(blocking = false) }
       else { merges += mutual; nW = nNext }
-      prof(s"level |w'|=$nNext")
     }}
     // Final labeling: compose the merge maps over the vertex relation —
     // exactly the old per-level relabel, folded into one job. Each
@@ -3323,7 +3314,6 @@ object GraphOps {
           coalesce(mu("to"), prev("community")).as("community"))
     }
     val out = ck(labels)
-    prof("final-labels")
     merges.foreach(_.unpersist(blocking = false))
     if (wOwned) drop(w)
     // `und` is memo-owned (undSimpleShared): the memo releases it

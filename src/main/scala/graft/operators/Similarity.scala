@@ -67,7 +67,7 @@ object Similarity {
     * [LshBandBits, LshBandStride] so the width always fits the fixed
     * 15-bit band layout.
     *
-    * Mirrored by SparkEntry.lshBandBitsSql — the SQL twin is
+    * Mirrored by AnnGates.lshBandBitsSql — the SQL twin is
     * 8 + Σ_{k=8..14} [buckets > 2^k], equal to this clamp (property
     * test in PlanSpec); change the two together.
     */

@@ -169,6 +169,34 @@ class GraphOpsSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("building the derived edge relation starts no Spark job") {
+    val sf = "/root/testdata/sf0.001"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val e = try {
+      org.apache.spark.sql.graft.ColumnBridge.waitListeners(spark)
+      jobs.set(0)
+      val built = GraphOps.edges(spark, sf)
+      org.apache.spark.sql.graft.ColumnBridge.waitListeners(spark)
+      assert(jobs.get === 0)
+      built
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the pinned read returns what the schema-inferring join returns
+    val inferred = spark.read.parquet(s"$sf/orders.parquet")
+      .join(spark.read.parquet(s"$sf/lineitem.parquet"),
+        col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
+    assert(e.schema === inferred.schema)
+    def digest(df: org.apache.spark.sql.DataFrame) =
+      df.selectExpr("count(1)", "sum(hash(src, dst))").collect()(0)
+    assert(digest(e) === digest(inferred))
+  }
+
   // ---- randomized cross-strategy properties (seeded, deterministic) ----
 
   def randomEdges(rng: scala.util.Random): List[(Long, Long)] =

@@ -722,7 +722,7 @@ class PlanSpec extends SparkSpec {
 
   test("bandBitsFor equals its SQL threshold-counting twin on every n") {
     // the oracle derives bb as floor + Σ_k [buckets > 2^k] (see
-    // SparkEntry.lshBandBitsSql); prove that form equals the
+    // AnnGates.lshBandBitsSql); prove that form equals the
     // leading-zeros clamp for boundary and random corpus sizes
     import graft.operators.Similarity
     def sqlTwin(n: Long): Int = {
