@@ -336,8 +336,8 @@ object ScaleRehearsal {
 
     // one DEEP 400k-node chain: the worst case for star-ROUND COUNT
     // (the giant component above is wide but shallow), and >
-    // ClusterLocalEdges so the distributed loop runs, not the fast
-    // path. The checkpointed run uses the DEFAULT cadence — the round
+    // SmallInput.ClusterEdges so the distributed loop runs, not the
+    // fast path. The checkpointed run uses the DEFAULT cadence — the round
     // count must cross ClusterCheckpointEvery, so the reliable-
     // checkpoint path is rehearsed at depth with real truncation
     // points, and its labels must match the unchecked run (all 0, the
@@ -763,9 +763,10 @@ object ScaleRehearsal {
     t("length_deciles 50k docs")(
       operators.TextOps.lengthDeciles(docs).count())
     // ---- round-11 operators ----
-    // directed SCC at ~300k distinct edges over 100k vertices — PAST
-    // SccLocalEdges, so the DISTRIBUTED refinement loop runs (the
-    // gate's slice takes the single-task Tarjan path). Mean degree 3
+    // directed SCC at ~300k distinct edges over 100k vertices, under
+    // SmallInput.TraversalEdges (2M), so SmallInput.scoped(0) forces
+    // the DISTRIBUTED refinement loop (the gate's slice takes the
+    // single-task Tarjan path). Mean degree 3
     // gives a giant strongly-connected core + periphery: real
     // multi-round refinement, log-ish diameter for the inner
     // fixpoints. Result = (vertices, distinct SCC labels).
@@ -773,9 +774,9 @@ object ScaleRehearsal {
       pmod(hash(col("id")), lit(100000)).cast("long").as("src"),
       pmod(hash(col("id") * 31 + 7), lit(100000)).cast("long").as("dst"))
     t("scc 300k edges distributed")({
-      val r = operators.GraphOps.stronglyConnectedComponents(sccEdges,
-          localThreshold = 0L)
-        .agg(count(lit(1)), countDistinct(col("scc"))).collect()(0)
+      val r = SmallInput.scoped(0L) {
+        operators.GraphOps.stronglyConnectedComponents(sccEdges)
+      }.agg(count(lit(1)), countDistinct(col("scc"))).collect()(0)
       s"verts=${r.getLong(0)} sccs=${r.getLong(1)}"
     })
     // interval OVERLAP join: 1M left intervals (span 2k) × 100k right

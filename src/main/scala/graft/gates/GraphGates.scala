@@ -864,16 +864,16 @@ object GraphGates {
           (col("doc_id") + HopDeepStep).as("dst"))
       val seeds = docs.filter(col("doc_id") < HopDeepStep)
         .select(col("doc_id").as("v"))
-      // localThreshold = 0: this gate EXISTS to drive the distributed
+      // SmallInput.scoped(0): this gate EXISTS to drive the distributed
       // sweep loop / stride build / budget exit (the shallow gate
       // takes the gated local path). Stride 16: the r21 A/B of this
       // gate alone, warm, with E≤s built by doubling, measured stride
       // 4 = 3.78 s, 8 = 2.3-3.1 s, 16 = 1.85 s, 32 = 2.55 s. The
       // per-sweep plumbing is narrowed by hopDistancesDeduped's
       // tiny-regime conf scope.
-      GraphOps.hopDistances(e, seeds, HopDeepMax, hopStride = 16,
-          localThreshold = 0L)
-        .orderBy("vertex")
+      SmallInput.scoped(0L) {
+        GraphOps.hopDistances(e, seeds, HopDeepMax, hopStride = 16)
+      }.orderBy("vertex")
     },
       // same min-over-reachable-depths form at the 64-hop budget over
       // the stride-7 doc_id chain graph; UNION dedup bounds the state

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SmallInput
 import graft.functions.PolyHashFunctions.poly_hash
 import graft.functions.TextFunctions.tokens
 import org.apache.spark.sql.DataFrame
@@ -431,15 +432,6 @@ object Dedup {
   val lastRounds =
     new java.util.concurrent.atomic.AtomicReference[List[RoundStat]](Nil)
 
-  /** Edge-count ceiling for `dupClusters`' single-task union-find fast
-    * path — the same 250k edges (~4 MB of longs) the star loop's
-    * partition sizing allots to one partition, so the fast path only
-    * fires on graphs the distributed loop would have run at parts = 1
-    * anyway (all scheduling overhead, no parallelism).
-    */
-  val ClusterLocalEdges = 250000L
-
-
   /** Resolve near-dup PAIRS into duplicate CLUSTERS: connected
     * components with cluster_id = min doc_id in the component — the
     * step between pair detection and "keep one survivor per group".
@@ -496,19 +488,16 @@ object Dedup {
     * run can recompute all the way back to the pair join (persisted
     * rounds help only as far as surviving blocks).
     *
-    * SMALL-GRAPH FAST PATH: when the canonical edge MULTISET count is
-    * ≤ `localThreshold` (default `ClusterLocalEdges` = the same 250k
-    * edges the loop's partition sizing allots to ONE partition, ~4 MB;
-    * gating on the multiset is conservative for the single-task cap,
-    * and the union-find dedups implicitly — the small case pays no
-    * distinct exchange) the component resolution runs as a single
-    * union-find pass in one task instead of ~log² rounds × 4
-    * distributed jobs each — after
+    * SMALL-GRAPH FAST PATH: when `SmallInput` admits the canonical
+    * edge MULTISET count under `ClusterEdges` (gating on the multiset
+    * is conservative for the single-task cap, and the union-find
+    * dedups implicitly — the small case pays no distinct exchange) the
+    * component resolution runs as a single union-find pass in one task
+    * instead of ~log² rounds × 4 distributed jobs each — after
     * LSH banding + verification, real pair graphs are typically tiny
     * even when the corpus is not, and the iterative path's cost is
     * then pure scheduling overhead. Star contraction remains the path
-    * for everything larger; tests pin `localThreshold = 0` where they
-    * exercise it explicitly.
+    * for everything larger; tests force it with `SmallInput.scoped(0)`.
     *
     * `minRounds` (default 0 — no effect) keeps the star loop running
     * past convergence up to the given round count: the rehearsal's
@@ -551,17 +540,7 @@ object Dedup {
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = ClusterCheckpointEvery,
       heavyDegree: Long = 0L,
-      localThreshold: Long = ClusterLocalEdges,
       minRounds: Int = 0): DataFrame = {
-    // the fast path materializes up to localThreshold edges into ONE
-    // task's LongMap (~48 B/entry with parent slots); bound it so a
-    // caller can't aim a corpus-sized graph at a single executor.
-    // 1<<25 edges ≈ 1.6 GB of map — already past where the star loop
-    // wins; the default (250k) is 128× under the cap.
-    require(localThreshold >= 0L && localThreshold <= (1L << 25),
-      s"localThreshold must be in [0, ${1L << 25}], got $localThreshold " +
-        "(the single-task union-find fast path holds the whole edge " +
-        "list in one JVM map; use the distributed star loop for more)")
     val spark = pairs0.sparkSession
     val sc = spark.sparkContext
     checkpointDir.foreach(sc.setCheckpointDir)
@@ -714,7 +693,7 @@ object Dedup {
     // materializes
     var releaseAfter: DataFrame = rawAll
     val withRoots: DataFrame =
-      if (nRawAll <= localThreshold) {
+      if (SmallInput.admits(nRawAll, SmallInput.ClusterEdges)) {
         lastStarRounds.set(0)
         lastRounds.set(Nil)
         // SMALL-GRAPH FAST PATH — one union-find pass in one task.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SmallInput
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -485,7 +486,7 @@ object GraphOps {
     * Physical: pure reuse of the dedup family's cluster resolution
     * (`Dedup.dupClusters` — alternating large-star/small-star
     * contraction with heavy-hub broadcast rewrite and a single-task
-    * union-find fast path under `localThreshold` edges). Connected
+    * union-find fast path under `SmallInput.ClusterEdges`). Connected
     * components IS dup-cluster resolution with edges instead of
     * near-dup pairs, so the graph operator and the dedup pipeline share
     * one battle-tested kernel: O(log n) rounds, per-round shuffles
@@ -594,15 +595,14 @@ object GraphOps {
     * the input state (its frame is dropped once superseded); returns
     * the (checkpointed or driver-local) fixpoint and its edge count.
     * Raises past `maxRounds` — the oracle-unrolling soundness
-    * contract shared by `kCore` and `coreness`. Once the state fits
-    * `localMax` symmetric rows the remaining rounds run driver-side
+    * contract shared by `kCore` and `coreness`. Once `SmallInput`
+    * admits the state under `PeelRows` the remaining rounds run driver-side
     * (the kTruss local-tail discipline: a degree peel's tail is
     * near-empty rounds whose per-round job overhead dwarfs their
     * data; `coreness` pays that tail once per LEVEL).
     */
   private def peelTo(und0: DataFrame, nEdges0: Long, k: Int,
       maxRounds: Int,
-      localMax: Long = KTrussLocalMax,
       protect: DataFrame = null): (DataFrame, Long) = {
     // `protect`: a MEMO-OWNED input frame (undSimpleShared) this loop
     // must not release when superseding it — every later round's state
@@ -617,7 +617,7 @@ object GraphOps {
         throw new IllegalStateException(
           s"k=$k peel did not reach a fixpoint in $maxRounds rounds — " +
             "raise maxRounds (and the oracle's unroll depth with it)")
-      if (nEdges <= localMax) {
+      if (SmallInput.admits(nEdges, SmallInput.PeelRows)) {
         val pairs = und.filter(col("src") < col("dst"))
           .select(col("src"), col("dst")).collect()
           .map(r => (r.getLong(0), r.getLong(1)))
@@ -677,11 +677,10 @@ object GraphOps {
   }
 
   def kCore(e: DataFrame, k: Int = KCoreK,
-      maxRounds: Int = KCoreMaxRounds,
-      localMax: Long = KTrussLocalMax): DataFrame = {
+      maxRounds: Int = KCoreMaxRounds): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     val (und0, n0) = undSimpleShared(e)
-    val (und, _) = peelTo(und0, n0, k, maxRounds, localMax, protect = und0)
+    val (und, _) = peelTo(und0, n0, k, maxRounds, protect = und0)
     und.groupBy("src").agg(count(lit(1)).as("degree"))
       .select(col("src").as("node_id"), col("degree"))
   }
@@ -715,8 +714,7 @@ object GraphOps {
     * — ≤ maxK vertex-sized checkpoints.
     */
   def coreness(e: DataFrame, maxK: Int = CorenessMaxK,
-      maxRounds: Int = CorenessMaxRounds,
-      localMax: Long = KTrussLocalMax): DataFrame = {
+      maxRounds: Int = CorenessMaxRounds): DataFrame = {
     val (undShared, nShared) = undSimpleShared(e)
     var und = undShared
     var nEdges = nShared
@@ -731,7 +729,7 @@ object GraphOps {
           s"coreness exceeds maxK=$maxK — raise maxK (and the " +
             "oracle's level unroll with it)")
       val (next, nNext) =
-        peelTo(und, nEdges, k, maxRounds, localMax, protect = undShared)
+        peelTo(und, nEdges, k, maxRounds, protect = undShared)
       und = next
       nEdges = nNext
       if (nEdges > 0L)
@@ -776,36 +774,20 @@ object GraphOps {
     * Scale shape: the per-round cost IS triangle enumeration —
     * arboricity-bounded oriented wedges (see `trussSupport`) — on a
     * state that only shrinks, with checkpointed frames and no
-    * per-vertex neighborhood buffering. Once the state fits
-    * `localMax` rows the remaining rounds run as a DRIVER-BOUNDED
-    * LOCAL TAIL (the Dedup fast-path discipline: threshold-gated,
-    * distributed fallback above it, agreement spec-pinned) — a truss
-    * peel's tail is a handful of near-empty rounds whose per-round
-    * job overhead (checkpoint + count + scheduling) dwarfs their
-    * data, measured 3.1 → ~1.9 s at sf0.1 where rounds 2..5 carry
-    * ≤ 4,512 edges. The threshold is rows, not bytes, and is
-    * WORK-based (the round-20 SccLocalEdges discipline scaled to this
-    * operator's per-edge cost): the gate asks "is the whole peel less
-    * work than one normal scan partition", and a truss round costs
-    * ~avg-degree set operations per edge where a BFS hop costs one —
-    * so the 2M-edge BFS budget divided by the measured average degree
-    * (~8 on the suite's slices) gives 2^18 = 262,144 symmetric rows
-    * (= 131 k collected pairs, 4 MB of long pairs, squarely inside
-    * the driver-literal budget every bounded collect in this engine
-    * observes; the collect itself is bounded by the gate). At sf0.1
-    * the TrussMod slice is 234 k symmetric rows, 503 k oriented
-    * wedges, max oriented out-degree 27 — the whole peel is less work
-    * than one scan task, while the distributed round pays ~8
-    * exchange-bearing stages of fixed scheduling overhead.
+    * per-vertex neighborhood buffering. Once `SmallInput` admits the
+    * state under `PeelRows` the remaining rounds run as a
+    * DRIVER-BOUNDED LOCAL TAIL (distributed fallback above it,
+    * agreement spec-pinned) — a truss peel's tail is a handful of
+    * near-empty rounds whose per-round job overhead (checkpoint +
+    * count + scheduling) dwarfs their data, measured 3.1 → ~1.9 s at
+    * sf0.1 where rounds 2..5 carry ≤ 4,512 edges; the bound's
+    * work-based rationale is at `SmallInput.PeelRows`.
     * Production truss decompositions cut rounds with h-index
     * iteration; the round-synchronous form here is the one an
     * unrolled SQL oracle can state exactly.
     */
-  val KTrussLocalMax = 262144L
-
   def kTruss(e: DataFrame, k: Int = KTrussK,
-      maxRounds: Int = KTrussMaxRounds,
-      localMax: Long = KTrussLocalMax): DataFrame = {
+      maxRounds: Int = KTrussMaxRounds): DataFrame = {
     require(k >= 3, s"kTruss needs k >= 3 (k = 2 keeps every edge), got $k")
     val (undShared, nShared) = undSimpleShared(e)
     var und = undShared
@@ -819,7 +801,7 @@ object GraphOps {
         throw new IllegalStateException(
           s"k=$k truss peel did not reach a fixpoint in $maxRounds " +
             "rounds — raise maxRounds (and the oracle's unroll with it)")
-      if (nEdges <= localMax) {
+      if (SmallInput.admits(nEdges, SmallInput.PeelRows)) {
         // state fits the literal budget: finish the peel driver-side
         val pairs = und.filter(col("src") < col("dst"))
           .select(col("src"), col("dst")).collect()
@@ -854,8 +836,8 @@ object GraphOps {
     * changing; raise past `maxRounds` counting the distributed rounds
     * already spent) over an in-memory canonical edge set. Returns the
     * fixpoint's `(src, dst, support)` rows, src < dst — byte-identical
-    * to the distributed output (spec-pinned with `localMax = 0` vs
-    * `Long.MaxValue` on the same graph).
+    * to the distributed output (spec-pinned with `SmallInput.scoped`
+    * at 0 vs `Cap` on the same graph).
     */
   private def kTrussLocalTail(s: SparkSession, pairs: Array[(Long, Long)],
       k: Int, rounds0: Int, maxRounds: Int): DataFrame = {
@@ -1159,6 +1141,31 @@ object GraphOps {
         sum(col("y") * col("y")).as("sum_y2"))
   }
 
+  /** EAGER stats-free lineage truncation for iterative loop states:
+    * `Dataset.localCheckpoint` would hand each LogicalRDD the origin
+    * plan's COMPUTED statistics, which a state-joins-into-next-state
+    * loop compounds multiplicatively until the optimizer livelocks
+    * multiplying million-digit sizeInBytes BigInts (measured ×4
+    * digits per sweep; see ColumnBridge.statsFreeLocalCheckpoint).
+    */
+  private def ck(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(df)
+  private def ckCounted(df: DataFrame): (DataFrame, Long) =
+    org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpointCounted(df)
+  private def drop(df: DataFrame): Unit =
+    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(df)
+
+  /** Exact overflow-proof sum of a long column (decimal(38,0) — ids
+    * near 2^63 times billions of vertices cannot wrap): the MONOTONE-
+    * SUM convergence signal for label/level fixpoints. One map-side
+    * partial aggregation over the checkpointed state, no join, no
+    * wide shuffle. Empty relations sum to 0.
+    */
+  private def decSum(df: DataFrame, c: String): java.math.BigDecimal = {
+    val r = df.agg(sum(col(c).cast("decimal(38,0)"))).collect()(0)
+    if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
+  }
+
   /** STRONGLY-connected components — the directed refinement of
     * `components`: one `(vertex, scc)` row per vertex appearing in any
     * edge, `scc` = the minimum vertex id MUTUALLY reachable (v →* u
@@ -1205,68 +1212,23 @@ object GraphOps {
     * collapsed/ignored (SCC structure is invariant); a vertex with
     * only self-loops is its own singleton component.
     *
-    * SMALL-GRAPH FAST PATH (the `dupClusters` pattern): at or below
-    * `localThreshold` distinct edges, one task runs an ITERATIVE
-    * Tarjan (explicit stacks — no recursion-depth bound) instead of
-    * rounds × sweeps of distributed jobs, whose scheduling overhead
-    * dominates tiny graphs. Same min-id labels by construction;
-    * equality with the distributed loop is property-pinned
-    * (`localThreshold = 0` forces the loop in tests).
-    *
-    * Bound rationale (shared by every SccLocalEdges-gated operator:
-    * scc, topoLevels, hopDistances, ssspBudget, hits): the gate asks
-    * "is the WHOLE distinct edge set less work than one normal scan
-    * partition" — 2M edges ≈ 32 MB of long pairs (48 with weights),
-    * i.e. a quarter of a default 128 MB split, collected once and
-    * processed in one JVM in tens of milliseconds, versus
-    * rounds × (2–10 exchanges) of fixed scheduling overhead in the
-    * distributed loop (~40 ms per exchange under AQE — measured on
-    * the hop gates). Transient adjacency maps stay a few hundred MB,
-    * far under the 8g floor every regime here runs with; the hard
-    * `require` cap (1 << 25) still bounds the collect. The earlier
-    * 250k bound predates the per-exchange overhead measurement and
-    * left 0.5–6M-edge graphs paying seconds of scheduling for
-    * milliseconds of work.
+    * SMALL-GRAPH FAST PATH (the `dupClusters` pattern): when
+    * `SmallInput` admits the distinct edge count under
+    * `TraversalEdges`, one task runs an ITERATIVE Tarjan (explicit
+    * stacks — no recursion-depth bound) instead of rounds × sweeps of
+    * distributed jobs, whose scheduling overhead dominates tiny
+    * graphs. Same min-id labels by construction; equality with the
+    * distributed loop is property-pinned (`SmallInput.scoped(0)`
+    * forces the loop in tests).
     */
-  val SccLocalEdges = 2000000L
-
-  /** EAGER stats-free lineage truncation for iterative loop states:
-    * `Dataset.localCheckpoint` would hand each LogicalRDD the origin
-    * plan's COMPUTED statistics, which a state-joins-into-next-state
-    * loop compounds multiplicatively until the optimizer livelocks
-    * multiplying million-digit sizeInBytes BigInts (measured ×4
-    * digits per sweep; see ColumnBridge.statsFreeLocalCheckpoint).
-    */
-  private def ck(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpoint(df)
-  private def ckCounted(df: DataFrame): (DataFrame, Long) =
-    org.apache.spark.sql.graft.ColumnBridge.statsFreeLocalCheckpointCounted(df)
-  private def drop(df: DataFrame): Unit =
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(df)
-
-  /** Exact overflow-proof sum of a long column (decimal(38,0) — ids
-    * near 2^63 times billions of vertices cannot wrap): the MONOTONE-
-    * SUM convergence signal for label/level fixpoints. One map-side
-    * partial aggregation over the checkpointed state, no join, no
-    * wide shuffle. Empty relations sum to 0.
-    */
-  private def decSum(df: DataFrame, c: String): java.math.BigDecimal = {
-    val r = df.agg(sum(col(c).cast("decimal(38,0)"))).collect()(0)
-    if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-  }
-
-  def stronglyConnectedComponents(e: DataFrame, maxIter: Int = 50,
-      localThreshold: Long = SccLocalEdges): DataFrame = {
+  def stronglyConnectedComponents(e: DataFrame,
+      maxIter: Int = 50): DataFrame = {
     require(maxIter > 0, s"maxIter must be positive, got $maxIter")
-    require(localThreshold >= 0L && localThreshold <= (1L << 25),
-      s"localThreshold must be in [0, ${1L << 25}], got $localThreshold " +
-        "(the single-task Tarjan holds the whole edge list in one JVM; " +
-        "use the distributed refinement loop for more)")
     val spark = e.sparkSession
     // memo-owned distinct relation: the count is already banked, so
     // the local-fast-path gate probe costs nothing
     val (edges, nEdges) = distinctEdgesShared(e)
-    if (nEdges <= localThreshold) {
+    if (SmallInput.admits(nEdges, SmallInput.TraversalEdges)) {
       import spark.implicits._
       return edges.as[(Long, Long)].rdd.coalesce(1)
         .mapPartitions(it => tarjanLocal(it))
@@ -1491,7 +1453,7 @@ object GraphOps {
     * condensation is usually shallow); on a CYCLIC input levels grow
     * forever, so exceeding `maxIter` raises with a not-a-DAG
     * diagnosis rather than returning garbage — feed arbitrary graphs
-    * through `sccCondensation` first. At or below `localThreshold`
+    * through `sccCondensation` first. When `SmallInput` admits the
     * distinct edges, one task runs the memoized longest-path DP
     * directly (explicit stack, on-path cycle DETECTION raises
     * immediately) — condensations are usually tiny relative to their
@@ -1499,16 +1461,13 @@ object GraphOps {
     * property-pinned equal.
     */
   def topoLevels(dag: DataFrame, srcCol: String = "scc_src",
-      dstCol: String = "scc_dst", maxIter: Int = 200,
-      localThreshold: Long = SccLocalEdges): DataFrame = {
+      dstCol: String = "scc_dst", maxIter: Int = 200): DataFrame = {
     require(maxIter > 0, s"maxIter must be positive, got $maxIter")
-    require(localThreshold >= 0L && localThreshold <= (1L << 25),
-      s"localThreshold must be in [0, ${1L << 25}], got $localThreshold")
     val spark = dag.sparkSession
     val edges = graft.Caches.track(
       dag.select(col(srcCol).as("s"), col(dstCol).as("d")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    if (edges.count() <= localThreshold) {
+    if (SmallInput.admits(edges.count(), SmallInput.TraversalEdges)) {
       import spark.implicits._
       return edges.as[(Long, Long)].rdd.coalesce(1)
         .mapPartitions(it => levelsLocal(it))
@@ -1673,18 +1632,17 @@ object GraphOps {
     * across union branches).
     */
   def hopDistances(e: DataFrame, sources: DataFrame,
-      maxHops: Int, hopStride: Int = 1,
-      localThreshold: Long = SccLocalEdges): DataFrame = {
+      maxHops: Int, hopStride: Int = 1): DataFrame = {
     // memo-owned distinct relation (shared with scc/pagerank/closeness/
     // walks/σ); its banked count makes the gate probe free, and
     // ownership moves to the memo — no per-call persist/unpersist
     val (big, nBig) = distinctEdgesShared(e)
     // input-size-gated local fast path (the SCC/hits discipline): a
     // BFS sweep's per-round cost is fixed job overhead on a
-    // sub-threshold distinct edge set. The deep-diameter gate pins
-    // localThreshold = 0 so the DISTRIBUTED sweep loop, the stride
+    // sub-threshold distinct edge set. The deep-diameter gate runs in
+    // `SmallInput.scoped(0)` so the DISTRIBUTED sweep loop, the stride
     // compaction and the budget exit stay on the hash-checked path.
-    if (nBig <= localThreshold) {
+    if (SmallInput.admits(nBig, SmallInput.TraversalEdges)) {
       val pairs = big.collect().map(r => (r.getLong(0), r.getLong(1)))
       val seeds = sources.select(col("v")).distinct().collect()
         .map(_.getLong(0))
@@ -2217,8 +2175,7 @@ object GraphOps {
     * phase; the per-seed form measured 11.4 s at sf0.1).
     */
   def stressSampled(e: DataFrame, k: Int = PathSeeds,
-      maxHops: Int = PathHops,
-      localThreshold: Long = SccLocalEdges): DataFrame = {
+      maxHops: Int = PathHops): DataFrame = {
     val (frames, dedup) = sigmaLayers(e, k, maxHops)
     val empty = e.select(col("src").as("vertex"), lit(0L).as("stress"))
       .filter(lit(false))
@@ -2231,9 +2188,9 @@ object GraphOps {
     // pure stage overhead under the gate; the τ recursion over
     // collected layers is the relational loop's exact arithmetic
     // (left joins contribute only matched successors, coalesce 0),
-    // order-free on exact longs. `localThreshold = 0` keeps the
+    // order-free on exact longs. `SmallInput.scoped(0)` keeps the
     // distributed loop spec-covered.
-    if (dedup.count() <= localThreshold) {
+    if (SmallInput.admits(dedup.count(), SmallInput.TraversalEdges)) {
       val s = e.sparkSession
       import s.implicits._
       val adj = dedup.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -2303,17 +2260,16 @@ object GraphOps {
   val SsspRounds = 6
 
   def ssspBudget(e0: DataFrame, sources: DataFrame,
-      maxRounds: Int = SsspRounds,
-      localThreshold: Long = SccLocalEdges): DataFrame = {
+      maxRounds: Int = SsspRounds): DataFrame = {
     require(maxRounds >= 0 && maxRounds <= 64,
       s"maxRounds must be in [0, 64], got $maxRounds")
     val e = weightedEdgesShared(e0)
     // input-size-gated local fast path (the SCC/hits/BFS discipline):
     // synchronous budgeted Bellman-Ford driver-side under the bound —
     // ≡ the frontier-delta loop by min-combine idempotence (the
-    // pinned law); property specs force localThreshold = 0 to keep
+    // pinned law); property specs force `SmallInput.scoped(0)` to keep
     // the distributed loop covered.
-    if (e.count() <= localThreshold) {
+    if (SmallInput.admits(e.count(), SmallInput.TraversalEdges)) {
       val wedges = e.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val seeds = sources.select(col("v")).distinct().collect()
@@ -2407,8 +2363,7 @@ object GraphOps {
     * the budget-semantics property pins transitively.
     */
   def closenessWeightedSampled(e: DataFrame, k: Int = ClosenessSeeds,
-      maxRounds: Int = SsspRounds,
-      localThreshold: Long = SccLocalEdges): DataFrame = {
+      maxRounds: Int = SsspRounds): DataFrame = {
     require(k >= 1 && k <= 64, s"k must be in [1, 64], got $k")
     require(maxRounds >= 0 && maxRounds <= 64,
       s"maxRounds must be in [0, 64], got $maxRounds")
@@ -2433,9 +2388,9 @@ object GraphOps {
     // loop's delta-join gives for free; applying in place would let a
     // same-round improvement propagate a (budget+1)-edge path. The
     // aggregation is the same order-free exact-long fold.
-    // `localThreshold = 0` keeps the distributed labeled loop
+    // `SmallInput.scoped(0)` keeps the distributed labeled loop
     // spec-covered.
-    if (we.count() <= localThreshold) {
+    if (SmallInput.admits(we.count(), SmallInput.TraversalEdges)) {
       val adj = we.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .groupBy(_._1).map { case (u, es) => u -> es.map(t => (t._2, t._3)) }
@@ -2756,8 +2711,7 @@ object GraphOps {
     * broadcast total, and a projection; round state is stats-free
     * locally checkpointed like every other fixpoint loop here.
     */
-  def hits(e: DataFrame, rounds: Int = HitsRounds,
-      localThreshold: Long = SccLocalEdges): DataFrame = {
+  def hits(e: DataFrame, rounds: Int = HitsRounds): DataFrame = {
     require(rounds >= 1 && rounds <= 16,
       s"hits: rounds must be in [1, 16], got $rounds")
     // input-size-gated local fast path (the SCC union-find precedent):
@@ -2774,7 +2728,7 @@ object GraphOps {
     // itself is paid once per session, not per gate
     val (ed0, nEd) = ckCounted(distinctEdgesShared(e)._1
       .filter(col("src") =!= col("dst")))
-    if (nEd <= localThreshold) {
+    if (SmallInput.admits(nEd, SmallInput.TraversalEdges)) {
       val pairs = ed0.collect().map(r => (r.getLong(0), r.getLong(1)))
       drop(ed0)
       return hitsLocal(e.sparkSession, pairs, rounds)
@@ -2875,21 +2829,18 @@ object GraphOps {
     * optimizer-stats growth are the real iterative-operator killers;
     * see `ck`).
     */
-  def labelPropagation(e: DataFrame, rounds: Int = LpaRounds,
-      localThreshold: Long = LouvainLocalEdges): DataFrame = {
+  def labelPropagation(e: DataFrame, rounds: Int = LpaRounds): DataFrame = {
     require(rounds >= 1 && rounds <= 16,
       s"labelPropagation: rounds must be in [1, 16], got $rounds")
-    require(localThreshold >= 0L && localThreshold <= (1L << 25),
-      s"localThreshold must be in [0, ${1L << 25}], got $localThreshold")
     val (und, nSym) = undSimpleShared(e)
     // input-size-gated single-task twin (the louvain/stress
     // discipline): each distributed round is an edge join + two
     // aggregations — pure stage overhead below the gate. The twin is
     // the same synchronous argmax by (count DESC, label ASC) over the
     // collected symmetric simple adjacency; the memo's banked count
-    // makes the gate probe free. `localThreshold = 0` keeps the
+    // makes the gate probe free. `SmallInput.scoped(0)` keeps the
     // distributed loop spec-covered.
-    if (nSym <= localThreshold) {
+    if (SmallInput.admits(nSym, SmallInput.ClusterEdges)) {
       val s = e.sparkSession
       import s.implicits._
       val adj = und.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -2951,10 +2902,7 @@ object GraphOps {
     * aggregations keyed by community — nothing wider than the edge
     * relation shuffles, no windows.
     */
-  def modularity(e: DataFrame, labels: DataFrame,
-      localThreshold: Long = LouvainLocalEdges): DataFrame = {
-    require(localThreshold >= 0L && localThreshold <= (1L << 25),
-      s"localThreshold must be in [0, ${1L << 25}], got $localThreshold")
+  def modularity(e: DataFrame, labels: DataFrame): DataFrame = {
     val (und, nSym) = undSimpleShared(e)
     val m = nSym / 2L
     val l = labels.select(col("vertex"), col("community"))
@@ -2963,7 +2911,7 @@ object GraphOps {
     // gate. The label relation is the same graph's vertex set (LPA /
     // Louvain output), so the collect is vertex-sized whenever the
     // edge gate admits. Exact long arithmetic, order-free sums;
-    // `localThreshold = 0` keeps the distributed shape spec-covered.
+    // `SmallInput.scoped(0)` keeps the distributed shape spec-covered.
     // twin admission probes the LABEL side with a bounded limit-collect
     // (one job, no separate count): beyond `labCap` rows the collect
     // is cut short and the distributed path runs — an oversized labels
@@ -2976,7 +2924,8 @@ object GraphOps {
     lazy val labRows =
       l.limit(labCap + 1).collect().map(r => (r.getLong(0), r.getLong(1)))
     lazy val labMap = labRows.toMap
-    if (nSym <= localThreshold && labRows.length <= labCap &&
+    if (SmallInput.admits(nSym, SmallInput.ClusterEdges) &&
+        labRows.length <= labCap &&
         labMap.size == labRows.length) {
       val s = e.sparkSession
       import s.implicits._
@@ -3083,17 +3032,6 @@ object GraphOps {
     * budget past convergence is harmless — equal-by-unrolling is sound.
     */
   val LouvainLevels = 6
-
-  /** `louvain` small-graph fast-path gate (the `sccComponents` /
-    * `dupClusters` pattern): at or below this many SYMMETRIC simple
-    * rows the whole multi-level matching loop runs in ONE task —
-    * measured at sf0.1 (≈30k rows), the distributed loop's 6 levels
-    * cost ~0.75 s EACH in pure stage-scheduling overhead (~10
-    * exchanges per level over kilobyte data). Equality with the
-    * distributed loop is property-pinned (`localThreshold = 0` forces
-    * the loop in tests).
-    */
-  val LouvainLocalEdges = 250000L
 
   /** Single-task twin of `louvain`'s level loop: identical integer
     * math (gain = 2m·w − k_a·k_b on the current contraction, best =
@@ -3218,16 +3156,15 @@ object GraphOps {
     * Exact long arithmetic: |gain| ≤ max(2m·w, k²) < (2m)², fine while
     * 2m < ~2^31 (the `modularity` decimal-upgrade caveat applies).
     */
-  def louvain(e: DataFrame, levels: Int = LouvainLevels,
-      localThreshold: Long = LouvainLocalEdges): DataFrame = {
+  def louvain(e: DataFrame, levels: Int = LouvainLevels): DataFrame = {
     require(levels >= 1 && levels <= 16,
       s"louvain: levels must be in [1, 16], got $levels")
-    require(localThreshold >= 0L && localThreshold <= (1L << 25),
-      s"localThreshold must be in [0, ${1L << 25}], got $localThreshold " +
-        "(the single-task matching loop holds the contraction in one " +
-        "JVM; use the distributed loop for more)")
     val (und, nSym) = undSimpleShared(e)
-    if (nSym <= localThreshold) {
+    // small-graph fast path (the `dupClusters` pattern): when
+    // `SmallInput` admits the SYMMETRIC simple rows the whole
+    // multi-level matching loop runs in ONE task; equality with the
+    // distributed loop is property-pinned (`SmallInput.scoped(0)`)
+    if (SmallInput.admits(nSym, SmallInput.ClusterEdges)) {
       val spark = und.sparkSession
       import spark.implicits._
       // one task over the memo-owned checkpointed frame; nSym is

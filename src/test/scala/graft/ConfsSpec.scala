@@ -91,8 +91,8 @@ class ConfsSpec extends SparkSpec {
         assert(spark.conf.getAll === before, s"$what changed the conf")
       }
       unchanged("hopDistances") {
-        GraphOps.hopDistances(chain, Seq(500000L).toDF("v"), 20,
-          hopStride = 4, localThreshold = 0L).count()
+        SmallInput.scoped(0L)(GraphOps.hopDistances(chain,
+          Seq(500000L).toDF("v"), 20, hopStride = 4)).count()
       }
       unchanged("knnBeamShared") {
         Similarity.knnBeamShared(graph, emb, emb).count()

@@ -706,15 +706,15 @@ class ExtensionsSpec extends SparkSpec {
     // first run had dropped the shared checkpoint, the second run's
     // memo HIT would read released blocks and fail — and agree with
     // itself and with louvain's vertex set
-    def core(k: Int) = GraphOps.kCore(e, k = k, localMax = 0L)
+    def core(k: Int) = SmallInput.scoped(0L)(GraphOps.kCore(e, k = k))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val k1 = core(2)
     assert(k1 === core(2) && k1.nonEmpty)
     assert(k1.map(_._1) === Set(0L, 1L, 2L)) // the triangle is the 2-core
     // a different edge relation must miss
     val hits2 = PlanMemo.hitsOf("undsimple")
-    GraphOps.kCore(Seq((7L, 8L)).toDF("src", "dst"), k = 1,
-      localMax = 0L).count()
+    SmallInput.scoped(0L)(
+      GraphOps.kCore(Seq((7L, 8L)).toDF("src", "dst"), k = 1)).count()
     assert(PlanMemo.hitsOf("undsimple") === hits2)
   }
 
@@ -738,9 +738,9 @@ class ExtensionsSpec extends SparkSpec {
     assert(PlanMemo.hitsOf("dedges") > before,
       "the simple-digraph family rebuilt the distinct relation instead of reusing it")
     // the DISTRIBUTED consumers share the frame too: rerunning hops
-    // distributed (localThreshold = 0) over the memoized relation must
+    // distributed (SmallInput.scoped(0)) over the memoized relation must
     // agree with the local twin
-    val h2 = GraphOps.hopDistances(e, seeds, 4, localThreshold = 0L)
+    val h2 = SmallInput.scoped(0L)(GraphOps.hopDistances(e, seeds, 4))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(h2 === h1)
     // a different edge relation must miss
@@ -1214,7 +1214,7 @@ class ExtensionsSpec extends SparkSpec {
     // per-round propagation could cover without the pointer jump
     val pairs = (0 until 24).map(i => (100L + i, 101L + i)).toDF("doc_a", "doc_b")
     val before = spark.sparkContext.getPersistentRDDs.size
-    val got = Dedup.dupClusters(pairs, localThreshold = 0L).collect()
+    val got = SmallInput.scoped(0L)(Dedup.dupClusters(pairs)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (0 until 25).map(i => (100L + i) -> 100L).toMap)
     // cache discipline: everything but the final label round is released
@@ -1355,12 +1355,12 @@ class ExtensionsSpec extends SparkSpec {
     val cross = Seq((501L, 1000L)) ++
       (0 until 20).map(_ => (500L + rng.nextInt(200) + 1, 2000L + rng.nextInt(50)))
     val pairs = (star ++ chain ++ cross).toDF("doc_a", "doc_b")
-    val viaJoin = Dedup.dupClusters(pairs, localThreshold = 0L).collect()
+    val viaJoin = SmallInput.scoped(0L)(Dedup.dupClusters(pairs)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // heavyDegree = 2 pushes nearly every key through the broadcast
     // rewrite — labels must be identical
-    val viaBroadcast = Dedup.dupClusters(pairs, heavyDegree = 2L,
-        localThreshold = 0L).collect()
+    val viaBroadcast = SmallInput.scoped(0L)(
+        Dedup.dupClusters(pairs, heavyDegree = 2L)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaJoin === viaBroadcast)
     assert(viaJoin(700L) === 0L) // star leaf → hub-rooted component
@@ -1380,13 +1380,13 @@ class ExtensionsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     try {
       val pairs = (0 until 40).map(i => (100L + i, 101L + i)).toDF("doc_a", "doc_b")
-      val plain = Dedup.dupClusters(pairs, localThreshold = 0L).collect()
+      val plain = SmallInput.scoped(0L)(Dedup.dupClusters(pairs)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       // checkpoint EVERY round so the reliable-checkpoint path is
-      // actually exercised, not just plumbed (localThreshold = 0:
+      // actually exercised, not just plumbed (SmallInput.scoped(0):
       // checkpointing lives in the star loop)
-      val ckpt = Dedup.dupClusters(pairs, checkpointDir = Some(dir),
-        checkpointEvery = 1, localThreshold = 0L).collect()
+      val ckpt = SmallInput.scoped(0L)(Dedup.dupClusters(pairs,
+        checkpointDir = Some(dir), checkpointEvery = 1)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(plain === ckpt)
       assert(ckpt === (0 until 41).map(i => (100L + i) -> 100L).toMap)
@@ -1432,7 +1432,7 @@ class ExtensionsSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(gotFast === expected,
         s"fast path, trial $trial (n=$n, edges=${pairs.size})")
-      val gotStar = Dedup.dupClusters(df, localThreshold = 0L).collect()
+      val gotStar = SmallInput.scoped(0L)(Dedup.dupClusters(df)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(gotStar === expected,
         s"star path, trial $trial (n=$n, edges=${pairs.size})")
@@ -1451,7 +1451,7 @@ class ExtensionsSpec extends SparkSpec {
     import s.implicits._
     val pairs = (0 until 24).map(i => (100L + i, 101L + i)).toDF("doc_a", "doc_b")
     intercept[IllegalStateException] {
-      Dedup.dupClusters(pairs, maxIter = 1, localThreshold = 0L).collect()
+      SmallInput.scoped(0L)(Dedup.dupClusters(pairs, maxIter = 1)).collect()
     }
     // drain the engine's own leases and session memos — NEVER a
     // blanket unpersist of every persistent RDD: that steals the
@@ -2528,10 +2528,13 @@ class ExtensionsSpec extends SparkSpec {
     // the stateful form equals the windowed prefix-identity form
     assert(oneShot === rows(graft.streaming.EventWindows.cusum(all)))
     // streaming replay: two in-order micro-batches through a real
-    // stream — identical rows, state carried across batches
+    // stream — identical rows, state carried across batches. Each batch
+    // is appended as ONE file, so one commit rename publishes it whole:
+    // with several part files the stream could list hour 6's file
+    // before hour 5's and fold them as two out-of-order micro-batches
     val dir = java.nio.file.Files
       .createTempDirectory("graft-cusum-stream").toString
-    batch(b1).write.mode("append").parquet(dir)
+    batch(b1).coalesce(1).write.mode("append").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val q = graft.streaming.EventWindows.cusumStateful(spark,
         spark.readStream.schema(schema).parquet(dir), mus)
@@ -2539,7 +2542,7 @@ class ExtensionsSpec extends SparkSpec {
       .outputMode("append").start()
     try {
       q.processAllAvailable()
-      batch(b2).write.mode("append").parquet(dir)
+      batch(b2).coalesce(1).write.mode("append").parquet(dir)
       q.processAllAvailable()
       assert(rows(spark.sql("select * from cusum_out")) === oneShot)
     } finally q.stop()
@@ -2547,14 +2550,14 @@ class ExtensionsSpec extends SparkSpec {
     // second micro-batch EARLIER than the folded frontier
     val dir2 = java.nio.file.Files
       .createTempDirectory("graft-cusum-ooo").toString
-    batch(Seq(9L -> 1L)).write.mode("append").parquet(dir2)
+    batch(Seq(9L -> 1L)).coalesce(1).write.mode("append").parquet(dir2)
     val q2 = graft.streaming.EventWindows.cusumStateful(spark,
         spark.readStream.schema(schema).parquet(dir2), mus)
       .writeStream.format("memory").queryName("cusum_ooo")
       .outputMode("append").start()
     try {
       q2.processAllAvailable()
-      batch(Seq(5L -> 1L)).write.mode("append").parquet(dir2)
+      batch(Seq(5L -> 1L)).coalesce(1).write.mode("append").parquet(dir2)
       val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q2.processAllAvailable()
         throw q2.exception.get
@@ -6059,10 +6062,10 @@ class ExtensionsSpec extends SparkSpec {
     val gotR = operators.GraphOps.hits(ed.toDF("src", "dst")).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(gotR === vs.map(v => v -> ((hub(v), auth(v)))).toMap)
-    // local fast path ≡ the distributed loop (localThreshold = 0
+    // local fast path ≡ the distributed loop (SmallInput.scoped(0)
     // forces the loop — the SCC forcing discipline)
-    assert(operators.GraphOps.hits(ed.toDF("src", "dst"),
-        localThreshold = 0L).collect()
+    assert(SmallInput.scoped(0L)(
+        operators.GraphOps.hits(ed.toDF("src", "dst"))).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
       === gotR)
   }

@@ -435,13 +435,14 @@ class GraphOpsSpec extends SparkSpec {
     }
     // BOTH execution paths: the single-task Tarjan fast path (default
     // threshold) and the distributed refinement loop (threshold 0)
-    def run(edges: Seq[(Long, Long)], threshold: Long): Map[Long, Long] =
-      GraphOps.stronglyConnectedComponents(edgeDf(edges: _*),
-          localThreshold = threshold)
+    def run(edges: Seq[(Long, Long)],
+        threshold: Option[Long]): Map[Long, Long] =
+      atLimit(threshold)(
+          GraphOps.stronglyConnectedComponents(edgeDf(edges: _*)))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def runBoth(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val fast = run(edges, GraphOps.SccLocalEdges)
-      val dist = run(edges, 0L)
+      val fast = run(edges, None)
+      val dist = run(edges, Some(0L))
       assert(fast === dist, s"fast path != distributed loop on $edges")
       fast
     }
@@ -626,8 +627,8 @@ class GraphOpsSpec extends SparkSpec {
       lab
     }
     def got(e: Seq[(Long, Long)], levels: Int,
-        localThreshold: Long = GraphOps.LouvainLocalEdges): Map[Long, Long] =
-      GraphOps.louvain(edgeDf(e: _*), levels, localThreshold).collect()
+        limit: Option[Long] = None): Map[Long, Long] =
+      atLimit(limit)(GraphOps.louvain(edgeDf(e: _*), levels)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     def qnum(e: Seq[(Long, Long)], lab: Map[Long, Long]): Long =
       GraphOps.modularity(edgeDf(e: _*),
@@ -652,12 +653,12 @@ class GraphOpsSpec extends SparkSpec {
       List.fill(60)((rng.nextInt(14).toLong, rng.nextInt(14).toLong)))
     for (e <- cases; l <- 1 to 4)
       withClue(s"levels=$l edges=$e") { assert(got(e, l) === brute(e, l)) }
-    // the DISTRIBUTED loop (localThreshold = 0 forces it past the
+    // the DISTRIBUTED loop (SmallInput.scoped(0) forces it past the
     // single-task fast path) must match the same reference — the
     // fast-path gate may never change what either path computes
     for (e <- cases; l <- Seq(1, 4))
       withClue(s"distributed levels=$l edges=$e") {
-        assert(got(e, l, 0L) === brute(e, l))
+        assert(got(e, l, Some(0L)) === brute(e, l))
       }
     // MONOTONE Q: each level's accepted merges are disjoint mutual
     // positive-gain pairs, so Σ q_num must never decrease level over
@@ -697,10 +698,10 @@ class GraphOpsSpec extends SparkSpec {
           ds.map(d => if (d._2 >= 1L) 1000000L / d._2 else 0L).sum))
       }
       // both the single-task fast path (default gate) and the
-      // distributed labeled loop (localThreshold = 0) must agree
-      Seq(GraphOps.SccLocalEdges, 0L).foreach { th =>
-        val got = GraphOps.closenessWeightedSampled(edgeDf(e: _*), k = k,
-            localThreshold = th)
+      // distributed labeled loop (SmallInput.scoped(0)) must agree
+      Seq(None, Some(0L)).foreach { th =>
+        val got = atLimit(th)(
+            GraphOps.closenessWeightedSampled(edgeDf(e: _*), k = k))
           .collect()
           .map(r => r.getLong(0) ->
             ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
@@ -745,21 +746,21 @@ class GraphOpsSpec extends SparkSpec {
       }
     }
     // the driver-bounded local tail ≡ the fully distributed peel on
-    // the same graph: localMax = MaxValue forces every round local,
-    // localMax = 0 forbids the fast path entirely
+    // the same graph: a limit of SmallInput.Cap forces every round
+    // local, 0 forbids the fast path entirely
     val e2 = List.fill(80)((rng.nextInt(12).toLong, rng.nextInt(12).toLong))
     for (k <- Seq(3, 4, 5)) {
-      def at(lm: Long) = GraphOps.kTruss(edgeDf(e2: _*), k,
-          maxRounds = 30, localMax = lm).collect()
+      def at(lm: Long) = SmallInput.scoped(lm)(GraphOps.kTruss(
+          edgeDf(e2: _*), k, maxRounds = 30)).collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      withClue(s"k=$k") { assert(at(Long.MaxValue) === at(0L)) }
+      withClue(s"k=$k") { assert(at(SmallInput.Cap) === at(0L)) }
     }
     // the round budget is enforced identically on the local tail
     val triChain = for (i <- 0L until 12L; e <- Seq((i, i + 1), (i, i + 2)))
       yield e
     intercept[IllegalStateException] {
-      GraphOps.kTruss(edgeDf(triChain: _*), 4, maxRounds = 1,
-        localMax = Long.MaxValue).collect()
+      SmallInput.scoped(SmallInput.Cap)(
+        GraphOps.kTruss(edgeDf(triChain: _*), 4, maxRounds = 1)).collect()
     }
   }
 
@@ -821,10 +822,10 @@ class GraphOpsSpec extends SparkSpec {
       }.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
         .filter(_._2 > 0L)
       // both the single-task τ fast path (default gate) and the
-      // distributed backward loop (localThreshold = 0) must agree
-      Seq(GraphOps.SccLocalEdges, 0L).foreach { th =>
-        val gotStress = GraphOps.stressSampled(edgeDf(e: _*), k = k,
-            maxHops = hops, localThreshold = th).collect()
+      // distributed backward loop (SmallInput.scoped(0)) must agree
+      Seq(None, Some(0L)).foreach { th =>
+        val gotStress = atLimit(th)(GraphOps.stressSampled(edgeDf(e: _*),
+            k = k, maxHops = hops)).collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
         withClue(s"threshold=$th edges=$e") {
           assert(gotStress === wantStress)
@@ -912,19 +913,17 @@ class GraphOpsSpec extends SparkSpec {
       // must be invisible in the result on arbitrary digraphs — back
       // edges, diamonds and revisits land on the same exact layers
       for (hops <- Seq(0, 1, 3, 50); stride <- Seq(1, 3, 8)) {
-        // localThreshold = 0 forces the DISTRIBUTED sweep loop (the
+        // SmallInput.scoped(0) forces the DISTRIBUTED sweep loop (the
         // fixtures are under the fast-path bound)
-        val got = GraphOps.hopDistances(edgeDf(e: _*),
-            seeds.toSeq.toDF("v"), hops, hopStride = stride,
-            localThreshold = 0L)
+        val got = SmallInput.scoped(0L)(GraphOps.hopDistances(edgeDf(e: _*),
+            seeds.toSeq.toDF("v"), hops, hopStride = stride))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         withClue(s"edges=$e hops=$hops stride=$stride") {
           assert(got === bruteBfs(e, seeds, hops))
         }
         // the gated local fast path must agree exactly
-        val loc = GraphOps.hopDistances(edgeDf(e: _*),
-            seeds.toSeq.toDF("v"), hops, hopStride = stride,
-            localThreshold = Long.MaxValue)
+        val loc = SmallInput.scoped(SmallInput.Cap)(GraphOps.hopDistances(
+            edgeDf(e: _*), seeds.toSeq.toDF("v"), hops, hopStride = stride))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         withClue(s"local edges=$e hops=$hops") {
           assert(loc === got)
@@ -933,11 +932,11 @@ class GraphOpsSpec extends SparkSpec {
     }
     // a seed absent from the edge relation still reports dist 0; an
     // unreached vertex is absent — on BOTH paths
-    for (lt <- Seq(0L, Long.MaxValue)) {
-      val got = GraphOps.hopDistances(edgeDf((1L, 2L), (3L, 4L)),
-          Seq(1L, 99L).toDF("v"), 2, localThreshold = lt)
+    for (lt <- Seq(0L, SmallInput.Cap)) {
+      val got = SmallInput.scoped(lt)(GraphOps.hopDistances(
+          edgeDf((1L, 2L), (3L, 4L)), Seq(1L, 99L).toDF("v"), 2))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      withClue(s"localThreshold=$lt") {
+      withClue(s"limit=$lt") {
         assert(got === Map(1L -> 0L, 99L -> 0L, 2L -> 1L))
       }
     }
@@ -947,8 +946,8 @@ class GraphOpsSpec extends SparkSpec {
     // compacted relation) must produce the same exact layers
     val chain = (0L until 79L).map(i => (i, i + 1L))
     for (stride <- Seq(1, 4)) {
-      val deep = GraphOps.hopDistances(edgeDf(chain: _*), Seq(0L).toDF("v"),
-          100, hopStride = stride, localThreshold = 0L)
+      val deep = SmallInput.scoped(0L)(GraphOps.hopDistances(
+          edgeDf(chain: _*), Seq(0L).toDF("v"), 100, hopStride = stride))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       withClue(s"stride=$stride") {
         assert(deep === (0L to 79L).map(v => v -> v).toMap)
@@ -966,15 +965,15 @@ class GraphOpsSpec extends SparkSpec {
         incoming.get(v).map(_.map(p => lvl(p._1) + 1L).max).getOrElse(0L))
       vs.map(v => v -> lvl(v)).toMap
     }
-    def run(edges: Seq[(Long, Long)], threshold: Long): Map[Long, Long] =
-      GraphOps.topoLevels(
+    def run(edges: Seq[(Long, Long)],
+        threshold: Option[Long]): Map[Long, Long] =
+      atLimit(threshold)(GraphOps.topoLevels(
           edgeDf(edges: _*).select(col("src").as("scc_src"),
-            col("dst").as("scc_dst")),
-          localThreshold = threshold)
+            col("dst").as("scc_dst"))))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def runBoth(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val fast = run(edges, GraphOps.SccLocalEdges)
-      val dist = run(edges, 0L)
+      val fast = run(edges, None)
+      val dist = run(edges, Some(0L))
       assert(fast === dist, s"fast path != distributed loop on $edges")
       fast
     }
@@ -990,12 +989,12 @@ class GraphOpsSpec extends SparkSpec {
       withClue(s"edges=$e") { assert(runBoth(e) === bruteLevels(e)) }
     }
     // a cycle must raise on BOTH paths, never return garbage levels
-    Seq(GraphOps.SccLocalEdges, 0L).foreach { th =>
+    Seq(None, Some(0L)).foreach { th =>
       val ex = intercept[Exception] {
-        GraphOps.topoLevels(
+        atLimit(th)(GraphOps.topoLevels(
           edgeDf((1L, 2L), (2L, 3L), (3L, 1L)).select(
             col("src").as("scc_src"), col("dst").as("scc_dst")),
-          maxIter = 10, localThreshold = th).collect()
+          maxIter = 10)).collect()
       }
       assert(ex.getMessage.contains("cycle"), s"threshold=$th: $ex")
     }
@@ -1347,20 +1346,20 @@ class GraphOpsSpec extends SparkSpec {
     val rnd = new scala.util.Random(42)
     val edges = Seq.fill(70)(
       (rnd.nextInt(14).toLong, rnd.nextInt(14).toLong))
-    def kcAt(lm: Long) = GraphOps.kCore(edgeDf(edges: _*), k = 3,
-        maxRounds = 50, localMax = lm)
+    def kcAt(lm: Long) = SmallInput.scoped(lm)(GraphOps.kCore(
+        edgeDf(edges: _*), k = 3, maxRounds = 50))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(kcAt(Long.MaxValue) === kcAt(0L))
-    def coAt(lm: Long) = GraphOps.coreness(edgeDf(edges: _*),
-        maxK = 16, maxRounds = 50, localMax = lm)
+    assert(kcAt(SmallInput.Cap) === kcAt(0L))
+    def coAt(lm: Long) = SmallInput.scoped(lm)(GraphOps.coreness(
+        edgeDf(edges: _*), maxK = 16, maxRounds = 50))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(coAt(Long.MaxValue) === coAt(0L))
+    assert(coAt(SmallInput.Cap) === coAt(0L))
     // the round budget raises identically on the local tail: a long
     // chain cascades one peel round per vertex
     val chain = (0L until 12L).map(i => (i, i + 1))
     intercept[IllegalStateException] {
-      GraphOps.kCore(edgeDf(chain: _*), k = 2, maxRounds = 2,
-        localMax = Long.MaxValue).collect()
+      SmallInput.scoped(SmallInput.Cap)(
+        GraphOps.kCore(edgeDf(chain: _*), k = 2, maxRounds = 2)).collect()
     }
   }
 
@@ -1388,17 +1387,16 @@ class GraphOpsSpec extends SparkSpec {
       val e = List.fill(80)((rng.nextInt(12).toLong, rng.nextInt(12).toLong))
       val seeds = Set(0L, 1L)
       for (rounds <- Seq(0, 1, 3, 12)) {
-        // localThreshold = 0 forces the distributed frontier-delta
+        // SmallInput.scoped(0) forces the distributed frontier-delta
         // loop; the gated local path must agree exactly
-        val got = GraphOps.ssspBudget(edgeDf(e: _*),
-            seeds.toSeq.toDF("v"), rounds, localThreshold = 0L)
+        val got = SmallInput.scoped(0L)(GraphOps.ssspBudget(edgeDf(e: _*),
+            seeds.toSeq.toDF("v"), rounds))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         withClue(s"edges=$e rounds=$rounds") {
           assert(got === brute(e, seeds, rounds))
         }
-        val loc = GraphOps.ssspBudget(edgeDf(e: _*),
-            seeds.toSeq.toDF("v"), rounds,
-            localThreshold = Long.MaxValue)
+        val loc = SmallInput.scoped(SmallInput.Cap)(GraphOps.ssspBudget(
+            edgeDf(e: _*), seeds.toSeq.toDF("v"), rounds))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         withClue(s"local edges=$e rounds=$rounds") {
           assert(loc === got)
@@ -1423,23 +1421,23 @@ class GraphOpsSpec extends SparkSpec {
       (3L, 5L), (2L, 3L), (6L, 6L)) +: List.fill(3)(
       List.fill(70)((rng.nextInt(16).toLong, rng.nextInt(16).toLong)))
     for (e <- cases; r <- Seq(1, 4)) {
-      // localThreshold = 0 forces the DISTRIBUTED loop; the gate may
+      // SmallInput.scoped(0) forces the DISTRIBUTED loop; the gate may
       // never change what either path computes
-      def lpa(th: Long) = GraphOps.labelPropagation(edgeDf(e: _*),
-          rounds = r, localThreshold = th).collect()
+      def lpa(th: Option[Long]) = atLimit(th)(GraphOps.labelPropagation(
+          edgeDf(e: _*), rounds = r)).collect()
         .map(x => (x.getLong(0), x.getLong(1))).toSet
-      val local = lpa(GraphOps.LouvainLocalEdges)
-      withClue(s"rounds=$r edges=$e") { assert(local === lpa(0L)) }
+      val local = lpa(None)
+      withClue(s"rounds=$r edges=$e") { assert(local === lpa(Some(0L))) }
       // modularity over those labels: twin == distributed, and both
       // conservation laws hold on the twin's output
       val labels = local.toSeq.toDF("vertex", "community")
-      def mod(th: Long) = GraphOps.modularity(edgeDf(e: _*), labels,
-          localThreshold = th).collect()
+      def mod(th: Option[Long]) = atLimit(th)(
+          GraphOps.modularity(edgeDf(e: _*), labels)).collect()
         .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3),
           x.getLong(4), x.getLong(5))).toSet
-      val mLocal = mod(GraphOps.LouvainLocalEdges)
+      val mLocal = mod(None)
       withClue(s"modularity rounds=$r edges=$e") {
-        assert(mLocal === mod(0L))
+        assert(mLocal === mod(Some(0L)))
         val m = mLocal.head._5
         assert(mLocal.toSeq.map(_._4).sum === 2L * m)
         assert(mLocal.toSeq.map(_._3).sum <= m)

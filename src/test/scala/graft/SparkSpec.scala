@@ -30,4 +30,11 @@ abstract class SparkSpec extends AnyFunSuite {
   }
 
   def singleLong(df: DataFrame): Long = df.collect()(0).getLong(0)
+
+  /** Run `body` with every small-input gate forced to `limit` (0: the
+    * distributed loops; `SmallInput.Cap`: every twin), or at the
+    * operators' own bounds when `limit` is `None`.
+    */
+  def atLimit[A](limit: Option[Long])(body: => A): A =
+    limit.fold(body)(SmallInput.scoped(_)(body))
 }
