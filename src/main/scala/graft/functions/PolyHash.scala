@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -81,4 +82,18 @@ object PolyHashFunctions {
   def poly_hash2(c: Column): Column =
     ColumnBridge.column(PolyHash(ColumnBridge.expression(c),
       PolyHashUtil.Mult2, PolyHashUtil.Mod2))
+
+  /** The repo's RNG-free sample: the `n` rows of `df` with the smallest
+    * `(poly_hash(id), id)`, in that order. Spark plans it as
+    * TakeOrdered (a per-partition top-n plus a driver merge, never a
+    * global sort), and the oracles state it as one `ORDER BY ... LIMIT`,
+    * so IVF centroids, PQ codebooks, Lloyd samples, beam entries,
+    * sampled BFS sources and the quality-model sample are reproduced
+    * exactly in SQL.
+    */
+  def hashPrefix(df: DataFrame, idCol: String, n: Int): DataFrame =
+    df.withColumn("__hash_prefix", poly_hash(col(idCol).cast("string")))
+      .orderBy(col("__hash_prefix"), col(idCol))
+      .limit(n)
+      .drop("__hash_prefix")
 }

@@ -1781,7 +1781,8 @@ object AnnGates {
     * m-step: integer truncating mean `q`, per-centroid norm
     * `sqrt(Σ q²)` (q² ≤ 10¹², 64-dim sums < 2⁵³ → the double sum is
     * exact in any order), then `⌊q/‖q‖·1e6⌋` per element — the same
-    * IEEE divide-multiply-floor chain `lloydPpmSpherical` executes.
+    * IEEE divide-multiply-floor chain `lloydPpm`'s `unitPpm` m-step
+    * executes.
     * The all-zero mean (norm 0) carries unrenormalized; empty cells
     * carry the previous state via the COALESCE, exactly the driver
     * loop's rule.
@@ -1930,7 +1931,7 @@ object AnnGates {
   }
 
   /** The SPHERICAL trained-IVF training prefix —
-    * `trainCentroidsSpherical` unrolled: the sample is
+    * `trainCentroids(spherical = true)` unrolled: the sample is
     * normalize-then-quantized (x/√n2 in double — n2 is the dotSql
     * left fold the cosine gates already hash-prove — then the ppm
     * floor; the zero vector quantizes to zeros), and the rounds

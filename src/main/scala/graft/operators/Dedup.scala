@@ -600,7 +600,6 @@ object Dedup {
         phiCur: java.math.BigDecimal, iterNo: Int, hvy: Long)
         : (DataFrame, Long, java.math.BigDecimal, Long) = {
       val tR0 = System.nanoTime()
-      def lap(t0: Long): Double = (System.nanoTime() - t0) / 1e9
       val reliableDue = checkpointDir.isDefined &&
         (iterNo + 1) % math.max(1, checkpointEvery) == 0
       // SMALL-STAR leads: it reads the state at canonical width (the
@@ -639,7 +638,6 @@ object Dedup {
       val (ss, _) = ckR(
         ssSelf.unionByName(ssHeavyOut).unionByName(ssLight).distinct(),
         reliable = false)
-      val tSS = lap(tR0)
       // LARGE-STAR: m(x) = min(Γ(x) ∪ {x}) needs the symmetrized
       // neighborhood, but the REWRITE joins only the canonical
       // (lo, hi) half — the emit fires exactly once per undirected
@@ -648,7 +646,6 @@ object Dedup {
       // no broadcast at all (its rows are keyed by its neighbors and
       // spread by construction); a hub as the smaller endpoint —
       // every contracted root — takes the broadcast path.
-      val tL0 = System.nanoTime()
       val sym = ss.select(col("a").as("x"), col("b").as("y"))
         .unionByName(ss.select(col("b").as("x"), col("a").as("y")))
       val lsAgg = sym.groupBy("x")
@@ -666,7 +663,6 @@ object Dedup {
         .select(col("v").as("a"), least(col("x"), col("mn")).as("b"))
       val (next, nAfter) = ckR(
         lsHeavyOut.unionByName(lsLight).distinct(), reliable = reliableDue)
-      val tLS = lap(tL0)
       val phiNext = phi(next, nAfter)
       val changed =
         if (nAfter != nCur) -1L
@@ -681,12 +677,8 @@ object Dedup {
       lsAgg.unpersist(blocking = false)
       drop(ss)
       drop(cur)
-      val secs = lap(tR0)
+      val secs = (System.nanoTime() - tR0) / 1e9
       roundLog += RoundStat(iterNo, nAfter, changed, secs)
-      println(f"[dupClusters] round=$iterNo edges=$nAfter " +
-        f"changed=$changed ${secs}%.1fs " +
-        f"(smallStar $tSS%.1fs, largeStar $tLS%.1fs, potential " +
-        f"${secs - tSS - tLS}%.1fs)")
       (next, nAfter, phiNext, changed)
     }
     // which checkpointed frame still needs releasing once `labels`
@@ -1185,12 +1177,9 @@ object Dedup {
     * Pure driver-side arithmetic (a 64-bit polynomial fold over the
     * canonical constant string), stable across JVMs and versions.
     */
-  val LshParamsFingerprint: Long = {
-    val canonical = Seq(ShingleN, MinhashP,
-      MinhashAB.map { case (a, b) => s"$a:$b" }.mkString(","),
-      LshBands, LshRows).mkString("|")
-    canonical.foldLeft(1125899906842597L)((h, c) => h * 31L + c.toLong)
-  }
+  val LshParamsFingerprint: Long = Stamps.paramsFingerprint(ShingleN,
+    MinhashP, MinhashAB.map { case (a, b) => s"$a:$b" }.mkString(","),
+    LshBands, LshRows)
 
   /** Per-doc MinHash signature columns mh0..mh15 (docs with ≥ 1 shingle
     * only). Computed entirely inside one projection: distinct shingle

@@ -1864,6 +1864,18 @@ object GraphOps {
     */
   val ClosenessMaxHops = 8
 
+  /** The `k` hash-chosen sample sources of the sampled-centrality
+    * family, ascending: the vertices with the smallest
+    * `(poly_hash(v), v)`. A ≤ k-row ordered collect, so the sample is
+    * frozen at build time (eager, like every hash-anchored fit).
+    */
+  private def sampledSources(e: DataFrame, k: Int): Array[Long] = {
+    val verts = e.select(col("src").as("v"))
+      .unionByName(e.select(col("dst").as("v"))).distinct()
+    graft.functions.PolyHashFunctions.hashPrefix(verts, "v", k)
+      .collect().map(_.getLong(0)).sorted
+  }
+
   /** SAMPLED CLOSENESS CENTRALITY (Eppstein & Wang, "Fast
     * approximation of centrality", SODA 2001): run an exact bounded
     * BFS from `k` deterministically HASH-CHOSEN sample sources — the
@@ -1897,17 +1909,7 @@ object GraphOps {
     require(k >= 1 && k <= 64,
       s"closenessSampled runs k sequential BFS loops — k must be in " +
         s"[1, 64], got $k")
-    val verts = e.select(col("src").as("v"))
-      .unionByName(e.select(col("dst").as("v"))).distinct()
-    // ≤ k-row ordered collect — the IVF-centroid driver-bound
-    // discipline; the sample is frozen at build time (EAGER like every
-    // hash-anchored fit)
-    val seedRows = verts
-      .withColumn("h", graft.functions.PolyHashFunctions.poly_hash(
-        col("v").cast("string")))
-      .orderBy(col("h"), col("v"))
-      .limit(k)
-      .select(col("v")).collect().map(_.getLong(0)).sorted
+    val seedRows = sampledSources(e, k)
     if (seedRows.isEmpty)
       return e.select(col("src").as("vertex"), lit(0L).as("n_reached"),
         lit(0L).as("sum_dist"), lit(0L).as("harmonic_ppm"))
@@ -1943,14 +1945,7 @@ object GraphOps {
   def eccentricitySampled(e: DataFrame, k: Int = ClosenessSeeds,
       maxHops: Int = ClosenessMaxHops): DataFrame = {
     require(k >= 1 && k <= 64, s"k must be in [1, 64], got $k")
-    val verts = e.select(col("src").as("v"))
-      .unionByName(e.select(col("dst").as("v"))).distinct()
-    val seedRows = verts
-      .withColumn("h", graft.functions.PolyHashFunctions.poly_hash(
-        col("v").cast("string")))
-      .orderBy(col("h"), col("v"))
-      .limit(k)
-      .select(col("v")).collect().map(_.getLong(0)).sorted
+    val seedRows = sampledSources(e, k)
     if (seedRows.isEmpty)
       return e.select(col("src").as("source"), lit(0L).as("ecc"),
         lit(0L).as("n_reached")).filter(lit(false))
@@ -2120,14 +2115,7 @@ object GraphOps {
       maxHops: Int): Seq[DataFrame] = {
     val s = e.sparkSession
     import s.implicits._
-    val verts = e.select(col("src").as("v"))
-      .unionByName(e.select(col("dst").as("v"))).distinct()
-    val seedRows = verts
-      .withColumn("h", graft.functions.PolyHashFunctions.poly_hash(
-        col("v").cast("string")))
-      .orderBy(col("h"), col("v"))
-      .limit(k)
-      .select(col("v")).collect().map(_.getLong(0)).sorted
+    val seedRows = sampledSources(e, k)
     if (seedRows.isEmpty) return Seq.empty
     val dist = labeledHopDistances(dedup, seedRows.toSeq, maxHops)
     var frames = List(ck(seedRows.toSeq.toDF("seed")
@@ -2367,14 +2355,7 @@ object GraphOps {
     require(k >= 1 && k <= 64, s"k must be in [1, 64], got $k")
     require(maxRounds >= 0 && maxRounds <= 64,
       s"maxRounds must be in [0, 64], got $maxRounds")
-    val verts = e.select(col("src").as("v"))
-      .unionByName(e.select(col("dst").as("v"))).distinct()
-    val seedRows = verts
-      .withColumn("h", graft.functions.PolyHashFunctions.poly_hash(
-        col("v").cast("string")))
-      .orderBy(col("h"), col("v"))
-      .limit(k)
-      .select(col("v")).collect().map(_.getLong(0)).sorted
+    val seedRows = sampledSources(e, k)
     val s = e.sparkSession
     import s.implicits._
     if (seedRows.isEmpty)

@@ -86,13 +86,10 @@ object QuantileSketch {
 
   /** Fingerprint of the grid constants, stamped on every state row;
     * `quantiles`/`merge` raise on mismatch — counters from a different
-    * grid would silently land in wrong buckets (same canonical-string
-    * fold as `Dedup.LshParamsFingerprint`).
+    * grid would silently land in wrong buckets (`Stamps.paramsFingerprint`).
     */
-  val QsParamsFingerprint: Long = {
-    val canonical = Seq("qsketch-v1", QsScale, QsSubBucketsLog2).mkString("|")
-    canonical.foldLeft(1125899906842597L)((h, c) => h * 31L + c.toLong)
-  }
+  val QsParamsFingerprint: Long =
+    Stamps.paramsFingerprint("qsketch-v1", QsScale, QsSubBucketsLog2)
 
   private def shrBy(c: Column, by: Column): Column =
     ColumnBridge.column(ShiftRight(

@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.functions.PolyHashFunctions.poly_hash
+import graft.functions.PolyHashFunctions.hashPrefix
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.operators.Stamps.stampGuard
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -109,15 +110,25 @@ object Similarity {
     */
   def knnBrute(emb: DataFrame, k: Int = DefaultK, nQueries: Long = DefaultQueries): DataFrame = {
     val corpus = withNorm(emb)
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("n2").as("q_n2"))
-    val scored = corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+    topK(cosineAll(corpus, queriesOf(corpus, nQueries)), k)
+  }
+
+  /** Every (query, corpus vector ≠ query) pair with its exact cosine:
+    * the query side (`queriesOf`) is broadcast, so the corpus streams
+    * through one map stage with no shuffle.
+    */
+  private def cosineAll(corpus: DataFrame, queries: DataFrame): DataFrame =
+    corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosineFrom(dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
           .as("cosine"))
-    topK(scored, k)
-  }
+
+  /** The raw query side `(query_id, q_emb)`: rows with vec_id <
+    * nQueries.
+    */
+  private def rawQueries(emb: DataFrame, nQueries: Long): DataFrame =
+    emb.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
 
   /** Memo of the exact brute-force rankings — the honesty-gate TRUTH
     * SIDES: a dozen recall gates each rescored the full corpus against
@@ -160,8 +171,7 @@ object Similarity {
     // 0 = full width
     def v(c: org.apache.spark.sql.Column) =
       if (dims > 0) slice(c, 1, dims) else c
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val queries = rawQueries(emb, nQueries)
     // codegen'd kernel — bit-equal to the former
     // floor(aggregate(zip_with((a−b)²), 0.0, +)·1e6) chain (see
     // VectorExprUtil.l2Fp)
@@ -169,9 +179,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         graft.functions.VectorExprFunctions
           .l2_fp(v(col("q_emb")), v(col("embedding"))).as("l2_fp"))
-    graft.plans.TopK.perKey(scored, Seq("query_id"),
-        Seq(col("l2_fp").asc, col("neighbor_id").asc), k)
-      .select("query_id", "rank", "neighbor_id", "l2_fp")
+    topKAsc(scored, "l2_fp", k)
   }
 
   /** Truncated width for the matryoshka-retrieval gates (the first 16
@@ -316,14 +324,7 @@ object Similarity {
       bandBits: Int = LshBandBits): DataFrame = {
     require(bandBits >= 1 && bandBits <= LshBandStride,
       s"bandBits must be in [1, $LshBandStride], got $bandBits")
-    val bv =
-      if (!storedKeys.columns.contains("band_bits")) col("band_val")
-      else when(col("band_bits") === lit(bandBits), col("band_val"))
-        .otherwise(raise_error(concat(
-          lit("stored vector band keys were exported at band_bits "),
-          col("band_bits").cast("string"),
-          lit(s" != this delta's $bandBits — the width is pinned at " +
-            "ingest; re-export vecBandKeysOf to change it"))))
+    val bv = pinnedBandVal(storedKeys, bandBits)
     val bk = graft.Caches.track(
       vecBandKeysOf(batch, bandBits)
         .select(col("vec_id"), col("band_idx"), col("band_val"))
@@ -609,20 +610,14 @@ object Similarity {
         s"caps it at Sq8MaxDims = $Sq8MaxDims (one row per dimension)")
     if (st.isEmpty) return None
     val byDim = st.sortBy(_.getLong(0))
-    byDim.map(_.getLong(0)).zipWithIndex.foreach { case (d, i) =>
-      require(d == i.toLong,
-        s"SQ8 stats dims must be exactly 0..n-1; found dim $d at " +
-          s"position $i")
-    }
+    requireDenseIds(byDim.map(_.getLong(0)).toSeq, "SQ8 stats dims")
     Some((byDim.map(_.getDouble(1)),
       byDim.map(r => r.getDouble(2) - r.getDouble(1))))
   }
 
   def knnSq8(stats: DataFrame, codes: DataFrame, queryEmb: DataFrame,
       k: Int = DefaultK, nQueries: Long = DefaultQueries): DataFrame = {
-    val empty = queryEmb.select(col("vec_id").as("query_id"),
-      lit(1L).as("rank"), col("vec_id").as("neighbor_id"),
-      lit(0L).as("l2_fp")).filter(lit(false))
+    val empty = emptyRanked(queryEmb, "l2_fp")
     val grid = loadSq8Grid(stats)
     if (grid.isEmpty) return empty
     // the single subtraction is precomputed; the per-element chain
@@ -637,8 +632,7 @@ object Similarity {
       if (codes.columns.contains("codes"))
         codes.select(col("vec_id"), col("codes").as("cds"))
       else sq8Pack(codes).select(col("vec_id"), col("codes").as("cds"))
-    val queries = queryEmb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val queries = rawQueries(queryEmb, nQueries)
     // codegen'd ADC kernel — bit-equal to the former
     // transform(recon) + zip_with + aggregate chain (see
     // VectorExprUtil.sq8L2Fp; same reconstruction order)
@@ -647,9 +641,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         graft.functions.VectorExprFunctions
           .sq8_l2_fp(col("q_emb"), col("cds"), mn, span).as("l2_fp"))
-    graft.plans.TopK.perKey(scored, Seq("query_id"),
-        Seq(col("l2_fp").asc, col("neighbor_id").asc), k)
-      .select("query_id", "rank", "neighbor_id", "l2_fp")
+    topKAsc(scored, "l2_fp", k)
   }
 
   /** IVF × SQ8 — the remaining cell of the FAISS index matrix
@@ -674,51 +666,31 @@ object Similarity {
   def knnIvfSq8(emb: DataFrame, k: Int = DefaultK,
       nQueries: Long = DefaultQueries, nProbe: Int = IvfNProbe,
       nCells: Int = 0, corpusSize: Long = -1L): DataFrame =
-    graft.plans.TopK.perKey(
-        ivfSq8Scored(emb, nQueries, nProbe, nCells, corpusSize),
-        Seq("query_id"), Seq(col("l2_fp").asc, col("neighbor_id").asc), k)
-      .select("query_id", "rank", "neighbor_id", "l2_fp")
+    topKAsc(ivfSq8Scored(emb, nQueries, nProbe, nCells, corpusSize),
+      "l2_fp", k)
 
   private[graft] def ivfSq8Scored(emb: DataFrame,
       nQueries: Long = DefaultQueries, nProbe: Int = IvfNProbe,
       nCells: Int = 0, corpusSize: Long = -1L): DataFrame = {
     val corpus = withNorm(emb)
-    val cells =
-      if (nCells > 0) nCells
-      else ivfCells(if (corpusSize >= 0L) corpusSize else emb.count())
-    // the ivfScored centroid selection verbatim: deterministic
-    // hash-anchored sample via TakeOrdered, collected once
-    val cents = corpus
-      .withColumn("ch", poly_hash(col("vec_id").cast("string")))
-      .orderBy(col("ch"), col("vec_id"))
-      .limit(cells)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-        col("n2").as("c_n2"))
-    val centRows = cents.collect().sortBy(_.getLong(0))
+    val cents = Centroids.hashAnchored(corpus,
+      cellsFor(emb, nCells, corpusSize))
     val empty = emb.select(col("vec_id").as("query_id"),
       col("vec_id").as("neighbor_id"), lit(0L).as("l2_fp"))
       .filter(lit(false))
-    if (centRows.isEmpty) return empty
+    if (cents.isEmpty) return empty
     val grid = loadSq8Grid(sq8Stats(emb))
     if (grid.isEmpty) return empty
     val (mn, span) = grid.get
-    val centIds = centRows.map(_.getLong(0))
-    val centEmb = centRows.map(
-      _.getSeq[Number](1).map(_.doubleValue()).toArray)
-    val centN2 = centRows.map(_.getDouble(2))
-    val centLocal = emb.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centRows: _*), cents.schema)
     // quantize + dequantize fused per element: code =
     // clamp(⌊(x − mn)·255/span⌋), recon = mn + code·span/255.0 —
     // token-for-token the quantizeInt8/knnSq8 chain, now as the
     // codegen'd sq8_rt_l2_fp kernel (bit-equal; see
     // VectorExprUtil.sq8RtL2Fp)
-    val assigned = corpus.select(
-      assignCellExpr(centIds, centEmb, centN2).as("cell"),
+    val assigned = corpus.select(assignCellExpr(cents).as("cell"),
       col("vec_id"), col("embedding").as("r_emb"))
-    val probes = probeRank(corpus, centLocal, nQueries, nProbe)
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val probes = probeRank(corpus, cents, nQueries, nProbe)
+    val queries = rawQueries(corpus, nQueries)
     assigned.join(broadcast(probes), "cell")
       .join(broadcast(queries), "query_id")
       .filter(col("vec_id") =!= col("query_id"))
@@ -828,9 +800,7 @@ object Similarity {
     */
   def knnHamming(stats: DataFrame, words: DataFrame, queryEmb: DataFrame,
       k: Int = DefaultK, nQueries: Long = DefaultQueries): DataFrame = {
-    val empty = queryEmb.select(col("vec_id").as("query_id"),
-      lit(1L).as("rank"), col("vec_id").as("neighbor_id"),
-      lit(0L).as("hamming")).filter(lit(false))
+    val empty = emptyRanked(queryEmb, "hamming")
     val mids = binaryMids(stats)
     if (mids.isEmpty) return empty
     val queries = queryEmb.filter(col("vec_id") < nQueries)
@@ -843,9 +813,7 @@ object Similarity {
         aggregate(zip_with(col("words"), col("q_words"),
           (a, b) => bit_count(a.bitwiseXOR(b)).cast("long")),
           lit(0L), (acc, v) => acc + v).as("hamming"))
-    graft.plans.TopK.perKey(scored, Seq("query_id"),
-        Seq(col("hamming").asc, col("neighbor_id").asc), k)
-      .select("query_id", "rank", "neighbor_id", "hamming")
+    topKAsc(scored, "hamming", k)
   }
 
   /** Hamming-shortlist → exact-L2 rerank: the standard two-stage
@@ -864,8 +832,7 @@ object Similarity {
       nQueries: Long = DefaultQueries): DataFrame = {
     val shortlist = knnHamming(stats, words, queryEmb, cand, nQueries)
       .select(col("query_id"), col("neighbor_id"))
-    val queries = queryEmb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val queries = rawQueries(queryEmb, nQueries)
     val rescored = emb
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
       .join(broadcast(shortlist), Seq("neighbor_id"))
@@ -873,9 +840,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         graft.functions.VectorExprFunctions
           .l2_fp(col("q_emb"), col("n_emb")).as("l2_fp"))
-    graft.plans.TopK.perKey(rescored, Seq("query_id"),
-        Seq(col("l2_fp").asc, col("neighbor_id").asc), k)
-      .select("query_id", "rank", "neighbor_id", "l2_fp")
+    topKAsc(rescored, "l2_fp", k)
   }
 
   // ---- graph-served ANN: beam search over the stored kNN graph ----
@@ -938,18 +903,13 @@ object Similarity {
   def knnBeam(graph: DataFrame, emb: DataFrame, queryEmb: DataFrame,
       k: Int = DefaultK, beam: Int = BeamWidth, rounds: Int = BeamRounds,
       nQueries: Long = DefaultQueries): DataFrame = {
-    val empty = queryEmb.select(col("vec_id").as("query_id"),
-      lit(1L).as("rank"), col("vec_id").as("neighbor_id"),
-      lit(0L).as("l2_fp")).filter(lit(false))
+    val empty = emptyRanked(queryEmb, "l2_fp")
     // hash-anchored entries: TakeOrdered, ≤ BeamEntries rows collected
-    val entryRows = emb
-      .withColumn("ch", poly_hash(col("vec_id").cast("string")))
-      .orderBy(col("ch"), col("vec_id")).limit(BeamEntries)
+    val entryRows = hashPrefix(emb, "vec_id", BeamEntries)
       .select("vec_id").collect()
     if (entryRows.isEmpty) return empty
     val entries = entryRows.map(_.getLong(0))
-    val queries = queryEmb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val queries = rawQueries(queryEmb, nQueries)
     val adj = graph.select(col("src"), col("dst"))
     def score(cands: DataFrame): DataFrame =
       emb.select(col("vec_id"), col("embedding").as("n_emb"))
@@ -978,12 +938,9 @@ object Similarity {
           .select("query_id", "vec_id", "l2_fp")
           .persist(StorageLevel.MEMORY_AND_DISK))
     }
-    graft.plans.TopK.perKey(
-        scoredBeam.filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            col("l2_fp")),
-        Seq("query_id"), Seq(col("l2_fp").asc, col("neighbor_id").asc), k)
-      .select("query_id", "rank", "neighbor_id", "l2_fp")
+    topKAsc(scoredBeam.filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"),
+          col("l2_fp")), "l2_fp", k)
   }
 
   /** The memoized beam ranking — the `bm25Shared` economics for the
@@ -1207,12 +1164,15 @@ object Similarity {
     */
   private[graft] def pqCodebookOf(emb: DataFrame,
       codebook: Int): Array[Array[Double]] =
-    emb.withColumn("ch", poly_hash(col("vec_id").cast("string")))
-      .orderBy(col("ch"), col("vec_id"))
-      .limit(codebook)
-      .select(col("vec_id"), col("embedding"))
-      .collect() // ordered collect: row j IS codeword j
-      .map(_.getSeq[Number](1).map(_.doubleValue()).toArray)
+    sampleEmbeddings(emb, codebook).map(_.map(_.doubleValue()).toArray)
+
+  /** The first `n` embeddings of the hash-prefix sample, in sample
+    * order (row j IS codeword j, or initial centroid j): ≤ `n` rows
+    * collected. Every fit in the IVF/PQ family draws from it.
+    */
+  private def sampleEmbeddings(emb: DataFrame, n: Int): Array[Seq[Number]] =
+    hashPrefix(emb, "vec_id", n).select(col("embedding")).collect()
+      .map(_.getSeq[Number](0))
 
   /** Slice full-width codeword vectors into the per-block codebook
     * layout `pqBlockDists` consumes: blocks × codebook × (dim/blocks).
@@ -1278,13 +1238,16 @@ object Similarity {
   def knnPq(emb: DataFrame, k: Int = DefaultK, nQueries: Long = DefaultQueries,
       blocks: Int = PqBlocks, codebook: Int = PqCodebookSize): DataFrame = {
     val cw = pqCodebookOf(emb, codebook)
-    if (cw.isEmpty) return knnPqEmpty(emb)
+    if (cw.isEmpty) return emptyRanked(emb, "adc_fp")
     knnPqFrom(emb, pqSliceBlocks(cw, blocks), k, nQueries)
   }
 
-  private def knnPqEmpty(emb: DataFrame): DataFrame =
+  /** The empty `(query_id, rank, neighbor_id, score)` result of a
+    * distance-ranked serve with nothing to serve from.
+    */
+  private def emptyRanked(emb: DataFrame, score: String): DataFrame =
     emb.select(col("vec_id").as("query_id"), lit(1L).as("rank"),
-      col("vec_id").as("neighbor_id"), lit(0L).as("adc_fp"))
+      col("vec_id").as("neighbor_id"), lit(0L).as(score))
       .filter(lit(false))
 
   /** ADC serving from explicit per-block codebooks — the single
@@ -1294,9 +1257,8 @@ object Similarity {
     */
   private def knnPqFrom(emb: DataFrame, cbs: Seq[Array[Array[Double]]],
       k: Int, nQueries: Long): DataFrame = {
-    val qRows = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).collect()
-    if (qRows.isEmpty) return knnPqEmpty(emb)
+    val qRows = adcQueries(emb, nQueries)
+    if (qRows.isEmpty) return emptyRanked(emb, "adc_fp")
     // MATERIALIZE the codes relation before the ADC projection — this
     // is the PQ index a real deployment stores (IVFPQ posting lists
     // hold exactly these codes; `pqCodesFromStored` is the persist
@@ -1330,6 +1292,39 @@ object Similarity {
     */
   val PqMaxStaticQueries = 65536
 
+  /** The ADC query batch: the `(vec_id, embedding)` rows with
+    * `vec_id < nQueries`, collected and capped at `PqMaxStaticQueries`.
+    */
+  private def adcQueries(queryEmb: DataFrame, nQueries: Long): Array[Row] = {
+    val rows = queryEmb.filter(col("vec_id") < nQueries)
+      .select(col("vec_id"), col("embedding")).collect()
+    require(rows.length <= PqMaxStaticQueries,
+      s"ADC serve collected ${rows.length} query rows — the cap is " +
+        s"PqMaxStaticQueries = $PqMaxStaticQueries (per-query literal " +
+        "LUTs must stay driver-small; use knnBrute/knnIvf for bulk " +
+        "query relations)")
+    rows
+  }
+
+  /** One query row's ADC lookup table, blocks × codebook longs
+    * flattened block-major: cell (b, j) = ⌊‖q_b − c_bj‖² · 1e6⌋. The
+    * same ascending-index += fold as the assignment expression and the
+    * oracle's list_reduce, so the doubles are bit-identical before the
+    * per-cell floor.
+    */
+  private def adcLut(r: Row, cbs: Seq[Array[Array[Double]]]): Array[Long] = {
+    val q = r.getSeq[Number](1).map(_.doubleValue()).toArray
+    val bw = cbs.head.head.length
+    cbs.zipWithIndex.toArray.flatMap { case (cb, b) =>
+      cb.map { c =>
+        var acc = 0.0
+        var i = 0
+        while (i < bw) { val t = q(b * bw + i) - c(i); acc += t * t; i += 1 }
+        math.floor(acc * 1000000.0).toLong
+      }
+    }
+  }
+
   /** The shared ADC tail every PQ serve ends in: per-query LUTs from
     * the raw query rows against the codebooks, summed over each
     * candidate's stored 1-based codes. `codes` is `(vec_id,
@@ -1338,40 +1333,23 @@ object Similarity {
     * (`knnPqFromCodes`); the arithmetic is identical, so the two
     * serve modes are bit-identical by construction.
     */
-  private def adcServe(codes: DataFrame,
-      qRows: Array[org.apache.spark.sql.Row],
+  private def adcServe(codes: DataFrame, qRows: Array[Row],
       cbs: Seq[Array[Array[Double]]], k: Int): DataFrame = {
-    require(qRows.length <= PqMaxStaticQueries,
-      s"ADC serve collected ${qRows.length} query rows — the cap is " +
-        s"PqMaxStaticQueries = $PqMaxStaticQueries (per-query literal " +
-        "LUTs must stay driver-small; use knnBrute/knnIvf for bulk " +
-        "query relations)")
-    val blocks = cbs.length
-    val bw = cbs.head.head.length
+    val codebook = cbs.head.length
     val scored = qRows.sortBy(_.getLong(0)).toSeq.map { r =>
-      val qid = r.getLong(0)
-      val q = r.getSeq[Number](1).map(_.doubleValue()).toArray
-      val adc = (0 until blocks).map { b =>
-        val lut: Array[Long] = cbs(b).map { c =>
-          // same ascending-index += fold as the assignment expression
-          // and the oracle's list_reduce — bit-identical doubles
-          var acc = 0.0
-          var i = 0
-          while (i < bw) { val t = q(b * bw + i) - c(i); acc += t * t; i += 1 }
-          math.floor(acc * 1000000.0).toLong
-        }
-        element_at(lit(lut), element_at(col("codes"), b + 1))
+      val lut = adcLut(r, cbs)
+      val adc = cbs.indices.map { b =>
+        element_at(lit(lut.slice(b * codebook, (b + 1) * codebook)),
+          element_at(col("codes"), b + 1))
       }.foldLeft(lit(0L))(_ + _)
-      struct(lit(qid).as("query_id"), adc.as("adc_fp"))
+      struct(lit(r.getLong(0)).as("query_id"), adc.as("adc_fp"))
     }
     val cand = codes.select(col("vec_id").as("neighbor_id"),
         explode(array(scored: _*)).as("s"))
       .filter(col("s.query_id") =!= col("neighbor_id"))
       .select(col("s.query_id").as("query_id"), col("neighbor_id"),
         col("s.adc_fp").as("adc_fp"))
-    graft.plans.TopK.perKey(cand, Seq("query_id"),
-        Seq(col("adc_fp").asc, col("neighbor_id").asc), k)
-      .select("query_id", "rank", "neighbor_id", "adc_fp")
+    topKAsc(cand, "adc_fp", k)
   }
 
   /** IVFPQ: cell-pruned ADC — the production billion-scale ANN layout
@@ -1400,81 +1378,43 @@ object Similarity {
       nCells: Int = 0, corpusSize: Long = -1L, blocks: Int = PqBlocks,
       codebook: Int = PqCodebookSize): DataFrame = {
     val corpus = withNorm(emb)
-    val cells =
-      if (nCells > 0) nCells
-      else ivfCells(if (corpusSize >= 0L) corpusSize else emb.count())
-    val cents = corpus
-      .withColumn("ch", poly_hash(col("vec_id").cast("string")))
-      .orderBy(col("ch"), col("vec_id"))
-      .limit(cells)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-        col("n2").as("c_n2"))
-    val centRows = cents.collect().sortBy(_.getLong(0))
+    val cents = Centroids.hashAnchored(corpus,
+      cellsFor(emb, nCells, corpusSize))
     val cw = pqCodebookOf(emb, codebook)
-    val qRows = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).collect()
-    if (centRows.isEmpty || cw.isEmpty || qRows.isEmpty) return knnPqEmpty(emb)
-    val centIds = centRows.map(_.getLong(0))
-    val centEmb = centRows.map(_.getSeq[Number](1).map(_.doubleValue()).toArray)
-    val centN2 = centRows.map(_.getDouble(2))
-    val centLocal = emb.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centRows: _*), cents.schema)
+    val qRows = adcQueries(emb, nQueries)
+    if (cents.isEmpty || cw.isEmpty || qRows.isEmpty) return emptyRanked(emb, "adc_fp")
     val cbs = pqSliceBlocks(cw, blocks)
-    val bw = cbs.head.head.length
-    // 1-based code positions, stored directly as element_at indices
-    val codeCols = pqBlockDists(col("embedding"), cbs)
-      .map(d => array_position(d, array_min(d)).cast("int"))
     // the IVFPQ index: one map pass assigns the cell AND the codes;
     // persisted behind the same barrier knnPqFrom needs (projection
     // collapse would re-inline the interpreted assignment per lookup)
     val index = graft.Caches.track(corpus.select(
-        assignCellExpr(centIds, centEmb, centN2).as("cell"),
-        col("vec_id"), array(codeCols: _*).as("codes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val probes = probeRank(corpus, centLocal, nQueries, nProbe)
-    // same literal-LUT contract as adcServe: the query batch must stay
-    // driver-small, loudly
-    require(qRows.length <= PqMaxStaticQueries,
-      s"knnIvfPq collected ${qRows.length} query rows — the cap is " +
-        s"PqMaxStaticQueries = $PqMaxStaticQueries (per-query literal " +
-        "LUTs must stay driver-small)")
-    val lutMap = pqLutMap(qRows, cbs)
-    val lutLit = typedlit(lutMap)
-    val adc = (0 until blocks).map { b =>
+        assignCellExpr(cents).as("cell"),
+        col("vec_id"), pqCodeArray(cbs).as("codes"))
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    topKAsc(ivfAdcCandidates(index,
+      probeRank(corpus, cents, nQueries, nProbe), qRows, cbs), "adc_fp", k)
+  }
+
+  /** Cell-pruned ADC candidates `(query_id, neighbor_id, adc_fp)`, the
+    * shared tail of `knnIvfPq` and `ivfPqScoredFromStored`: the
+    * `(cell, vec_id, codes)` index meets each query's probed cells,
+    * and a candidate sums `blocks` lookups in its query's flattened
+    * LUT row, `lut(query_id)(b·codebook + code_b)`.
+    */
+  private def ivfAdcCandidates(index: DataFrame, probes: DataFrame,
+      qRows: Array[Row], cbs: Seq[Array[Array[Double]]]): DataFrame = {
+    val codebook = cbs.head.length
+    val luts: Map[Long, Seq[Long]] =
+      qRows.map(r => r.getLong(0) -> adcLut(r, cbs).toSeq).toMap
+    val lutLit = typedlit(luts)
+    val adc = cbs.indices.map { b =>
       element_at(element_at(lutLit, col("query_id")),
         lit(b * codebook) + element_at(col("codes"), b + 1))
     }.foldLeft(lit(0L))(_ + _)
-    val cand = index.join(broadcast(probes), "cell")
+    index.join(broadcast(probes), "cell")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         adc.as("adc_fp"))
-    graft.plans.TopK.perKey(cand, Seq("query_id"),
-        Seq(col("adc_fp").asc, col("neighbor_id").asc), k)
-      .select("query_id", "rank", "neighbor_id", "adc_fp")
-  }
-
-  /** Per-query LUTs flattened to blocks×codebook longs, keyed by
-    * query id — the shape `element_at(element_at(lut, query_id),
-    * b·codebook + code)` consumes. Same ascending += fold as
-    * everywhere in the PQ family (bit-identical doubles before the
-    * per-cell floor).
-    */
-  private def pqLutMap(qRows: Array[org.apache.spark.sql.Row],
-      cbs: Seq[Array[Array[Double]]]): Map[Long, Seq[Long]] = {
-    val blocks = cbs.length
-    val bw = cbs.head.head.length
-    qRows.map { r =>
-      val qid = r.getLong(0)
-      val q = r.getSeq[Number](1).map(_.doubleValue()).toArray
-      qid -> (0 until blocks).flatMap { b =>
-        cbs(b).map { c =>
-          var acc = 0.0
-          var i = 0
-          while (i < bw) { val t = q(b * bw + i) - c(i); acc += t * t; i += 1 }
-          math.floor(acc * 1000000.0).toLong
-        }
-      }.toSeq
-    }.toMap
   }
 
   /** Lloyd iterations for the trained PQ codebooks. */
@@ -1497,22 +1437,15 @@ object Similarity {
       codebook: Int = PqCodebookSize, iters: Int = PqLloydIters,
       sampleCap: Int = IvfTrainSampleCap): Seq[Array[Array[Double]]] = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val cap = math.max(codebook, sampleCap)
-    val sampleRows = emb
-      .withColumn("ch", poly_hash(col("vec_id").cast("string")))
-      .orderBy(col("ch"), col("vec_id"))
-      .limit(cap)
-      .select(col("embedding"))
-      .collect()
-    if (sampleRows.isEmpty) return Seq.empty
-    val pts = sampleRows.map(_.getSeq[Number](0).map(_.doubleValue()).toArray)
+    val pts = pqCodebookOf(emb, math.max(codebook, sampleCap))
+    if (pts.isEmpty) return Seq.empty
     pqSliceBlocks(pts, blocks).map { sub =>
       val init = sub.take(math.min(codebook, sub.length))
       if (iters == 0) init.map(_.clone())
       else {
         val q = sub.map(_.map(x =>
           math.floor(x * CentroidQuantPpm.toDouble).toLong))
-        lloydPpm(q, q.take(init.length).map(_.clone()), iters)
+        lloydPpm(q, q.take(init.length).map(_.clone()), iters, identity)
           .map(_.map(_.toDouble / CentroidQuantPpm.toDouble))
       }
     }
@@ -1530,7 +1463,7 @@ object Similarity {
       nQueries: Long = DefaultQueries, blocks: Int = PqBlocks,
       codebook: Int = PqCodebookSize): DataFrame = {
     val cbs = pqTrainCodebooks(emb, blocks, codebook)
-    if (cbs.isEmpty) return knnPqEmpty(emb)
+    if (cbs.isEmpty) return emptyRanked(emb, "adc_fp")
     knnPqFrom(emb, cbs, k, nQueries)
   }
 
@@ -1540,13 +1473,10 @@ object Similarity {
     * grain would produce LUTs whose floors disagree). Lloyd's
     * training knobs are deliberately ABSENT — they shape the codeword
     * DATA, not the serving arithmetic (the `IvfParamsFingerprint`
-    * adjudication). Same canonical-string fold as the IVF/LSH
-    * fingerprints.
+    * adjudication).
     */
-  val PqParamsFingerprint: Long = {
-    val canonical = Seq("pq-codebooks-v1", 1000000L).mkString("|")
-    canonical.foldLeft(1125899906842597L)((h, c) => h * 31L + c.toLong)
-  }
+  val PqParamsFingerprint: Long =
+    Stamps.paramsFingerprint("pq-codebooks-v1", 1000000L)
 
   /** Cap on the rows a stored codebook relation may carry — blocks ×
     * codebook codewords; PQ codebooks are small by design (their whole
@@ -1597,7 +1527,7 @@ object Similarity {
   def knnPqFromStored(codebooks: DataFrame, emb: DataFrame,
       k: Int = DefaultK, nQueries: Long = DefaultQueries): DataFrame = {
     val cbs = loadStoredCodebooks(codebooks)
-    if (cbs.isEmpty) return knnPqEmpty(emb)
+    if (cbs.isEmpty) return emptyRanked(emb, "adc_fp")
     knnPqFrom(emb, cbs, k, nQueries)
   }
 
@@ -1609,36 +1539,17 @@ object Similarity {
     */
   private def loadStoredCodebooks(
       codebooks: DataFrame): Seq[Array[Array[Double]]] = {
-    val hasFp = codebooks.columns.contains("pq_params_fp")
-    val cols = Seq(col("block"), col("code"), col("codeword")) ++
-      (if (hasFp) Seq(col("pq_params_fp")) else Nil)
-    val rows = codebooks.select(cols: _*).collect()
-    require(rows.length <= PqMaxStoredCodewords,
-      s"stored codebook relation has ${rows.length} rows — the contract " +
-        s"caps it at PqMaxStoredCodewords = $PqMaxStoredCodewords (is " +
-        "this really a codebooksOf export?)")
-    if (hasFp) rows.foreach { r =>
-      val fp = r.getLong(3)
-      require(fp == PqParamsFingerprint,
-        s"stored codebooks were exported under pq_params_fp $fp != this " +
-          s"build's $PqParamsFingerprint — the serving constants " +
-          "changed; re-export codebooksOf with this build")
-    }
+    val rows = collectStored(codebooks, Seq("block", "code", "codeword"),
+      "pq_params_fp", PqParamsFingerprint, PqMaxStoredCodewords,
+      "PqMaxStoredCodewords", "codebooksOf")
     if (rows.isEmpty) return Seq.empty
     val byBlock = rows.groupBy(_.getLong(0))
     val blockIds = byBlock.keys.toSeq.sorted
-    blockIds.zipWithIndex.foreach { case (id, i) =>
-      require(id == i.toLong,
-        s"stored codebook block ids must be exactly 0..n-1 " +
-          s"(codebooksOf's layout); found block $id at position $i")
-    }
+    requireDenseIds(blockIds, "stored codebook block ids")
     val cbs = blockIds.map { b =>
       val inBlock = byBlock(b).sortBy(_.getLong(1))
-      inBlock.map(_.getLong(1)).zipWithIndex.foreach { case (c, i) =>
-        require(c == i.toLong,
-          s"stored codeword ids in block $b must be exactly 0..n-1; " +
-            s"found code $c at position $i")
-      }
+      requireDenseIds(inBlock.map(_.getLong(1)).toSeq,
+        s"stored codeword ids in block $b")
       inBlock.map(_.getSeq[Number](2).map(_.doubleValue()).toArray)
     }
     require(cbs.map(_.length).distinct.size == 1,
@@ -1649,6 +1560,39 @@ object Similarity {
         "have come from codebooksOf")
     cbs
   }
+
+  /** Collect a stored fit relation's `cols` (plus its params stamp
+    * `fpCol` when present), bounded and loud: more than `cap` rows is a
+    * wrong-table error, and a row stamped under other build constants
+    * than `expected` raises. A relation without the stamp column skips
+    * the check.
+    */
+  private def collectStored(rel: DataFrame, cols: Seq[String], fpCol: String,
+      expected: Long, cap: Int, capName: String, exporter: String): Array[Row] = {
+    val hasFp = rel.columns.contains(fpCol)
+    val rows = rel.select((cols ++ Seq(fpCol).filter(_ => hasFp)).map(col): _*)
+      .collect()
+    require(rows.length <= cap,
+      s"stored relation has ${rows.length} rows — the contract caps it at " +
+        s"$capName = $cap (is this really a $exporter export?)")
+    if (hasFp) rows.foreach { r =>
+      val fp = r.getLong(cols.length)
+      require(fp == expected,
+        s"stored relation was exported under $fpCol $fp != this build's " +
+          s"$expected — the serving constants changed; re-export " +
+          s"$exporter with this build")
+    }
+    rows
+  }
+
+  /** Stored ids, ascending, must be exactly 0..n-1 (the export layout):
+    * a hole is refused, never silently re-indexed.
+    */
+  private def requireDenseIds(ids: Seq[Long], what: String): Unit =
+    ids.zipWithIndex.foreach { case (id, i) =>
+      require(id == i.toLong,
+        s"$what must be exactly 0..n-1; found $id at position $i")
+    }
 
   /** Content hash of a loaded codebook set — FNV-1a over the exact
     * double BITS (plus shape), the PQ twin of `centroidContentFp`:
@@ -1730,21 +1674,14 @@ object Similarity {
       "codedCorpus must carry the persisted `codes` column from " +
         "pqCodesFromStored — for a raw corpus use knnPqFromStored")
     val cbs = loadStoredCodebooks(codebooks)
-    if (cbs.isEmpty) return knnPqEmpty(queryEmb)
-    val qRows = queryEmb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).collect()
-    if (qRows.isEmpty) return knnPqEmpty(queryEmb)
-    val guardedCodes: Column =
-      if (codedCorpus.columns.contains("pq_cbs_fp")) {
-        val expected = lit(pqCodebookContentFp(cbs))
-        when(col("pq_cbs_fp") === expected, col("codes"))
-          .otherwise(raise_error(format_string(
-            "graft: codedCorpus row stamped pq_cbs_fp=%s but the loaded " +
-              "codebooks hash to %s — stale PQ codes (re-trained " +
-              "codebooks?); re-run pqCodesFromStored",
-            col("pq_cbs_fp"), expected))).as("codes")
-      } else col("codes")
-    adcServe(codedCorpus.select(col("vec_id"), guardedCodes.as("codes")),
+    if (cbs.isEmpty) return emptyRanked(queryEmb, "adc_fp")
+    val qRows = adcQueries(queryEmb, nQueries)
+    if (qRows.isEmpty) return emptyRanked(queryEmb, "adc_fp")
+    val codes =
+      if (!codedCorpus.columns.contains("pq_cbs_fp")) col("codes")
+      else stampGuard(col("codes"), "pq_cbs_fp", pqCodebookContentFp(cbs),
+        StalePqCodes)
+    adcServe(codedCorpus.select(col("vec_id"), codes.as("codes")),
       qRows, cbs, k)
   }
 
@@ -1774,11 +1711,8 @@ object Similarity {
   def knnIvfPqFromStored(centroids: DataFrame, codebooks: DataFrame,
       indexedCorpus: DataFrame, queryEmb: DataFrame, k: Int = DefaultK,
       nQueries: Long = DefaultQueries, nProbe: Int = IvfNProbe): DataFrame =
-    graft.plans.TopK.perKey(
-        ivfPqScoredFromStored(centroids, codebooks, indexedCorpus,
-          queryEmb, nQueries, nProbe),
-        Seq("query_id"), Seq(col("adc_fp").asc, col("neighbor_id").asc), k)
-      .select("query_id", "rank", "neighbor_id", "adc_fp")
+    topKAsc(ivfPqScoredFromStored(centroids, codebooks, indexedCorpus,
+      queryEmb, nQueries, nProbe), "adc_fp", k)
 
   /** The pre-top-k candidate relation of `knnIvfPqFromStored` —
     * exposed for the pruning-contract spec (candidates ≈
@@ -1791,59 +1725,32 @@ object Similarity {
       indexedCorpus.columns.contains("codes"),
       "indexedCorpus must carry the persisted `cell` and `codes` " +
         "columns (ivfAssignFromStored ⋈ pqCodesFromStored)")
-    val centEmbF = loadStoredCentroids(centroids)
+    val (cents, centsFp) = loadStoredCentroids(centroids)
     val cbs = loadStoredCodebooks(codebooks)
-    if (centEmbF.isEmpty || cbs.isEmpty) return knnPqEmpty(queryEmb)
-    val qRows = queryEmb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).collect()
-    if (qRows.isEmpty) return knnPqEmpty(queryEmb)
-    require(qRows.length <= PqMaxStaticQueries,
-      s"knnIvfPqFromStored collected ${qRows.length} query rows — the " +
-        s"cap is PqMaxStaticQueries = $PqMaxStaticQueries")
-    val blocks = cbs.length
-    val codebook = cbs.head.length
-    var codesCol: Column = col("codes")
-    if (indexedCorpus.columns.contains("ivf_cents_fp")) {
-      val expected = lit(centroidContentFp(centEmbF))
-      codesCol = when(col("ivf_cents_fp") === expected, codesCol)
-        .otherwise(raise_error(format_string(
-          "graft: indexedCorpus row stamped ivf_cents_fp=%s but the " +
-            "loaded centroids hash to %s — stale cell stamp " +
-            "(re-trained IVF?); re-run ivfAssignFromStored",
-          col("ivf_cents_fp"), expected)))
-    }
-    if (indexedCorpus.columns.contains("pq_cbs_fp")) {
-      val expected = lit(pqCodebookContentFp(cbs))
-      codesCol = when(col("pq_cbs_fp") === expected, codesCol)
-        .otherwise(raise_error(format_string(
-          "graft: indexedCorpus row stamped pq_cbs_fp=%s but the " +
-            "loaded codebooks hash to %s — stale PQ codes (re-trained " +
-            "codebooks?); re-run pqCodesFromStored",
-          col("pq_cbs_fp"), expected)))
-    }
-    val index = indexedCorpus.select(col("vec_id"), col("cell"),
-      codesCol.as("codes"))
-    val centN2 = centEmbF.map { v =>
-      var acc = 0.0; var i = 0
-      while (i < v.length) { acc += v(i).toDouble * v(i).toDouble; i += 1 }
-      acc
-    }
-    val s = queryEmb.sparkSession
-    import s.implicits._
-    val centLocal = centEmbF.indices.map(i =>
-        (i.toLong, centEmbF(i), centN2(i)))
-      .toDF("cent_id", "c_emb", "c_n2")
-    val probes = probeRank(withNorm(queryEmb), centLocal, nQueries, nProbe)
-    val lutLit = typedlit(pqLutMap(qRows, cbs))
-    val adc = (0 until blocks).map { b =>
-      element_at(element_at(lutLit, col("query_id")),
-        lit(b * codebook) + element_at(col("codes"), b + 1))
-    }.foldLeft(lit(0L))(_ + _)
-    index.join(broadcast(probes), "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adc.as("adc_fp"))
+    if (cents.isEmpty || cbs.isEmpty) return emptyRanked(queryEmb, "adc_fp")
+    val qRows = adcQueries(queryEmb, nQueries)
+    if (qRows.isEmpty) return emptyRanked(queryEmb, "adc_fp")
+    val stamps = indexedCorpus.columns
+    val cellChecked =
+      if (!stamps.contains("ivf_cents_fp")) col("codes")
+      else stampGuard(col("codes"), "ivf_cents_fp", centsFp, StaleCells)
+    val codes =
+      if (!stamps.contains("pq_cbs_fp")) cellChecked
+      else stampGuard(cellChecked, "pq_cbs_fp", pqCodebookContentFp(cbs),
+        StalePqCodes)
+    ivfAdcCandidates(
+      indexedCorpus.select(col("vec_id"), col("cell"), codes.as("codes")),
+      probeRank(withNorm(queryEmb), cents, nQueries, nProbe), qRows, cbs)
   }
+
+  /** Hints of the two content-stamp guards (`stampGuard`): a stored
+    * corpus whose cells or codes were minted under other centroids or
+    * codebooks than the ones now loaded.
+    */
+  private val StaleCells = "stale cell stamp: the corpus was assigned " +
+    "under other centroids (re-trained index?); re-run ivfAssignFromStored"
+  private val StalePqCodes = "stale PQ codes: the corpus was encoded " +
+    "under other codebooks (re-trained codebooks?); re-run pqCodesFromStored"
 
   /** Quantization grain for `labelCentroids` element sums (ppm). */
   val CentroidQuantPpm = 1000000L
@@ -1944,10 +1851,7 @@ object Similarity {
   def lloydStep(emb: DataFrame, k: Int = LloydK): DataFrame = {
     require(k >= 1 && k <= IvfMaxCells,
       s"lloydStep needs k in [1, $IvfMaxCells], got $k")
-    val init = emb
-      .withColumn("ch", poly_hash(col("vec_id").cast("string")))
-      .orderBy(col("ch"), col("vec_id"))
-      .limit(k)
+    val init = hashPrefix(emb, "vec_id", k)
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"))
       .collect().sortBy(_.getLong(0))
     if (init.isEmpty)
@@ -1955,12 +1859,6 @@ object Similarity {
         col("vec_id").as("dim"), col("vec_id").as("n_vecs"),
         col("vec_id").as("sum_ppm"), col("vec_id").as("mean_ppm"))
         .filter(lit(false))
-    def d2(cEmb: Array[Double]) = aggregate(
-      zip_with(col("embedding"), lit(cEmb), (a, b) => {
-        val t = a.cast("double") - b
-        t * t
-      }),
-      lit(0.0), (acc, v) => acc + v)
     // struct-min = (d2 asc, cent_id asc) argmin, built by ONE
     // transform over the centroid-MATRIX literal rather than k
     // inlined struct branches: the branch form blew past Janino's
@@ -2233,9 +2131,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         aggregate(zip_with(col("q_p"), col("p"), (a, b) => (a - b) * (a - b)),
           lit(0L), (acc, v) => acc + v).as("pd2"))
-    graft.plans.TopK.perKey(scored, Seq("query_id"),
-        Seq(col("pd2").asc, col("neighbor_id").asc), k)
-      .select("query_id", "rank", "neighbor_id", "pd2")
+    topKAsc(scored, "pd2", k)
   }
 
   /** Embedding near-dup pairs: cosine ≥ threshold, candidates from the
@@ -2342,6 +2238,17 @@ object Similarity {
       .withColumn("band_bits", lit(bandBits))
   }
 
+  /** The `band_val` of stored `vecBandKeysOf` rows, checked per row
+    * against the width this reader pins: keys exported at another
+    * `band_bits` raise instead of joining bands that mean different
+    * things. Keys without the stamp column are read unchecked.
+    */
+  private def pinnedBandVal(keys: DataFrame, bandBits: Int): Column =
+    if (!keys.columns.contains("band_bits")) col("band_val")
+    else stampGuard(col("band_val"), "band_bits", bandBits.toLong,
+      "stored vector band keys were exported at another band width; the " +
+        "width is pinned at ingest, re-export vecBandKeysOf to change it")
+
   /** Incremental embedding admission over stored band keys: returns
     * the vectors of `fresh` none of whose LSH bands appear on any
     * corpus vector or earlier fresh vector (earlier = vec_id order).
@@ -2371,14 +2278,7 @@ object Similarity {
     // with exact cosine before rejecting.
     require(bandBits >= 1 && bandBits <= LshBandStride,
       s"bandBits must be in [1, $LshBandStride], got $bandBits")
-    val bv =
-      if (!corpusKeys.columns.contains("band_bits")) col("band_val")
-      else when(col("band_bits") === lit(bandBits), col("band_val"))
-        .otherwise(raise_error(concat(
-          lit("stored vector band keys were exported at band_bits "),
-          col("band_bits").cast("string"),
-          lit(s" != this admission's $bandBits — the width is pinned " +
-            "at ingest; re-export vecBandKeysOf to change it"))))
+    val bv = pinnedBandVal(corpusKeys, bandBits)
     val ck = corpusKeys.select(col("vec_id").as("doc_id"),
       lit(0L).as("ts"), col("band_idx"), bv.as("band_sig"))
     val fk = vecBandKeysOf(fresh, bandBits)
@@ -2420,14 +2320,7 @@ object Similarity {
       threshold: Double = 0.30): DataFrame = {
     require(bandBits >= 1 && bandBits <= LshBandStride,
       s"bandBits must be in [1, $LshBandStride], got $bandBits")
-    val bv =
-      if (!corpusKeys.columns.contains("band_bits")) col("band_val")
-      else when(col("band_bits") === lit(bandBits), col("band_val"))
-        .otherwise(raise_error(concat(
-          lit("stored vector band keys were exported at band_bits "),
-          col("band_bits").cast("string"),
-          lit(s" != this admission's $bandBits — the width is pinned " +
-            "at ingest; re-export vecBandKeysOf to change it"))))
+    val bv = pinnedBandVal(corpusKeys, bandBits)
     val fNorm = withNorm(fresh)
     val fk = vecBandKeysOf(fresh, bandBits)
       .select(col("vec_id"), col("band_idx"), col("band_val"))
@@ -2496,6 +2389,84 @@ object Similarity {
   def ivfCoarseCells(cells: Int): Int =
     math.max(1, math.ceil(math.sqrt(cells.toDouble)).toInt)
 
+  /** Cell count of an IVF fit: `nCells` when pinned, else
+    * `ivfCells(N)` with N = `corpusSize` when known, else one count()
+    * (metadata-only on a plain parquet scan, a full scan on derived
+    * inputs).
+    */
+  private def cellsFor(emb: DataFrame, nCells: Int, corpusSize: Long): Int =
+    if (nCells > 0) nCells
+    else ivfCells(if (corpusSize >= 0L) corpusSize else emb.count())
+
+  /** One IVF centroid set in the form every serve and ingest path
+    * consumes: ids ascending (the assignment's tie-break order), the
+    * vectors as doubles, their squared norms, and the same set as a
+    * small local `(cent_id, c_emb, c_n2)` relation for the probe
+    * ranking. Built in exactly two ways, which differ in ids and norms:
+    * `hashAnchored` (the untrained layout) and `ofFloats` (trained or
+    * stored float centroids). Coarse anchors are picked by
+    * `poly_hash(cent_id)`, so merging the two would move cells.
+    */
+  private final case class Centroids(ids: Array[Long],
+      vecs: Array[Array[Double]], n2: Array[Double], relation: DataFrame) {
+    def isEmpty: Boolean = ids.isEmpty
+  }
+
+  private object Centroids {
+
+    /** The untrained layout: the `cells` vectors of `corpus` (a
+      * `withNorm` frame) with the smallest `(poly_hash(vec_id),
+      * vec_id)`; cent_id = vec_id and n2 = the norm Spark computed.
+      * The ≤ cells rows are collected once and ship inside the task
+      * binary, as trained k-means centroids do in a production IVF;
+      * the probe relation is rebuilt from the collected rows, so the
+      * selection (a corpus scan and hash) never runs twice.
+      */
+    def hashAnchored(corpus: DataFrame, cells: Int): Centroids = {
+      val sel = hashPrefix(corpus, "vec_id", cells)
+        .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
+          col("n2").as("c_n2"))
+      val rows = sel.collect().sortBy(_.getLong(0))
+      Centroids(rows.map(_.getLong(0)),
+        rows.map(_.getSeq[Number](1).map(_.doubleValue()).toArray),
+        rows.map(_.getDouble(2)),
+        corpus.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows: _*), sel.schema))
+    }
+
+    /** Float centroids, trained this session or reloaded: cent_id =
+      * array index, and every derived value comes from the floats (n2
+      * summed on the driver), so store → reload → serve is
+      * bit-identical to serving in session. A ragged set is refused:
+      * the two-level kernel reads `dim = flat.length / cells`, so mixed
+      * widths would shift every offset and serve wrong cells silently.
+      */
+    def ofFloats(spark: SparkSession, cents: Array[Array[Float]]): Centroids = {
+      val widths = cents.map(_.length).distinct.sorted
+      require(widths.length <= 1,
+        s"centroid vectors disagree on width (${widths.mkString(" vs ")}) " +
+          "— a ragged set cannot have come from centroidsOf")
+      val vecs = cents.map(_.map(_.toDouble))
+      val n2 = vecs.map { v =>
+        var acc = 0.0; var i = 0
+        while (i < v.length) { acc += v(i) * v(i); i += 1 }
+        acc
+      }
+      import spark.implicits._
+      Centroids(Array.tabulate(cents.length)(_.toLong), vecs, n2,
+        cents.indices.map(i => (i.toLong, cents(i), n2(i)))
+          .toDF("cent_id", "c_emb", "c_n2"))
+    }
+  }
+
+  /** The empty `(query_id, neighbor_id, cosine)` relation of a cosine
+    * IVF serve with no centroids (or no probes).
+    */
+  private def emptyScored(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id").as("query_id"),
+      col("vec_id").as("neighbor_id"), col("n2").as("cosine"))
+      .filter(lit(false))
+
   /** IVF top-k: the corpus is partitioned into Voronoi cells around a
     * FIXED-SIZE centroid set — the `cells` vectors with the smallest
     * (poly_hash(vec_id), vec_id), i.e. a deterministic pseudo-random
@@ -2538,47 +2509,11 @@ object Similarity {
       nCells: Int = 0, corpusSize: Long = -1L,
       restrict: Option[DataFrame] = None): DataFrame = {
     val corpus = withNorm(emb)
-    val cells =
-      if (nCells > 0) nCells
-      else ivfCells(if (corpusSize >= 0L) corpusSize else emb.count())
-    // deterministic sample: top-`cells` by hash — a per-partition top-k
-    // + driver merge (TakeOrdered), never a global sort of the corpus
-    val cents = corpus
-      .withColumn("ch", poly_hash(col("vec_id").cast("string")))
-      .orderBy(col("ch"), col("vec_id"))
-      .limit(cells)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
-        col("n2").as("c_n2"))
-    // the centroid table is <= IvfMaxCells rows: collect it and ship it
-    // inside the task binary — exactly how trained k-means centroids
-    // travel in a production IVF. Ascending cent_id order gives the
-    // assignment expression its tie-break.
-    val centRows = cents.collect().sortBy(_.getLong(0))
-    if (centRows.isEmpty) {
-      // empty corpus → empty result with the output schema
-      return corpus.select(col("vec_id").as("query_id"),
-        col("vec_id").as("neighbor_id"), col("n2").as("cosine"))
-        .filter(lit(false))
-    }
-    val centIds = centRows.map(_.getLong(0))
-    val centEmb = centRows.map(
-      _.getSeq[Number](1).map(_.doubleValue()).toArray)
-    val centN2 = centRows.map(_.getDouble(2))
-    // the probe side also needs the centroid relation — rebuild it from
-    // the ALREADY-COLLECTED rows instead of re-executing the selection
-    // subplan (which would re-scan + re-hash the whole corpus)
-    val centLocal = emb.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centRows: _*), cents.schema)
-    ivfFromCentroids(corpus, centIds, centEmb, centN2, centLocal,
+    ivfFromCentroids(corpus,
+      Centroids.hashAnchored(corpus, cellsFor(emb, nCells, corpusSize)),
       nQueries, nProbe, restrict)
   }
 
-  /** The IVF machinery downstream of centroid choice — anchor layout,
-    * codegen two-level assignment, probe ranking, candidate scoring —
-    * shared verbatim by the hash-anchor (`ivfScored`) and the trained
-    * (`ivfScoredTrained`) paths, so training changes ONLY which
-    * centroid vectors exist, never the plan shape.
-    */
   /** The two-level cell-assignment EXPRESSION over an in-task centroid
     * set — anchor layout recomputed driver-side from the ids (the
     * FIRST ⌈√cells⌉ centroids of (poly_hash(id), id) order), then the
@@ -2590,9 +2525,10 @@ object Similarity {
     * oracle's dotSql uses, with the identical (cos desc, id asc)
     * tie-break, so the grouping is bit-reproducible in SQL.
     */
-  private def assignCellExpr(centIds: Array[Long],
-      centEmb: Array[Array[Double]],
-      centN2: Array[Double]): org.apache.spark.sql.Column = {
+  private def assignCellExpr(cents: Centroids): Column = {
+    val centIds = cents.ids
+    val centEmb = cents.vecs
+    val centN2 = cents.n2
     val kc = ivfCoarseCells(centIds.length)
     val anchorIdx: Array[Int] = centIds.indices
       .sortBy { i =>
@@ -2637,10 +2573,15 @@ object Similarity {
       groupStart, groupLen)
   }
 
-  private def ivfFromCentroids(corpus: DataFrame, centIds: Array[Long],
-      centEmb: Array[Array[Double]], centN2: Array[Double],
-      centLocal: DataFrame, nQueries: Long, nProbe: Int,
+  /** The IVF machinery downstream of centroid choice — anchor layout,
+    * codegen two-level assignment, probe ranking, candidate scoring —
+    * shared by the hash-anchored, trained and stored serves, so a fit
+    * changes ONLY which centroid vectors exist, never the plan shape.
+    */
+  private def ivfFromCentroids(corpus: DataFrame, cents: Centroids,
+      nQueries: Long, nProbe: Int,
       restrict: Option[DataFrame] = None): DataFrame = {
+    if (cents.isEmpty) return emptyScored(corpus)
     // cell ASSIGNMENT is a per-row codegen expression over the in-task
     // centroid arrays: O(N) rows, ZERO shuffle, ~2·N^(1/4) dot products
     // per row via the coarse→fine split. (The broadcast-join + argmax
@@ -2654,10 +2595,9 @@ object Similarity {
       case Some(r) => corpus.join(r, Seq("vec_id"), "left_semi")
       case None => corpus
     }
-    val assigned = base.select(
-      assignCellExpr(centIds, centEmb, centN2).as("cell"),
+    val assigned = base.select(assignCellExpr(cents).as("cell"),
       col("vec_id"), col("embedding"), col("n2"))
-    probeAndScore(assigned, corpus, centLocal, nQueries, nProbe)
+    probeAndScore(assigned, corpus, cents, nQueries, nProbe)
   }
 
   /** Probe ranking + candidate scoring downstream of cell assignment —
@@ -2670,21 +2610,21 @@ object Similarity {
     * search meets |corpus|·nProbe/cells rows instead of the corpus.
     */
   private def probeAndScore(assigned: DataFrame, querySource: DataFrame,
-      centLocal: DataFrame, nQueries: Long, nProbe: Int): DataFrame =
+      cents: Centroids, nQueries: Long, nProbe: Int): DataFrame =
     scoreCandidates(assigned,
-      probeRank(querySource, centLocal, nQueries, nProbe),
+      probeRank(querySource, cents, nQueries, nProbe),
       queriesOf(querySource, nQueries))
 
   /** Each query's nProbe nearest cells — `(cell, query_id)`, ≤
     * nQueries·nProbe rows; runs only over the (tiny) query set ×
     * centroids.
     */
-  private def probeRank(querySource: DataFrame, centLocal: DataFrame,
+  private def probeRank(querySource: DataFrame, cents: Centroids,
       nQueries: Long, nProbe: Int): DataFrame = {
     val w = Window.partitionBy("vec_id")
       .orderBy(col("c_cos").desc, col("cent_id").asc)
     querySource.filter(col("vec_id") < nQueries)
-      .join(broadcast(centLocal), lit(true))
+      .join(broadcast(cents.relation), lit(true))
       .select(col("vec_id"), col("cent_id"),
         cosineFrom(dot(col("embedding"), col("c_emb")), col("n2"), col("c_n2"))
           .as("c_cos"))
@@ -2756,90 +2696,114 @@ object Similarity {
       nCells: Int = 0, corpusSize: Long = -1L,
       lloydIters: Int = IvfLloydIters,
       sampleCap: Int = IvfTrainSampleCap): DataFrame =
-    serveFromCentroidArrays(emb,
-      trainCentroids(emb, nCells, corpusSize, lloydIters, sampleCap),
-      nQueries, nProbe)
+    ivfFromCentroids(withNorm(emb), Centroids.ofFloats(emb.sparkSession,
+      trainCentroids(emb, nCells, corpusSize, lloydIters, sampleCap,
+        spherical = false)), nQueries, nProbe)
 
-  /** The driver-side training core shared by `ivfScoredTrained` and
-    * `centroidsOf`: deterministic hash-prefix sample → `lloydIters`
-    * rounds of the EXACT `lloydStep` arithmetic (driver-evaluated:
-    * the sample is cap-bounded, so the k·dims-bounded state never
-    * justifies a cluster round-trip per round) → FLOAT rounding
-    * (everything downstream — kernel arrays, probe relation, norms,
-    * the persisted relation — derives from the float values, so
-    * in-session serving and a parquet round-trip see bit-identical
-    * centroids; float arrays round-trip parquet exactly).
+  /** The driver-side training core of every trained IVF form
+    * (`ivfScoredTrained`, `centroidsOf`, and with `spherical` the
+    * cosine pair `knnIvfSphericalTrained`/`sphericalCentroidsOf`):
+    * deterministic hash-prefix sample → `lloydIters` rounds of the
+    * EXACT `lloydStep` arithmetic (driver-evaluated: the sample is
+    * cap-bounded, so the k·dims-bounded state never justifies a
+    * cluster round-trip per round) → FLOAT rounding (everything
+    * downstream — kernel arrays, probe relation, norms, the persisted
+    * relation — derives from the float values, so in-session serving
+    * and a parquet round-trip see bit-identical centroids; float arrays
+    * round-trip parquet exactly).
     *
-    * TRAIN/SERVE METRIC NOTE: training minimizes SQUARED-L2 over the
-    * raw (unnormalized) ppm-quantized sample — truncating-integer
-    * Lloyd, the form an unrolled SQL oracle can state exactly — while
-    * IVF assignment and probing rank by MAX COSINE. This is a
-    * deliberate mismatch, not an oversight: a spherical (cosine)
-    * k-means would need normalization and a float objective the
-    * integer-exact oracle discipline can't mirror, and FAISS itself
+    * TRAIN/SERVE METRIC NOTE: the plain trainer minimizes SQUARED-L2
+    * over the raw (unnormalized) ppm-quantized sample — truncating-
+    * integer Lloyd, the form an unrolled SQL oracle can state exactly —
+    * while IVF assignment and probing rank by MAX COSINE. FAISS itself
     * ships L2-trained coarse quantizers behind inner-product serving.
     * The cost is priced, not assumed: every trained tier has its own
     * oracled recall gate (knn_ivf_trained_recall and friends), which
     * is where a drift from the metric gap would surface — keep those
     * thresholds under watch if the corpus distribution changes.
     *
-    * ORACLE-EXACT BY CONSTRUCTION: every round quantizes nothing new —
-    * points enter ppm fixed point ONCE (⌊x·1e6⌋, the `lloydStep`
-    * grain), assignment is an integer squared-L2 argmin (tie → lower
-    * cell index), the update is a truncating-division integer mean,
-    * and an empty cell carries its previous ppm state. Integer sums
-    * are order-independent, so the driver loop here and DuckDB's
-    * unrolled-CTE twin produce the SAME longs, and the final
-    * `(ppm/1e6).toFloat` rounding is the same IEEE operation on both
-    * engines. `lloydIters = 0` returns the raw sample prefix floats —
-    * exactly the untrained hash-anchored layout (the zero-iterations
-    * law the specs pin). Returns the empty array on an empty corpus.
+    * `spherical` closes that gap (spherical k-means, Dhillon & Modha
+    * 2001 — the metric FAISS's inner-product coarse quantizers train
+    * with when vectors are normalized): sample vectors are
+    * L2-NORMALIZED before ppm quantization and every integer-mean
+    * update is RENORMALIZED (`unitPpm`), so the objective lives on the
+    * unit sphere the cosine serve ranks in. Assignment stays the
+    * integer squared-L2 argmin — on ≈ unit-ppm centroids that is the
+    * cosine argmax up to the quantization grain, and the form the
+    * unrolled CTE oracle states exactly.
+    *
+    * ORACLE-EXACT BY CONSTRUCTION: points enter ppm fixed point ONCE
+    * (⌊x·1e6⌋, the `lloydStep` grain), assignment is an integer
+    * squared-L2 argmin (tie → lower cell index), the update is a
+    * truncating-division integer mean, and an empty cell carries its
+    * previous ppm state. Integer sums are order-independent, so the
+    * driver loop here and DuckDB's unrolled-CTE twin produce the SAME
+    * longs, and the final `(ppm/1e6).toFloat` rounding is the same IEEE
+    * operation on both engines. Plain `lloydIters = 0` returns the raw
+    * sample prefix floats — exactly the untrained hash-anchored layout
+    * (the zero-iterations law the specs pin). Returns the empty array
+    * on an empty corpus.
     */
   private def trainCentroids(emb: DataFrame, nCells: Int,
-      corpusSize: Long, lloydIters: Int,
-      sampleCap: Int): Array[Array[Float]] = {
+      corpusSize: Long, lloydIters: Int, sampleCap: Int,
+      spherical: Boolean): Array[Array[Float]] = {
     require(lloydIters >= 0, s"lloydIters must be >= 0, got $lloydIters")
-    val cells =
-      if (nCells > 0) nCells
-      else ivfCells(if (corpusSize >= 0L) corpusSize else emb.count())
+    val cells = cellsFor(emb, nCells, corpusSize)
     // deterministic training sample: the same TakeOrdered hash-prefix
     // the untrained path selects centroids from, just deeper
-    val cap = math.max(cells, sampleCap)
-    val sampleRows = emb
-      .withColumn("ch", poly_hash(col("vec_id").cast("string")))
-      .orderBy(col("ch"), col("vec_id"))
-      .limit(cap)
-      .select(col("embedding"))
-      .collect()
-    if (sampleRows.isEmpty) return Array.empty
-    val ptsF = sampleRows.map(
-      _.getSeq[Number](0).map(_.floatValue()).toArray)
-    if (lloydIters == 0) return ptsF.take(math.min(cells, ptsF.length))
-    val q = ptsF.map(_.map(f =>
-      math.floor(f.toDouble * CentroidQuantPpm.toDouble).toLong))
-    lloydPpm(q, q.take(math.min(cells, q.length)).map(_.clone()),
-        lloydIters)
+    val ptsF = sampleEmbeddings(emb, math.max(cells, sampleCap))
+      .map(_.map(_.floatValue()).toArray)
+    val init = math.min(cells, ptsF.length)
+    if (!spherical && lloydIters == 0) return ptsF.take(init)
+    val q = ptsF.map { v =>
+      val d = v.map(_.toDouble)
+      if (spherical) unitPpm(d)
+      else d.map(x => math.floor(x * CentroidQuantPpm.toDouble).toLong)
+    }
+    val mStep: Array[Long] => Array[Long] =
+      if (spherical) mean => unitPpm(mean.map(_.toDouble)) else identity
+    lloydPpm(q, q.take(init).map(_.clone()), lloydIters, mStep)
       .map(_.map(m => (m.toDouble / CentroidQuantPpm.toDouble).toFloat))
+  }
+
+  /** `v / ‖v‖` in ppm fixed point, `⌊v_i/‖v‖ · 1e6⌋`: the norm is a
+    * sequential LEFT FOLD (matching DuckDB `list_reduce`, the order the
+    * cosine gates hash-prove) and sqrt plus the single
+    * divide-multiply chain are correctly-rounded IEEE ops both engines
+    * run identically. The zero vector maps to zeros.
+    */
+  private def unitPpm(v: Array[Double]): Array[Long] = {
+    var acc = 0.0
+    var i = 0
+    while (i < v.length) { acc += v(i) * v(i); i += 1 }
+    if (acc == 0.0) new Array[Long](v.length)
+    else {
+      val nrm = math.sqrt(acc)
+      v.map(x => math.floor(x / nrm * CentroidQuantPpm.toDouble).toLong)
+    }
   }
 
   /** The `lloydStep` arithmetic iterated driver-side over a
     * cap-bounded ppm-integer sample: assignment = exact integer
     * squared-L2 argmin (strict `<`, so ties keep the lower cell
     * index — the `(d2 asc, cent_id asc)` struct-min), update =
-    * truncating-division integer mean (Java `/` ≡ Spark `div` ≡
-    * DuckDB `//` on BIGINT), empty cells carry their previous state.
-    * All-integer → bit-reproducible regardless of evaluation order;
-    * the assignment scan parallelizes across points (writes only the
-    * per-point assign slot), the integer accumulation stays
-    * sequential (it is k·dims-bounded and order-free anyway).
+    * `mStep` of the truncating-division integer mean (Java `/` ≡ Spark
+    * `div` ≡ DuckDB `//` on BIGINT): `identity` for the IVF and PQ
+    * fits, `unitPpm` renormalization for the spherical one. Empty
+    * cells carry their previous state unchanged. All-integer →
+    * bit-reproducible regardless of evaluation order; the assignment
+    * scan parallelizes across points (writes only the per-point assign
+    * slot), the integer accumulation stays sequential (it is
+    * k·dims-bounded and order-free anyway).
     */
   private def lloydPpm(points: Array[Array[Long]],
-      init: Array[Array[Long]], iters: Int): Array[Array[Long]] = {
+      init: Array[Array[Long]], iters: Int,
+      mStep: Array[Long] => Array[Long]): Array[Array[Long]] = {
     if (init.isEmpty || points.isEmpty) return init.map(_.clone())
     val dim = points(0).length
     val flopsPerIter = points.length.toDouble * init.length * dim
     if (flopsPerIter * iters > 1e10)
-      System.err.println(f"[graft] IVF training: ${points.length} pts × " +
+      System.err.println(f"[graft] Lloyd training: ${points.length} pts × " +
         f"${init.length} cells × $dim dims × $iters iters ≈ " +
         f"${flopsPerIter * iters}%.1e integer ops on the driver (parallel)")
     var cents = init.map(_.clone())
@@ -2875,133 +2839,7 @@ object Similarity {
       }
       cents = cents.indices.map { j =>
         if (counts(j) == 0L) cents(j)
-        else sums(j).map(_ / counts(j))
-      }.toArray
-      it += 1
-    }
-    cents
-  }
-
-  /** SPHERICAL (cosine) k-means training — the companion to
-    * `trainCentroids` that closes its documented train/serve metric
-    * gap: sample vectors are L2-NORMALIZED before ppm quantization
-    * and centroids are RENORMALIZED after every integer-mean update,
-    * so the training objective lives on the unit sphere the cosine
-    * serving path actually ranks in (spherical k-means, Dhillon &
-    * Modha 2001 — the metric FAISS's inner-product coarse quantizers
-    * train with when vectors are normalized).
-    *
-    * Still ORACLE-EXACT, with doubles allowed only where IEEE
-    * determinism holds cross-engine: the normalization denominators
-    * are sequential LEFT FOLDS (matching DuckDB `list_reduce` — the
-    * same order the cosine gates already hash-prove), centroid norms
-    * sum SQUARES OF PPM INTEGERS (each ≤ 10¹², 64-dim sums < 2⁵³ —
-    * exact in double in ANY order), sqrt and the single
-    * divide-multiply chain are correctly-rounded IEEE ops both
-    * engines execute identically, and floor lands back in integer
-    * ppm. Assignment stays the integer squared-L2 argmin of
-    * `lloydPpm` — on renormalized (≈ unit-ppm) centroids that is the
-    * cosine argmax up to the quantization grain, and it is the form
-    * the unrolled CTE oracle states exactly. Empty cells carry their
-    * previous ppm state UNCHANGED (no re-renormalization — the
-    * `lloydPpm` carry rule, mirrored by the oracle's COALESCE).
-    */
-  private def trainCentroidsSpherical(emb: DataFrame, nCells: Int,
-      corpusSize: Long, lloydIters: Int,
-      sampleCap: Int): Array[Array[Float]] = {
-    require(lloydIters >= 0, s"lloydIters must be >= 0, got $lloydIters")
-    val cells =
-      if (nCells > 0) nCells
-      else ivfCells(if (corpusSize >= 0L) corpusSize else emb.count())
-    val cap = math.max(cells, sampleCap)
-    val sampleRows = emb
-      .withColumn("ch", poly_hash(col("vec_id").cast("string")))
-      .orderBy(col("ch"), col("vec_id"))
-      .limit(cap)
-      .select(col("embedding"))
-      .collect()
-    if (sampleRows.isEmpty) return Array.empty
-    val ptsF = sampleRows.map(
-      _.getSeq[Number](0).map(_.floatValue()).toArray)
-    // normalize-then-quantize: u = x/‖x‖ in double (left fold, the
-    // dotSql order), q = ⌊u·1e6⌋; the zero vector quantizes to zeros
-    val q = ptsF.map { v =>
-      var acc = 0.0
-      var i = 0
-      while (i < v.length) {
-        val d = v(i).toDouble; acc += d * d; i += 1
-      }
-      if (acc == 0.0) v.map(_ => 0L)
-      else {
-        val nrm = math.sqrt(acc)
-        v.map(f => math.floor(
-          f.toDouble / nrm * CentroidQuantPpm.toDouble).toLong)
-      }
-    }
-    if (lloydIters == 0)
-      return q.take(math.min(cells, q.length))
-        .map(_.map(m => (m.toDouble / CentroidQuantPpm.toDouble).toFloat))
-    lloydPpmSpherical(q, q.take(math.min(cells, q.length)).map(_.clone()),
-        lloydIters)
-      .map(_.map(m => (m.toDouble / CentroidQuantPpm.toDouble).toFloat))
-  }
-
-  /** `lloydPpm` with the spherical m-step: integer truncating mean,
-    * then renormalize to ppm scale — c'_i = ⌊m_i/‖m‖ · 1e6⌋ with ‖m‖
-    * the exact-in-double root of the integer square sum. Empty cells
-    * (and the all-zero mean) carry unchanged.
-    */
-  private def lloydPpmSpherical(points: Array[Array[Long]],
-      init: Array[Array[Long]], iters: Int): Array[Array[Long]] = {
-    if (init.isEmpty || points.isEmpty) return init.map(_.clone())
-    val dim = points(0).length
-    var cents = init.map(_.clone())
-    val assign = new Array[Int](points.length)
-    var it = 0
-    while (it < iters) {
-      val cur = cents
-      java.util.stream.IntStream.range(0, points.length).parallel()
-        .forEach { p =>
-          var best = 0
-          var bestD = Long.MaxValue
-          var j = 0
-          while (j < cur.length) {
-            var d = 0L
-            var i = 0
-            while (i < dim) {
-              val t = points(p)(i) - cur(j)(i); d += t * t; i += 1
-            }
-            if (d < bestD) { bestD = d; best = j }
-            j += 1
-          }
-          assign(p) = best
-        }
-      val sums = Array.fill(cents.length)(new Array[Long](dim))
-      val counts = new Array[Long](cents.length)
-      var p = 0
-      while (p < points.length) {
-        val tgt = sums(assign(p))
-        var i = 0
-        while (i < dim) { tgt(i) += points(p)(i); i += 1 }
-        counts(assign(p)) += 1
-        p += 1
-      }
-      cents = cents.indices.map { j =>
-        if (counts(j) == 0L) cents(j)
-        else {
-          val mean = sums(j).map(_ / counts(j))
-          var acc = 0.0
-          var i = 0
-          while (i < dim) {
-            val d = mean(i).toDouble; acc += d * d; i += 1
-          }
-          if (acc == 0.0) mean
-          else {
-            val nrm = math.sqrt(acc)
-            mean.map(m => math.floor(
-              m.toDouble / nrm * CentroidQuantPpm.toDouble).toLong)
-          }
-        }
+        else mStep(sums(j).map(_ / counts(j)))
       }.toArray
       it += 1
     }
@@ -3018,53 +2856,28 @@ object Similarity {
       nCells: Int = 0, corpusSize: Long = -1L,
       lloydIters: Int = IvfLloydIters,
       sampleCap: Int = IvfTrainSampleCap): DataFrame =
-    topK(serveFromCentroidArrays(emb,
-      trainCentroidsSpherical(emb, nCells, corpusSize, lloydIters,
-        sampleCap), nQueries, nProbe), k)
+    topK(ivfFromCentroids(withNorm(emb), Centroids.ofFloats(emb.sparkSession,
+      trainCentroids(emb, nCells, corpusSize, lloydIters, sampleCap,
+        spherical = true)), nQueries, nProbe), k)
 
   /** The spherically-fitted ARTIFACT as a relation (`cent_id`,
     * `embedding`) — the artifact-gate twin of `centroidsOf`.
     */
   def sphericalCentroidsOf(emb: DataFrame, nCells: Int = 0,
       corpusSize: Long = -1L, lloydIters: Int = IvfLloydIters,
-      sampleCap: Int = IvfTrainSampleCap): DataFrame = {
-    val cents = trainCentroidsSpherical(emb, nCells, corpusSize,
-      lloydIters, sampleCap)
-    val s = emb.sparkSession
-    import s.implicits._
+      sampleCap: Int = IvfTrainSampleCap): DataFrame =
+    centroidRelation(emb.sparkSession, trainCentroids(emb, nCells,
+      corpusSize, lloydIters, sampleCap, spherical = true))
+
+  /** Fitted float centroids as the `(cent_id, embedding)` relation,
+    * cent_id = array index: a small LOCAL DataFrame, frozen at build
+    * time.
+    */
+  private def centroidRelation(spark: SparkSession,
+      cents: Array[Array[Float]]): DataFrame = {
+    import spark.implicits._
     cents.toSeq.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toDF("cent_id", "embedding")
-  }
-
-  /** Serve the IVF index from an in-memory FLOAT centroid array
-    * (trained this session or reloaded from the stored relation):
-    * cent_id = array index, every derived quantity computed from the
-    * float values — the single definition both paths share, so
-    * store→reload→serve is bit-identical to in-session serving.
-    */
-  private def serveFromCentroidArrays(emb: DataFrame,
-      centEmbF: Array[Array[Float]], nQueries: Long,
-      nProbe: Int): DataFrame = {
-    val corpus = withNorm(emb)
-    if (centEmbF.isEmpty) {
-      return corpus.select(col("vec_id").as("query_id"),
-        col("vec_id").as("neighbor_id"), col("n2").as("cosine"))
-        .filter(lit(false))
-    }
-    val centEmb = centEmbF.map(_.map(_.toDouble))
-    val centN2 = centEmb.map { v =>
-      var acc = 0.0; var i = 0
-      while (i < v.length) { acc += v(i) * v(i); i += 1 }
-      acc
-    }
-    val centIds = Array.tabulate(centEmb.length)(_.toLong)
-    val s = emb.sparkSession
-    import s.implicits._
-    val centLocal = centIds.toSeq.map(i =>
-        (i, centEmbF(i.toInt), centN2(i.toInt)))
-      .toDF("cent_id", "c_emb", "c_n2")
-    ivfFromCentroids(corpus, centIds, centEmb, centN2, centLocal,
-      nQueries, nProbe)
   }
 
   /** Fingerprint of every constant the STORED centroid relation's
@@ -3074,15 +2887,11 @@ object Similarity {
     * two-level assignment) and the cell-count cap. Lloyd's training
     * knobs are deliberately ABSENT — they shape the centroid DATA, not
     * the serving arithmetic, and an index trained with different
-    * iters/sample is still a valid index. Same canonical-string fold
-    * as `Dedup.LshParamsFingerprint`.
+    * iters/sample is still a valid index.
     */
-  val IvfParamsFingerprint: Long = {
-    val canonical = Seq("ivf-centroids-v1",
-      graft.functions.PolyHashUtil.Mult, graft.functions.PolyHashUtil.Mod,
-      IvfMaxCells).mkString("|")
-    canonical.foldLeft(1125899906842597L)((h, c) => h * 31L + c.toLong)
-  }
+  val IvfParamsFingerprint: Long = Stamps.paramsFingerprint(
+    "ivf-centroids-v1", graft.functions.PolyHashUtil.Mult,
+    graft.functions.PolyHashUtil.Mod, IvfMaxCells)
 
   /** Train-once export of the fitted IVF centroids AS A RELATION —
     * `(cent_id, embedding: Array[Float], ivf_params_fp)`, ≤
@@ -3102,14 +2911,10 @@ object Similarity {
     */
   def centroidsOf(emb: DataFrame, nCells: Int = 0, corpusSize: Long = -1L,
       lloydIters: Int = IvfLloydIters,
-      sampleCap: Int = IvfTrainSampleCap): DataFrame = {
-    val cents = trainCentroids(emb, nCells, corpusSize, lloydIters, sampleCap)
-    val s = emb.sparkSession
-    import s.implicits._
-    cents.toSeq.zipWithIndex
-      .map { case (v, i) => (i.toLong, v, IvfParamsFingerprint) }
-      .toDF("cent_id", "embedding", "ivf_params_fp")
-  }
+      sampleCap: Int = IvfTrainSampleCap): DataFrame =
+    centroidRelation(emb.sparkSession, trainCentroids(emb, nCells,
+        corpusSize, lloydIters, sampleCap, spherical = false))
+      .withColumn("ivf_params_fp", lit(IvfParamsFingerprint))
 
   /** IVF top-k SERVED FROM STORED CENTROIDS — the reload half of the
     * `centroidsOf` contract: collects the (≤ `IvfMaxCells`-row by
@@ -3131,38 +2936,24 @@ object Similarity {
   private[graft] def ivfScoredFromStored(centroids: DataFrame,
       emb: DataFrame, nQueries: Long = DefaultQueries,
       nProbe: Int = IvfNProbe): DataFrame =
-    serveFromCentroidArrays(emb, loadStoredCentroids(centroids),
+    ivfFromCentroids(withNorm(emb), loadStoredCentroids(centroids)._1,
       nQueries, nProbe)
 
-  /** The stored-centroid loader both consumers share (`knnIvfFromStored`
-    * serving, `ivfAssignFromStored` ingest): bounded collect, loud
-    * fingerprint / cap / id-contiguity guards, float arrays in
-    * cent_id order.
+  /** The stored-centroid loader every consumer shares (the stored,
+    * assigned and IVFPQ serves, `ivfAssignFromStored` ingest): bounded
+    * collect, loud fingerprint / cap / id-contiguity guards, and the
+    * width guard of `Centroids.ofFloats`. Returns the centroids with
+    * their content hash (`centroidContentFp`).
     */
   private def loadStoredCentroids(
-      centroids: DataFrame): Array[Array[Float]] = {
-    val hasFp = centroids.columns.contains("ivf_params_fp")
-    val cols = Seq(col("cent_id"), col("embedding")) ++
-      (if (hasFp) Seq(col("ivf_params_fp")) else Nil)
-    val rows = centroids.select(cols: _*).collect()
-    require(rows.length <= IvfMaxCells,
-      s"stored centroid relation has ${rows.length} rows — the contract " +
-        s"caps it at IvfMaxCells = $IvfMaxCells (is this really a " +
-        "centroidsOf export?)")
-    if (hasFp) rows.foreach { r =>
-      val fp = r.getLong(2)
-      require(fp == IvfParamsFingerprint,
-        s"stored centroids were exported under ivf_params_fp $fp != this " +
-          s"build's $IvfParamsFingerprint — the serving constants changed; " +
-          "re-export centroidsOf with this build")
-    }
-    val byId = rows.sortBy(_.getLong(0))
-    byId.map(_.getLong(0)).zipWithIndex.foreach { case (id, i) =>
-      require(id == i.toLong,
-        s"stored centroid ids must be exactly 0..n-1 (centroidsOf's " +
-          s"layout); found id $id at position $i")
-    }
-    byId.map(_.getSeq[Number](1).map(_.floatValue()).toArray)
+      centroids: DataFrame): (Centroids, Long) = {
+    val byId = collectStored(centroids, Seq("cent_id", "embedding"),
+      "ivf_params_fp", IvfParamsFingerprint, IvfMaxCells, "IvfMaxCells",
+      "centroidsOf").sortBy(_.getLong(0))
+    requireDenseIds(byId.map(_.getLong(0)).toSeq, "stored centroid ids")
+    val floats = byId.map(_.getSeq[Number](1).map(_.floatValue()).toArray)
+    (Centroids.ofFloats(centroids.sparkSession, floats),
+      centroidContentFp(floats))
   }
 
   /** Content hash of a loaded centroid set — FNV-1a over the exact
@@ -3210,21 +3001,12 @@ object Similarity {
     * guards as serving (shared loader).
     */
   def ivfAssignFromStored(centroids: DataFrame, emb: DataFrame): DataFrame = {
-    val centEmbF = loadStoredCentroids(centroids)
-    val centsFp = centroidContentFp(centEmbF)
-    if (centEmbF.isEmpty)
+    val (cents, centsFp) = loadStoredCentroids(centroids)
+    if (cents.isEmpty)
       return emb.select(col("vec_id"), col("vec_id").as("cell"),
         lit(0.0).as("n2"), lit(centsFp).as("ivf_cents_fp"))
         .filter(lit(false))
-    val centEmb = centEmbF.map(_.map(_.toDouble))
-    val centN2 = centEmb.map { v =>
-      var acc = 0.0; var i = 0
-      while (i < v.length) { acc += v(i) * v(i); i += 1 }
-      acc
-    }
-    val centIds = Array.tabulate(centEmb.length)(_.toLong)
-    emb.select(col("vec_id"),
-      assignCellExpr(centIds, centEmb, centN2).as("cell"),
+    emb.select(col("vec_id"), assignCellExpr(cents).as("cell"),
       norm2(col("embedding")).as("n2"),
       lit(centsFp).as("ivf_cents_fp"))
   }
@@ -3283,7 +3065,7 @@ object Similarity {
     require(assignedCorpus.columns.contains("cell"),
       "assignedCorpus must carry the persisted `cell` column from " +
         "ivfAssignFromStored — for an unstamped corpus use knnIvfFromStored")
-    val centEmbF = loadStoredCentroids(centroids)
+    val (cents, centsFp) = loadStoredCentroids(centroids)
     // STALENESS GUARD: when the corpus carries the `ivf_cents_fp`
     // stamp (ivfAssignFromStored output), every row's stamp must equal
     // the content hash of the centroids NOW loaded — a corpus stamped
@@ -3301,42 +3083,19 @@ object Similarity {
     // scored row and changes no plan shape. Pre-stamp corpora (no such
     // column) skip the check, like the params fingerprint on bare
     // centroid relations.
-    val guardN2: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (assignedCorpus.columns.contains("ivf_cents_fp")) {
-        val expected = lit(centroidContentFp(centEmbF))
-        n2c => when(col("ivf_cents_fp") === expected, n2c)
-          .otherwise(raise_error(format_string(
-            "graft: assignedCorpus row stamped ivf_cents_fp=%s but the " +
-              "loaded centroids hash to %s — stale cell stamp " +
-              "(re-trained index?); re-run ivfAssignFromStored",
-            col("ivf_cents_fp"), expected))).as("n2")
-      } else identity
-    // a persisted n2 (stamped at ingest next to cell) spares the serve
+    // A persisted n2 (stamped at ingest next to cell) spares the serve
     // side every per-vector norm outside the probed cells; doubles
-    // round-trip parquet exactly, so either path is bit-identical
-    val corpus =
-      if (assignedCorpus.columns.contains("n2"))
-        assignedCorpus.select(col("vec_id"), col("embedding"),
-          guardN2(col("n2")), col("cell"))
-      else assignedCorpus.select(col("vec_id"), col("embedding"),
-        guardN2(norm2(col("embedding")).as("n2")), col("cell"))
-    if (centEmbF.isEmpty) {
-      return corpus.select(col("vec_id").as("query_id"),
-        col("vec_id").as("neighbor_id"), col("n2").as("cosine"))
-        .filter(lit(false))
-    }
-    val centN2 = centEmbF.map { v =>
-      var acc = 0.0; var i = 0
-      while (i < v.length) { acc += v(i).toDouble * v(i).toDouble; i += 1 }
-      acc
-    }
-    val s = assignedCorpus.sparkSession
-    import s.implicits._
-    val centLocal = centEmbF.indices.map(i =>
-        (i.toLong, centEmbF(i), centN2(i)))
-      .toDF("cent_id", "c_emb", "c_n2")
+    // round-trip parquet exactly, so either path is bit-identical.
+    val stamps = assignedCorpus.columns
+    val n2 = if (stamps.contains("n2")) col("n2") else norm2(col("embedding"))
+    val guardedN2 =
+      if (!stamps.contains("ivf_cents_fp")) n2
+      else stampGuard(n2, "ivf_cents_fp", centsFp, StaleCells)
+    val corpus = assignedCorpus.select(col("vec_id"), col("embedding"),
+      guardedN2.as("n2"), col("cell"))
+    if (cents.isEmpty) return emptyScored(corpus)
     if (!staticPrune)
-      return probeAndScore(corpus, corpus, centLocal, nQueries, nProbe)
+      return probeAndScore(corpus, corpus, cents, nQueries, nProbe)
     // STATIC prune: the probe relation is tiny by contract (queries ×
     // nProbe), so resolve it EAGERLY — one driver job over queries ×
     // centroids — and push the probed cells into the corpus scan as a
@@ -3348,17 +3107,15 @@ object Similarity {
     // candidates, same arithmetic. EAGER evaluation semantics like
     // knnIvf (the probe job runs at build time, freezing probes
     // against the input).
-    val probeRows = probeRank(corpus, centLocal, nQueries, nProbe).collect()
+    val probeRows = probeRank(corpus, cents, nQueries, nProbe).collect()
     require(probeRows.length <= IvfMaxStaticProbes,
       s"staticPrune collected ${probeRows.length} probe rows — the cap " +
         s"is IvfMaxStaticProbes = $IvfMaxStaticProbes (queries × nProbe " +
         "must stay driver-small; use the default lazy form for bulk " +
         "query relations)")
-    if (probeRows.isEmpty) {
-      return corpus.select(col("vec_id").as("query_id"),
-        col("vec_id").as("neighbor_id"), col("n2").as("cosine"))
-        .filter(lit(false))
-    }
+    if (probeRows.isEmpty) return emptyScored(corpus)
+    val s = assignedCorpus.sparkSession
+    import s.implicits._
     val localProbes = probeRows.toSeq
       .map(r => (r.getLong(0), r.getLong(1))).toDF("cell", "query_id")
     val probedCells = probeRows.map(_.getLong(0)).distinct.toSeq
@@ -3378,6 +3135,15 @@ object Similarity {
       Seq(col("cosine").desc, col("neighbor_id").asc), k)
       .select("query_id", "rank", "neighbor_id", "cosine")
 
+  /** `topK` for the distance-scored serves: (`score` asc, neighbor
+    * asc), `score` an exact integer column (`l2_fp`, `adc_fp`,
+    * `hamming`, `pd2`).
+    */
+  private def topKAsc(scored: DataFrame, score: String, k: Int): DataFrame =
+    graft.plans.TopK.perKey(scored, Seq("query_id"),
+      Seq(col(score).asc, col("neighbor_id").asc), k)
+      .select("query_id", "rank", "neighbor_id", score)
+
   /** Metadata-filtered vector search: exact top-k cosine neighbors
     * restricted to the corpus rows whose document satisfies `pred`
     * (modern "filtered ANN"). The filter composes BEFORE scoring as a
@@ -3392,15 +3158,8 @@ object Similarity {
       k: Int = DefaultK, nQueries: Long = DefaultQueries): DataFrame = {
     val allowed = docs.filter(pred).select(col("doc_id").as("vec_id"))
     val corpus = withNorm(emb)
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("n2").as("q_n2"))
-    val scored = corpus.join(allowed, Seq("vec_id"), "left_semi")
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosineFrom(dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
-          .as("cosine"))
-    topK(scored, k)
+    topK(cosineAll(corpus.join(allowed, Seq("vec_id"), "left_semi"),
+      queriesOf(corpus, nQueries)), k)
   }
 
   /** Filtered ANN on the IVF serving path — the production filtered-
@@ -3448,16 +3207,19 @@ object Similarity {
     val kw = TextOps.bm25Shared(docs, pool, nQueries)
       .select(col("query_id"), col("doc_id"), col("rank").as("kw_rank"))
     val corpus = withNorm(emb)
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("n2").as("q_n2"))
-    val vec = topK(corpus.filter(col("vec_id") >= nQueries)
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosineFrom(dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
-          .as("cosine")), pool)
+    val vec = topK(cosineAll(corpus.filter(col("vec_id") >= nQueries),
+        queriesOf(corpus, nQueries)), pool)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("vec_rank"))
+    rrfFuse(kw, vec, k)
+  }
+
+  /** Reciprocal-rank fusion of a keyword pool `(query_id, doc_id,
+    * kw_rank)` and a vector pool `(query_id, doc_id, vec_rank)`:
+    * rrf_ppm = Σ ⌊1e6/(RrfBase + rank)⌋ over the FULL OUTER join, top
+    * k by (rrf_ppm desc, doc_id asc).
+    */
+  private def rrfFuse(kw: DataFrame, vec: DataFrame, k: Int): DataFrame = {
     val fused = kw.join(vec, Seq("query_id", "doc_id"), "full_outer")
       .select(col("query_id"), col("doc_id"),
         (coalesce(expr(s"1000000 div ($RrfBase + kw_rank)"), lit(0L)) +
@@ -3494,13 +3256,6 @@ object Similarity {
         nQueries)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("vec_rank"))
-    val fused = kw.join(vec, Seq("query_id", "doc_id"), "full_outer")
-      .select(col("query_id"), col("doc_id"),
-        (coalesce(expr(s"1000000 div ($RrfBase + kw_rank)"), lit(0L)) +
-          coalesce(expr(s"1000000 div ($RrfBase + vec_rank)"), lit(0L)))
-          .as("rrf_ppm"))
-    graft.plans.TopK.perKey(fused, Seq("query_id"),
-        Seq(col("rrf_ppm").desc, col("doc_id").asc), k)
-      .select("query_id", "rank", "doc_id", "rrf_ppm")
+    rrfFuse(kw, vec, k)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.PolyHashFunctions.poly_hash
+import graft.functions.PolyHashFunctions.{hashPrefix, poly_hash}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -169,10 +169,7 @@ object TextOps {
       epochs: Int = QmEpochs, sampleCap: Int = QmSampleCap): Array[Long] =
     graft.PlanMemo.getOrBuild(docs,
         s"qm|$epochs|$sampleCap|$QmTarget|$QmStepScale") {
-      val rows = qmFeatures(docs)
-        .withColumn("ch", poly_hash(col("doc_id").cast("string")))
-        .orderBy(col("ch"), col("doc_id"))
-        .limit(sampleCap)
+      val rows = hashPrefix(qmFeatures(docs), "doc_id", sampleCap)
         .select("y", "x0", "x1", "x2", "x3", "x4", "x5")
         .collect()
       val ts = rows.map(_.getLong(0) * QmTarget)
@@ -495,10 +492,8 @@ object TextOps {
     * silently produce short lists. Same canonical-string fold as the
     * IVF/PQ/LSH fingerprints.
     */
-  def postingsParamsFp(k: Int): Long = {
-    val canonical = Seq("postings-index-v1", k).mkString("|")
-    canonical.foldLeft(1125899906842597L)((h, c) => h * 31L + c.toLong)
-  }
+  def postingsParamsFp(k: Int): Long =
+    Stamps.paramsFingerprint("postings-index-v1", k)
 
   /** The STORED form of the inverted index — `postings` WITHOUT the
     * publish-time df floor, stamped `postings_params_fp` on every
@@ -650,16 +645,12 @@ object TextOps {
   private[graft] def postingsDeltaFromTf(storedIndex: DataFrame,
       batchTf: DataFrame, k: Int = PostingsK): DataFrame = {
     val expected = postingsParamsFp(k)
-    val guardDf: org.apache.spark.sql.Column =
-      if (storedIndex.columns.contains("postings_params_fp"))
-        when(col("postings_params_fp") === lit(expected), col("df"))
-          .otherwise(raise_error(format_string(
-            "graft: stored postings index stamped postings_params_fp=%s " +
-              s"but this merge expects $expected (depth k=$k) — an index " +
-              "built at a different posting depth cannot be merged " +
-              "exactly; rebuild with postingsIndex at this k",
-            col("postings_params_fp"))))
-      else col("df")
+    val guardDf =
+      if (!storedIndex.columns.contains("postings_params_fp")) col("df")
+      else Stamps.stampGuard(col("df"), "postings_params_fp",
+        expected, s"the stored postings index was built at " +
+          s"another posting depth than this merge's k=$k and cannot be " +
+          "merged exactly; rebuild with postingsIndex at this k")
     val stored = storedIndex.select(col("token"), guardDf.as("df"),
       col("cf"), col("rank"), col("doc_id"), col("tf"))
     val batchVocab = batchTf.select("token").distinct()
