@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -82,6 +82,14 @@ object PolyHashFunctions {
   def poly_hash2(c: Column): Column =
     ColumnBridge.column(PolyHash(ColumnBridge.expression(c),
       PolyHashUtil.Mult2, PolyHashUtil.Mod2))
+
+  /** The 60-bit dual hash `poly_hash(c) · Mod2 + poly_hash2(c)`
+    * (< 2^60): the HLL sketches' item hash, and the pre-mix the
+    * profile and active-user sketches apply to short renderings
+    * before they are hashed again.
+    */
+  def poly_hash60(c: Column): Column =
+    poly_hash(c) * lit(PolyHashUtil.Mod2) + poly_hash2(c)
 
   /** The repo's RNG-free sample: the `n` rows of `df` with the smallest
     * `(poly_hash(id), id)`, in that order. Spark plans it as

@@ -118,14 +118,12 @@ object Profile {
     require(names.nonEmpty, "profileHll: no columns to profile")
     val slots = names.map(n =>
       struct(lit(n).as("column"), col(n).cast("string").as("item")))
-    import graft.functions.PolyHashFunctions.{poly_hash, poly_hash2}
+    import graft.functions.PolyHashFunctions.poly_hash60
     val items = df.select(explode(array(slots: _*)).as("p"))
       .select(col("p.column").as("column"), col("p.item").as("item"))
       .filter(col("item").isNotNull)
       .select(col("column"),
-        (poly_hash(col("item")) *
-          lit(graft.functions.PolyHashUtil.Mod2) +
-          poly_hash2(col("item"))).cast("string").as("item"))
+        poly_hash60(col("item")).cast("string").as("item"))
     TextOps.hllState(items, Seq("column"), col("item"))
   }
 

@@ -292,12 +292,9 @@ object QuantileSketch {
     */
   private def cntChecked(state: DataFrame): Column =
     if (!state.columns.contains("qs_params_fp")) col("cnt")
-    else when(col("qs_params_fp") === lit(QsParamsFingerprint), col("cnt"))
-      .otherwise(raise_error(concat(
-        lit("quantile-sketch state was built under qs_params_fp "),
-        col("qs_params_fp").cast("string"),
-        lit(s" != this build's $QsParamsFingerprint — the bucket grid " +
-          "changed; re-sketch the corpus with this build"))))
+    else Stamps.stampGuard(col("cnt"), "qs_params_fp", QsParamsFingerprint,
+      "the quantile-sketch bucket grid changed; re-sketch the corpus " +
+        "with this build")
 
   /** Merge sketch states by counter addition — `merge(sketch(A),
     * sketch(B)) == sketch(A ∪ B)` EXACTLY (pinned in tests), the

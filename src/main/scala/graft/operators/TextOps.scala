@@ -440,6 +440,20 @@ object TextOps {
       .orderBy(col("n").desc, col("token").asc)
       .limit(k)
 
+  /** The term-frequency relation `(token, doc_id, tf)`: one row per
+    * distinct token of each document, `tf` its occurrence count — the
+    * one corpus-sized aggregation the postings, the delta batch,
+    * `salientTerms` and `tfidfHashed` build on (`bm25Corpus` keeps a
+    * one-pass form that also carries `len_d`). `shuffle` re-keys the
+    * exploded token rows before the count; by default they are
+    * counted where they are (map-side combined).
+    */
+  private def termFreq(docs: DataFrame,
+      shuffle: DataFrame => DataFrame = identity): DataFrame =
+    shuffle(docs.select(col("doc_id"),
+        explode(tokens(col("text"))).as("token")))
+      .groupBy("token", "doc_id").agg(count(lit(1)).as("tf"))
+
   /** Posting-list depth and document-frequency floor for `postings`.
     * Same constants MUST appear in the oracle SQL.
     */
@@ -458,6 +472,11 @@ object TextOps {
     * doc_id, tf) — hash-comparable, and a consumer regroups with
     * one collect_list if it wants array-form lists.
     *
+    * It is the stored index published in one shot,
+    * `postingsPublish(postingsIndex(docs, k), minDf)`: the optimizer
+    * pushes the df floor into the stats side and prunes the stamp, so
+    * the optimized plan is the one a hand-written floored build gets.
+    *
     * Shape at scale: one corpus-sized (token, doc_id) aggregation
     * (map-side combined), then everything is token-keyed: the stats
     * rollup, the TopKPerKey heap (k rows per partition per term — no
@@ -468,19 +487,8 @@ object TextOps {
     * relation.
     */
   def postings(docs: DataFrame, k: Int = PostingsK,
-      minDf: Long = PostingsMinDf): DataFrame = {
-    val tf = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .groupBy("token", "doc_id").agg(count(lit(1)).as("tf"))
-    val stats = tf.groupBy("token")
-      .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-      .filter(col("df") >= minDf)
-    graft.plans.TopK.perKey(tf, Seq("token"),
-        Seq(col("tf").desc, col("doc_id").asc), k)
-      .join(stats, "token")
-      .select(col("token"), col("df"), col("cf"), col("rank"),
-        col("doc_id"), col("tf"))
-  }
+      minDf: Long = PostingsMinDf): DataFrame =
+    postingsPublish(postingsIndex(docs, k), minDf)
 
   /** Fingerprint of every constant a STORED postings index's merge
     * contract depends on: the schema version and the posting-list
@@ -503,14 +511,12 @@ object TextOps {
     * brings one more document has to resurface with its full posting
     * list, which a published (floored) index has already thrown
     * away. `postingsPublish` applies the floor at read time;
-    * `postingsDelta` folds a fresh batch in. Same plan shape as
-    * `postings` (one corpus-sized (token, doc_id) aggregation, then
-    * token-keyed stats + TopKPerKey heaps).
+    * `postingsDelta` folds a fresh batch in. One corpus-sized
+    * (token, doc_id) aggregation (`termFreq`), then token-keyed
+    * stats + TopKPerKey heaps.
     */
   def postingsIndex(docs: DataFrame, k: Int = PostingsK): DataFrame = {
-    val tf = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .groupBy("token", "doc_id").agg(count(lit(1)).as("tf"))
+    val tf = termFreq(docs)
     val stats = tf.groupBy("token")
       .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
     graft.plans.TopK.perKey(tf, Seq("token"),
@@ -522,10 +528,9 @@ object TextOps {
   }
 
   /** The PUBLISH step of the stored index: apply the df floor and
-    * drop the fingerprint — the result is exactly what `postings`
-    * builds in one shot (spec-pinned), so retrieval consumers never
-    * see sub-floor terms while the stored relation keeps them for
-    * maintenance.
+    * drop the fingerprint — `postings` is this step over a fresh
+    * `postingsIndex`, so retrieval consumers never see sub-floor terms
+    * while the stored relation keeps them for maintenance.
     */
   def postingsPublish(index: DataFrame,
       minDf: Long = PostingsMinDf): DataFrame =
@@ -607,10 +612,8 @@ object TextOps {
     * re-tokenizing the batch per consumer.
     */
   private[graft] def batchTfOf(batch: DataFrame): DataFrame =
-    graft.Caches.track(batch
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .groupBy("token", "doc_id").agg(count(lit(1)).as("tf"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    graft.Caches.track(
+      termFreq(batch).persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Forward-index rows for a batch, derived from its tokenized tf
     * relation instead of a second tokenize pass: `len_d` = Σ tf over
@@ -1618,16 +1621,14 @@ object TextOps {
     */
   private[graft] def hllBucketMax(rel: DataFrame, groups: Seq[String],
       item: org.apache.spark.sql.Column): DataFrame = {
-    import graft.functions.PolyHashFunctions.poly_hash2
+    import graft.functions.PolyHashFunctions.poly_hash60
     val m = HllBuckets
     val cap = HllCap
     val g = groups.map(col)
     // `div`, not `/`: h is up to ~2^60 and Column./ is DOUBLE division
     // (loses low bits past 2^53 — exactly the bits rho reads)
     rel
-      .select(g :+ (poly_hash(item) *
-        lit(graft.functions.PolyHashUtil.Mod2) +
-        poly_hash2(item)).as("h"): _*)
+      .select(g :+ poly_hash60(item).as("h"): _*)
       .select(g ++ Seq((col("h") % lit(m.toLong)).as("bucket"),
         expr(s"h div ${m}L").as("rest")): _*)
       .select(g ++ Seq(col("bucket"),
@@ -1893,9 +1894,7 @@ object TextOps {
     require(k > 0, s"k must be positive, got $k")
     require(scale > 0, s"scale must be positive, got $scale")
     val tf = graft.Caches.track(
-      docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+      termFreq(docs).persist(StorageLevel.MEMORY_AND_DISK))
     val dfRel = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val scored = tf.join(dfRel, "token")
       .select(col("doc_id"), col("token"),
@@ -2217,9 +2216,8 @@ object TextOps {
 
   /** The cached corpus state one BM25 session shares across scoring
     * passes: the (doc_id, token, tf, len_d) relation plus the two
-    * stat literals. Factored from `bm25` so `bm25Prf`'s second pass
-    * reuses the SAME tf/stats (expression-for-expression identical —
-    * the gates' hashes depend on it).
+    * stat literals, so every `bm25Score` pass of `bm25` and `bm25Prf`
+    * reads the SAME tf/stats.
     */
   private[graft] case class Bm25State(tf: DataFrame, nDocs: Long,
     avglenPpm: Long)
@@ -2251,9 +2249,44 @@ object TextOps {
       val r = tf.agg(sum("tf")).collect()(0)
       if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-    val avglenPpm = math.max(1L, if (nDocs == 0) 1L
-      else totalTokens * 1000000L / nDocs)
-    Bm25State(tf, nDocs, avglenPpm)
+    Bm25State(tf, nDocs, avglenPpmOf(nDocs, totalTokens))
+  }
+
+  /** Mean document length in ppm, the BM25 length-normalization base:
+    * ⌊total tokens · 10^6 / docs⌋, at least 1 so the tf-norm divide is
+    * defined on an empty corpus.
+    */
+  private def avglenPpmOf(nDocs: Long, totalTokens: Long): Long =
+    math.max(1L, if (nDocs == 0) 1L else totalTokens * 1000000L / nDocs)
+
+  /** idf_bits = bitlen(⌊(2(N−df)+1)/(2df+1)⌋ + 1) over a `df` column
+    * (see `bm25`) — the one Robertson-idf expression of the BM25
+    * family and `tfidfHashed`, unaliased so it can sit inside a
+    * product.
+    */
+  private def idfBits(nDocs: Long): Column =
+    length(bin(expr(s"(2 * ($nDocs - df) + 1) div (2 * df + 1) + 1")))
+      .cast("long")
+
+  /** The BM25 scoring tail every pass ends in: each candidate row
+    * (query_id, doc_id, tf, len_d) contributes `idf` × the exact-integer
+    * tf-norm chain (see `bm25`), summed per (query, doc) into a LONG
+    * score and ranked (score desc, doc_id asc) by a k-bounded heap.
+    */
+  private def bm25Rank(cand: DataFrame, idf: Column, avglenPpm: Long,
+      k: Int): DataFrame = {
+    val scored = cand
+      .select(col("query_id"), col("doc_id"),
+        (idf *
+          expr(s"tf * (${Bm25K1pm} + 1000) * 1000 * 1000000 div " +
+            s"(tf * 1000000 + ${Bm25K1pm} * (1000 - ${Bm25Bpm}) + " +
+            s"${Bm25K1pm} * ${Bm25Bpm} * " +
+            s"(len_d * 1000000000 div $avglenPpm) div 1000)"))
+          .as("contrib"))
+      .groupBy("query_id", "doc_id").agg(sum("contrib").as("score"))
+    graft.plans.TopK.perKey(scored, Seq("query_id"),
+        Seq(col("score").desc, col("doc_id").asc), k)
+      .select("query_id", "rank", "doc_id", "score")
   }
 
   /** The distinct (query_id, token) relation of the query docs. */
@@ -2266,13 +2299,10 @@ object TextOps {
 
   /** One BM25 scoring pass of `qterms` against the shared corpus
     * state — tf prefiltered by the broadcast term set, df only over
-    * the query vocabulary, the exact-integer contribution chain, and
-    * the k-bounded heap.
+    * the query vocabulary, then `bm25Rank`.
     */
   private[graft] def bm25Score(c: Bm25State, qterms: DataFrame,
       k: Int): DataFrame = {
-    val nDocs = c.nDocs
-    val avglenPpm = c.avglenPpm
     // df is aggregated ONLY over the query vocabulary — tf is
     // prefiltered by the broadcast term set, so the df stage is bounded
     // by (docs containing a query term), never the full vocabulary;
@@ -2282,22 +2312,10 @@ object TextOps {
         .persist(StorageLevel.MEMORY_AND_DISK))
     val qidf = qterms.join(
       tfq.groupBy("token").agg(count(lit(1)).as("df"))
-        .select(col("token"),
-          length(bin(expr(s"(2 * ($nDocs - df) + 1) div (2 * df + 1) + 1")))
-            .cast("long").as("idf_bits")),
+        .select(col("token"), idfBits(c.nDocs).as("idf_bits")),
       "token")
-    val scored = tfq.join(broadcast(qidf), "token")
-      .select(col("query_id"), col("doc_id"),
-        (col("idf_bits") *
-          expr(s"tf * (${Bm25K1pm} + 1000) * 1000 * 1000000 div " +
-            s"(tf * 1000000 + ${Bm25K1pm} * (1000 - ${Bm25Bpm}) + " +
-            s"${Bm25K1pm} * ${Bm25Bpm} * " +
-            s"(len_d * 1000000000 div $avglenPpm) div 1000)"))
-          .as("contrib"))
-      .groupBy("query_id", "doc_id").agg(sum("contrib").as("score"))
-    graft.plans.TopK.perKey(scored, Seq("query_id"),
-        Seq(col("score").desc, col("doc_id").asc), k)
-      .select("query_id", "rank", "doc_id", "score")
+    bm25Rank(tfq.join(broadcast(qidf), "token"), col("idf_bits"),
+      c.avglenPpm, k)
   }
 
   /** PRF geometry: feedback depth and expansion-term count. Same
@@ -2327,30 +2345,43 @@ object TextOps {
       nQueries: Long = Bm25Queries, fb: Int = PrfFeedbackDocs,
       ex: Int = PrfExpansionTerms): DataFrame = {
     val c = bm25Corpus(docs, nQueries)
-    val qt = bm25QueryTerms(docs, nQueries)
-    // ex = 0 is the identity: no expansion, one scoring pass — the
-    // spec's collapse law (TopK's heap needs k ≥ 1, so short-circuit)
-    if (ex == 0) return bm25Score(c, qt, k)
-    val fbDocs = bm25Score(c, qt, fb).select(col("query_id"), col("doc_id"))
-    val cand = c.tf.join(broadcast(fbDocs), "doc_id")
-      .groupBy("query_id", "token").agg(sum("tf").as("fbtf"))
-    val idf = c.tf
-      .join(broadcast(cand.select("token").distinct()), "token")
-      .groupBy("token").agg(count(lit(1)).as("df"))
-      .select(col("token"),
-        length(bin(expr(s"(2 * (${c.nDocs} - df) + 1) div (2 * df + 1) + 1")))
-          .cast("long").as("idf_bits"))
-    val expansion = graft.plans.TopK.perKey(
-        cand.join(broadcast(qt.withColumn("orig", lit(1L))),
-            Seq("query_id", "token"), "left")
-          .filter(col("orig").isNull)
-          .join(broadcast(idf), "token")
-          .select(col("query_id"), col("token"),
-            (col("fbtf") * col("idf_bits")).as("w")),
-        Seq("query_id"), Seq(col("w").desc, col("token").asc), ex)
-      .select("query_id", "token")
-    bm25Score(c, qt.unionByName(expansion).distinct(), k)
+    prfPasses(bm25QueryTerms(docs, nQueries), k, fb, ex, c.nDocs, c.tf,
+        _.groupBy("token").agg(count(lit(1)).as("df")))(
+      bm25Score(c, _, _))
   }
+
+  /** The PRF logic both forms share (`bm25Prf` over the cached corpus
+    * tf, `bm25PrfFromIndex` over the stored index): `ex` = 0 is the
+    * identity (one pass — the spec's collapse law; TopK's heap needs
+    * k ≥ 1); otherwise a feedback pass of depth `fb`, the feedback
+    * docs' terms from `pool` (rows carrying doc_id, token, tf) minus
+    * the original query terms, ranked by Σtf × idf_bits — `dfOf` turns
+    * the pool rows of the candidate vocabulary into (token, df) — and
+    * the final pass over `qt` ∪ the top `ex` expansion terms.
+    * `score(qterms, depth)` is the form's own scoring pass.
+    */
+  private def prfPasses(qt: DataFrame, k: Int, fb: Int, ex: Int,
+      nDocs: Long, pool: DataFrame, dfOf: DataFrame => DataFrame)(
+      score: (DataFrame, Int) => DataFrame): DataFrame =
+    if (ex == 0) score(qt, k)
+    else {
+      val fbDocs = score(qt, fb).select(col("query_id"), col("doc_id"))
+      val cand = pool.join(broadcast(fbDocs), "doc_id")
+        .groupBy("query_id", "token").agg(sum("tf").as("fbtf"))
+      val idf = dfOf(pool
+          .join(broadcast(cand.select("token").distinct()), "token"))
+        .select(col("token"), idfBits(nDocs).as("idf_bits"))
+      val expansion = graft.plans.TopK.perKey(
+          cand.join(broadcast(qt.withColumn("orig", lit(1L))),
+              Seq("query_id", "token"), "left")
+            .filter(col("orig").isNull)
+            .join(broadcast(idf), "token")
+            .select(col("query_id"), col("token"),
+              (col("fbtf") * col("idf_bits")).as("w")),
+          Seq("query_id"), Seq(col("w").desc, col("token").asc), ex)
+        .select("query_id", "token")
+      score(qt.unionByName(expansion).distinct(), k)
+    }
 
   /** Memo (`bm25prf`) of the DEFAULT exact-PRF ranking —
     * the suite's two most expensive gates (`text_bm25_prf` and the
@@ -2452,8 +2483,8 @@ object TextOps {
     * corpus is met ONLY through its persisted posting rows (`(token,
     * df, doc_id, tf)`) and forward index (`docLengths`); serving
     * re-tokenizes nothing but the ≤ `nQueries` query docs. Every
-    * surviving (term, doc) posting contributes the EXACT `bm25`
-    * integer arithmetic (df in the index is the true document
+    * surviving (term, doc) posting is scored by `bm25`'s own
+    * `bm25Rank` tail (df in the index is the true document
     * frequency even though lists are depth-capped); what the cap
     * costs is the PRUNED postings — a doc outside a term's top-k list
     * loses that term's contribution entirely, so a capped doc's score
@@ -2484,17 +2515,14 @@ object TextOps {
   private def lensStats(lens: DataFrame): (Long, Long) = {
     val st = lens.agg(count(lit(1)).as("n"),
       coalesce(sum("len_d"), lit(0L)).as("t")).collect()(0)
-    val nDocs = st.getLong(0)
-    val totalTokens = st.getLong(1)
-    (nDocs, math.max(1L, if (nDocs == 0) 1L
-      else totalTokens * 1000000L / nDocs))
+    (st.getLong(0), avglenPpmOf(st.getLong(0), st.getLong(1)))
   }
 
-  /** One index-bounded BM25 scoring pass — the shared tail of
-    * `bm25FromIndex` and both `bm25PrfFromIndex` passes: candidates =
-    * broadcast query terms ⋈ posting rows (query-vocab × depth,
-    * never corpus-sized), len_d streamed in from the forward index,
-    * the exact `bm25` integer contribution chain, a k-bounded heap.
+  /** One index-bounded BM25 scoring pass — `bm25FromIndex` and both
+    * `bm25PrfFromIndex` passes: candidates = broadcast query terms ⋈
+    * posting rows (query-vocab × depth, never corpus-sized), len_d
+    * streamed in from the forward index, idf from the stored df, then
+    * the same `bm25Rank` tail as the full-scan `bm25Score`.
     */
   private def bm25ScoreFromIndex(index: DataFrame, lens: DataFrame,
       nDocs: Long, avglenPpm: Long, qterms: DataFrame,
@@ -2502,19 +2530,8 @@ object TextOps {
     val cand = index.select(col("token"), col("df"), col("doc_id"),
         col("tf"))
       .join(broadcast(qterms), "token")
-    val scored = lens.join(broadcast(cand), "doc_id")
-      .select(col("query_id"), col("doc_id"),
-        (length(bin(expr(s"(2 * ($nDocs - df) + 1) div (2 * df + 1) + 1")))
-          .cast("long") *
-          expr(s"tf * (${Bm25K1pm} + 1000) * 1000 * 1000000 div " +
-            s"(tf * 1000000 + ${Bm25K1pm} * (1000 - ${Bm25Bpm}) + " +
-            s"${Bm25K1pm} * ${Bm25Bpm} * " +
-            s"(len_d * 1000000000 div $avglenPpm) div 1000)"))
-          .as("contrib"))
-      .groupBy("query_id", "doc_id").agg(sum("contrib").as("score"))
-    graft.plans.TopK.perKey(scored, Seq("query_id"),
-        Seq(col("score").desc, col("doc_id").asc), k)
-      .select("query_id", "rank", "doc_id", "score")
+    bm25Rank(lens.join(broadcast(cand), "doc_id"), idfBits(nDocs),
+      avglenPpm, k)
   }
 
   /** PSEUDO-RELEVANCE FEEDBACK SERVED ENTIRELY FROM THE STORED INDEX
@@ -2527,8 +2544,8 @@ object TextOps {
     * depth-capped list pruned the doc contributes nothing, the same
     * static-pruning semantics every capped contribution has), and
     * expansion idf comes from the STORED per-row true df — no df
-    * recount anywhere. Expansion ranking and both scoring passes use
-    * the exact `bm25Prf` integer arithmetic, so with depth ≥ max df
+    * recount anywhere. The passes and the expansion ranking are
+    * `bm25Prf`'s own `prfPasses` over this pool, so with depth ≥ max df
     * this serves bit-identically to `bm25Prf` (the uncapped-index
     * law, spec-pinned); at production depth the oracle applies the
     * same cap.
@@ -2545,32 +2562,10 @@ object TextOps {
       nQueries: Long = Bm25Queries, fb: Int = PrfFeedbackDocs,
       ex: Int = PrfExpansionTerms): DataFrame = {
     val (nDocs, avglenPpm) = lensStats(lens)
-    val qt = bm25QueryTerms(queryDocs, nQueries)
-    // ex = 0 is the identity: no expansion, one pass — bm25Prf's law
-    if (ex == 0)
-      return bm25ScoreFromIndex(index, lens, nDocs, avglenPpm, qt, k)
-    val fbDocs = bm25ScoreFromIndex(index, lens, nDocs, avglenPpm, qt, fb)
-      .select(col("query_id"), col("doc_id"))
-    val cand = index.join(broadcast(fbDocs), "doc_id")
-      .groupBy("query_id", "token").agg(sum("tf").as("fbtf"))
-    // stored true df → idf, restricted to the candidate vocabulary
-    val idf = index
-      .join(broadcast(cand.select("token").distinct()), "token")
-      .groupBy("token").agg(first("df").as("df"))
-      .select(col("token"),
-        length(bin(expr(s"(2 * ($nDocs - df) + 1) div (2 * df + 1) + 1")))
-          .cast("long").as("idf_bits"))
-    val expansion = graft.plans.TopK.perKey(
-        cand.join(broadcast(qt.withColumn("orig", lit(1L))),
-            Seq("query_id", "token"), "left")
-          .filter(col("orig").isNull)
-          .join(broadcast(idf), "token")
-          .select(col("query_id"), col("token"),
-            (col("fbtf") * col("idf_bits")).as("w")),
-        Seq("query_id"), Seq(col("w").desc, col("token").asc), ex)
-      .select("query_id", "token")
-    bm25ScoreFromIndex(index, lens, nDocs, avglenPpm,
-      qt.unionByName(expansion).distinct(), k)
+    // stored true df → idf: every posting row repeats its term's df
+    prfPasses(bm25QueryTerms(queryDocs, nQueries), k, fb, ex, nDocs, index,
+        _.groupBy("token").agg(first("df").as("df")))(
+      bm25ScoreFromIndex(index, lens, nDocs, avglenPpm, _, _))
   }
 
   /** DATASET MANIFEST over the curated corpus — the "dataset card"
@@ -2893,14 +2888,9 @@ object TextOps {
     require(dims >= 2 && dims <= (1 << 20),
       s"dims must be in [2, 2^20], got $dims")
     val nDocs = docs.count()
-    val tf = docs.select(col("doc_id"),
-        explode(tokens(col("text"))).as("token"))
-      .repartition(col("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+    val tf = termFreq(docs, _.repartition(col("token")))
     val idf = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      .select(col("token"),
-        length(bin(expr(s"(2 * ($nDocs - df) + 1) div (2 * df + 1) + 1")))
-          .cast("long").as("idf_bits"))
+      .select(col("token"), idfBits(nDocs).as("idf_bits"))
     import graft.functions.PolyHashFunctions.{poly_hash, poly_hash2}
     tf.join(idf, "token")
       .select(col("doc_id"),

@@ -409,14 +409,13 @@ object EventWindows {
       trailingDays: Int = ActiveTrailingDays): DataFrame = {
     require(trailingDays >= 1,
       s"trailingDays must be >= 1, got $trailingDays")
-    import graft.functions.PolyHashFunctions.{poly_hash, poly_hash2}
+    import graft.functions.PolyHashFunctions.poly_hash60
     val daySec = 86400L
     val u = col("user_id").cast("string")
     val rel = events.select(
       window(col("ts"), "1 day").getField("start").cast("long")
         .as("day_epoch"),
-      (poly_hash(u) * lit(graft.functions.PolyHashUtil.Mod2) +
-        poly_hash2(u)).cast("string").as("item"))
+      poly_hash60(u).cast("string").as("item"))
     val daily = graft.Caches.track(
       graft.operators.TextOps.hllBucketMax(rel, Seq("day_epoch"),
           col("item"))

@@ -234,9 +234,10 @@ object StreamDedup {
     * candidate chains collapse — see `bandKeysOf`).
     *
     * When `corpusKeys` carries the `lsh_params_fp` column `bandKeysOf`
-    * emits, every row is checked against the current constants — a
-    * mismatch (keys persisted by a build with different LSH
-    * parameters) raises rather than silently admitting near-dups. The
+    * emits, every row is checked against the current constants by
+    * `Stamps.stampGuard` — a mismatch (keys persisted by a build with
+    * different LSH parameters) raises rather than silently admitting
+    * near-dups. The
     * check is a constant comparison inside the existing projection:
     * no extra scan, no measurable cost. A bare 3-column relation
     * (pre-fingerprint persists) skips the check.
@@ -245,11 +246,9 @@ object StreamDedup {
     val fp = graft.operators.Dedup.LshParamsFingerprint
     val sigChecked =
       if (!corpusKeys.columns.contains("lsh_params_fp")) col("band_sig")
-      else when(col("lsh_params_fp") === lit(fp), col("band_sig"))
-        .otherwise(raise_error(concat(
-          lit("stored band keys were produced under different LSH " +
-            "parameters (fingerprint "), col("lsh_params_fp").cast("string"),
-          lit(s" != current $fp) — re-export bandKeysOf with this build"))))
+      else graft.operators.Stamps.stampGuard(col("band_sig"),
+        "lsh_params_fp", fp, "stored band keys were produced under " +
+          "different LSH parameters; re-export bandKeysOf with this build")
     val ck = corpusKeys.select(col("doc_id"), lit(0L).as("ts"),
       col("band_idx"), sigChecked.as("band_sig"))
     val fk = bandKeys(fresh.withColumn("__graft_ts", lit(1L)), "__graft_ts")

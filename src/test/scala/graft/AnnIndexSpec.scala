@@ -10,18 +10,8 @@ import org.apache.spark.sql.functions._
   */
 class AnnIndexSpec extends SparkSpec {
 
-  private def scalaFiles(f: java.io.File): Seq[java.io.File] =
-    if (f.isDirectory) f.listFiles.toSeq.sortBy(_.getName).flatMap(scalaFiles)
-    else if (f.getName.endsWith(".scala")) Seq(f)
-    else Nil
-
   test("src/main has one hash-prefix sample, one Lloyd loop, one stamp guard and one fingerprint fold") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
-    val sources = scalaFiles(root).map { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try f.getName -> src.mkString finally src.close()
-    }
+    val sources = SourceScan.mainSources
     // each pattern must match once, in the file that owns it
     val owners = Seq(
       "hash-prefix sample" ->
@@ -32,15 +22,27 @@ class AnnIndexSpec extends SparkSpec {
       "params fingerprint fold" -> ("""foldLeft\(1125899906842597L\)""".r,
         "Stamps.scala"))
     val problems = owners.flatMap { case (what, (re, owner)) =>
-      val sites = sources.flatMap { case (name, text) =>
-        re.findAllMatchIn(text).map { m =>
-          s"$name:${text.substring(0, m.start).count(_ == '\n') + 1}"
-        }
-      }
+      val sites = SourceScan.sites(sources, re)
       if (sites.size == 1 && sites.head.startsWith(owner + ":")) Nil
       else Seq(s"$what (owner $owner): ${sites.mkString(", ")}")
     }
     assert(problems.isEmpty, problems.mkString("; "))
+  }
+
+  test("src/main raises only in Stamps and in QuantileSketch.microOf's value-range guard") {
+    // a stored-stamp check goes through Stamps.stampGuard; microOf's
+    // overflow guard checks a value, not a stamp
+    val Raise = """raise_error\(""".r
+    val Def = """\bdef (\w+)""".r
+    val sites = SourceScan.mainSources.flatMap { case (name, text) =>
+      Raise.findAllMatchIn(text).map { m =>
+        val owner = Def.findAllMatchIn(text.substring(0, m.start)).toSeq
+          .lastOption.fold("")(_.group(1))
+        s"$name:$owner"
+      }
+    }
+    assert(sites.filterNot(_.startsWith("Stamps.scala:")) ===
+      Seq("QuantileSketch.scala:microOf"), sites.mkString(", "))
   }
 
   test("every stored-artifact params fingerprint keeps its value") {

@@ -104,20 +104,12 @@ class ConfsSpec extends SparkSpec {
   }
 
   test("src/main sets or unsets conf only in Confs and Tables.events") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.sortBy(_.getName).flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
     val Writes = """\.conf\.(set|unset)\(""".r
-    val hits = scalaFiles(root).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().zipWithIndex.collect {
+    val hits = SourceScan.mainSources.flatMap { case (file, text) =>
+      text.linesIterator.zipWithIndex.collect {
         case (line, i) if Writes.findFirstIn(line).isDefined =>
-          (f.getName, i + 1, line.trim)
+          (file, i + 1, line.trim)
       }.toList
-      finally src.close()
     }
     val stray = hits.filterNot { case (file, _, line) =>
       file == "Confs.scala" ||

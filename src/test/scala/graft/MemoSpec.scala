@@ -7,18 +7,7 @@ package graft
   */
 class MemoSpec extends SparkSpec {
 
-  private def mainSources: Seq[(String, String)] = {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.sortBy(_.getName).flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
-    scalaFiles(root).map { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try (f.getName, src.mkString) finally src.close()
-    }
-  }
+  import SourceScan.mainSources
 
   test("src/main builds PlanMemo instances only in PlanMemo.scala") {
     val New = """new\s+(graft\.)?PlanMemo\b""".r

@@ -12,21 +12,13 @@ import org.apache.spark.sql.functions._
 class SmallInputSpec extends SparkSpec {
 
   test("src/main has no per-operator small-input threshold outside SmallInput.scala") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.sortBy(_.getName).flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
     val Threshold = """\b(localThreshold|localMax|\w+LocalEdges|\w+LocalMax)\b|1L? << 25""".r
-    val found = scalaFiles(root).filterNot(_.getName == "SmallInput.scala")
-      .flatMap { f =>
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().zipWithIndex.collect {
+    val found = SourceScan.mainSources.filterNot(_._1 == "SmallInput.scala")
+      .flatMap { case (file, text) =>
+        text.linesIterator.zipWithIndex.collect {
           case (line, i) if Threshold.findFirstIn(line).isDefined =>
-            s"${f.getName}:${i + 1} ${line.trim}"
+            s"$file:${i + 1} ${line.trim}"
         }.toList
-        finally src.close()
       }
     assert(found.isEmpty,
       "size-gated operators ask SmallInput.admits: " + found.mkString("; "))
