@@ -37,6 +37,11 @@ object PolyHashUtil {
 
   def hash(s: UTF8String): Long = hash(s, Mult, Mod)
 
+  /** The 60-bit dual hash `hash(s) · Mod2 + hash(s, Mult2, Mod2)` —
+    * the driver-side value of `PolyHashFunctions.poly_hash60`.
+    */
+  def hash60(s: UTF8String): Long = hash(s) * Mod2 + hash(s, Mult2, Mod2)
+
   def hash(s: UTF8String, mult: Long, mod: Long): Long = {
     val str = s.toString
     var h = 0L

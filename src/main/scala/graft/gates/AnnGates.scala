@@ -1233,8 +1233,7 @@ object AnnGates {
     // the profileHll pre-mix: h1·Mod2 + h2 re-rendered and re-hashed
     // (raw parity of a short-string rolling hash is affine in the
     // trailing digit — see Similarity.rpSign)
-    val mixed = s"CAST((${phSql(cell)} * ${graft.functions.PolyHashUtil.Mod2} " +
-      s"+ ${phSql2(cell)}) AS VARCHAR)"
+    val mixed = s"CAST((${phSql60(cell)}) AS VARCHAR)"
     s"sg AS (SELECT t.i, u.j, CASE WHEN ${phSql(mixed)} % 2 = 0 " +
       "THEN 1 ELSE -1 END AS sgn " +
       s"FROM range(0, $d) t(i), range(0, $p) u(j)), " +

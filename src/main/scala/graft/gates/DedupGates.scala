@@ -29,9 +29,7 @@ object DedupGates {
       {
         val k = graft.operators.Dedup.SpanGramChars
         s"WITH g AS (SELECT doc_id, i - 1 AS pos, " +
-          s"${phSql(s"substr(text, i::INT, $k)")} * " +
-          s"${graft.functions.PolyHashUtil.Mod2} + " +
-          s"${phSql2(s"substr(text, i::INT, $k)")} AS h " +
+          s"${phSql60(s"substr(text, i::INT, $k)")} AS h " +
           s"FROM (SELECT doc_id, text, unnest(range(1, length(text) - $k + 2)) AS i " +
           s"FROM documents WHERE length(text) >= $k)), " +
           "rep AS (SELECT h FROM g GROUP BY h HAVING COUNT(*) >= 2), " +
@@ -54,9 +52,7 @@ object DedupGates {
       {
         val k = graft.operators.Dedup.SpanGramChars
         s"WITH g AS (SELECT doc_id, i - 1 AS pos, " +
-          s"${phSql(s"substr(text, i::INT, $k)")} * " +
-          s"${graft.functions.PolyHashUtil.Mod2} + " +
-          s"${phSql2(s"substr(text, i::INT, $k)")} AS h " +
+          s"${phSql60(s"substr(text, i::INT, $k)")} AS h " +
           s"FROM (SELECT doc_id, text, unnest(range(1, length(text) - $k + 2)) AS i " +
           s"FROM documents WHERE length(text) >= $k)), " +
           "rep AS (SELECT h FROM g GROUP BY h HAVING COUNT(*) >= 2), " +
@@ -84,9 +80,7 @@ object DedupGates {
       {
         val k = graft.operators.Dedup.SpanGramChars
         s"WITH g AS (SELECT doc_id, i - 1 AS pos, " +
-          s"${phSql(s"substr(text, i::INT, $k)")} * " +
-          s"${graft.functions.PolyHashUtil.Mod2} + " +
-          s"${phSql2(s"substr(text, i::INT, $k)")} AS h " +
+          s"${phSql60(s"substr(text, i::INT, $k)")} AS h " +
           s"FROM (SELECT doc_id, text, unnest(range(1, length(text) - $k + 2)) AS i " +
           s"FROM documents WHERE length(text) >= $k)), " +
           "hits AS (SELECT doc_id, pos FROM (" +

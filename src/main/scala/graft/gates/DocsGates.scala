@@ -172,11 +172,9 @@ object DocsGates {
         // renderings are affine under PolyHash; re-render the combined
         // hash so the in-sketch pass gets full mod-reduction mixing)
         s"WITH raw_items AS ($branches), " +
-          s"items AS (SELECT c, CAST(${phSql("item")} * " +
-          s"${graft.functions.PolyHashUtil.Mod2} + ${phSql2("item")} " +
-          "AS VARCHAR) AS item FROM raw_items), " +
-          s"h AS (SELECT c, ${phSql("item")} * ${graft.functions.PolyHashUtil.Mod2} + " +
-          s"${phSql2("item")} AS h FROM items), " +
+          s"items AS (SELECT c, CAST(${phSql60("item")} AS VARCHAR) " +
+          "AS item FROM raw_items), " +
+          s"h AS (SELECT c, ${phSql60("item")} AS h FROM items), " +
           s"br AS (SELECT c, h % $m AS bucket, h // $m AS rest FROM h), " +
           s"rh AS (SELECT c, bucket, CASE WHEN rest = 0 THEN $cap ELSE " +
           s"LEAST($cap, bit_count((rest & (-rest)) - 1) + 1) END AS rho FROM br), " +

@@ -129,8 +129,7 @@ object EventGates {
         "WITH e AS (SELECT CAST(extract(epoch FROM " +
           "time_bucket(INTERVAL 1 HOUR, ts)) AS BIGINT) AS hour_epoch, " +
           "CAST(user_id AS VARCHAR) AS uid FROM events), " +
-          s"h AS (SELECT hour_epoch, ${phSql("uid")} * " +
-          s"${graft.functions.PolyHashUtil.Mod2} + ${phSql2("uid")} AS h FROM e), " +
+          s"h AS (SELECT hour_epoch, ${phSql60("uid")} AS h FROM e), " +
           s"br AS (SELECT hour_epoch, h % $m AS bucket, h // $m AS rest FROM h), " +
           s"rh AS (SELECT hour_epoch, bucket, CASE WHEN rest = 0 THEN $cap ELSE " +
           s"LEAST($cap, bit_count((rest & (-rest)) - 1) + 1) END AS rho FROM br), " +
@@ -617,13 +616,10 @@ object EventGates {
         val cap = graft.operators.TextOps.HllCap
         val p2 = (1L << cap).toDouble
         val days = graft.streaming.EventWindows.ActiveTrailingDays
-        val mod2 = graft.functions.PolyHashUtil.Mod2
         "WITH e AS (SELECT (epoch_us(ts) // 86400000000) * 86400 AS d, " +
           "CAST(user_id AS VARCHAR) AS u FROM events), " +
-          s"pm AS (SELECT d, CAST(${phSql("u")} * $mod2 + ${phSql2("u")} " +
-          "AS VARCHAR) AS item FROM e), " +
-          s"h AS (SELECT d, ${phSql("item")} * $mod2 + ${phSql2("item")} " +
-          "AS h FROM pm), " +
+          s"pm AS (SELECT d, CAST(${phSql60("u")} AS VARCHAR) AS item FROM e), " +
+          s"h AS (SELECT d, ${phSql60("item")} AS h FROM pm), " +
           s"br AS (SELECT d, h % $m AS bucket, h // $m AS rest FROM h), " +
           s"rh AS (SELECT d, bucket, CASE WHEN rest = 0 THEN $cap ELSE " +
           s"LEAST($cap, bit_count((rest & (-rest)) - 1) + 1) END AS rho FROM br), " +

@@ -50,6 +50,12 @@ object GateSql {
       s"c -> unicode(c)::BIGINT)), (a, x) -> (a * $m + x) % $p) END)"
   }
 
+  /** The 60-bit dual PolyHash `phSql(e) · Mod2 + phSql2(e)` (mirrors
+    * poly_hash60 — both folds of the same string, < 2^60, one BIGINT).
+    */
+  private[gates] def phSql60(e: String): String =
+    s"${phSql(e)} * ${graft.functions.PolyHashUtil.Mod2} + ${phSql2(e)}"
+
   /** Distinct word-3-gram shingle hashes per doc (mirrors
     * Dedup.shingleHashes / minhash hs arrays) over any doc relation.
     */

@@ -869,7 +869,7 @@ object GraphGates {
       // takes the gated local path). Stride 16: the r21 A/B of this
       // gate alone, warm, with E≤s built by doubling, measured stride
       // 4 = 3.78 s, 8 = 2.3-3.1 s, 16 = 1.85 s, 32 = 2.55 s. The
-      // per-sweep plumbing is narrowed by hopDistancesDeduped's
+      // per-sweep plumbing is narrowed by GraphOps.bfsSweeps'
       // tiny-regime conf scope.
       SmallInput.scoped(0L) {
         GraphOps.hopDistances(e, seeds, HopDeepMax, hopStride = 16)

@@ -361,9 +361,7 @@ object TextGates {
         val k = graft.operators.TextOps.WinnowGramChars
         val w = graft.operators.TextOps.WinnowWindow
         s"WITH g AS (SELECT doc_id, i - 1 AS pos, " +
-          s"${phSql(s"substr(text, i::INT, $k)")} * " +
-          s"${graft.functions.PolyHashUtil.Mod2} + " +
-          s"${phSql2(s"substr(text, i::INT, $k)")} AS h " +
+          s"${phSql60(s"substr(text, i::INT, $k)")} AS h " +
           s"FROM (SELECT doc_id, text, unnest(range(1, length(text) - $k + 2)) AS i " +
           s"FROM documents WHERE length(text) >= $k)), " +
           "m AS (SELECT doc_id, pos, MIN(h) OVER (PARTITION BY doc_id " +
@@ -935,8 +933,7 @@ object TextGates {
         val p2 = (1L << cap).toDouble // 2^cap, exact in double
         s"WITH tok AS (SELECT unnest(regexp_extract_all(text, '\\S+')) AS token " +
           "FROM documents), " +
-          s"h AS (SELECT ${phSql("token")} * ${graft.functions.PolyHashUtil.Mod2} + " +
-          s"${phSql2("token")} AS h FROM tok), " +
+          s"h AS (SELECT ${phSql60("token")} AS h FROM tok), " +
           s"br AS (SELECT h % $m AS bucket, h // $m AS rest FROM h), " +
           s"rh AS (SELECT bucket, CASE WHEN rest = 0 THEN $cap ELSE " +
           s"LEAST($cap, bit_count((rest & (-rest)) - 1) + 1) END AS rho FROM br), " +
@@ -1056,7 +1053,6 @@ object TextGates {
         val m = graft.operators.TextOps.HllBuckets
         val cap = graft.operators.TextOps.HllCap
         val p2 = (1L << cap).toDouble
-        val mod2 = graft.functions.PolyHashUtil.Mod2
         // one fixed-order float expression per estimate row — identical
         // to hllFinalize's ((alpha · m²) · 2^cap) / harmonic chain
         val estExpr = s"0.7213 / (1.0 + 1.079 / ${m.toDouble}) * " +
@@ -1064,8 +1060,7 @@ object TextGates {
           s"CAST(sp + ($m - nz) * (1::BIGINT << $cap) AS DOUBLE)"
         s"WITH tok AS (SELECT source, unnest(regexp_extract_all(text, '\\S+')) " +
           "AS token FROM documents), " +
-          s"h AS (SELECT source, ${phSql("token")} * $mod2 + ${phSql2("token")} " +
-          "AS h FROM tok), " +
+          s"h AS (SELECT source, ${phSql60("token")} AS h FROM tok), " +
           s"br AS (SELECT source, h % $m AS bucket, h // $m AS rest FROM h), " +
           s"rh AS (SELECT source, bucket, CASE WHEN rest = 0 THEN $cap ELSE " +
           s"LEAST($cap, bit_count((rest & (-rest)) - 1) + 1) END AS rho FROM br), " +

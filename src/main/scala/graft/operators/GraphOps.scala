@@ -70,12 +70,16 @@ object GraphOps {
     * `edges(s, d)` relation) land on one entry. Measured at sf0.1:
     * the family's bench sum 11.7 → 6.1 s.
     */
-  def weightedEdgesShared(e: DataFrame): DataFrame = {
+  def weightedEdgesShared(e: DataFrame): DataFrame =
+    weightedEdgesCounted(e)._1
+
+  /** `weightedEdgesShared` with the artifact's row count, banked by the
+    * checkpoint's forcing count: the traversal twins' gate probe reads
+    * it instead of running a count job per build.
+    */
+  private def weightedEdgesCounted(e: DataFrame): (DataFrame, Long) = {
     val base = e.select(col("src"), col("dst"))
-    graft.PlanMemo.getOrBuild(base, "wedges") {
-      org.apache.spark.sql.graft.ColumnBridge
-        .statsFreeLocalCheckpoint(weightedEdges(base))
-    }
+    graft.PlanMemo.getOrBuild(base, "wedges")(ckCounted(weightedEdges(base)))
   }
 
   /** Memo (`dedges`) of the DISTINCT DIRECTED edge relation — the
@@ -352,30 +356,62 @@ object GraphOps {
     * unnecessary.
     */
   def pageRank(e: DataFrame, iters: Int = PageRankIters,
-      scale: Long = PageRankScale): DataFrame = {
+      scale: Long = PageRankScale): DataFrame =
+    pageRankSweeps(distinctEdgesShared(e)._1, None, None, iters, scale)
+
+  /** The one PageRank sweep loop behind `pageRank`,
+    * `pageRankPersonalized` and `pageRankWeighted`, over an edge
+    * relation `(src, dst[, weight])`. Each vertex truncates its rank by
+    * its out-weight (`weight` summed, or the out-degree when `weight`
+    * is None) on the vertex-sized relation, every edge carries that
+    * quotient (times its weight), one groupBy(dst) sums the inbound
+    * mass, and the damping update adds the restart term: every vertex's
+    * when `seeds` is None, only the seed set's otherwise (the seed flag
+    * `s` rides along the vertex relation). Initial rank is `scale` on
+    * the vertices that restart. `edgeRel` is taken by name so the
+    * parameter checks run before its memo builds.
+    */
+  private def pageRankSweeps(edgeRel: => DataFrame, weight: Option[String],
+      seeds: Option[DataFrame], iters: Int, scale: Long): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(scale > 0, s"scale must be positive, got $scale")
-    val (dedges, _) = distinctEdgesShared(e)
-    val verts = dedges.select(col("src").as("v"))
-      .union(dedges.select(col("dst").as("v"))).distinct()
-    val deg = dedges.groupBy(col("src").as("v"))
-      .agg(count(lit(1)).as("d"))
-    var ranks = verts.withColumn("r", lit(scale))
+    val edges = edgeRel
+    import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, Literal}
+    import org.apache.spark.sql.graft.ColumnBridge
+    val allVerts = edges.select(col("src").as("v"))
+      .union(edges.select(col("dst").as("v"))).distinct()
+    // `restart` is the vertex's share of the restart term (0 or 1)
+    val (verts, restart) = seeds match {
+      case None => (allVerts, lit(1L))
+      case Some(sd) => (allVerts.join(
+          sd.select(col("v")).distinct().withColumn("s", lit(1L)),
+          Seq("v"), "left")
+        .select(col("v"), coalesce(col("s"), lit(0L)).as("s")), col("s"))
+    }
+    val carried = verts.columns.toSeq.map(col)
+    val outW = edges.groupBy(col("src").as("v"))
+      .agg(weight.fold(count(lit(1)))(w => sum(col(w))).as("d"))
+    var ranks = verts.select(carried :+ (restart * scale).as("r"): _*)
     for (_ <- 1 to iters) {
-      // per-out-edge contribution is computed on the VERTEX-sized
-      // relation (ranks ⋈ deg) before touching edges — the edge-sized
-      // join runs once per sweep, not twice; the identical dedges
-      // shuffle is exchange-reused across sweeps within the action
-      val contrib = ranks.join(deg, "v")
-        .select(col("v").as("src"), expr("r div d").as("c"))
-      val inbound = dedges
-        .join(contrib, "src")
-        .select(col("dst").as("v"), col("c"))
+      // per-out-edge quotient is computed on the VERTEX-sized relation
+      // (ranks ⋈ outW) before touching edges — the edge-sized join runs
+      // once per sweep, not twice; the identical edge shuffle is
+      // exchange-reused across sweeps within the action. Truncating
+      // BEFORE the weight multiply keeps every intermediate ≤ r.
+      val quot = ranks.join(outW, "v")
+        .select(col("v").as("src"), expr("r div d").as("q"))
+      val inbound = edges
+        .join(quot, "src")
+        .select(col("dst").as("v"),
+          weight.fold(col("q"))(w => col("q") * col(w)).as("c"))
         .groupBy("v").agg(sum(col("c")).as("m"))
+      // (85·m) div 100 as an IntegralDivide: `div` keeps LongType, `/`
+      // would detour through doubles and break exactness past 2^53
+      val walked = ColumnBridge.column(IntegralDivide(ColumnBridge.expression(
+        lit(85L) * coalesce(col("m"), lit(0L))), Literal(100L)))
       ranks = verts.join(inbound, Seq("v"), "left")
-        .select(col("v"),
-          (lit(15L * scale / 100L) +
-            (lit(85L) * coalesce(col("m"), lit(0L))).divLong(100L)).as("r"))
+        .select(carried :+
+          (restart * lit(15L * scale / 100L) + walked).as("r"): _*)
     }
     ranks.select(col("v").as("vertex"), col("r").cast("long").as("rank_fp"))
   }
@@ -402,35 +438,9 @@ object GraphOps {
     * join + one map-side-combined aggregation.
     */
   def pageRankPersonalized(e: DataFrame, seeds: DataFrame,
-      iters: Int = PageRankIters, scale: Long = PageRankScale): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(scale > 0, s"scale must be positive, got $scale")
-    val (dedges, _) = distinctEdgesShared(e)
-    val verts = dedges.select(col("src").as("v"))
-      .union(dedges.select(col("dst").as("v"))).distinct()
-    val deg = dedges.groupBy(col("src").as("v"))
-      .agg(count(lit(1)).as("d"))
-    val vflag = verts.join(
-        seeds.select(col("v")).distinct().withColumn("s", lit(1L)),
-        Seq("v"), "left")
-      .select(col("v"), coalesce(col("s"), lit(0L)).as("s"))
-    var ranks = vflag.select(col("v"), (col("s") * scale).as("r"),
-      col("s"))
-    for (_ <- 1 to iters) {
-      val contrib = ranks.join(deg, "v")
-        .select(col("v").as("src"), expr("r div d").as("c"))
-      val inbound = dedges
-        .join(contrib, "src")
-        .select(col("dst").as("v"), col("c"))
-        .groupBy("v").agg(sum(col("c")).as("m"))
-      ranks = vflag.join(inbound, Seq("v"), "left")
-        .select(col("v"),
-          (col("s") * lit(15L * scale / 100L) +
-            (lit(85L) * coalesce(col("m"), lit(0L))).divLong(100L)).as("r"),
-          col("s"))
-    }
-    ranks.select(col("v").as("vertex"), col("r").cast("long").as("rank_fp"))
-  }
+      iters: Int = PageRankIters, scale: Long = PageRankScale): DataFrame =
+    pageRankSweeps(distinctEdgesShared(e)._1, None, Some(seeds), iters,
+      scale)
 
   /** WEIGHTED fixed-point PageRank — the bag-semantics twin of
     * `pageRank`: a repeated edge is WEIGHT, not noise (on the derived
@@ -451,29 +461,8 @@ object GraphOps {
     * by distinct edges even when the bag is duplicate-heavy.
     */
   def pageRankWeighted(e: DataFrame, iters: Int = PageRankIters,
-      scale: Long = PageRankScale): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(scale > 0, s"scale must be positive, got $scale")
-    val we = weightedEdgesShared(e)
-    val verts = we.select(col("src").as("v"))
-      .union(we.select(col("dst").as("v"))).distinct()
-    val totW = we.groupBy(col("src").as("v"))
-      .agg(sum(col("w")).as("tw"))
-    var ranks = verts.withColumn("r", lit(scale))
-    for (_ <- 1 to iters) {
-      val quot = ranks.join(totW, "v")
-        .select(col("v").as("src"), expr("r div tw").as("q"))
-      val inbound = we
-        .join(quot, "src")
-        .select(col("dst").as("v"), (col("q") * col("w")).as("c"))
-        .groupBy("v").agg(sum(col("c")).as("m"))
-      ranks = verts.join(inbound, Seq("v"), "left")
-        .select(col("v"),
-          (lit(15L * scale / 100L) +
-            (lit(85L) * coalesce(col("m"), lit(0L))).divLong(100L)).as("r"))
-    }
-    ranks.select(col("v").as("vertex"), col("r").cast("long").as("rank_fp"))
-  }
+      scale: Long = PageRankScale): DataFrame =
+    pageRankSweeps(weightedEdgesShared(e), Some("w"), None, iters, scale)
 
   /** WEAKLY-connected components over the follower graph — "who is in
     * the same social universe", the classic reachability partition the
@@ -493,8 +482,8 @@ object GraphOps {
     * bounded by the (deduplicated) edge relation, no giant-component
     * partition funnel. Duplicate and self edges are collapsed/ignored
     * by the kernel (component structure is invariant under both).
-    */
-  /** Memo (`components`) of the components labeling — `graph_components`
+    *
+    * Memo (`components`) of the components labeling — `graph_components`
     * and `graph_component_sizes` resolve the IDENTICAL contraction
     * from the identical sparsified edge relation back to back (the
     * sizes gate is two tiny aggregations over the labeling), so the
@@ -532,33 +521,6 @@ object GraphOps {
   val KCoreK = 35
   val KCoreMaxRounds = 12
 
-  /** k-CORE of the undirected simple graph (Seidman 1983): the maximal
-    * subgraph in which every vertex keeps degree ≥ k — the standard
-    * "dense enough to matter" prefilter before community/motif work,
-    * and the graph twin of quality-thresholding a corpus. Returns one
-    * `(node_id, degree)` row per surviving vertex with its WITHIN-CORE
-    * degree (all ≥ k; empty when no core exists).
-    *
-    * Iterative peeling as repeated relational algebra: symmetrize +
-    * simplify the bag ONCE (both orientations, self-loops dropped,
-    * duplicates collapsed — so degree is a plain COUNT per src over
-    * the undirected relation), then each round recomputes degrees and
-    * LEFT SEMI-joins the edge relation down to endpoints of degree
-    * ≥ k. The edge count is strictly decreasing while live, so
-    * convergence is a count-equality check on the state each round
-    * checkpoints anyway — no join-based change detection. Exceeding
-    * `maxRounds` raises rather than returning a non-fixpoint
-    * (components/SCC convention).
-    *
-    * Scale shape: state is the shrinking undirected edge relation;
-    * each round is one map-side-combined degree aggregation
-    * (vertex-sized output) + two semi-join filters — no vertex ever
-    * buffers its neighborhood, no global sort, and the quadratic
-    * neighborhood-materialization a collect_set formulation would pay
-    * on hub vertices never appears. Loop states go through the
-    * stats-free local checkpoint (see `ck`) with the superseded frame
-    * released each round.
-    */
   /** The checkpointed symmetrize+simplify shared by the peeling
     * operators: both orientations, self-loops dropped, duplicates
     * collapsed; returns (state, edge count).
@@ -676,6 +638,33 @@ object GraphOps {
     (sym.toDF("src", "dst"), sym.size.toLong)
   }
 
+  /** k-CORE of the undirected simple graph (Seidman 1983): the maximal
+    * subgraph in which every vertex keeps degree ≥ k — the standard
+    * "dense enough to matter" prefilter before community/motif work,
+    * and the graph twin of quality-thresholding a corpus. Returns one
+    * `(node_id, degree)` row per surviving vertex with its WITHIN-CORE
+    * degree (all ≥ k; empty when no core exists).
+    *
+    * Iterative peeling as repeated relational algebra: symmetrize +
+    * simplify the bag ONCE (both orientations, self-loops dropped,
+    * duplicates collapsed — so degree is a plain COUNT per src over
+    * the undirected relation), then each round recomputes degrees and
+    * LEFT SEMI-joins the edge relation down to endpoints of degree
+    * ≥ k. The edge count is strictly decreasing while live, so
+    * convergence is a count-equality check on the state each round
+    * checkpoints anyway — no join-based change detection. Exceeding
+    * `maxRounds` raises rather than returning a non-fixpoint
+    * (components/SCC convention).
+    *
+    * Scale shape: state is the shrinking undirected edge relation;
+    * each round is one map-side-combined degree aggregation
+    * (vertex-sized output) + two semi-join filters — no vertex ever
+    * buffers its neighborhood, no global sort, and the quadratic
+    * neighborhood-materialization a collect_set formulation would pay
+    * on hub vertices never appears. Loop states go through the
+    * stats-free local checkpoint (see `ck`) with the superseded frame
+    * released each round.
+    */
   def kCore(e: DataFrame, k: Int = KCoreK,
       maxRounds: Int = KCoreMaxRounds): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
@@ -969,29 +958,10 @@ object GraphOps {
   val LinkPredMidCap = 100L
   val LinkPredK = 3
 
-  /** LINK PREDICTION by degree-capped common-neighbor Jaccard: for
-    * each vertex, the top-k non-adjacent vertices ranked by
-    * `jacc_ppm = shared·1e6 div (deg(a) + deg(b) − shared)` where
-    * `shared` counts common neighbors reached through middles of
-    * degree ≤ `midMaxDeg` — the classic neighborhood-overlap
-    * recommender ("accounts you may know", co-purchase suggestions).
-    *
-    * The middle-degree cap is the SCALE decision, not a shortcut: an
-    * uncapped hub of degree d manufactures d² candidate pairs (the
-    * path2 quadratic) while contributing near-zero signal — sharing a
-    * celebrity neighbor predicts nothing. Capping middles bounds the
-    * candidate join at midMaxDeg × |und| rows and is the standard
-    * trade every production link-prediction pipeline makes; the cap
-    * only affects WHICH common neighbors count (the `shared`
-    * numerator), denominators use full degrees. Deterministic by
-    * construction — integer scores, (jacc_ppm desc, candidate asc)
-    * ranking through TopKPerKey, each unordered pair scored once and
-    * mirrored.
-    */
   /** Shared capped common-neighbor machinery — the (und, deg, counts)
     * triple `linkPrediction` and `tieStrength` both derive:
-    * `counts(va, vb, shared)` is the capped-middle self-join. Kept
-    * LAZY deliberately — a PlanMemo checkpoint was measured SLOWER
+    * `counts(va, vb, shared)` is the capped-middle self-join. It was
+    * first kept LAZY — a PlanMemo checkpoint was measured SLOWER
     * here (link_prediction 4.3 → 9.6 s at sf0.1): the counts relation
     * is pair-sized, so eagerly materializing it costs more than the
     * cross-gate reuse saves, and the stats-free barrier also robs the
@@ -999,8 +969,8 @@ object GraphOps {
     * pays only for artifacts that are SMALL relative to their build
     * (graphs' top-k rows, cluster labels, σ layers) — not for wide
     * intermediates that pipeline well.
-    */
-  /** Memo (`ccn`) of the capped-common-neighbor state — r17 revisit of
+    *
+    * Memo (`ccn`) of the capped-common-neighbor state — r17 revisit of
     * the r16 memo rejection: checkpointing `counts` inside
     * linkPrediction alone measured SLOWER (4.3 → 9.6 s, one consumer
     * pays the full materialization it would otherwise stream into
@@ -1049,6 +1019,25 @@ object GraphOps {
     (und, deg, counts)
   }
 
+  /** LINK PREDICTION by degree-capped common-neighbor Jaccard: for
+    * each vertex, the top-k non-adjacent vertices ranked by
+    * `jacc_ppm = shared·1e6 div (deg(a) + deg(b) − shared)` where
+    * `shared` counts common neighbors reached through middles of
+    * degree ≤ `midMaxDeg` — the classic neighborhood-overlap
+    * recommender ("accounts you may know", co-purchase suggestions).
+    *
+    * The middle-degree cap is the SCALE decision, not a shortcut: an
+    * uncapped hub of degree d manufactures d² candidate pairs (the
+    * path2 quadratic) while contributing near-zero signal — sharing a
+    * celebrity neighbor predicts nothing. Capping middles bounds the
+    * candidate join at midMaxDeg × |und| rows and is the standard
+    * trade every production link-prediction pipeline makes; the cap
+    * only affects WHICH common neighbors count (the `shared`
+    * numerator), denominators use full degrees. Deterministic by
+    * construction — integer scores, (jacc_ppm desc, candidate asc)
+    * ranking through TopKPerKey, each unordered pair scored once and
+    * mirrored.
+    */
   def linkPrediction(e: DataFrame, midMaxDeg: Long = LinkPredMidCap,
       k: Int = LinkPredK): DataFrame = {
     val (und, deg, cand) = cappedCommonNeighbors(e, midMaxDeg)
@@ -1643,13 +1632,12 @@ object GraphOps {
     // `SmallInput.scoped(0)` so the DISTRIBUTED sweep loop, the stride
     // compaction and the budget exit stay on the hash-checked path.
     if (SmallInput.admits(nBig, SmallInput.TraversalEdges)) {
-      val pairs = big.collect().map(r => (r.getLong(0), r.getLong(1)))
       val seeds = sources.select(col("v")).distinct().collect()
         .map(_.getLong(0))
-      return hopsLocal(e.sparkSession, pairs, seeds, maxHops)
+      return hopsLocal(e.sparkSession, edgeAdjacency(big), seeds, maxHops)
     }
-    hopDistancesDeduped(big, sources, maxHops, hopStride,
-      knownCount = nBig)
+    bfsSweeps(big, sources.select(col("v")).distinct(), Nil, maxHops,
+      hopStride, knownCount = nBig)
   }
 
   /** The driver-side twin of the BFS sweep: min hop distance from the
@@ -1657,10 +1645,9 @@ object GraphOps {
     * seeds included, the distributed frame's contract), early exit on
     * an empty frontier.
     */
-  private def hopsLocal(s: SparkSession, pairs: Array[(Long, Long)],
+  private def hopsLocal(s: SparkSession, adj: Map[Long, Array[Long]],
       seeds: Array[Long], maxHops: Int): DataFrame = {
     import s.implicits._
-    val adj = pairs.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
     val dist = scala.collection.mutable.Map[Long, Long]()
     seeds.foreach(dist(_) = 0L)
     var frontier: Array[Long] = seeds.distinct
@@ -1674,15 +1661,20 @@ object GraphOps {
     dist.toSeq.sorted.toDF("vertex", "dist")
   }
 
-  /** The sweep loop over an ALREADY deduped-and-persisted edge
-    * relation — shared so a multi-run caller pays the edge
-    * distinct/cache ONCE instead of once per run; the input cache is
-    * never unpersisted here (it is memo-owned at the only call site).
-    * `knownCount ≥ 0` is the input's row count when the caller
-    * already knows it (the memo banks it), skipping a count job.
+  /** The one BFS frontier-sweep loop (see `hopDistances` for the
+    * sweep, stride and compaction design) over an ALREADY deduped edge
+    * relation that the caller's memo owns — it is never unpersisted
+    * here. `seeds` holds the `keys :+ "v"` start rows; each `keys`
+    * value labels an independent BFS carried in the same frontier:
+    * `Nil` for `hopDistances`' one multi-source BFS, `Seq("seed")` for
+    * the sampled family's one-BFS-per-source (`labeledHopDistances`).
+    * Returns `keys :+ vertex, dist`. The visited check is the folded
+    * sentinel-min election for every labeling. `knownCount ≥ 0` is the
+    * edge count when the caller already holds it (the memo banks it),
+    * skipping a count job when `hopStride` > 1 sizes the precompute.
     */
-  private[graft] def hopDistancesDeduped(big: DataFrame,
-      sources: DataFrame, maxHops: Int, hopStride: Int,
+  private def bfsSweeps(edges: DataFrame, seeds: DataFrame,
+      keys: Seq[String], maxHops: Int, hopStride: Int,
       knownCount: Long = -1L): DataFrame = {
     require(maxHops >= 0 && maxHops <= 1000,
       s"maxHops must be in [0, 1000], got $maxHops")
@@ -1698,22 +1690,15 @@ object GraphOps {
     // sweeps the plain persisted input. Same sizing you'd do on a
     // cluster: partition count follows data size, not the session
     // default.
-    val (edges, targetParts) =
-      if (hopStride == 1) (big, 0L)
-      else {
-        // the count is usually BANKED by the distinct-edge memo — a
-        // caller that already knows it passes it in, skipping one
-        // count job + plan per invocation
-        val nEdges = if (knownCount >= 0L) knownCount else big.count()
-        val parts = math.max(1L, nEdges / 32768L)
-        // no re-cached coalesced copy anymore: after the E≤s relation
-        // is built (itself coalesced to `parts`), the sweeps scan ONLY
-        // that relation — the raw cache is read exactly once, inside
-        // the build's coalesced tasks, so a right-sized copy of the
-        // input would be one extra plan + job + resident copy per
-        // invocation for nothing.
-        (big, parts)
-      }
+    // The count is usually BANKED by the distinct-edge memo — a caller
+    // that already knows it passes it in, skipping one count job + plan
+    // per invocation. No re-cached coalesced copy: after the E≤s
+    // relation is built (itself coalesced to `targetParts`), the
+    // sweeps scan ONLY that relation — the raw cache is read exactly
+    // once, inside the build's coalesced tasks.
+    val targetParts =
+      if (hopStride == 1) 0L
+      else math.max(1L, (if (knownCount >= 0L) knownCount else edges.count()) / 32768L)
     // TINY-REGIME PLUMBING SCOPE: in the deep-stride regime over a
     // sub-128k-edge relation the per-super-sweep cost is pure fixed
     // overhead — 32-bucket shuffles and AQE's per-stage re-planning
@@ -1734,7 +1719,7 @@ object GraphOps {
       if (tinyScope)
         graft.Confs.TinyRegime :+ ("spark.sql.codegen.wholeStage" -> "false")
       else Nil
-    graft.Confs.scoped(big.sparkSession, scope: _*) {
+    graft.Confs.scoped(edges.sparkSession, scope: _*) {
     // the multi-hop relation for stride > 1 (see docstring): E≤s =
     // distinct (src, dst, k) k-step pairs for k = 1..s, built by
     // DOUBLING — E≤(m+j) = E≤m ∪ (E_m ∘ E≤j, k += m) with j =
@@ -1786,8 +1771,8 @@ object GraphOps {
         }
         cur
       }
-    val (seed, nSeeds) = ckCounted(sources.select(col("v")).distinct()
-      .withColumn("dist", lit(0L)))
+    val keyCols = keys.map(col)
+    val (seed, nSeeds) = ckCounted(seeds.withColumn("dist", lit(0L)))
     // the distance relation is the UNION of checkpointed frames —
     // never re-checkpointed per sweep (that would copy O(reached)
     // rows every sweep; only the O(new layers) frame is new work). The
@@ -1795,6 +1780,12 @@ object GraphOps {
     // width stays bounded at deep hop budgets.
     var layers = List(seed)
     var dist = seed // lazy union over `layers`
+    def compact(): Unit = {
+      val c = ck(dist)
+      layers.foreach(drop)
+      layers = List(c)
+      dist = c
+    }
     var frontier = seed // sweep 0's "just reached" set IS the seed set
     var hop = 0
     var exhausted = maxHops == 0 || nSeeds == 0L
@@ -1813,10 +1804,11 @@ object GraphOps {
       val reach = if (steps == effStride) hopRel
         else hopRel.filter(col("k") <= lit(steps.toLong))
       val (newLayers, nNew) = ckCounted(reach
-        .join(frontier.select(col("v").as("src")), "src")
-        .select(col("dst").as("v"), (col("k") + lit(hop.toLong)).as("dist"))
-        .unionByName(dist.select(col("v"), lit(-1L).as("dist")))
-        .groupBy("v").agg(min("dist").as("dist"))
+        .join(frontier.select(keyCols :+ col("v").as("src"): _*), "src")
+        .select(keyCols :+ col("dst").as("v") :+
+          (col("k") + lit(hop.toLong)).as("dist"): _*)
+        .unionByName(dist.select(keyCols :+ col("v") :+ lit(-1L).as("dist"): _*))
+        .groupBy(keyCols :+ col("v"): _*).agg(min("dist").as("dist"))
         .filter(col("dist") =!= lit(-1L)))
       hop += steps
       layers ::= newLayers
@@ -1826,14 +1818,11 @@ object GraphOps {
       // already expanded through E≤s within the same super-sweep
       frontier = newLayers.filter(col("dist") === lit(hop.toLong))
       if (layers.length >= HopCompactLayers) {
-        val compact = ck(dist)
-        layers.foreach(drop)
-        layers = List(compact)
-        dist = compact
+        compact()
         // the frontier's frame was one of the dropped layers — recover
         // it from the compacted relation (dist == hop ⇔ first reached
         // at the last completed sweep)
-        frontier = compact.filter(col("dist") === lit(hop.toLong))
+        frontier = dist.filter(col("dist") === lit(hop.toLong))
       }
       exhausted = hop == maxHops || nNew == 0L
     }
@@ -1843,13 +1832,8 @@ object GraphOps {
     // block-store entries and carry a 15-wide union plan into every
     // downstream job. One reached-sized copy, then the layer frames
     // are released.
-    if (layers.length > 1) {
-      val compact = ck(dist)
-      layers.foreach(drop)
-      layers = List(compact)
-      dist = compact
-    }
-    dist.select(col("v").as("vertex"), col("dist"))
+    if (layers.length > 1) compact()
+    dist.select(keyCols :+ col("v").as("vertex") :+ col("dist"): _*)
     }
   }
 
@@ -1977,15 +1961,11 @@ object GraphOps {
     * `(seed, vertex, dist)` per (source, reached vertex): the batched
     * form the sampled-centrality family runs (k separate
     * `hopDistances` loops would each pay the full per-sweep job chain
-    * for a frontier that is tiny at small k — the walks lesson). One
-    * edge ⋈ frontier join per sweep over the labeled frontier (≤ k×
-    * the single-source frontier), first-touch election per (seed,
-    * vertex), checkpointed layers with the `HopCompactLayers`
-    * compaction, early exit on an empty sweep. `edges` must be the
-    * deduped cached relation.
-    */
-  /** Memo (`dist`) of the labeled multi-source BFS results — the
-    * sampled-centrality family (`graph_closeness`,
+    * for a frontier that is tiny at small k — the walks lesson), i.e.
+    * `bfsSweeps` keyed by `seed`. `edges` must be the deduped cached
+    * relation.
+    *
+    * Memo (`dist`): the sampled-centrality family (`graph_closeness`,
     * `graph_eccentricity`, `graph_diameter`) runs the IDENTICAL
     * labeled sweep over the identical sample back to back, and the σ
     * chain adds its own (k, hops) flavor; the distance frames are
@@ -2003,41 +1983,9 @@ object GraphOps {
     import s.implicits._
     graft.PlanMemo.getOrBuild(edges,
         s"dist|$maxHops|${seeds.mkString(",")}") {
-    val seed0 = ck(seeds.toDF("seed")
-      .select(col("seed"), col("seed").as("vertex"), lit(0L).as("dist")))
-    var layers = List(seed0)
-    var dist = seed0
-    var frontier = seed0
-    var hop = 0
-    var exhausted = maxHops == 0 || seeds.isEmpty
-    while (!exhausted) {
-      val (nl, n) = ckCounted(frontier
-        .select(col("seed"), col("vertex").as("src"))
-        .join(edges, "src")
-        .select(col("seed"), col("dst").as("vertex"))
-        .distinct()
-        .join(dist, Seq("seed", "vertex"), "left_anti")
-        .select(col("seed"), col("vertex"),
-          lit(hop + 1L).as("dist")))
-      hop += 1
-      layers ::= nl
-      dist = dist.unionByName(nl)
-      frontier = nl
-      if (layers.length >= HopCompactLayers) {
-        val compact = ck(dist)
-        layers.foreach(drop)
-        layers = List(compact)
-        dist = compact
-        frontier = compact.filter(col("dist") === lit(hop.toLong))
-      }
-      exhausted = hop == maxHops || n == 0L
-    }
-    if (layers.length > 1) {
-      val compact = ck(dist)
-      layers.foreach(drop)
-      dist = compact
-    }
-    dist
+      bfsSweeps(edges,
+        seeds.toDF("seed").select(col("seed"), col("seed").as("v")),
+        Seq("seed"), maxHops, hopStride = 1)
     }
   }
 
@@ -2071,7 +2019,7 @@ object GraphOps {
     */
   def shortestPathCounts(e: DataFrame, k: Int = PathSeeds,
       maxHops: Int = PathHops): DataFrame = {
-    val (frames, dedup) = sigmaLayers(e, k, maxHops)
+    val (frames, _, _) = sigmaLayers(e, k, maxHops)
     if (frames.isEmpty)
       return e.select(col("src").as("seed"), col("src").as("vertex"),
         lit(0L).as("dist"), lit(0L).as("sigma")).filter(lit(false))
@@ -2079,35 +2027,33 @@ object GraphOps {
       .select(col("seed"), col("vertex"), col("dist"), col("sigma"))
   }
 
-  /** Memo (`sigma`) of the labeled forward phase: `graph_path_counts`
-    * and `graph_stress` run the IDENTICAL σ computation over the same
-    * graph back to back, and the layer frames are
-    * statsFreeLocalCheckpoint-backed (session-lived executor blocks,
-    * NOT Caches-leased — a between-query cache clear does not touch
-    * them), so the second gate reuses the first's materialized layers
-    * instead of re-running the whole forward BFS+σ chain. Keyed by
-    * (session, canonicalized input plan, k, maxHops) — the FULL
-    * canonical plan string, not a 32-bit semantic hash, so a stale
-    * reuse cannot hide behind a hash collision; the shared store's
-    * LRU bound limits retention. `PlanMemo.hitsOf("sigma")` exists for
-    * the spec that pins the reuse.
-    */
   /** The shared labeled forward phase: per-layer frames of
-    * `(seed, vertex, dist, sigma)` plus the shared edge cache.
+    * `(seed, vertex, dist, sigma)` plus the shared edge cache and its
+    * banked count.
+    *
+    * Memo (`sigma`): `graph_path_counts` and `graph_stress` run the
+    * IDENTICAL σ computation over the same graph back to back, and the
+    * layer frames are statsFreeLocalCheckpoint-backed (session-lived
+    * executor blocks, NOT Caches-leased — a between-query cache clear
+    * does not touch them), so the second gate reuses the first's
+    * materialized layers instead of re-running the whole forward BFS+σ
+    * chain. Keyed by (session, canonicalized input plan, k, maxHops) —
+    * the FULL canonical plan string, not a 32-bit semantic hash, so a
+    * stale reuse cannot hide behind a hash collision; the shared
+    * store's LRU bound limits retention. `PlanMemo.hitsOf("sigma")`
+    * exists for the spec that pins the reuse.
     */
   private def sigmaLayers(e: DataFrame, k: Int, maxHops: Int)
-      : (Seq[DataFrame], DataFrame) = {
+      : (Seq[DataFrame], DataFrame, Long) = {
     require(k >= 1 && k <= 64, s"k must be in [1, 64], got $k")
     require(maxHops >= 0 && maxHops <= 32,
       s"maxHops must be in [0, 32], got $maxHops (σ is a path count — " +
         "deep budgets overflow long arithmetic on bushy graphs)")
-    val s = e.sparkSession
-    import s.implicits._
-    val (dedup, _) = distinctEdgesShared(e)
+    val (dedup, nDedup) = distinctEdgesShared(e)
     val frames = graft.PlanMemo.getOrBuild(e, s"sigma|$k|$maxHops") {
       sigmaFrames(e, dedup, k, maxHops)
     }
-    (frames, dedup)
+    (frames, dedup, nDedup)
   }
 
   /** The uncached σ-layer build `sigmaLayers` memoizes. */
@@ -2164,7 +2110,7 @@ object GraphOps {
     */
   def stressSampled(e: DataFrame, k: Int = PathSeeds,
       maxHops: Int = PathHops): DataFrame = {
-    val (frames, dedup) = sigmaLayers(e, k, maxHops)
+    val (frames, dedup, nDedup) = sigmaLayers(e, k, maxHops)
     val empty = e.select(col("src").as("vertex"), lit(0L).as("stress"))
       .filter(lit(false))
     if (frames.length <= 1) return empty
@@ -2178,11 +2124,10 @@ object GraphOps {
     // (left joins contribute only matched successors, coalesce 0),
     // order-free on exact longs. `SmallInput.scoped(0)` keeps the
     // distributed loop spec-covered.
-    if (SmallInput.admits(dedup.count(), SmallInput.TraversalEdges)) {
+    if (SmallInput.admits(nDedup, SmallInput.TraversalEdges)) {
       val s = e.sparkSession
       import s.implicits._
-      val adj = dedup.collect().map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+      val adj = edgeAdjacency(dedup)
       val lf = frames.map(_.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))))
       var tauNext = scala.collection.mutable.Map.empty[(Long, Long), Long]
@@ -2247,58 +2192,88 @@ object GraphOps {
     */
   val SsspRounds = 6
 
+  /** BUDGETED weighted single-source shortest paths — for every vertex
+    * within `maxRounds` edges of the `sources` set (one-column relation,
+    * column `v`), the minimum total path WEIGHT over paths of at most
+    * `maxRounds` edges, where an edge's weight is its multiplicity in
+    * the bag (`weightedEdges`). One `(vertex, dist)` row per reached
+    * vertex, sources at 0. The budget makes the contract well-defined
+    * on cyclic graphs and at any truncation point: it is synchronous
+    * Bellman-Ford stopped after `maxRounds` rounds, exactly what the
+    * oracle unrolls.
+    *
+    * Physical: the improved-only frontier-delta relaxation
+    * (`relaxRounds`); under the `SmallInput.TraversalEdges` bound the
+    * driver-side twin (`bellmanFordLocal`) runs instead, probed with
+    * the count the weighted-edge memo banked.
+    */
   def ssspBudget(e0: DataFrame, sources: DataFrame,
       maxRounds: Int = SsspRounds): DataFrame = {
     require(maxRounds >= 0 && maxRounds <= 64,
       s"maxRounds must be in [0, 64], got $maxRounds")
-    val e = weightedEdgesShared(e0)
+    val (e, nEdges) = weightedEdgesCounted(e0)
     // input-size-gated local fast path (the SCC/hits/BFS discipline):
-    // synchronous budgeted Bellman-Ford driver-side under the bound —
-    // ≡ the frontier-delta loop by min-combine idempotence (the
-    // pinned law); property specs force `SmallInput.scoped(0)` to keep
-    // the distributed loop covered.
-    if (SmallInput.admits(e.count(), SmallInput.TraversalEdges)) {
-      val wedges = e.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    // ≡ the frontier-delta loop by min-combine idempotence (the pinned
+    // law); property specs force `SmallInput.scoped(0)` to keep the
+    // distributed loop covered.
+    if (SmallInput.admits(nEdges, SmallInput.TraversalEdges)) {
+      val s = e0.sparkSession
+      import s.implicits._
       val seeds = sources.select(col("v")).distinct().collect()
         .map(_.getLong(0))
-      return ssspLocal(e0.sparkSession, wedges, seeds, maxRounds)
+      return bellmanFordLocal(weightedAdjacency(e), seeds, maxRounds)
+        .toSeq.sorted.toDF("vertex", "dist")
     }
-    var dist = ck(sources.select(col("v")).distinct()
-      .withColumn("dist", lit(0L)))
-    // FRONTIER-DELTA relaxation (the hopDistances lesson, weighted):
-    // only vertices whose dist IMPROVED last round offer relaxations —
-    // an unchanged vertex's offers are identical to a prior round's
-    // and min-combining is idempotent, so round-r state still equals
-    // synchronous Bellman-Ford's "min over ≤ r edges" exactly (the
-    // brute property spec crosses budgets to pin this). The edge join
-    // is delta×degree-sized, so total join work across rounds tracks
-    // the shortest-path tree expansion, not rounds×|E| — measured
-    // 8.9 → 6.1 s on the sf0.1 gate, where the one-time weighted
-    // compression of the 6M-row edge bag is most of the remaining
-    // floor. Empty delta = fixpoint = exit. The adversarial case is a
-    // DENSE random graph whose delta stays vertex-wide every round
-    // (the 10M-edge rehearsal): there the two extra vertex-sized
-    // frames per round cost ~1.5× the plain synchronous form — the
-    // posture trades that bounded dense-case overhead for the
-    // delta-shrinking win on the sparse/high-diameter graphs real
-    // road/citation/dependency SSSP runs on.
+    relaxRounds(e, sources.select(col("v")).distinct(), Nil, maxRounds)
+      .select(col("v").as("vertex"), col("dist"))
+  }
+
+  /** The one distributed budgeted Bellman-Ford loop behind `ssspBudget`
+    * and `closenessWeightedSampled`, over the weighted relation
+    * `we(src, dst, w)`. `seeds` holds the `keys :+ "v"` start rows;
+    * each `keys` value labels an independent relaxation carried in the
+    * same state (`Nil`: one multi-source run; `Seq("seed")`: one run
+    * per sampled source). Returns `keys :+ v, dist`.
+    *
+    * FRONTIER-DELTA relaxation (the hopDistances lesson, weighted):
+    * only vertices whose dist IMPROVED last round offer relaxations —
+    * an unchanged vertex's offers are identical to a prior round's and
+    * min-combining is idempotent, so round-r state still equals
+    * synchronous Bellman-Ford's "min over ≤ r edges" exactly (the brute
+    * property spec crosses budgets to pin this). The edge join is
+    * delta×degree-sized, so total join work across rounds tracks the
+    * shortest-path tree expansion, not rounds×|E| — measured 8.9 →
+    * 6.1 s on the sf0.1 gate, where the one-time weighted compression
+    * of the 6M-row edge bag is most of the remaining floor. Empty delta
+    * = fixpoint = exit. The adversarial case is a DENSE random graph
+    * whose delta stays vertex-wide every round (the 10M-edge
+    * rehearsal): there the two extra vertex-sized frames per round
+    * cost ~1.5× the plain synchronous form — the posture trades that
+    * bounded dense-case overhead for the delta-shrinking win on the
+    * sparse/high-diameter graphs real road/citation/dependency SSSP
+    * runs on.
+    */
+  private def relaxRounds(we: DataFrame, seeds: DataFrame,
+      keys: Seq[String], maxRounds: Int): DataFrame = {
+    val keyCols = keys.map(col)
+    var dist = ck(seeds.withColumn("dist", lit(0L)))
     var delta = dist
     var round = 0
     var fixed = false
     while (round < maxRounds && !fixed) {
       round += 1
-      val cand = delta.join(e, delta("v") === e("src"))
-        .select(e("dst").as("v"), (delta("dist") + e("w")).as("nd"))
-        .groupBy("v").agg(min("nd").as("nd"))
+      val cand = delta.join(we, delta("v") === we("src"))
+        .select(keys.map(delta(_)) :+ we("dst").as("v") :+
+          (delta("dist") + we("w")).as("nd"): _*)
+        .groupBy(keyCols :+ col("v"): _*).agg(min("nd").as("nd"))
       val (improved, nImp) = ckCounted(
-        cand.join(dist, Seq("v"), "left_outer")
+        cand.join(dist, keys :+ "v", "left_outer")
           .filter(col("dist").isNull || col("nd") < col("dist"))
-          .select(col("v"), col("nd").as("dist")))
+          .select(keyCols :+ col("v") :+ col("nd").as("dist"): _*))
       if (nImp == 0L) { fixed = true; drop(improved) }
       else {
         val next = ck(dist.unionByName(improved)
-          .groupBy("v").agg(min("dist").as("dist")))
+          .groupBy(keyCols :+ col("v"): _*).agg(min("dist").as("dist")))
         drop(dist)
         if (delta ne dist) drop(delta)
         dist = next
@@ -2308,47 +2283,71 @@ object GraphOps {
     // budget-exhausted exit leaves the last delta frame live — release
     // it (the fixpoint exit already did; round-0 delta IS dist)
     if (delta ne dist) drop(delta)
-    dist.select(col("v").as("vertex"), col("dist"))
+    dist
   }
 
-  /** The driver-side twin of the budgeted Bellman-Ford: exactly
-    * `maxRounds` synchronous min-combine rounds (early exit on a
-    * round with no improvement — idempotence makes that identical),
-    * seeds at 0, min path WEIGHT over ≤ maxRounds edges.
+  /** The driver-side twin of the budgeted Bellman-Ford: min path
+    * WEIGHT from the seed set over ≤ `maxRounds` edges, seeds at 0.
+    * Synchronous improved-only rounds with updates APPLIED AFTER each
+    * sweep — the per-round snapshot the relational loop's delta-join
+    * gives for free; applying in place would let a same-round
+    * improvement propagate a (budget+1)-edge path. Early exit on a
+    * round with no improvement (idempotence makes that identical).
     */
-  private def ssspLocal(s: SparkSession,
-      wedges: Array[(Long, Long, Long)], seeds: Array[Long],
-      maxRounds: Int): DataFrame = {
-    import s.implicits._
+  private def bellmanFordLocal(adj: Map[Long, Array[(Long, Long)]],
+      seeds: Iterable[Long], maxRounds: Int)
+      : scala.collection.Map[Long, Long] = {
     val dist = scala.collection.mutable.Map[Long, Long]()
     seeds.foreach(dist(_) = 0L)
+    var frontier: Iterable[Long] = dist.keys.toSeq
     var round = 0
-    var changed = true
-    while (round < maxRounds && changed) {
-      changed = false
-      val snapshot = dist.toMap
-      wedges.foreach { case (u, v, w) =>
-        snapshot.get(u).foreach { du =>
+    while (round < maxRounds && frontier.nonEmpty) {
+      val updates = scala.collection.mutable.Map.empty[Long, Long]
+      frontier.foreach { u =>
+        val du = dist(u)
+        adj.getOrElse(u, Array.empty[(Long, Long)]).foreach { case (v, w) =>
           val nd = du + w
-          if (dist.get(v).forall(nd < _)) { dist(v) = nd; changed = true }
+          if (dist.get(v).forall(nd < _) && updates.get(v).forall(nd < _))
+            updates(v) = nd
         }
       }
+      updates.foreach { case (v, nd) => dist(v) = nd }
+      frontier = updates.keys.toSeq
       round += 1
     }
-    dist.toSeq.sorted.toDF("vertex", "dist")
+    dist
   }
+
+  /** Driver-side adjacency of collected `(src, x)` rows: each src
+    * vertex → its xs, for the single-task twins.
+    */
+  private def adjacency[A: scala.reflect.ClassTag](rows: Array[(Long, A)])
+      : Map[Long, Array[A]] =
+    rows.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+
+  /** The collected adjacency of a `(src, dst)` relation. */
+  private def edgeAdjacency(e: DataFrame): Map[Long, Array[Long]] =
+    adjacency(e.collect().map(r => (r.getLong(0), r.getLong(1))))
+
+  /** The collected adjacency of a weighted `(src, dst, w)` relation:
+    * src → its (dst, w) pairs.
+    */
+  private def weightedAdjacency(we: DataFrame)
+      : Map[Long, Array[(Long, Long)]] =
+    adjacency(we.collect()
+      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))))
 
   /** WEIGHTED sampled closeness — `closenessSampled` over path
     * WEIGHT instead of hop count: from the same k hash-chosen
     * sources, budget-truncated Bellman-Ford distances (min total edge
     * multiplicity over paths of ≤ `maxRounds` edges — `ssspBudget`'s
     * exact contract), aggregated per vertex into `n_reached`,
-    * `sum_wdist` and integer `harmonic_ppm`. The labeled
-    * frontier-delta loop carries all k sources in one round chain
-    * (the closenessSampled batching), with ssspBudget's improved-only
-    * relaxation and monotone early exit; equality with per-source
-    * `ssspBudget` runs is spec-pinned, so the labeled loop inherits
-    * the budget-semantics property pins transitively.
+    * `sum_wdist` and integer `harmonic_ppm`. `ssspBudget`'s
+    * relaxation (`relaxRounds`) keyed by `seed` carries all k sources
+    * in one round chain (the closenessSampled batching); the
+    * driver-side twin runs `bellmanFordLocal` once per seed. Equality
+    * with per-source `ssspBudget` runs is spec-pinned, so the labeled
+    * loop inherits the budget-semantics property pins transitively.
     */
   def closenessWeightedSampled(e: DataFrame, k: Int = ClosenessSeeds,
       maxRounds: Int = SsspRounds): DataFrame = {
@@ -2362,40 +2361,16 @@ object GraphOps {
       return e.select(col("src").as("vertex"), lit(0L).as("n_reached"),
         lit(0L).as("sum_wdist"), lit(0L).as("harmonic_ppm"))
         .filter(lit(false))
-    val we = weightedEdgesShared(e)
-    // Input-size-gated local fast path (the ssspBudget discipline, per
-    // seed): synchronous improved-only min-combine with updates
-    // APPLIED AFTER each sweep — the per-round snapshot the relational
-    // loop's delta-join gives for free; applying in place would let a
-    // same-round improvement propagate a (budget+1)-edge path. The
-    // aggregation is the same order-free exact-long fold.
-    // `SmallInput.scoped(0)` keeps the distributed labeled loop
-    // spec-covered.
-    if (SmallInput.admits(we.count(), SmallInput.TraversalEdges)) {
-      val adj = we.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).map { case (u, es) => u -> es.map(t => (t._2, t._3)) }
+    val (we, nEdges) = weightedEdgesCounted(e)
+    // Input-size-gated local fast path (the ssspBudget discipline):
+    // the driver-side twin once per seed, then the same order-free
+    // exact-long aggregation. `SmallInput.scoped(0)` keeps the
+    // distributed labeled loop spec-covered.
+    if (SmallInput.admits(nEdges, SmallInput.TraversalEdges)) {
+      val adj = weightedAdjacency(we)
       val agg = scala.collection.mutable.Map.empty[Long, (Long, Long, Long)]
       seedRows.foreach { sd =>
-        val dist = scala.collection.mutable.Map[Long, Long](sd -> 0L)
-        var frontier: Seq[Long] = Seq(sd)
-        var round = 0
-        while (round < maxRounds && frontier.nonEmpty) {
-          val updates = scala.collection.mutable.Map.empty[Long, Long]
-          frontier.foreach { u =>
-            val du = dist(u)
-            adj.getOrElse(u, Array.empty[(Long, Long)]).foreach {
-              case (v, w) =>
-                val nd = du + w
-                if (dist.get(v).forall(nd < _) &&
-                    updates.get(v).forall(nd < _)) updates(v) = nd
-            }
-          }
-          updates.foreach { case (v, nd) => dist(v) = nd }
-          frontier = updates.keys.toSeq
-          round += 1
-        }
-        dist.foreach { case (v, dv) =>
+        bellmanFordLocal(adj, Seq(sd), maxRounds).foreach { case (v, dv) =>
           val (n, sm, h) = agg.getOrElse(v, (0L, 0L, 0L))
           agg(v) = (n + 1L, sm + dv,
             h + (if (dv >= 1L) 1000000L / dv else 0L))
@@ -2404,32 +2379,9 @@ object GraphOps {
       return agg.toSeq.map { case (v, t) => (v, t._1, t._2, t._3) }
         .sorted.toDF("vertex", "n_reached", "sum_wdist", "harmonic_ppm")
     }
-    var dist = ck(seedRows.toSeq.toDF("seed")
-      .select(col("seed"), col("seed").as("v"), lit(0L).as("dist")))
-    var delta = dist
-    var round = 0
-    var fixed = false
-    while (round < maxRounds && !fixed) {
-      round += 1
-      val cand = delta.join(we, delta("v") === we("src"))
-        .select(delta("seed"), we("dst").as("v"),
-          (delta("dist") + we("w")).as("nd"))
-        .groupBy("seed", "v").agg(min("nd").as("nd"))
-      val (improved, nImp) = ckCounted(
-        cand.join(dist, Seq("seed", "v"), "left_outer")
-          .filter(col("dist").isNull || col("nd") < col("dist"))
-          .select(col("seed"), col("v"), col("nd").as("dist")))
-      if (nImp == 0L) { fixed = true; drop(improved) }
-      else {
-        val next = ck(dist.unionByName(improved)
-          .groupBy("seed", "v").agg(min("dist").as("dist")))
-        drop(dist)
-        if (delta ne dist) drop(delta)
-        dist = next
-        delta = improved
-      }
-    }
-    if (delta ne dist) drop(delta)
+    val dist = relaxRounds(we,
+      seedRows.toSeq.toDF("seed").select(col("seed"), col("seed").as("v")),
+      Seq("seed"), maxRounds)
     dist.groupBy(col("v").as("vertex"))
       .agg(count(lit(1)).as("n_reached"),
         sum("dist").as("sum_wdist"),
@@ -2477,11 +2429,7 @@ object GraphOps {
     */
   def randomWalks(e0: DataFrame, sources: DataFrame, len: Int = WalkLen,
       perSeed: Long = WalksPerSeed,
-      broadcastCap: Long = WalksBroadcastCap): DataFrame = {
-    require(len >= 0 && len <= 64, s"len must be in [0, 64], got $len")
-    require(perSeed >= 1L && perSeed <= 1024L,
-      s"perSeed must be in [1, 1024], got $perSeed")
-    import graft.functions.PolyHashFunctions.poly_hash
+      broadcastCap: Long = WalksBroadcastCap): DataFrame =
     // NO pre-ranked adjacency: ranking every src's neighbor list costs
     // a full-graph window sort that the handful of visited vertices
     // never amortizes (measured ~3 s of the 4.6 s gate). Instead each
@@ -2490,16 +2438,43 @@ object GraphOps {
     // per-walk_id window IS that vertex's neighbor ranking, over
     // walks×degree rows. (A corpus of millions of walks revisiting
     // most vertices flips the economics back to pre-ranking once.)
-    val (adj, _) = distinctEdgesShared(e0)
-    val ww = org.apache.spark.sql.expressions.Window.partitionBy("walk_id")
+    walkSteps(distinctEdgesShared(e0)._1, sources, len, perSeed,
+        broadcastCap) { (cand, h) =>
+      val ww = org.apache.spark.sql.expressions.Window.partitionBy("walk_id")
+      cand.withColumn("rnk", row_number().over(ww.orderBy(col("dst"))))
+        .withColumn("deg", count(lit(1)).over(ww))
+        .filter(col("rnk") === pmod(h, col("deg")) + 1)
+    }
+
+  /** The one walk loop behind `randomWalks` and `randomWalksWeighted`:
+    * seeds `perSeed` walk ids per source vertex (`v·perSeed + j`),
+    * then runs `len` rounds, each ONE join of the walk frame against
+    * the adjacency relation `adj(src, dst[, w])` on vertex = src.
+    * `pick` receives the joined candidates `(walk_id, vertex, dst[, w])`
+    * and the step hash `poly_hash(walk ":" s ":" v)`, and keeps the
+    * one chosen row per walk. The broadcast posture is decided ONCE
+    * from the initial walk count (walks only die at dead ends, so
+    * later steps are never larger). State is checkpointed per round.
+    * `adjRel` is taken by name so the parameter checks run before its
+    * memo builds.
+    */
+  private def walkSteps(adjRel: => DataFrame, sources: DataFrame, len: Int,
+      perSeed: Long, broadcastCap: Long)(
+      pick: (DataFrame, org.apache.spark.sql.Column) => DataFrame)
+      : DataFrame = {
+    require(len >= 0 && len <= 64, s"len must be in [0, 64], got $len")
+    require(perSeed >= 1L && perSeed <= 1024L,
+      s"perSeed must be in [1, 1024], got $perSeed")
+    val adj = adjRel
+    import graft.functions.PolyHashFunctions.poly_hash
     val (state0, nWalks) = ckCounted(sources.select(col("v")).distinct()
       .select(col("v"), explode(sequence(lit(0L), lit(perSeed - 1))).as("j"))
       .select((col("v") * perSeed + col("j")).as("walk_id"),
         col("v").as("vertex")))
-    // the posture decides ONCE from the initial walk count (walks only
-    // die at dead ends, so later steps are never larger)
     val hint: DataFrame => DataFrame =
       if (nWalks <= broadcastCap) broadcast else identity
+    val carried = col("walk_id") +: col("vertex") +:
+      adj.columns.toSeq.filter(_ != "src").map(col)
     var state = state0
     val frames = scala.collection.mutable.ListBuffer(
       state.select(col("walk_id"), lit(0L).as("step"), col("vertex")))
@@ -2509,12 +2484,8 @@ object GraphOps {
         col("walk_id").cast("string"), lit(":"),
         lit((step - 1).toString), lit(":"),
         col("vertex").cast("string")))
-      val stepped = ck(hint(state).join(adj,
-          adj("src") === state("vertex"))
-        .select(col("walk_id"), col("vertex"), col("dst"))
-        .withColumn("rnk", row_number().over(ww.orderBy(col("dst"))))
-        .withColumn("deg", count(lit(1)).over(ww))
-        .filter(col("rnk") === pmod(h, col("deg")) + 1)
+      val stepped = ck(pick(hint(state).join(adj,
+          adj("src") === state("vertex")).select(carried: _*), h)
         .select(col("walk_id"), col("dst").as("vertex")))
       frames += stepped.select(col("walk_id"),
         lit(step.toLong).as("step"), col("vertex"))
@@ -2560,47 +2531,19 @@ object GraphOps {
     */
   def randomWalksWeighted(e0: DataFrame, sources: DataFrame,
       len: Int = WalkLen, perSeed: Long = WalksPerSeed,
-      broadcastCap: Long = WalksBroadcastCap): DataFrame = {
-    require(len >= 0 && len <= 64, s"len must be in [0, 64], got $len")
-    require(perSeed >= 1L && perSeed <= 1024L,
-      s"perSeed must be in [1, 1024], got $perSeed")
-    import graft.functions.PolyHashFunctions.poly_hash
+      broadcastCap: Long = WalksBroadcastCap): DataFrame =
     // cumulative ranges computed per STEP over the joined candidates
     // only (see randomWalks' no-pre-ranking note) — the weighted edge
     // compression is the one full-graph pass, with no window on it
-    val adj = weightedEdgesShared(e0)
-    val ww = org.apache.spark.sql.expressions.Window.partitionBy("walk_id")
-    val (state0, nWalks) = ckCounted(sources.select(col("v")).distinct()
-      .select(col("v"), explode(sequence(lit(0L), lit(perSeed - 1))).as("j"))
-      .select((col("v") * perSeed + col("j")).as("walk_id"),
-        col("v").as("vertex")))
-    val hint: DataFrame => DataFrame =
-      if (nWalks <= broadcastCap) broadcast else identity
-    var state = state0
-    val frames = scala.collection.mutable.ListBuffer(
-      state.select(col("walk_id"), lit(0L).as("step"), col("vertex")))
-    var step = 1
-    while (step <= len) {
-      val h = poly_hash(concat(
-        col("walk_id").cast("string"), lit(":"),
-        lit((step - 1).toString), lit(":"),
-        col("vertex").cast("string")))
-      val stepped = ck(hint(state).join(adj,
-          adj("src") === state("vertex"))
-        .select(col("walk_id"), col("vertex"), col("dst"), col("w"))
-        .withColumn("hi", sum(col("w")).over(ww.orderBy(col("dst"))))
+    walkSteps(weightedEdgesShared(e0), sources, len, perSeed,
+        broadcastCap) { (cand, h) =>
+      val ww = org.apache.spark.sql.expressions.Window.partitionBy("walk_id")
+      cand.withColumn("hi", sum(col("w")).over(ww.orderBy(col("dst"))))
         .withColumn("lo", col("hi") - col("w"))
         .withColumn("tot", sum(col("w")).over(ww))
         .filter(pmod(h, col("tot")) >= col("lo") &&
           pmod(h, col("tot")) < col("hi"))
-        .select(col("walk_id"), col("dst").as("vertex")))
-      frames += stepped.select(col("walk_id"),
-        lit(step.toLong).as("step"), col("vertex"))
-      state = stepped
-      step += 1
     }
-    frames.reduce(_.unionByName(_)).select("walk_id", "step", "vertex")
-  }
 
   /** Skip-gram context radius for walkPairs. Same constant MUST appear
     * in oracleSql.
@@ -2824,8 +2767,7 @@ object GraphOps {
     if (SmallInput.admits(nSym, SmallInput.ClusterEdges)) {
       val s = e.sparkSession
       import s.implicits._
-      val adj = und.collect().map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+      val adj = edgeAdjacency(und)
       val lab = scala.collection.mutable.Map.empty[Long, Long]
       adj.keys.foreach(v => lab(v) = v)
       (1 to rounds).foreach { _ =>
@@ -3283,16 +3225,5 @@ object GraphOps {
       .agg(max(col("fwd")).as("f"), max(col("rev")).as("r"))
       .filter(col("f") === 1 && col("r") === 1)
       .agg(count(lit(1)).as("mutual_pairs"))
-  }
-
-  /** Integer division on long Columns (`div` keeps LongType; `/` would
-    * detour through doubles and break exactness past 2^53).
-    */
-  private implicit class LongDiv(private val c: org.apache.spark.sql.Column) {
-    def divLong(k: Long): org.apache.spark.sql.Column = {
-      import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, Literal}
-      import org.apache.spark.sql.graft.ColumnBridge
-      ColumnBridge.column(IntegralDivide(ColumnBridge.expression(c), Literal(k)))
-    }
   }
 }

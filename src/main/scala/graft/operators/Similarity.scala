@@ -861,7 +861,7 @@ object Similarity {
   val BeamGraphDegree = 16
 
   /** Corpus-size bound for `knnBeam`'s tiny-regime plumbing scope
-    * (the `hopDistancesDeduped` lesson applied to the beam loop): at
+    * (the `GraphOps.bfsSweeps` lesson applied to the beam loop): at
     * or under this many corpus vectors the per-round cost is pure
     * fixed overhead — 32-bucket shuffles on a few-thousand-row
     * candidate set, AQE re-planning per stage, and janino compiling a
@@ -2071,10 +2071,9 @@ object Similarity {
     * a random matrix gives).
     */
   private[graft] def rpSign(i: Int, j: Int): Long = {
-    import graft.functions.PolyHashUtil.{hash, Mult2, Mod2}
+    import graft.functions.PolyHashUtil.{hash, hash60}
     import org.apache.spark.unsafe.types.UTF8String.{fromString => u}
-    val cell = u(s"rp:$i:$j")
-    val mixed = hash(cell) * Mod2 + hash(cell, Mult2, Mod2)
+    val mixed = hash60(u(s"rp:$i:$j"))
     if (hash(u(mixed.toString)) % 2 == 0) 1L else -1L
   }
 

@@ -570,7 +570,7 @@ object TextOps {
   def postingsDelta(storedIndex: DataFrame, batch: DataFrame,
       k: Int = PostingsK): DataFrame = {
     val merged = postingsDeltaFromTf(storedIndex, batchTfOf(batch), k)
-    // TINY-REGIME MATERIALIZATION SCOPE (the hopDistancesDeduped
+    // TINY-REGIME MATERIALIZATION SCOPE (the GraphOps.bfsSweeps
     // discipline, §1.2/§2.2): the fold is ~13 serial stages whose
     // per-stage scheduling/AQE cost dwarfs the data work once BOTH
     // inputs fit in one scan partition's worth of bytes — measured

@@ -1413,6 +1413,39 @@ class GraphOpsSpec extends SparkSpec {
     assert(sssp === bfs)
   }
 
+  test("warm ssspBudget and stressSampled builds probe the twin bound with the memo-banked edge counts") {
+    val s = spark
+    import s.implicits._
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // a two-lane ladder: every sampled source reaches several layers
+    val e = edgeDf(((0L until 10L).map(i => i -> (i + 1)) ++
+      (0L until 9L).map(i => i -> (i + 2)) :+ (3L -> 4L)): _*)
+    val seeds = Seq(0L, 5L).toDF("v")
+    // the twin path on both: its probe is the count the memo banked
+    def warmJobs(build: => org.apache.spark.sql.DataFrame): Int =
+      SmallInput.scoped(SmallInput.Cap) {
+        build.collect() // cold: the memos build here
+        org.apache.spark.sql.graft.ColumnBridge.waitListeners(spark)
+        jobs.set(0)
+        build
+        org.apache.spark.sql.graft.ColumnBridge.waitListeners(spark)
+        jobs.get
+      }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // the twin's collects: the weighted edges, and the distinct
+      // sources (a shuffle-map job plus the result job under AQE)
+      assert(warmJobs(GraphOps.ssspBudget(e, seeds)) === 3)
+      // the edge collect plus one collect per σ layer (5 at PathHops 4)
+      assert(warmJobs(GraphOps.stressSampled(e)) === 6)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("lpa and modularity single-task twins == the distributed loops on random multigraphs") {
     val s = spark
     import s.implicits._
