@@ -851,7 +851,7 @@ object GraphGates {
     // DEEP-diameter BFS: the same operator with a 64-hop budget over a
     // long-chain graph (documents self-joined at stride HopDeepStep ⇒
     // 7 disjoint ~N/7-deep paths), so the distributed super-sweep loop,
-    // the doubling-built E≤s relation, the final layer compaction and
+    // the doubling-built stride relation, the final layer compaction and
     // the budget-cap exit all run on the hash-checked path — the
     // shallow gate exits at 3 sweeps. At hopStride = 16 the budget is
     // 4 super-sweeps, so the in-loop 16-frame compaction does not fire
@@ -866,10 +866,12 @@ object GraphGates {
         .select(col("doc_id").as("v"))
       // SmallInput.scoped(0): this gate EXISTS to drive the distributed
       // sweep loop / stride build / budget exit (the shallow gate
-      // takes the gated local path). Stride 16: the r21 A/B of this
-      // gate alone, warm, with E≤s built by doubling, measured stride
-      // 4 = 3.78 s, 8 = 2.3-3.1 s, 16 = 1.85 s, 32 = 2.55 s. The
-      // per-sweep plumbing is narrowed by GraphOps.bfsSweeps'
+      // takes the gated local path). Stride 16: this gate alone, warm,
+      // local[4], on the perfbench sf0.1 tables (4,993 edges), with
+      // the stride relation built in checkpointed doubling rounds,
+      // measured stride 8 = 1.45-1.8 s (3 doubling rounds, 8
+      // super-sweeps), 16 = 1.1-1.4 s (4, 4), 32 = 1.2-1.7 s (5, 2).
+      // The per-sweep plumbing is narrowed by GraphOps.bfsSweeps'
       // tiny-regime conf scope.
       SmallInput.scoped(0L) {
         GraphOps.hopDistances(e, seeds, HopDeepMax, hopStride = 16)

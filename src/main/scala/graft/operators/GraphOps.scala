@@ -1592,33 +1592,28 @@ object GraphOps {
     * seeds absent from the edge relation still report dist 0.
     *
     * `hopStride` batches that many BFS layers into ONE materialized
-    * super-sweep through a PRECOMPUTED multi-hop edge relation
-    * `E≤s(src, dst, k)` — the distinct k-step reachability pairs for
-    * k = 1..stride, built once before the loop by DOUBLING
-    * (E≤(m+j) = E≤m ∪ (E_m ∘ E≤j), ⌈log₂ s⌉ joins) and cached. A
-    * super-sweep is then a single `frontier ⋈ E≤s` join and a
+    * super-sweep through a PRECOMPUTED stride relation `D≤s(src, dst,
+    * k)` — every pair joined by a walk of 1..s edges, with `k` its
+    * minimum hop count — built once before the loop by exact-slice
+    * doubling over ⌈log₂ s⌉ checkpointed rounds (`strideRelation`). A
+    * super-sweep is then a single `frontier ⋈ D≤s` join and a
     * `min(hop + k)` first-touch election with the visited check folded
     * in as above: one checkpoint and its count for `stride` layers
-    * instead of one PER layer. Measured on the deep gate, doubling
-    * plus the folded check took 29 → 14 jobs per invocation and
-    * 4.26 → ~2.8 s isolated warm. Exactness: every shortest path to a
+    * instead of one PER layer. Exactness: every shortest path to a
     * vertex first reached in (hop, hop+s] crosses the hop-layer
-    * frontier at its layer-`hop` vertex, whose remaining sub-path has
-    * length j ≤ s, so the candidate appears with k = j and the min
-    * elects exactly hop + j (property-pinned across random digraphs,
-    * budgets and strides). The TRADE is the k-hop relation itself:
-    * |E_k| is bounded by distinct k-step PAIRS — edge-sized on
-    * deep-sparse graphs (chains, roads, pipelines, DAG schedules; the
-    * regime stride exists for), but on bushy graphs it densifies
-    * toward V², which is why the DEFAULT stays 1 (pure frontier-delta
-    * sweeps, no precompute, no densification risk). Measured at
-    * local[32] on the 64-hop chain gate: 20.5 s at stride 1 — the
-    * per-layer stage/job floor (~40 ms/exchange under AQE) utterly
-    * dominating microseconds of real work — vs 5-7 s at stride 4
-    * (job count 381 → 102; an earlier lazy-chain formulation of the
-    * same batching saved almost nothing because the per-super-sweep
-    * union recomputed every chain prefix — AQE does not reuse stages
-    * across union branches).
+    * frontier at its layer-`hop` vertex, whose remaining sub-path is a
+    * shortest path of length j ≤ s, so the candidate appears with
+    * k = j and the min elects exactly hop + j (property-pinned across
+    * random digraphs, budgets and strides). The TRADE is the stride
+    * relation itself: it holds one row per pair within s hops —
+    * edge-sized times s on deep-sparse graphs (chains, roads,
+    * pipelines, DAG schedules; the regime stride exists for), but on
+    * bushy graphs it densifies toward V², which is why the DEFAULT
+    * stays 1 (pure frontier-delta sweeps, no precompute, no
+    * densification risk). On the 64-hop chain gate (4,993 edges,
+    * local[4], warm) stride 16 takes 4 super-sweeps where stride 1
+    * takes 64, each sweep paying the per-stage job floor for
+    * microseconds of real work.
     */
   def hopDistances(e: DataFrame, sources: DataFrame,
       maxHops: Int, hopStride: Int = 1): DataFrame = {
@@ -1671,7 +1666,7 @@ object GraphOps {
     * Returns `keys :+ vertex, dist`. The visited check is the folded
     * sentinel-min election for every labeling. `knownCount ≥ 0` is the
     * edge count when the caller already holds it (the memo banks it),
-    * skipping a count job when `hopStride` > 1 sizes the precompute.
+    * skipping a count job when `hopStride` > 1 picks the conf scope.
     */
   private def bfsSweeps(edges: DataFrame, seeds: DataFrame,
       keys: Seq[String], maxHops: Int, hopStride: Int,
@@ -1680,97 +1675,37 @@ object GraphOps {
       s"maxHops must be in [0, 1000], got $maxHops")
     require(hopStride >= 1 && hopStride <= 64,
       s"hopStride must be in [1, 64], got $hopStride")
-    // RIGHT-SIZE the stride precompute to the measured row count —
-    // `targetParts` (~32k rows per partition) sizes the E≤s relation
-    // the sweeps rescan every super-sweep, so a 5k-row relation is
-    // not cached at the session's 32 shuffle partitions paying 32
-    // task launches per scan for microseconds of work each. A
-    // stride-1 caller — typically a shallow budget over a big graph,
-    // where per-task work is real — skips the sizing entirely and
-    // sweeps the plain persisted input. Same sizing you'd do on a
-    // cluster: partition count follows data size, not the session
-    // default.
-    // The count is usually BANKED by the distinct-edge memo — a caller
-    // that already knows it passes it in, skipping one count job + plan
-    // per invocation. No re-cached coalesced copy: after the E≤s
-    // relation is built (itself coalesced to `targetParts`), the
-    // sweeps scan ONLY that relation — the raw cache is read exactly
-    // once, inside the build's coalesced tasks.
-    val targetParts =
-      if (hopStride == 1) 0L
-      else math.max(1L, (if (knownCount >= 0L) knownCount else edges.count()) / 32768L)
-    // TINY-REGIME PLUMBING SCOPE: in the deep-stride regime over a
-    // sub-128k-edge relation the per-super-sweep cost is pure fixed
-    // overhead — 32-bucket shuffles and AQE's per-stage re-planning
-    // on single-partition data. Narrow both for the duration of the
-    // loop (1 shuffle partition, AQE off, whole-stage codegen off —
-    // the dominant cost was janino COMPILING fresh classes every
-    // sweep, since each sweep's plan embeds new hop literals and a
-    // wider dist union) and restore on exit; the returned relation is
+    // TINY-REGIME PLUMBING SCOPE: in the deep-stride regime over fewer
+    // than 98,304 distinct edges the per-round cost is pure fixed
+    // overhead — shuffles of the session's width and AQE's per-stage
+    // re-planning on single-partition data. Narrow both for the
+    // duration of the stride build and the loop (1 shuffle partition,
+    // AQE off, whole-stage codegen off — each sweep's plan embeds new
+    // hop literals, so codegen would compile fresh classes every
+    // sweep) and restore on exit; the returned relation is
     // checkpointed, so downstream consumers plan under the caller's
-    // restored confs. Measured on the deep gate: 4.55 → 2.89 s
-    // isolated warm, identical rows (broadcast-hinting the frames and
-    // stride 8 were both tried and measured SLOWER — 4.38 / 5.00). A
-    // big-graph call (stride 1, or edges past the sizing bound) never
-    // enters this scope — there the shuffle width, AQE and codegen
+    // restored confs. Inside the scope the frontier is the broadcast
+    // side of the sweep join: every frontier vertex but a seed is an
+    // edge's destination, so it is bounded by the seeds plus the
+    // sub-98,304-row edge set, while the stats-free stride relation
+    // would otherwise leave the planner nothing to broadcast and a
+    // sort-merge join that shuffles the whole relation every sweep. A
+    // big-graph call (stride 1, or more edges) never enters this scope
+    // — there the shuffle width, AQE's runtime join choice and codegen
     // are load-bearing.
-    val tinyScope = hopStride > 1 && targetParts <= 2
+    val tinyScope = hopStride > 1 &&
+      (if (knownCount >= 0L) knownCount else edges.count()) < 98304L
     val scope =
       if (tinyScope)
         graft.Confs.TinyRegime :+ ("spark.sql.codegen.wholeStage" -> "false")
       else Nil
     graft.Confs.scoped(edges.sparkSession, scope: _*) {
-    // the multi-hop relation for stride > 1 (see docstring): E≤s =
-    // distinct (src, dst, k) k-step pairs for k = 1..s, built by
-    // DOUBLING — E≤(m+j) = E≤m ∪ (E_m ∘ E≤j, k += m) with j =
-    // min(m, s−m): every k-step walk with k > m splits at position m
-    // into an exactly-m prefix (∈ E_m) and a (k−m ≤ m)-step suffix
-    // (∈ E≤j). ⌈log₂ s⌉ materialized joins instead of the former s−1
-    // sequential self-joins (the r17 A/B that made stride 8 LOSE was
-    // paying 7 chained builds; doubling pays 3). Each doubling round
-    // materializes the full E≤m union right-sized like the edge
-    // cache, releasing the previous round's frame. Stride 1
-    // degenerates to the plain edge relation at k = 1; a budget below
-    // the stride caps the precompute.
+    // a budget below the stride caps the precompute; stride 1 sweeps
+    // the plain edge relation at k = 1
     val effStride = math.min(hopStride, math.max(maxHops, 1))
-    val hopRel: DataFrame =
+    val hopRel =
       if (effStride == 1) edges.withColumn("k", lit(1L))
-      else {
-        var cur = edges.withColumn("k", lit(1L))
-        var curOwned: DataFrame = null // persisted intermediate to release
-        var m = 1
-        while (m < effStride) {
-          val j = math.min(m, effStride - m)
-          val suffix = if (j == m) cur
-            else cur.filter(col("k") <= lit(j.toLong))
-          val ext = cur.filter(col("k") === lit(m.toLong)).as("a")
-            .join(suffix.as("b"), col("a.dst") === col("b.src"))
-            .select(col("a.src").as("src"), col("b.dst").as("dst"),
-              (col("b.k") + lit(m.toLong)).as("k"))
-            .distinct()
-          val lazyNext = cur.unionByName(ext)
-          m += j
-          // tiny regime: keep the doubling LAZY and materialize the
-          // final E≤s once — each doubling's plan embeds the previous
-          // round twice (as the E_m slice and as the suffix), so the
-          // fused tree recomputes duplicated subtrees, which on
-          // sub-128k-edge single-partition data costs microseconds
-          // while saving a driver plan + job per round (the measured
-          // wall here is catalyst, not tasks). A big graph (no
-          // tinyScope) materializes per round as before — there the
-          // duplicated recompute would be real work.
-          if (!tinyScope || m >= effStride) {
-            val next = graft.Caches.track(lazyNext
-              .coalesce(math.max(targetParts, 1L).toInt)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-            next.count()
-            if (curOwned != null) curOwned.unpersist(blocking = false)
-            cur = next
-            curOwned = next
-          } else cur = lazyNext
-        }
-        cur
-      }
+      else strideRelation(edges, effStride)
     val keyCols = keys.map(col)
     val (seed, nSeeds) = ckCounted(seeds.withColumn("dist", lit(0L)))
     // the distance relation is the UNION of checkpointed frames —
@@ -1803,8 +1738,9 @@ object GraphOps {
       // one fewer shuffle stage per sweep, at any scale.
       val reach = if (steps == effStride) hopRel
         else hopRel.filter(col("k") <= lit(steps.toLong))
+      val front = frontier.select(keyCols :+ col("v").as("src"): _*)
       val (newLayers, nNew) = ckCounted(reach
-        .join(frontier.select(keyCols :+ col("v").as("src"): _*), "src")
+        .join(if (tinyScope) broadcast(front) else front, "src")
         .select(keyCols :+ col("dst").as("v") :+
           (col("k") + lit(hop.toLong)).as("dist"): _*)
         .unionByName(dist.select(keyCols :+ col("v") :+ lit(-1L).as("dist"): _*))
@@ -1815,7 +1751,8 @@ object GraphOps {
       dist = dist.unionByName(newLayers)
       // next super-sweep expands from the LAST layer only (vertices
       // first reached at `hop`): every earlier layer in this frame was
-      // already expanded through E≤s within the same super-sweep
+      // already expanded through the stride relation within the same
+      // super-sweep
       frontier = newLayers.filter(col("dist") === lit(hop.toLong))
       if (layers.length >= HopCompactLayers) {
         compact()
@@ -1833,8 +1770,45 @@ object GraphOps {
     // downstream job. One reached-sized copy, then the layer frames
     // are released.
     if (layers.length > 1) compact()
+    // the result is a checkpoint of its own — no frame still reads the
+    // stride relation's blocks
+    if (effStride > 1) drop(hopRel)
     dist.select(keyCols :+ col("v").as("vertex") :+ col("dist"): _*)
     }
+  }
+
+  /** The stride relation `D≤s(src, dst, k)` of `hopDistances`: every
+    * pair joined by a walk of 1..s edges over the deduped `edges`,
+    * with `k` its MINIMUM hop count — the sweep only reads
+    * `min(hop + k)` over `k ≤ steps`, so the other walk lengths are
+    * dead weight. Built by exact-slice doubling,
+    * `D≤(m+j) = min(D≤m ∪ (D=m ∘ D≤j))` with `j = min(m, s − m)`: the
+    * m-prefix of a shortest path of length in (m, m+j] is itself
+    * shortest, so it ends on the exactly-m slice, and its suffix is a
+    * shortest path of length ≤ j. Each round is ONE checkpoint of a
+    * plan that reads only the previous round's checkpoint (round 1:
+    * the edges), which is then dropped: ⌈log₂ s⌉ rounds, and no plan
+    * embeds an earlier round's. The caller drops the returned
+    * relation.
+    */
+  private def strideRelation(edges: DataFrame, s: Int): DataFrame = {
+    var cur = edges.select(col("src"), col("dst"), lit(1L).as("k"))
+    var m = 1
+    while (m < s) {
+      val j = math.min(m, s - m)
+      val suffix = if (j == m) cur else cur.filter(col("k") <= lit(j.toLong))
+      val next = ck(cur.filter(col("k") === lit(m.toLong)).as("a")
+        .join(suffix.as("b"), col("a.dst") === col("b.src"))
+        .select(col("a.src").as("src"), col("b.dst").as("dst"),
+          (col("b.k") + lit(m.toLong)).as("k"))
+        .unionByName(cur)
+        .groupBy("src", "dst").agg(min("k").as("k")))
+      // round 1 read the caller's memo-owned edges, not a checkpoint
+      if (m > 1) drop(cur)
+      cur = next
+      m += j
+    }
+    cur
   }
 
   /** Sample size for `closenessSampled` — the k hash-chosen BFS

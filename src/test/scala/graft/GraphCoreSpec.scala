@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * scan of `src/main` finds the PageRank damping update, the walk-id
   * seed frame, the BFS layer compaction, the Bellman-Ford relaxation
   * filter and the driver-side adjacency build once each, in `GraphOps`.
+  * The BFS stride relation is built in one place, through checkpoints.
   */
 class GraphCoreSpec extends AnyFunSuite {
 
@@ -24,5 +25,29 @@ class GraphCoreSpec extends AnyFunSuite {
       else Seq(s"$what: ${sites.mkString(", ")}")
     }
     assert(problems.isEmpty, problems.mkString("; "))
+  }
+
+  test("the BFS stride relation is built once, through checkpoints only") {
+    val sources = SourceScan.mainSources
+    // the exact-slice doubling join: one site, in GraphOps
+    val slices = SourceScan.sites(sources,
+      """filter\(col\("k"\) === lit\(m\.toLong\)\)""".r)
+    assert(slices.size == 1 && slices.head.startsWith("GraphOps.scala:"),
+      slices.mkString(", "))
+    // every doubling round is one checkpoint dropped by the next: the
+    // sweep loop and the stride build neither persist, coalesce nor
+    // register a cache lease
+    val text = sources.collectFirst { case ("GraphOps.scala", t) => t }.get
+    def body(method: String): String = {
+      val start = text.indexOf(s"private def $method(")
+      assert(start >= 0, s"GraphOps.$method not found")
+      text.substring(start, text.indexOf("\n  }\n", start))
+    }
+    val found = for {
+      method <- Seq("bfsSweeps", "strideRelation")
+      use <- Seq(".persist(", "coalesce(", "Caches.track")
+      if body(method).contains(use)
+    } yield s"$method: $use"
+    assert(found.isEmpty, found.mkString("; "))
   }
 }

@@ -909,10 +909,13 @@ class GraphOpsSpec extends SparkSpec {
       // 50 overshoots the 20-vertex graph's reach — the frontier-delta
       // loop must EXIT EARLY with the full-reach answer, identically
       // to the brute reference run to exhaustion. Strides > 1 (layer
-      // batching, incl. one NOT dividing the budget and one past it)
-      // must be invisible in the result on arbitrary digraphs — back
-      // edges, diamonds and revisits land on the same exact layers
-      for (hops <- Seq(0, 1, 3, 50); stride <- Seq(1, 3, 8)) {
+      // batching, incl. one NOT dividing the budget, one past it and
+      // the deep gate's 16, whose min-hop stride relation takes four
+      // doubling rounds) must be invisible in the result on arbitrary
+      // digraphs — back edges, diamonds and revisits land on the same
+      // exact layers. 17 is one past a stride-16 super-sweep: its last
+      // sweep reads the stride relation cut to k ≤ 1
+      for (hops <- Seq(0, 1, 3, 17, 50); stride <- Seq(1, 3, 8, 16)) {
         // SmallInput.scoped(0) forces the DISTRIBUTED sweep loop (the
         // fixtures are under the fast-path bound)
         val got = SmallInput.scoped(0L)(GraphOps.hopDistances(edgeDf(e: _*),
@@ -1149,11 +1152,12 @@ class GraphOpsSpec extends SparkSpec {
 
   test("graph_hops_deep gate: chain layers exact through compaction and the budget-cap exit") {
     // the gate's own shape at sf0.001: 500 docs, chain step 7 ⇒ 7
-    // disjoint chains ~70 deep — at hopStride 4 the BFS materializes
-    // 16 super-sweep frames, passes the 16-frame compaction (with
-    // frontier recovery) and exits on the 64-hop budget, never the
-    // empty frontier, so this pins exactly the machinery the shallow
-    // gate (3 hops) never runs
+    // disjoint chains ~70 deep — at hopStride 16 the BFS builds the
+    // stride relation, runs 4 super-sweeps and exits on the 64-hop
+    // budget, never the empty frontier, so this pins exactly the
+    // machinery the shallow gate (3 hops) never runs. 4 frames never
+    // reach the 16-frame compaction; the 80-vertex chain of the
+    // hopDistances property test covers that path
     val got = SparkEntry.queries("graph_hops_deep")(
         spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -1165,6 +1169,43 @@ class GraphOpsSpec extends SparkSpec {
     assert(got.toSet === expect)
     assert(got.length === expect.size) // no duplicate vertex rows
     assert(got.map(_._2).max === 64L)  // the budget bound, reached
+  }
+
+  test("graph_hops_deep gate: warm construction runs a pinned job and stage count") {
+    // the tiny-regime scope turns AQE off for the stride build and the
+    // sweeps, so the plans — and the jobs and stages they run — are
+    // fixed. Jobs: the documents read's schema job, 4 stride-doubling
+    // rounds, the seed frame, 4 super-sweeps of 2 (the frontier
+    // broadcast and the sweep) and the final compaction. Stages: 1,
+    // 4 per round, 2, 3 per super-sweep and 1
+    val sf = "/root/testdata/sf0.001"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageCompleted(
+          st: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
+    }
+    def build() = SparkEntry.queries("graph_hops_deep")(spark, sf)
+    // cold: the distinct-edge memo builds here; Verify and Bench clear
+    // the default lease the same way between queries
+    build().count()
+    Caches.clear(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.sql.graft.ColumnBridge.waitListeners(spark)
+      jobs.set(0)
+      stages.set(0)
+      build()
+      org.apache.spark.sql.graft.ColumnBridge.waitListeners(spark)
+      assert((jobs.get, stages.get) === ((15, 32)))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      Caches.clear(spark)
+    }
   }
 
   test("property: RS == Rep on simple graphs without 2-cycles/self-loops") {
