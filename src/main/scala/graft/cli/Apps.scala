@@ -205,10 +205,8 @@ object PipelineApp {
       w(pairs, "neardup_pairs")
       val clusters = graft.operators.Dedup.dupClusters(pairs)
       w(clusters, "dup_clusters")
-      // survivors: exact survivors minus non-minimum near-dup members
-      val losers = clusters.filter(org.apache.spark.sql.functions.col("doc_id") =!=
-        org.apache.spark.sql.functions.col("cluster_id")).select("doc_id")
-      val survivors = exactSurvivors.join(losers, Seq("doc_id"), "left_anti")
+      val survivors = graft.operators.Dedup.nearDupSurvivors(exactSurvivors,
+        clusters)
       val kept = CliSupport.writeObserved(survivors, count(lit(1)))(
         w(_, "survivors"))
       println(s"PIPELINE.DOCS:$nDocs PIPELINE.SURVIVORS:$kept")

@@ -3,7 +3,7 @@ package graft.operators
 import graft.SmallInput
 import graft.functions.PolyHashFunctions.poly_hash
 import graft.functions.TextFunctions.tokens
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -22,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   *     the SQL oracle.
   *
   * Hash-width note: EXACT dedup uses a collision-safe triple key (see
-  * `exact`). The near-dup operators hash shingles/tokens into the
+  * `contentKey`). The near-dup operators hash shingles/tokens into the
   * single 1e9+7 space deliberately — a rare shingle collision shifts an
   * (already approximate) Jaccard estimate by ~1/|shingles|, it never
   * false-merges documents by itself, because every candidate passes an
@@ -32,33 +32,83 @@ object Dedup {
 
   val ShingleN = 3
 
-  /** Distinct word-shingle PolyHash ARRAYS per doc: (doc_id, hs).
-    * Uses the native ShingleHash expression — the composed
+  /** Word-`ShingleN`-gram PolyHashes of the `text` column, in token
+    * order with repeats kept (`TextOps.repetition` counts them). Uses
+    * the native ShingleHash expression — the composed
     * `transform(word_shingles(...), poly_hash)` form is semantically
     * identical but runs interpreted per lambda element and slices the
     * token array per position (O(len²) copies): ~20× slower at sf0.1.
     */
-  private[graft] def shingleHashArrays(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        array_distinct(
-          graft.functions.ShingleHashFunctions.shingle_hash(col("toks"), ShingleN))
-          .as("hs"))
+  private[graft] def shingleHashSeq: Column =
+    graft.functions.ShingleHashFunctions.shingle_hash(tokens(col("text")), ShingleN)
 
-  /** Exact dedup: group by content fingerprint, keep the min doc_id.
-    * Shuffles longs only — never text. The group key is
-    * (hash1, hash2, length) with INDEPENDENT hash constants: a single
-    * ~30-bit hash collides at ~4·10^4 documents (birthday bound) — a
-    * real false-merge risk at 10^9 docs; the triple key pushes per-pair
-    * collision odds to ~1e-18 while still shuffling 24 bytes/doc.
+  /** The distinct shingle hashes of `text`: the set every near-dup,
+    * MinHash and decontamination relation is built from.
+    */
+  private[graft] def shingleHashSet: Column = array_distinct(shingleHashSeq)
+
+  /** Distinct word-shingle PolyHash ARRAYS per doc: (doc_id, hs). */
+  private def shingleHashArrays(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), shingleHashSet.as("hs"))
+
+  /** Each doc's distinct shingle hashes sorted by VALUE once, with
+    * their count: (doc_id, n, hss) — the relation `verifiedPairs`
+    * reads on both sides of a candidate. Persisted (consumers release
+    * via graft.Caches.clear).
+    */
+  private def sortedShingles(docs: DataFrame): DataFrame =
+    graft.Caches.track(shingleHashArrays(docs)
+      .select(col("doc_id"), size(col("hs")).cast("long").as("n"),
+        sort_array(col("hs")).as("hss"))
+      .persist(StorageLevel.MEMORY_AND_DISK))
+
+  /** The verified-pair stage every shingle-set candidate join ends in:
+    * the value-sorted shingle arrays of `sorted` (doc_id, n, hss) are
+    * joined onto both sides of the candidates `cand` (doc_a, doc_b),
+    * and the shared count is the zero-allocation sorted-merge
+    * intersection (no per-pair hash set). One row per candidate:
+    * `(doc_a, doc_b, shared, na, nb)` — enough integers for Jaccard
+    * (union = na+nb−shared) and both containment directions.
+    */
+  private def verifiedPairs(cand: DataFrame, sorted: DataFrame): DataFrame =
+    cand
+      .join(sorted.select(col("doc_id").as("doc_a"), col("hss").as("hs_a"),
+        col("n").as("na")), "doc_a")
+      .join(sorted.select(col("doc_id").as("doc_b"), col("hss").as("hs_b"),
+        col("n").as("nb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        graft.functions.ShingleHashFunctions
+          .sorted_intersect_size(col("hs_a"), col("hs_b")).as("shared"),
+        col("na"), col("nb"))
+
+  /** `verifiedPairs` kept at Jaccard ≥ 0.8, as the integer test
+    * 5·shared ≥ 4·(na+nb−shared).
+    */
+  private def jaccardPairs(cand: DataFrame, sorted: DataFrame): DataFrame =
+    verifiedPairs(cand, sorted)
+      .filter(col("shared") * 5 >= (col("na") + col("nb") - col("shared")) * 4)
+
+  /** The content key's column names. */
+  private[graft] val ContentKey = Seq("fingerprint", "fp2", "len")
+
+  /** The content key of `text`: (fingerprint, fp2, len), two
+    * INDEPENDENT PolyHash constants plus the length. A single ~30-bit
+    * hash collides at ~4·10^4 documents (birthday bound) — a real
+    * false-merge risk at 10^9 docs; the triple pushes per-pair
+    * collision odds to ~1e-18 while still shuffling 24 bytes/doc. A
+    * persisted format: `StreamDedup.exactKeysOf` writes it.
+    */
+  private[graft] def contentKey: Seq[Column] = Seq(
+    poly_hash(col("text")).as("fingerprint"),
+    graft.functions.PolyHashFunctions.poly_hash2(col("text")).as("fp2"),
+    length(col("text")).cast("long").as("len"))
+
+  /** Exact dedup: group by content key (`contentKey`), keep the min
+    * doc_id. Shuffles longs only — never text.
     */
   def exact(docs: DataFrame): DataFrame =
-    docs.select(
-        poly_hash(col("text")).as("fingerprint"),
-        graft.functions.PolyHashFunctions.poly_hash2(col("text")).as("fp2"),
-        length(col("text")).cast("long").as("len"),
-        col("doc_id"))
-      .groupBy("fingerprint", "fp2", "len")
+    docs.select(contentKey :+ col("doc_id"): _*)
+      .groupBy(ContentKey.map(col): _*)
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
       .select("doc_id", "fingerprint", "n_copies")
 
@@ -147,29 +197,9 @@ object Dedup {
           col("a.n") * 4 <= col("b.n") * 5 && col("b.n") * 4 <= col("a.n") * 5)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(sorted.select(col("doc_id").as("doc_a"), col("hss").as("hs_a"),
-        col("n").as("na")), "doc_a")
-      .join(sorted.select(col("doc_id").as("doc_b"), col("hss").as("hs_b"),
-        col("n").as("nb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.ShingleHashFunctions
-          .sorted_intersect_size(col("hs_a"), col("hs_b")).as("shared"),
-        col("na"), col("nb"))
-      .filter(col("shared") * 5 >= (col("na") + col("nb") - col("shared")) * 4)
+    jaccardPairs(cand, sorted)
   }
 
-  /** Cross-source duplication MATRIX: near-dup pairs rolled up by the
-    * (canonically ordered) source pair — the data-governance view that
-    * tells a corpus owner which sources leak into which ("is src3 a
-    * scrape of src7?") and how much of the dedup budget is
-    * intra-source boilerplate. `pairs` is any (doc_a, doc_b) near-dup
-    * relation (ngram/simhash/minhash/embedding — caller's choice);
-    * sources come from `docs`. least/greatest canonicalization makes
-    * the matrix upper-triangular, so (a,b) and (b,a) pairs land in one
-    * cell. Two doc-keyed equi-joins against the (doc_id, source)
-    * projection + one ≤sources²-group aggregation — text never moves.
-    */
   /** Fuzzy-key geometry: normalized-prefix width, aligned-segment
     * count (PassJoin pigeonhole: distance ≤ segments − 1 on
     * equal-width keys must leave ≥ 1 aligned segment untouched), and
@@ -258,6 +288,17 @@ object Dedup {
       .filter(col("dist") <= maxDist)
   }
 
+  /** Cross-source duplication MATRIX: near-dup pairs rolled up by the
+    * (canonically ordered) source pair — the data-governance view that
+    * tells a corpus owner which sources leak into which ("is src3 a
+    * scrape of src7?") and how much of the dedup budget is
+    * intra-source boilerplate. `pairs` is any (doc_a, doc_b) near-dup
+    * relation (ngram/simhash/minhash/embedding — caller's choice);
+    * sources come from `docs`. least/greatest canonicalization makes
+    * the matrix upper-triangular, so (a,b) and (b,a) pairs land in one
+    * cell. Two doc-keyed equi-joins against the (doc_id, source)
+    * projection + one ≤sources²-group aggregation — text never moves.
+    */
   def pairSourceMatrix(pairs: DataFrame, docs: DataFrame,
       srcCol: String = "source"): DataFrame = {
     val src = docs.select(col("doc_id"), col(srcCol))
@@ -281,31 +322,12 @@ object Dedup {
   val DocKnnK = 5
   val DocKnnMaxDf = 50L
 
-  /** Top-k most-similar documents per document by word-3-gram Jaccard
-    * — the TEXT twin of `Similarity.knnGraph` (similar-document
-    * retrieval / cluster seeding), and the threshold-free sibling of
-    * `ngramJaccard`. Without a similarity threshold there is no PPJoin
-    * prefix to bound the candidate join, so candidates are pairs
-    * sharing at least one RARE shingle (document frequency ≤ `maxDf`):
-    * bucket fanout is ≤ maxDf² per shingle by construction, and a pair
-    * sharing only ubiquitous boilerplate is exactly the pair a top-k
-    * similarity ranking is allowed to miss. Candidates then verify
-    * with the exact zero-allocation sorted-merge intersection, score
-    * as integer `jacc_ppm = shared·1e6 div union`, and rank through
-    * the heap-based TopKPerKey operator — each unordered pair is
-    * verified once and mirrored, the all-pairs N² never forms.
-    *
-    * Output: `(doc_id, rank, neighbor_id, shared, union_size,
-    * jacc_ppm)` — all integers, rank by (jacc_ppm desc, neighbor asc).
-    */
   /** The candidate-generation + exact-verify core `docKnn` and
     * `containmentPairs` both rank from: every unordered pair sharing
     * ≥ 1 RARE shingle (corpus df ≤ `maxDf` — bucket fanout ≤ maxDf²
     * per shingle by construction, the all-pairs N² never forms),
-    * verified ONCE with the zero-allocation sorted-merge
-    * intersection. One row per pair: `(doc_a, doc_b, shared, na, nb)`
-    * — enough integers for Jaccard (union = na+nb−shared) and both
-    * containment directions (shared/na, shared/nb) downstream.
+    * verified ONCE by `verifiedPairs`: one `(doc_a, doc_b, shared,
+    * na, nb)` row per pair.
     *
     * SESSION-MEMOIZED (the `PlanMemo` discipline): the two consumers
     * run back to back over their corpora in the suite, and repeated
@@ -324,10 +346,7 @@ object Dedup {
 
   private def rareShingleVerifiedPairsUncached(docs: DataFrame,
       maxDf: Long): DataFrame = {
-    val hs = graft.Caches.track(shingleHashArrays(docs)
-      .select(col("doc_id"), size(col("hs")).cast("long").as("n"),
-        sort_array(col("hs")).as("hss"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val hs = sortedShingles(docs)
     val ex = hs.select(col("doc_id"), explode(col("hss")).as("h"))
     val rare = ex.groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select(col("h"))
@@ -336,17 +355,26 @@ object Dedup {
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(hs.select(col("doc_id").as("doc_a"), col("hss").as("hs_a"),
-        col("n").as("na")), "doc_a")
-      .join(hs.select(col("doc_id").as("doc_b"), col("hss").as("hs_b"),
-        col("n").as("nb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.ShingleHashFunctions
-          .sorted_intersect_size(col("hs_a"), col("hs_b")).as("shared"),
-        col("na"), col("nb"))
+    verifiedPairs(cand, hs)
   }
 
+  /** Top-k most-similar documents per document by word-3-gram Jaccard
+    * — the TEXT twin of `Similarity.knnGraph` (similar-document
+    * retrieval / cluster seeding), and the threshold-free sibling of
+    * `ngramJaccard`. Without a similarity threshold there is no PPJoin
+    * prefix to bound the candidate join, so candidates are pairs
+    * sharing at least one RARE shingle (document frequency ≤ `maxDf`):
+    * bucket fanout is ≤ maxDf² per shingle by construction, and a pair
+    * sharing only ubiquitous boilerplate is exactly the pair a top-k
+    * similarity ranking is allowed to miss. Candidates then verify
+    * with the exact zero-allocation sorted-merge intersection, score
+    * as integer `jacc_ppm = shared·1e6 div union`, and rank through
+    * the heap-based TopKPerKey operator — each unordered pair is
+    * verified once and mirrored, the all-pairs N² never forms.
+    *
+    * Output: `(doc_id, rank, neighbor_id, shared, union_size,
+    * jacc_ppm)` — all integers, rank by (jacc_ppm desc, neighbor asc).
+    */
   def docKnn(docs: DataFrame, k: Int = DocKnnK,
       maxDf: Long = DocKnnMaxDf): DataFrame = {
     val half = rareShingleVerifiedPairs(docs, maxDf)
@@ -851,11 +879,21 @@ object Dedup {
     val exactSurvivors = graft.Caches.track(docs.join(
         exact(docs).select("doc_id"), Seq("doc_id"), "left_semi")
       .persist(StorageLevel.MEMORY_AND_DISK))
-    val clusters = dupClusters(minhashLsh(exactSurvivors))
+    nearDupSurvivors(exactSurvivors, dupClusters(minhashLsh(exactSurvivors)))
+      .select("doc_id")
+  }
+
+  /** The exact-then-near survivor rule: the losers are the cluster
+    * members other than their cluster's min doc_id (`doc_id` ≠
+    * `cluster_id` in a `dupClusters` labelling), and the survivors are
+    * the exact survivors without them. Returns the surviving rows of
+    * `exactSurvivors` unchanged.
+    */
+  private[graft] def nearDupSurvivors(exactSurvivors: DataFrame,
+      clusters: DataFrame): DataFrame = {
     val losers = clusters.filter(col("doc_id") =!= col("cluster_id"))
       .select("doc_id")
     exactSurvivors.join(losers, Seq("doc_id"), "left_anti")
-      .select("doc_id")
   }
 
   /** QUALITY-AWARE survivor selection: given a cluster labelling
@@ -1077,9 +1115,17 @@ object Dedup {
     * per-bit conditional sums formulation, kept below for
     * cross-checking, shuffles every token).
     */
-  def simhash(docs: DataFrame): DataFrame =
+  def simhash(docs: DataFrame): DataFrame = simhashSigs(tokenRel(docs))
+
+  /** The (doc_id, toks) whitespace-token relation SimHash reads. */
+  private def tokenRel(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
+
+  /** The SimHash signature projection over a tokenized relation
+    * (doc_id, toks): (doc_id, simhash), docs without a token dropped.
+    */
+  private def simhashSigs(toksRel: DataFrame): DataFrame =
+    toksRel.select(col("doc_id"),
         graft.functions.ShingleHashFunctions.simhash(col("toks"), SimBits)
           .as("simhash"))
       .filter(col("simhash").isNotNull)
@@ -1108,8 +1154,7 @@ object Dedup {
     * EXACT (no false negatives) while avoiding the all-pairs product.
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    simhashPairsOf(docs.select(col("doc_id"), tokens(col("text")).as("toks")),
-      maxHamming)
+    simhashPairsOf(tokenRel(docs), maxHamming)
 
   /** The banded SimHash pair core over an ALREADY-tokenized relation
     * (doc_id, toks) — shared by the text form above (whitespace
@@ -1119,11 +1164,7 @@ object Dedup {
     */
   def simhashPairsOf(toksRel: DataFrame, maxHamming: Int = 3): DataFrame = {
     val sig = graft.Caches.track(
-      toksRel.select(col("doc_id"),
-          graft.functions.ShingleHashFunctions.simhash(col("toks"), SimBits)
-            .as("simhash"))
-        .filter(col("simhash").isNotNull)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+      simhashSigs(toksRel).persist(StorageLevel.MEMORY_AND_DISK))
     val bands = (0 until SimBands).map(j => (j * SimBandBits, SimBandBits))
     // Long format: one row per (doc, band) → a SINGLE equi-join on
     // (band_idx, band_val) replaces 4 separate self-joins (and 8
@@ -1181,24 +1222,39 @@ object Dedup {
     MinhashP, MinhashAB.map { case (a, b) => s"$a:$b" }.mkString(","),
     LshBands, LshRows)
 
+  /** The MinHash signature of `text`'s distinct shingles: one array of
+    * `MinhashAB.size` minhashes (array_min over each affine transform,
+    * native and one-pass), null when the doc has no shingle.
+    */
+  private[graft] def minhashSig: Column =
+    graft.functions.ShingleHashFunctions.minhash_sig(shingleHashSet,
+      MinhashAB.map(_._1), MinhashAB.map(_._2), MinhashP)
+
+  /** The `LshBands` band signatures of a signature array `sig`: band j
+    * is the text of minhashes j·LshRows … (j+1)·LshRows − 1 joined by
+    * ",". A persisted format: `StreamDedup.bandKeysOf` writes it,
+    * stamped with `LshParamsFingerprint`.
+    */
+  private[graft] def bandSigs(sig: Column): Column =
+    array((0 until LshBands).map { j =>
+      concat_ws(",", (0 until LshRows).map(r =>
+        element_at(sig, j * LshRows + r + 1)): _*)
+    }: _*)
+
+  /** (doc_id, sig) for the docs with ≥ 1 shingle. */
+  private def signatures(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), minhashSig.as("sig"))
+      .filter(col("sig").isNotNull)
+
   /** Per-doc MinHash signature columns mh0..mh15 (docs with ≥ 1 shingle
     * only). Computed entirely inside one projection: distinct shingle
     * hashes as an array, then array_min over each affine transform — no
     * explode, no shuffle.
     */
-  def minhashSignatures(docs: DataFrame): DataFrame = {
-    // Native one-pass 16-way MinHash (null on empty → filtered), then
-    // unpack the signature array into mh0..mh15 (O(1) element_at).
-    val sigArr = graft.functions.ShingleHashFunctions.minhash_sig(
-      col("hs"), MinhashAB.map(_._1), MinhashAB.map(_._2), MinhashP)
-    val mhCols = MinhashAB.indices.map { i =>
+  def minhashSignatures(docs: DataFrame): DataFrame =
+    signatures(docs).select(col("doc_id") +: MinhashAB.indices.map { i =>
       element_at(col("sig"), i + 1).as(s"mh$i")
-    }
-    shingleHashArrays(docs)
-      .select(col("doc_id"), sigArr.as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("doc_id") +: mhCols: _*)
-  }
+    }: _*)
 
   /** MinHash-LSH near-dup pairs: candidates share at least one of 4
     * bands (4 rows each); candidates are then verified with the true
@@ -1210,13 +1266,9 @@ object Dedup {
     // Long-format bands: (doc_id, band_idx, band_sig) — the 16-minhash
     // pipeline runs ONCE (persisted), and a single equi-join on
     // (band_idx, band_sig) finds all band collisions.
-    val sig = minhashSignatures(docs)
-    val bandArr = array((0 until LshBands).map { j =>
-      concat_ws(",",
-        (0 until LshRows).map(r => col(s"mh${j * LshRows + r}")): _*)
-    }: _*)
-    val banded = graft.Caches.track(sig
-      .select(col("doc_id"), posexplode(bandArr).as(Seq("band_idx", "band_sig")))
+    val banded = graft.Caches.track(signatures(docs)
+      .select(col("doc_id"),
+        posexplode(bandSigs(col("sig"))).as(Seq("band_idx", "band_sig")))
       .persist(StorageLevel.MEMORY_AND_DISK))
     val candidates = banded.as("a").join(banded.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -1224,22 +1276,8 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-
-    // Verify each candidate with the true Jaccard: fetch both docs'
-    // distinct shingle-hash ARRAYS (no explode — one array per side per
-    // pair) and intersect per row. Bounded by |candidates|. Persisted:
-    // consumed by both sides of the pair join.
-    val hs = graft.Caches.track(shingleHashArrays(docs)
-      .select(col("doc_id"), sort_array(col("hs")).as("hs")) // sort ONCE
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    candidates
-      .join(hs.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
-      .join(hs.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.ShingleHashFunctions
-          .sorted_intersect_size(col("hs_a"), col("hs_b")).as("shared"),
-        size(col("hs_a")).cast("long").as("na"),
-        size(col("hs_b")).cast("long").as("nb"))
-      .filter(col("shared") * 5 >= (col("na") + col("nb") - col("shared")) * 4)
+    // Verify each candidate with the true Jaccard: one sorted shingle
+    // array per side per pair (no explode). Bounded by |candidates|.
+    jaccardPairs(candidates, sortedShingles(docs))
   }
 }

@@ -938,9 +938,7 @@ object TextOps {
     * the fat column; the index is two longs per distinct shingle).
     */
   def docShingles(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      explode(array_distinct(graft.functions.ShingleHashFunctions
-        .shingle_hash(tokens(col("text")), Dedup.ShingleN))).as("h"))
+    docs.select(col("doc_id"), explode(Dedup.shingleHashSet).as("h"))
 
   /** INCREMENTAL maintenance of the decontamination index — the
     * `postingsDelta` treatment for `docShingles`: fold one refresh
@@ -1012,10 +1010,7 @@ object TextOps {
     * one driver collect is ≤ 2^BloomBitsLog2/64 rows by construction.
     */
   def contaminationBloom(docs: DataFrame, probes: DataFrame): DataFrame = {
-    def shingles(d: DataFrame) = d.select(col("doc_id"),
-      explode(array_distinct(graft.functions.ShingleHashFunctions
-        .shingle_hash(tokens(col("text")), Dedup.ShingleN))).as("h"))
-    val ps = shingles(probes).select("h").distinct()
+    val ps = docShingles(probes).select("h").distinct()
     // probe 1 = low bits of the shingle hash; probe 2 = low bits of an
     // INDEPENDENT full-width remix of it (the plane-mixer shape —
     // multiply-mod-M31 + xor-shift, twice). h is PolyHash mod 1e9+7,
@@ -1043,7 +1038,7 @@ object TextOps {
     def hit(p: String) =
       (element_at(lut, expr(s"CAST($p div 64 AS INT)") + 1)
         .bitwiseAND(expr(s"shiftleft(1L, CAST($p % 64 AS INT))")) =!= 0L)
-    positions(shingles(docs))
+    positions(docShingles(docs))
       .filter(hit("p1") && hit("p2"))
       .select("doc_id", "h")
       .join(ps, "h")
@@ -1142,9 +1137,7 @@ object TextOps {
     * projection; one float division (bit-stable engine-to-engine).
     */
   def repetition(docs: DataFrame): DataFrame = {
-    val hs = graft.functions.ShingleHashFunctions
-      .shingle_hash(tokens(col("text")), Dedup.ShingleN)
-    docs.select(col("doc_id"), hs.as("hs"))
+    docs.select(col("doc_id"), Dedup.shingleHashSeq.as("hs"))
       .select(col("doc_id"),
         size(col("hs")).cast("long").as("n_shingles"),
         size(array_distinct(col("hs"))).cast("long").as("n_distinct"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.functions.PolyHashFunctions.{poly_hash, poly_hash2}
+import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,13 +26,11 @@ import org.apache.spark.sql.functions._
 object StreamDedup {
 
   /** Content-key projection shared by both variants (and usable in
-    * batch for parity tests): the original columns + the dedup triple.
+    * batch for parity tests): the original columns + the dedup triple
+    * (`Dedup.contentKey`).
     */
   def withContentKey(docs: DataFrame): DataFrame =
-    docs.select(col("*"),
-      poly_hash(col("text")).as("fingerprint"),
-      poly_hash2(col("text")).as("fp2"),
-      length(col("text")).cast("long").as("len"))
+    docs.select(col("*") +: Dedup.contentKey: _*)
 
   /** Exact streaming dedup, unbounded horizon: first arrival of each
     * distinct content wins (micro-batch arrival order decides "first" —
@@ -40,7 +38,7 @@ object StreamDedup {
     * the batch `min(doc_id)` keeps one deterministic survivor).
     */
   def exactStreaming(docs: DataFrame): DataFrame =
-    withContentKey(docs).dropDuplicates(Seq("fingerprint", "fp2", "len"))
+    withContentKey(docs).dropDuplicates(Dedup.ContentKey)
 
   /** Exact streaming dedup with watermark-bounded state: `tsCol` must
     * be an event-time column; duplicates separated by more than
@@ -51,7 +49,7 @@ object StreamDedup {
       horizon: String = "1 hour"): DataFrame =
     withContentKey(docs)
       .withWatermark(tsCol, horizon)
-      .dropDuplicatesWithinWatermark(Seq("fingerprint", "fp2", "len"))
+      .dropDuplicatesWithinWatermark(Dedup.ContentKey)
 
   /** MinHash-LSH band keys per document: (doc_id, ts, band_idx,
     * band_sig) — the same `LshBands`×`LshRows` banding (and the same
@@ -63,24 +61,12 @@ object StreamDedup {
     * can never drift.
     */
   private[graft] def bandKeys(docs: DataFrame, tsCol: String): DataFrame = {
-    import graft.operators.Dedup
-    val hs = docs.select(col("doc_id"), col(tsCol).as("ts"),
-      array_distinct(graft.functions.ShingleHashFunctions.shingle_hash(
-        graft.functions.TextFunctions.tokens(col("text")), Dedup.ShingleN))
-        .as("hs"))
-    val sigArr = graft.functions.ShingleHashFunctions.minhash_sig(
-      col("hs"), Dedup.MinhashAB.map(_._1), Dedup.MinhashAB.map(_._2),
-      Dedup.MinhashP)
-    val bandArr = array((0 until Dedup.LshBands).map { j =>
-      concat_ws(",", (0 until Dedup.LshRows).map(r =>
-        element_at(col("sig"), j * Dedup.LshRows + r + 1)): _*)
-    }: _*)
     val uniqArr = array(Seq.fill(Dedup.LshBands)(
       concat(lit("uniq:"), col("doc_id").cast("string"))): _*)
-    hs.select(col("doc_id"), col("ts"), sigArr.as("sig"))
+    docs.select(col("doc_id"), col(tsCol).as("ts"), Dedup.minhashSig.as("sig"))
       .select(col("doc_id"), col("ts"),
-        posexplode(when(col("sig").isNotNull, bandArr).otherwise(uniqArr))
-          .as(Seq("band_idx", "band_sig")))
+        posexplode(when(col("sig").isNotNull, Dedup.bandSigs(col("sig")))
+          .otherwise(uniqArr)).as(Seq("band_idx", "band_sig")))
   }
 
   /** Streaming NEAR-dup filter: a document is emitted iff ALL of its
@@ -112,36 +98,9 @@ object StreamDedup {
       .dropDuplicatesWithinWatermark(Seq("band_idx", "band_sig"))
       .groupBy(window(col("ts"), windowDur), col("doc_id"))
       .agg(count(lit(1)).as("n_fresh_bands"))
-      .filter(col("n_fresh_bands") === graft.operators.Dedup.LshBands)
+      .filter(col("n_fresh_bands") === Dedup.LshBands)
       .select(col("doc_id"), col("window.start").as("win_start"))
 
-  /** Batch twin of `nearDupStreaming` (parity tests, backfills):
-    * survivors are the docs none of whose band keys appear on any
-    * earlier doc, "earlier" = (ts, doc_id) lexicographic — the order
-    * a stream fed one-doc-per-micro-batch in ts order resolves to.
-    *
-    * Shape: a window-min over each band key finds its first claimant
-    * (exactly `dropDuplicatesWithinWatermark`'s keep rule with an
-    * unbounded horizon), then a per-doc ALL-bands-won aggregate. One
-    * shingle+minhash pass and two key shuffles — the earlier
-    * formulation self-joined `bandKeys` against itself, which
-    * recomputed the full minhash pipeline for both sides and shuffled
-    * a band-key equi-join plus distinct plus anti-join; at corpus
-    * scale the window form moves strictly fewer bytes and reads the
-    * text once. Band-key groups are dup-cluster sized, so the window
-    * partition never concentrates the corpus on one task.
-    *
-    * PRECONDITIONS (matching what a stream can actually carry):
-    * `tsCol` must be non-null on every row — a streaming source
-    * cannot watermark a null event time, and here a null would sort
-    * FIRST in the `min(struct(ts, doc_id))` claimant election,
-    * claiming bands and eliminating non-null-ts docs (the old
-    * anti-join form made null-ts rows inert instead). `doc_id` must
-    * be unique — duplicate input rows for one doc_id are collapsed
-    * by the per-doc aggregate, where the old form passed them
-    * through. Enforce upstream; neither holds for free on raw batch
-    * tables.
-    */
   /** INCREMENTAL near-dup admission — the realistic dedup mode at
     * corpus scale, where the ingested corpus is never re-deduplicated
     * and each fresh batch is admitted against it: returns the docs of
@@ -214,7 +173,7 @@ object StreamDedup {
   def bandKeysOf(docs: DataFrame): DataFrame =
     bandKeys(docs.withColumn("__graft_ts", lit(0L)), "__graft_ts")
       .select(col("doc_id"), col("band_idx"), col("band_sig"),
-        lit(graft.operators.Dedup.LshParamsFingerprint).as("lsh_params_fp"))
+        lit(Dedup.LshParamsFingerprint).as("lsh_params_fp"))
 
   /** Incremental near-dup admission over PRE-COMPUTED corpus band keys
     * — the 100 TB deployment form of `nearDupIncremental`: identical
@@ -243,7 +202,7 @@ object StreamDedup {
     * (pre-fingerprint persists) skips the check.
     */
   def nearDupIncrementalKeys(corpusKeys: DataFrame, fresh: DataFrame): DataFrame = {
-    val fp = graft.operators.Dedup.LshParamsFingerprint
+    val fp = Dedup.LshParamsFingerprint
     val sigChecked =
       if (!corpusKeys.columns.contains("lsh_params_fp")) col("band_sig")
       else graft.operators.Stamps.stampGuard(col("band_sig"),
@@ -270,8 +229,7 @@ object StreamDedup {
     * persist.
     */
   def exactKeysOf(docs: DataFrame): DataFrame =
-    withContentKey(docs)
-      .select(col("doc_id"), col("fingerprint"), col("fp2"), col("len"))
+    withContentKey(docs).select("doc_id", Dedup.ContentKey: _*)
 
   /** EXACT incremental admission over stored content keys — the
     * ingest-time form of `Dedup.exact` for a corpus that is never
@@ -292,12 +250,39 @@ object StreamDedup {
     */
   def exactIncrementalKeys(corpusKeys: DataFrame, fresh: DataFrame): DataFrame =
     withContentKey(fresh)
-      .join(corpusKeys.select("fingerprint", "fp2", "len"),
-        Seq("fingerprint", "fp2", "len"), "left_anti")
-      .groupBy("fingerprint", "fp2", "len")
+      .join(corpusKeys.select(Dedup.ContentKey.map(col): _*), Dedup.ContentKey,
+        "left_anti")
+      .groupBy(Dedup.ContentKey.map(col): _*)
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
 
+  /** Batch twin of `nearDupStreaming` (parity tests, backfills):
+    * survivors are the docs none of whose band keys appear on any
+    * earlier doc, "earlier" = (ts, doc_id) lexicographic — the order
+    * a stream fed one-doc-per-micro-batch in ts order resolves to.
+    *
+    * Shape: a window-min over each band key finds its first claimant
+    * (exactly `dropDuplicatesWithinWatermark`'s keep rule with an
+    * unbounded horizon), then a per-doc ALL-bands-won aggregate. One
+    * shingle+minhash pass and two key shuffles — the earlier
+    * formulation self-joined `bandKeys` against itself, which
+    * recomputed the full minhash pipeline for both sides and shuffled
+    * a band-key equi-join plus distinct plus anti-join; at corpus
+    * scale the window form moves strictly fewer bytes and reads the
+    * text once. Band-key groups are dup-cluster sized, so the window
+    * partition never concentrates the corpus on one task.
+    *
+    * PRECONDITIONS (matching what a stream can actually carry):
+    * `tsCol` must be non-null on every row — a streaming source
+    * cannot watermark a null event time, and here a null would sort
+    * FIRST in the `min(struct(ts, doc_id))` claimant election,
+    * claiming bands and eliminating non-null-ts docs (the old
+    * anti-join form made null-ts rows inert instead). `doc_id` must
+    * be unique — duplicate input rows for one doc_id are collapsed
+    * by the per-doc aggregate, where the old form passed them
+    * through. Enforce upstream; neither holds for free on raw batch
+    * tables.
+    */
   def nearDupArrivalBatch(docs: DataFrame, tsCol: String): DataFrame =
     electAllWon(bandKeys(docs, tsCol))
 
